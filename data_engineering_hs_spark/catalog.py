@@ -202,9 +202,12 @@ def _rebalance_partitions(path: str, cores: int) -> int | None:
     REWRITTEN at the same path (testdata regen, load_table over a
     mutable store) re-probes instead of silently applying a stale
     decision (r16 advice: the old memo keyed on path alone and never
-    invalidated). Any write that lands/moves files under the root
-    updates the directory mtime; an in-place single-file rewrite
-    updates the file's own."""
+    invalidated). Only the ROOT is stat'ed: a write that lands/moves
+    files directly under it updates its mtime, and a single-file
+    dataset's in-place rewrite updates the file's own — but a file
+    added or rewritten inside an existing partition SUBDIRECTORY
+    changes neither, so that memo entry stays stale until the root
+    changes."""
     min_bytes = int(
         os.environ.get("SPARK_GRAFT_REBALANCE_MIN_BYTES", str(256 * 1024))
     )

@@ -233,7 +233,9 @@ def char_ngrams(c: ColumnOrName, n: int = 5) -> Column:
 # whose text has tab/newline edges, silently. Store commits stamp
 # this constant beside the data and reads fail loudly on mismatch
 # (operators.dedup.check_normalization_version). BUMP IT whenever
-# tokens()/normalized_text() semantics change.
+# tokens()/normalized_text() semantics change OR the persisted
+# band-hash scheme (lsh_band_buckets' bucket values) changes — both
+# make stored hashes incomparable, and this one stamp guards both.
 # v3 = r17 band-bucket hash change: lsh_band_buckets hashes the r
 # signature longs directly instead of a concat_ws string of their
 # decimal renderings — pair outputs are unchanged, but persisted

@@ -750,24 +750,6 @@ def _read_parquet_if_exists(spark, path: str) -> DataFrame | None:
         raise
 
 
-_NORM_META = "_norm_meta.json"
-
-
-def _norm_meta_file(path: str) -> str | None:
-    """Driver-local sidecar path for the normalization stamp, or None
-    for remote URIs (where the stamp degrades to the documented
-    rebuild-on-semantics-change contract, like similarity's
-    _store_meta sidecar)."""
-    import os
-
-    from data_engineering_hs_spark.operators.similarity import (
-        _local_store_dir,
-    )
-
-    local = _local_store_dir(path)
-    return None if local is None else os.path.join(local, _NORM_META)
-
-
 def check_normalization_version(path: str) -> None:
     """Fail loudly when a persisted fingerprint/band store was built
     under a DIFFERENT normalization version than this code computes
@@ -779,17 +761,18 @@ def check_normalization_version(path: str) -> None:
     A store WITHOUT a stamp (pre-r14, or remote URI) passes — it
     cannot be distinguished from a fresh one; pre-r13 stores must be
     rebuilt (documented contract). Driver-side file read only."""
-    import json
-    import os
-
     from data_engineering_hs_spark.functions.text import (
         NORMALIZATION_VERSION,
     )
+    from data_engineering_hs_spark.sources.parquet import (
+        NORM_META,
+        read_sidecar,
+    )
 
-    meta = _norm_meta_file(path)
-    if meta is None or not os.path.exists(meta):
+    meta = read_sidecar(path, NORM_META)
+    if meta is None:
         return
-    recorded = json.load(open(meta)).get("normalization_version")
+    recorded = meta.get("normalization_version")
     if recorded != NORMALIZATION_VERSION:
         raise RuntimeError(
             f"store {path} was built with normalization_version="
@@ -807,23 +790,27 @@ def stamp_normalization_version(path: str) -> None:
     commit into a store built under an older version aborts instead
     of mixing incomparable fingerprints. Best-effort for remote URIs
     (no sidecar), strict for driver-local paths."""
-    import json
+    import os
 
     from data_engineering_hs_spark.functions.text import (
         NORMALIZATION_VERSION,
     )
-
-    import os
+    from data_engineering_hs_spark.sources.parquet import (
+        NORM_META,
+        _local_path,
+        write_sidecar,
+    )
 
     check_normalization_version(path)
-    meta = _norm_meta_file(path)
-    if meta is None:
+    local = _local_path(path)
+    if local is None:
         return
     # first increment: the store dir may not exist yet (Spark would
     # create it); append-mode writes into a pre-created dir are fine
-    os.makedirs(os.path.dirname(meta), exist_ok=True)
-    with open(meta, "w") as fh:
-        json.dump({"normalization_version": NORMALIZATION_VERSION}, fh)
+    os.makedirs(local, exist_ok=True)
+    write_sidecar(
+        local, NORM_META, {"normalization_version": NORMALIZATION_VERSION}
+    )
 
 
 def read_fingerprint_store(spark, path: str) -> DataFrame | None:
@@ -1069,60 +1056,55 @@ def append_lsh_bands(new_bands: DataFrame, path: str) -> None:
     (shared `path/_temporary`; see append_fingerprints). A second
     writer raises ConcurrentWriterError. Remote store URIs have no
     flock — there the contract is this paragraph."""
-    from data_engineering_hs_spark.sources.parquet import (
-        store_writer_lease,
-    )
-
-    with store_writer_lease(path, "append_lsh_bands"):
-        _append_lsh_bands_locked(new_bands, path)
-
-
-def _append_lsh_bands_locked(new_bands: DataFrame, path: str) -> None:
-    stamp_normalization_version(path)
-    out = new_bands.select(
-        *[
-            F.col(c).cast("int").alias(c)
-            if c == "band"
-            else F.col(c).cast("long").alias(c)
-            if c == "bucket"
-            else F.col(c)
-            for c in new_bands.columns
-        ]
-    )
     from pyspark.errors import AnalysisException
 
     from data_engineering_hs_spark.operators.similarity import (
         erase_nullability,
     )
+    from data_engineering_hs_spark.sources.parquet import (
+        store_writer_lease,
+    )
 
-    try:
-        existing = out.sparkSession.read.parquet(path).schema
-    except AnalysisException:
-        # nonexistent or empty store — first append, nothing to
-        # drift against. Probing by read (not listdir) keeps the
-        # check live for remote URIs (s3a://, hdfs://) too, where
-        # the old local-dir probe silently skipped it.
-        existing = None
-    if existing is not None:
-        # nullability erased recursively: a parquet-read schema is
-        # all-nullable while computed columns (posexplode's band,
-        # containsNull=false arrays) are not, and the flags don't
-        # affect the footer layout (the d61c2ab false-positive class,
-        # handled by the same shared helper as append_to_cell_store)
-        want = [(f.name, erase_nullability(f.dataType))
-                for f in existing.fields]
-        got = [(f.name, erase_nullability(f.dataType))
-               for f in out.schema.fields]
-        if want != got:
-            raise ValueError(
-                f"band-store schema drift: store at {path} holds "
-                f"{existing.simpleString()} but this increment "
-                f"carries {out.schema.simpleString()} — appending "
-                "would create a mixed-schema directory whose read "
-                "depends on which file's footer Spark samples. Align "
-                "the increment's columns or rebuild the store."
-            )
-    out.write.mode("append").parquet(path)
+    with store_writer_lease(path, "append_lsh_bands"):
+        stamp_normalization_version(path)
+        out = new_bands.select(
+            *[
+                F.col(c).cast("int").alias(c)
+                if c == "band"
+                else F.col(c).cast("long").alias(c)
+                if c == "bucket"
+                else F.col(c)
+                for c in new_bands.columns
+            ]
+        )
+        try:
+            existing = out.sparkSession.read.parquet(path).schema
+        except AnalysisException:
+            # nonexistent or empty store — first append, nothing to
+            # drift against. Probing by read (not listdir) keeps the
+            # check live for remote URIs (s3a://, hdfs://) too, where
+            # the old local-dir probe silently skipped it.
+            existing = None
+        if existing is not None:
+            # nullability erased recursively: a parquet-read schema is
+            # all-nullable while computed columns (posexplode's band,
+            # containsNull=false arrays) are not, and the flags don't
+            # affect the footer layout (the d61c2ab false-positive class,
+            # handled by the same shared helper as append_to_cell_store)
+            want = [(f.name, erase_nullability(f.dataType))
+                    for f in existing.fields]
+            got = [(f.name, erase_nullability(f.dataType))
+                   for f in out.schema.fields]
+            if want != got:
+                raise ValueError(
+                    f"band-store schema drift: store at {path} holds "
+                    f"{existing.simpleString()} but this increment "
+                    f"carries {out.schema.simpleString()} — appending "
+                    "would create a mixed-schema directory whose read "
+                    "depends on which file's footer Spark samples. Align "
+                    "the increment's columns or rebuild the store."
+                )
+        out.write.mode("append").parquet(path)
 
 
 def commit_lsh_bands_bucketed(

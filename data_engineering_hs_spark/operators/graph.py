@@ -18,10 +18,12 @@ discipline as money-cents aggregation.
 
 At scale: ranks/degrees are node-sized (≪ edges) and broadcast when
 small; the edges table is the only big operand and is never
-re-shuffled if pre-partitioned by src. The loop materializes ranks
-per iteration via localCheckpoint to cut the growing lineage —
-without it, iteration k replans k joins deep (same lesson as
-dup_groups, dedup.py:38).
+re-shuffled if pre-partitioned by src. The loop persist()s ranks
+per iteration, co-partitioned on the node key so the next join
+reuses the edge cache's partitioning, and cuts the lineage with a
+localCheckpoint every _LINEAGE_CUT_EVERY (5) rounds — without the
+cut, iteration k replans k joins deep (same lesson as dup_groups,
+dedup.py:38).
 """
 
 from __future__ import annotations

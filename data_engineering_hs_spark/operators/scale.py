@@ -210,18 +210,18 @@ def optimize_table(
     sources.parquet.compact_parquet, crash-safe rename-aside swap).
     With zorder_cols: rewrites the directory laid out along the
     Morton curve AND right-sized (file count from on-disk bytes /
-    target), through the same crash-safe swap, so one maintenance
-    window fixes both file-count and clustering. Returns
+    target), through the same crash-safe swap (sources.parquet.
+    staged_rewrite — `_*.json` sidecars ride along), so one
+    maintenance window fixes both file-count and clustering. Returns
     {"files_before", "files_after", "bytes"}. Not
     concurrent-reader-safe — see sources.parquet.swap_in's
     CONCURRENT-READER VISIBILITY note; run in the maintenance window.
     """
-    import math
-    import os
-
     from data_engineering_hs_spark.sources.parquet import (
         _require_local_swap_path,
+        _resize_rewrite,
         compact_parquet,
+        store_writer_lease,
     )
 
     _require_local_swap_path(path, "optimize_table")
@@ -232,58 +232,19 @@ def optimize_table(
         return compact_parquet(
             spark, path, target_file_bytes=target_file_bytes
         )
-    from data_engineering_hs_spark.sources.parquet import (
-        store_writer_lease,
-    )
-
     # SINGLE-WRITER (enforced, r16): same lease as the rest of the
     # compaction family; the staged-snapshot tripwire stays as
     # defense against out-of-band writers.
     with store_writer_lease(path, "optimize_table"):
-        return _optimize_table_zorder_locked(
-            spark, path, zorder_cols, bits, target_file_bytes
+        return _resize_rewrite(
+            spark,
+            path,
+            "optimize_table",
+            target_file_bytes,
+            lambda df, tmp, n: zorder_write(
+                df, tmp, zorder_cols, bits=bits, n_files=n
+            ),
         )
-
-
-def _optimize_table_zorder_locked(
-    spark, path, zorder_cols, bits, target_file_bytes
-):
-    import math
-    import os
-
-    def data_files(d: str) -> list[str]:
-        return [
-            os.path.join(d, f)
-            for f in os.listdir(d)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
-
-    from data_engineering_hs_spark.sources.parquet import (
-        snapshot_data_files,
-        swap_in,
-    )
-
-    before = data_files(path)
-    staged = snapshot_data_files(path)
-    total = sum(os.path.getsize(f) for f in before)
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    norm = path.rstrip("/")
-    tmp = norm + ".__compact"
-    zorder_write(
-        spark.read.parquet(path), tmp, zorder_cols, bits=bits,
-        n_files=n_out,
-    )
-    # the ONE shared swap implementation (sources.parquet.swap_in):
-    # a hand-rolled copy here previously skipped the leftover-.__old
-    # cleanup, so a crash after the second rename wedged every later
-    # optimize run on ENOTEMPTY. staged= adds the post-park
-    # concurrent-writer verification (rolls back on a late commit).
-    swap_in(tmp, norm, staged=staged, op="optimize_table")
-    return {
-        "files_before": len(before),
-        "files_after": len(data_files(norm)),
-        "bytes": total,
-    }
 
 
 def register_bucketed_store(

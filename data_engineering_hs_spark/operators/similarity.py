@@ -33,6 +33,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
+from data_engineering_hs_spark.sources.parquet import (
+    STORE_META,
+    read_sidecar,
+    store_writer_lease,
+    write_sidecar,
+)
+
 from data_engineering_hs_spark.functions.vector import (
     cosine_from,
     dot,
@@ -1343,9 +1350,6 @@ def build_pq_code_store(
     )
 
 
-_CELL_STORE_META = "_store_meta.json"
-
-
 def erase_nullability(dt):
     """DataType with every nullable/containsNull/valueContainsNull
     flag forced to the parquet-read default (True), recursively.
@@ -1377,74 +1381,17 @@ def erase_nullability(dt):
     return dt
 
 
-def _local_store_dir(path: str) -> str | None:
-    """Driver-local directory for a store `path`, or None for remote
-    URIs (s3a://, hdfs://, …). Spark's writers accept ``file://`` URIs
-    but plain open()/os.path do NOT parse them — strip the scheme so
-    the meta sidecar lands beside (and is found beside) the data
-    instead of raising a raw FileNotFoundError AFTER the expensive
-    distributed write already completed. Schemeless paths return
-    unchanged."""
-    from urllib.parse import urlparse
-
-    parsed = urlparse(path)
-    if parsed.scheme == "":
-        return path
-    if parsed.scheme == "file":
-        return parsed.path or "/"
-    return None
-
-
-def _store_meta_path(path: str) -> str:
-    """Sidecar path for reads: the local dir when the store is local
-    (scheme stripped for file://), else the raw join — which
-    os.path.exists then reports missing, degrading to the documented
-    no-sidecar contract for remote stores."""
-    import os
-
-    local = _local_store_dir(path)
-    return os.path.join(local if local is not None else path,
-                        _CELL_STORE_META)
-
-
-def _write_store_meta(path: str, **params) -> None:
-    """Record the build-time parameters a query-time caller must
-    match, beside the data (the directory is Spark-written, so a
-    leading-underscore file is invisible to the parquet scan).
-    Best-effort ONLY for non-local store URIs (s3://, hdfs://): there
-    the sidecar is skipped and _check_store_meta degrades to the
-    documented caller contract. On a driver-local path — including a
-    ``file://`` URI, whose scheme is stripped before open() — an
-    OSError (permissions, disk full) PROPAGATES: swallowing it would
-    silently disable the m/bits/dim mismatch guard and a later
-    mismatched query would decode garbage with no error."""
-    import json
-    import os
-
-    local = _local_store_dir(path)
-    try:
-        target = local if local is not None else path
-        with open(os.path.join(target, _CELL_STORE_META), "w") as fh:
-            json.dump(params, fh, indent=0, sort_keys=True)
-    except OSError:
-        if local is not None:
-            raise
-
-
 def _check_store_meta(path: str, **expected) -> None:
     """Raise loudly when query-time parameters disagree with what the
     store was built with — a mismatched m/bits/dim/column name would
     otherwise decode garbage codes or mis-join silently. Pure
     driver-side file read + compares: no Spark job on the hot path.
-    A store without a meta file (pre-existing layout) skips the check.
+    A store without a meta file (pre-existing layout, remote URI)
+    skips the check.
     """
-    import json
-    import os
-
-    meta_path = _store_meta_path(path)
-    if not os.path.exists(meta_path):
+    recorded = read_sidecar(path, STORE_META)
+    if recorded is None:
         return
-    recorded = json.load(open(meta_path))
     bad = {
         k: (recorded.get(k), v)
         for k, v in expected.items()
@@ -1477,37 +1424,6 @@ def _write_cell_store(
     super_k: int | None = None,
     probe_supers: int = 1,
 ) -> None:
-    # SINGLE-WRITER (enforced, r16): both builders route through
-    # here; two racing builds interleave their overwrite jobs into
-    # one torn directory (shared _temporary, same class as the
-    # append race probe). flock sibling lease; remote URIs are
-    # documented-contract only.
-    from data_engineering_hs_spark.sources.parquet import (
-        store_writer_lease,
-    )
-
-    with store_writer_lease(path, "build_cell_store"):
-        _write_cell_store_locked(
-            payload, corpus, centers, path, id_col, vec_col,
-            center_id_col, center_vec_col, files_per_cell, meta,
-            super_k=super_k, probe_supers=probe_supers,
-        )
-
-
-def _write_cell_store_locked(
-    payload: DataFrame,
-    corpus: DataFrame,
-    centers: DataFrame,
-    path: str,
-    id_col: str,
-    vec_col: str,
-    center_id_col: str,
-    center_vec_col: str,
-    files_per_cell: int,
-    meta: dict,
-    super_k: int | None = None,
-    probe_supers: int = 1,
-) -> None:
     """Shared cell-partitioned store writer: assign each corpus row to
     its nearest coarse centroid, attach the payload columns by id, and
     write ``<path>/cell=<label>/`` — one file per cell by default,
@@ -1522,85 +1438,92 @@ def _write_cell_store_locked(
     approximate below (a borderline vector may land in a neighboring
     cell, which IVF recall absorbs the same way it absorbs kmeans'
     own assignment noise).
+
+    SINGLE-WRITER (enforced, r16): both builders route through here;
+    two racing builds interleave their overwrite jobs into one torn
+    directory (shared _temporary, same class as the append race
+    probe). flock sibling lease; remote URIs are documented-contract
+    only.
     """
-    # Fail BEFORE the destructive overwrite: the old store (data +
-    # _store_meta.json) lives inside `path`, so a zero-row build that
-    # only errored at the post-write read-back would already have
-    # wiped it — and the error's own advice (append to the existing
-    # store) would be unfollowable. Three limit-1 probes cover all
-    # causes: empty/all-excluded payload (e.g. a PQ corpus whose
-    # vectors are all non-finite encodes to nothing), empty centers
-    # (assignment join matches nothing), and disjoint payload/corpus
-    # id sets (r15, ADVICE). The third probe is ID-ONLY by design:
-    # with nonempty centers every corpus row gets exactly one cell
-    # (_nearest_topn ranks k>=1 candidates per row, non-finite sims
-    # included at 0.0), so "payload ⋈ cells empty" reduces to
-    # "payload and corpus id sets disjoint" — probing the real join
-    # would run the n×k assignment map stage through its window
-    # Exchange just to fetch one row, roughly doubling the build's
-    # dominant stage. Cost: three short-circuiting jobs over narrow
-    # columns, negligible against the build.
-    if payload.limit(1).isEmpty():
-        raise ValueError(
-            f"cell store build at {path!r} would write zero rows: the "
-            "corpus (after any encode-time exclusions) is empty. A "
-            "serving store needs a nonempty build; grow an existing "
-            "store with append_to_cell_store. The existing store, if "
-            "any, was left untouched."
+    with store_writer_lease(path, "build_cell_store"):
+        # Fail BEFORE the destructive overwrite: the old store (data +
+        # _store_meta.json) lives inside `path`, so a zero-row build that
+        # only errored at the post-write read-back would already have
+        # wiped it — and the error's own advice (append to the existing
+        # store) would be unfollowable. Three limit-1 probes cover all
+        # causes: empty/all-excluded payload (e.g. a PQ corpus whose
+        # vectors are all non-finite encodes to nothing), empty centers
+        # (assignment join matches nothing), and disjoint payload/corpus
+        # id sets (r15, ADVICE). The third probe is ID-ONLY by design:
+        # with nonempty centers every corpus row gets exactly one cell
+        # (_nearest_topn ranks k>=1 candidates per row, non-finite sims
+        # included at 0.0), so "payload ⋈ cells empty" reduces to
+        # "payload and corpus id sets disjoint" — probing the real join
+        # would run the n×k assignment map stage through its window
+        # Exchange just to fetch one row, roughly doubling the build's
+        # dominant stage. Cost: three short-circuiting jobs over narrow
+        # columns, negligible against the build.
+        if payload.limit(1).isEmpty():
+            raise ValueError(
+                f"cell store build at {path!r} would write zero rows: the "
+                "corpus (after any encode-time exclusions) is empty. A "
+                "serving store needs a nonempty build; grow an existing "
+                "store with append_to_cell_store. The existing store, if "
+                "any, was left untouched."
+            )
+        if centers.limit(1).isEmpty():
+            raise ValueError(
+                f"cell store build at {path!r} would write zero rows: the "
+                "centers frame is empty, so no corpus row can be assigned "
+                "a cell. The existing store, if any, was left untouched."
+            )
+        if (
+            payload.select(id_col)
+            .join(corpus.select(id_col), id_col, "semi")
+            .limit(1)
+            .isEmpty()
+        ):
+            raise ValueError(
+                f"cell store build at {path!r} would write zero rows: the "
+                "cell assignment shares no id with the payload (corpus "
+                f"and payload {id_col!r} sets do not overlap). The "
+                "existing store, if any, was left untouched."
+            )
+        cells = _assign_cells(
+            corpus, centers, id_col, vec_col, center_id_col, center_vec_col,
+            super_k, probe_supers,
         )
-    if centers.limit(1).isEmpty():
-        raise ValueError(
-            f"cell store build at {path!r} would write zero rows: the "
-            "centers frame is empty, so no corpus row can be assigned "
-            "a cell. The existing store, if any, was left untouched."
+        _salted_cell_write(
+            payload.join(cells, id_col), path, id_col, files_per_cell,
+            mode="overwrite",
         )
-    if (
-        payload.select(id_col)
-        .join(corpus.select(id_col), id_col, "semi")
-        .limit(1)
-        .isEmpty()
-    ):
-        raise ValueError(
-            f"cell store build at {path!r} would write zero rows: the "
-            "cell assignment shares no id with the payload (corpus "
-            f"and payload {id_col!r} sets do not overlap). The "
-            "existing store, if any, was left untouched."
-        )
-    cells = _assign_cells(
-        corpus, centers, id_col, vec_col, center_id_col, center_vec_col,
-        super_k, probe_supers,
-    )
-    _salted_cell_write(
-        payload.join(cells, id_col), path, id_col, files_per_cell,
-        mode="overwrite",
-    )
-    # corpus-identity stamp: read back what was WRITTEN (no TOCTOU
-    # against a corpus mutating mid-build) and fingerprint the served
-    # id set; query paths verify the caller's corpus against it.
-    # super_k/probe_supers ride along so append_to_cell_store can
-    # reproduce the build's assignment mode.
-    spark = corpus.sparkSession
-    meta = dict(meta)
-    try:
-        written = spark.read.parquet(path)
-    except AnalysisException as e:
-        if "UNABLE_TO_INFER_SCHEMA" not in str(e):
-            raise
-        # a zero-row partitioned write emits no part files, so the
-        # read-back cannot infer a schema. At corpus scale this is an
-        # upstream pipeline bug (a filter stage selected nothing, the
-        # centers frame was empty, or the assignment join matched no
-        # ids) — fail with the cause, not a schema-inference error.
-        raise ValueError(
-            f"cell store build at {path!r} wrote zero rows — empty "
-            "corpus, empty centers, or no id overlap between corpus "
-            "and assignment. A serving store needs a nonempty build; "
-            "grow an existing store with append_to_cell_store."
-        ) from e
-    meta.update(_corpus_stamp(written, meta["id_col"]))
-    if super_k is not None:
-        meta.update({"super_k": super_k, "probe_supers": probe_supers})
-    _write_store_meta(path, **meta)
+        # corpus-identity stamp: read back what was WRITTEN (no TOCTOU
+        # against a corpus mutating mid-build) and fingerprint the served
+        # id set; query paths verify the caller's corpus against it.
+        # super_k/probe_supers ride along so append_to_cell_store can
+        # reproduce the build's assignment mode.
+        spark = corpus.sparkSession
+        meta = dict(meta)
+        try:
+            written = spark.read.parquet(path)
+        except AnalysisException as e:
+            if "UNABLE_TO_INFER_SCHEMA" not in str(e):
+                raise
+            # a zero-row partitioned write emits no part files, so the
+            # read-back cannot infer a schema. At corpus scale this is an
+            # upstream pipeline bug (a filter stage selected nothing, the
+            # centers frame was empty, or the assignment join matched no
+            # ids) — fail with the cause, not a schema-inference error.
+            raise ValueError(
+                f"cell store build at {path!r} wrote zero rows — empty "
+                "corpus, empty centers, or no id overlap between corpus "
+                "and assignment. A serving store needs a nonempty build; "
+                "grow an existing store with append_to_cell_store."
+            ) from e
+        meta.update(_corpus_stamp(written, meta["id_col"]))
+        if super_k is not None:
+            meta.update({"super_k": super_k, "probe_supers": probe_supers})
+        write_sidecar(path, STORE_META, meta)
 
 
 def _assign_cells(
@@ -1698,14 +1621,8 @@ def _verify_store_corpus(
     paths to skip it (e.g. a hot serving loop that re-queries the
     same corpus). Stores without a stamp (pre-existing layout) skip
     the check, same degradation as _check_store_meta."""
-    import json
-    import os
-
-    meta_path = _store_meta_path(path)
-    if not os.path.exists(meta_path):
-        return
-    recorded = json.load(open(meta_path))
-    if "corpus_n" not in recorded:
+    recorded = read_sidecar(path, STORE_META)
+    if recorded is None or "corpus_n" not in recorded:
         return
     got = _corpus_stamp(corpus, id_col)
     if (
@@ -1724,23 +1641,6 @@ def _verify_store_corpus(
 
 
 def compact_cell_store(
-    spark, path: str, files_per_cell: int = 1
-) -> dict:
-    """SINGLE-WRITER (enforced, r16): runs under store_writer_lease,
-    so an append_to_cell_store racing this compaction now fails up
-    front with ConcurrentWriterError instead of tripping the staged-
-    snapshot check mid-swap (that tripwire stays as defense against
-    writers that bypass the mutators). Remote URIs: documented
-    contract only. Full semantics: _compact_cell_store_locked."""
-    from data_engineering_hs_spark.sources.parquet import (
-        store_writer_lease,
-    )
-
-    with store_writer_lease(path, "compact_cell_store"):
-        return _compact_cell_store_locked(spark, path, files_per_cell)
-
-
-def _compact_cell_store_locked(
     spark, path: str, files_per_cell: int = 1
 ) -> dict:
     """Collapse an appended cell store back to ``files_per_cell``
@@ -1767,21 +1667,21 @@ def _compact_cell_store_locked(
     cell or a mid-scan FileNotFoundException (see swap_in's
     CONCURRENT-READER VISIBILITY note) — compact between query
     batches. Returns {"files_before", "files_after"}.
+
+    SINGLE-WRITER (enforced, r16): runs under store_writer_lease, so
+    an append_to_cell_store racing this compaction fails up front
+    with ConcurrentWriterError instead of tripping the staged-snapshot
+    check mid-swap (that tripwire stays as defense against writers
+    that bypass the mutators). Remote URIs: documented contract only.
     """
-    import json
     import os
 
     from data_engineering_hs_spark.sources.parquet import (
         _require_local_swap_path,
-        check_no_concurrent_writer,
-        snapshot_data_files,
-        swap_in,
+        staged_rewrite,
     )
 
     _require_local_swap_path(path, "compact_cell_store")
-    meta_path = _store_meta_path(path)
-    meta = json.load(open(meta_path)) if os.path.exists(meta_path) else None
-    id_col = (meta or {}).get("id_col")
 
     def n_files(d: str) -> int:
         return sum(
@@ -1791,30 +1691,27 @@ def _compact_cell_store_locked(
             if f.endswith(".parquet")
         )
 
-    if not os.path.isdir(path.rstrip("/")):
-        raise ValueError(
-            f"compact_cell_store: no store at {path} — build one with "
-            "build_ivf_store/build_pq_code_store first"
-        )
-    before = n_files(path)
-    if before == 0:
-        # dir exists but holds no data files: nothing to rewrite
-        return {"files_before": 0, "files_after": 0}
-    # staging snapshot for the pre-swap concurrent-writer tripwire
-    # (append_to_cell_store is single-writer by contract, but a
-    # violated contract must abort loudly, not lose the append)
-    staged = snapshot_data_files(path)
-    df = spark.read.parquet(path)
-    if id_col is None:
-        id_col = [c for c in df.columns if c != "cell"][0]
-    norm = path.rstrip("/")
-    tmp = norm + ".__compact"
-    _salted_cell_write(df, tmp, id_col, files_per_cell, mode="overwrite")
-    if meta is not None:
-        _write_store_meta(tmp, **meta)
-    check_no_concurrent_writer(norm, staged, "compact_cell_store", tmp)
-    swap_in(tmp, norm, staged=staged, op="compact_cell_store")
-    return {"files_before": before, "files_after": n_files(norm)}
+    with store_writer_lease(path, "compact_cell_store"):
+        if not os.path.isdir(path.rstrip("/")):
+            raise ValueError(
+                f"compact_cell_store: no store at {path} — build one with "
+                "build_ivf_store/build_pq_code_store first"
+            )
+        before = n_files(path)
+        if before == 0:
+            # dir exists but holds no data files: nothing to rewrite
+            return {"files_before": 0, "files_after": 0}
+        id_col = (read_sidecar(path, STORE_META) or {}).get("id_col")
+
+        def write(tmp: str) -> None:
+            df = spark.read.parquet(path)
+            _salted_cell_write(
+                df, tmp, id_col or [c for c in df.columns if c != "cell"][0],
+                files_per_cell, mode="overwrite",
+            )
+
+        staged_rewrite(path, "compact_cell_store", write)
+        return {"files_before": before, "files_after": n_files(path)}
 
 
 def read_cell_store(spark, path: str, probed_cells) -> DataFrame:
@@ -1912,37 +1809,6 @@ def append_to_cell_store(
     center_vec_col: str = "centroid",
     files_per_cell: int = 1,
 ) -> None:
-    """SINGLE-WRITER (enforced, r16): the meta read, dtype drift
-    check, no-overlap probe, cell write, and stamp fold all run
-    under store_writer_lease — every one of those steps is only
-    sound against a frozen store, and racing appends double-commit
-    AND lose in-flight task files (shared `path/_temporary`; see the
-    append_fingerprints probe). A second writer (or a concurrent
-    compact_cell_store) raises ConcurrentWriterError. Remote store
-    URIs have no flock — there this paragraph is the contract.
-    Full semantics: _append_to_cell_store_locked."""
-    from data_engineering_hs_spark.sources.parquet import (
-        store_writer_lease,
-    )
-
-    with store_writer_lease(path, "append_to_cell_store"):
-        _append_to_cell_store_locked(
-            new_rows, centers, path, codebooks=codebooks,
-            center_id_col=center_id_col,
-            center_vec_col=center_vec_col,
-            files_per_cell=files_per_cell,
-        )
-
-
-def _append_to_cell_store_locked(
-    new_rows: DataFrame,
-    centers: DataFrame,
-    path: str,
-    codebooks: DataFrame | None = None,
-    center_id_col: str = "label",
-    center_vec_col: str = "centroid",
-    files_per_cell: int = 1,
-) -> None:
     """Incremental maintenance for BOTH cell stores: assign and (for a
     PQ store) encode ONLY the new rows, append them into their cell
     partitions, and fold their ids into the corpus stamp — the
@@ -1996,7 +1862,7 @@ def _append_to_cell_store_locked(
     rows from both writers are intact (parquet appends don't collide);
     re-stamp by running a no-op append of zero rows after re-counting,
     or rebuild. (Since r16 the stamp tripwire is secondary: the
-    store_writer_lease on the public wrapper IS a lock, so two
+    store_writer_lease around this function IS a lock, so two
     lease-taking appends can no longer interleave at all — the
     tripwire now only catches writers that bypass the mutators or
     race on a remote URI, where flock has no analog.)
@@ -2008,100 +1874,102 @@ def _append_to_cell_store_locked(
     exclude them (unencodable). If the increment can carry a
     non-trivial corrupt fraction, pre-filter it with
     functions.vector.is_finite_vector — see build_ivf_store.
-    """
-    import json
 
-    meta_path = _store_meta_path(path)
-    try:
-        recorded = json.load(open(meta_path))
-    except OSError:
-        raise ValueError(
-            f"cell store at {path} has no readable {_CELL_STORE_META} — "
-            "append needs the build parameters (kind, columns, m/bits/"
-            "dim, assignment mode); rebuild the store to (re)create it"
-        )
-    meta_at_read = dict(recorded)
-    kind = recorded.get("kind")
-    id_col, vec_col = recorded["id_col"], recorded["vec_col"]
-    if kind == "pq_code":
-        if codebooks is None:
+    SINGLE-WRITER (enforced, r16): the meta read, dtype drift check,
+    no-overlap probe, cell write, and stamp fold all run under
+    store_writer_lease — every one of those steps is only sound
+    against a frozen store, and racing appends double-commit AND lose
+    in-flight task files (shared `path/_temporary`; see the
+    append_fingerprints probe). A second writer (or a concurrent
+    compact_cell_store) raises ConcurrentWriterError. Remote store
+    URIs have no flock — there this paragraph is the contract.
+    """
+    with store_writer_lease(path, "append_to_cell_store"):
+        recorded = read_sidecar(path, STORE_META)
+        if recorded is None:
             raise ValueError(
-                "appending to a pq_code store requires the build-time "
-                "codebooks (codes must decode against the same LUT)"
+                f"cell store at {path} has no readable {STORE_META} — "
+                "append needs the build parameters (kind, columns, m/bits/"
+                "dim, assignment mode); rebuild the store to (re)create it"
             )
-        payload = pq_encode(
-            new_rows, codebooks,
-            recorded["m"], recorded["bits"], recorded["dim"],
-            id_col, vec_col,
-        )
-    elif kind == "ivf_flat":
-        payload = new_rows.select(F.col(id_col), F.col(vec_col))
-    else:
-        raise ValueError(f"unknown cell-store kind {kind!r} at {path}")
-    # Abort-before-mixing dtype check (r15 schema-drift probe): an
-    # increment whose id/vec dtypes drifted (int id into a bigint
-    # store, array<double> vecs into an array<float> store) used to
-    # APPEND fine and poison the store — the next read samples ONE
-    # file's footer, so queries then FAILED_READ_FILE or silently
-    # upcast depending on listing order, and the bad files were
-    # already committed. Compare against the store's own schema and
-    # refuse loudly with the store untouched.
-    store_schema = {
-        f.name: erase_nullability(f.dataType)
-        for f in new_rows.sparkSession.read.parquet(path).schema.fields
-    }
-    for c in (id_col, vec_col) if kind == "ivf_flat" else (id_col,):
-        want = store_schema.get(c)
-        got = erase_nullability(payload.schema[c].dataType)
-        if want is not None and got != want:
-            raise ValueError(
-                f"cell-store append schema drift at {path}: column "
-                f"{c!r} is {want.simpleString()} in the store but "
-                f"{got.simpleString()} in this increment — appending "
-                "would create a mixed-schema store whose reads depend "
-                "on which file's footer Spark samples. Cast the "
-                "increment to the store's types or rebuild. Nothing "
-                "was written."
+        meta_at_read = dict(recorded)
+        kind = recorded.get("kind")
+        id_col, vec_col = recorded["id_col"], recorded["vec_col"]
+        if kind == "pq_code":
+            if codebooks is None:
+                raise ValueError(
+                    "appending to a pq_code store requires the build-time "
+                    "codebooks (codes must decode against the same LUT)"
+                )
+            payload = pq_encode(
+                new_rows, codebooks,
+                recorded["m"], recorded["bits"], recorded["dim"],
+                id_col, vec_col,
             )
-    cells = _assign_cells(
-        new_rows, centers, id_col, vec_col, center_id_col,
-        center_vec_col, recorded.get("super_k"),
-        recorded.get("probe_supers", 1),
-    )
-    _salted_cell_write(
-        payload.join(cells, id_col), path, id_col, files_per_cell,
-        mode="append",
-    )
-    if "corpus_n" in recorded:
-        # XOR-fold the increment in — no store rescan
-        inc = _corpus_stamp(new_rows, id_col)
-        recorded["corpus_n"] += inc["corpus_n"]
-        recorded["corpus_idhash"] ^= inc["corpus_idhash"]
-    else:
-        # pre-stamp store: certify the full served set once
-        recorded.update(
-            _corpus_stamp(
-                new_rows.sparkSession.read.parquet(path), id_col
+        elif kind == "ivf_flat":
+            payload = new_rows.select(F.col(id_col), F.col(vec_col))
+        else:
+            raise ValueError(f"unknown cell-store kind {kind!r} at {path}")
+        # Abort-before-mixing dtype check (r15 schema-drift probe): an
+        # increment whose id/vec dtypes drifted (int id into a bigint
+        # store, array<double> vecs into an array<float> store) used to
+        # APPEND fine and poison the store — the next read samples ONE
+        # file's footer, so queries then FAILED_READ_FILE or silently
+        # upcast depending on listing order, and the bad files were
+        # already committed. Compare against the store's own schema and
+        # refuse loudly with the store untouched.
+        store_schema = {
+            f.name: erase_nullability(f.dataType)
+            for f in new_rows.sparkSession.read.parquet(path).schema.fields
+        }
+        for c in (id_col, vec_col) if kind == "ivf_flat" else (id_col,):
+            want = store_schema.get(c)
+            got = erase_nullability(payload.schema[c].dataType)
+            if want is not None and got != want:
+                raise ValueError(
+                    f"cell-store append schema drift at {path}: column "
+                    f"{c!r} is {want.simpleString()} in the store but "
+                    f"{got.simpleString()} in this increment — appending "
+                    "would create a mixed-schema store whose reads depend "
+                    "on which file's footer Spark samples. Cast the "
+                    "increment to the store's types or rebuild. Nothing "
+                    "was written."
+                )
+        cells = _assign_cells(
+            new_rows, centers, id_col, vec_col, center_id_col,
+            center_vec_col, recorded.get("super_k"),
+            recorded.get("probe_supers", 1),
+        )
+        _salted_cell_write(
+            payload.join(cells, id_col), path, id_col, files_per_cell,
+            mode="append",
+        )
+        if "corpus_n" in recorded:
+            # XOR-fold the increment in — no store rescan
+            inc = _corpus_stamp(new_rows, id_col)
+            recorded["corpus_n"] += inc["corpus_n"]
+            recorded["corpus_idhash"] ^= inc["corpus_idhash"]
+        else:
+            # pre-stamp store: certify the full served set once
+            recorded.update(
+                _corpus_stamp(
+                    new_rows.sparkSession.read.parquet(path), id_col
+                )
             )
-        )
-    # single-writer tripwire: another writer touched the sidecar since
-    # this append read it — writing now would lose its fold (see
-    # docstring). The data files from both writers are already safely
-    # appended; only the stamp is in question.
-    try:
-        current = json.load(open(meta_path))
-    except OSError:
-        current = None
-    if current != meta_at_read:
-        raise RuntimeError(
-            f"_store_meta.json at {path} changed while this append ran "
-            "(single-writer contract violated — a concurrent append or "
-            "compact_cell_store). This append's rows ARE in the store; "
-            "the corpus stamp is now uncertain and was NOT overwritten. "
-            "Serialize maintenance, then re-certify the stamp (rebuild, "
-            "or re-stamp from a full store scan)."
-        )
-    _write_store_meta(path, **recorded)
+        # single-writer tripwire: another writer touched the sidecar since
+        # this append read it — writing now would lose its fold (see
+        # docstring). The data files from both writers are already safely
+        # appended; only the stamp is in question.
+        if read_sidecar(path, STORE_META) != meta_at_read:
+            raise RuntimeError(
+                f"_store_meta.json at {path} changed while this append ran "
+                "(single-writer contract violated — a concurrent append or "
+                "compact_cell_store). This append's rows ARE in the store; "
+                "the corpus stamp is now uncertain and was NOT overwritten. "
+                "Serialize maintenance, then re-certify the stamp (rebuild, "
+                "or re-stamp from a full store scan)."
+            )
+        write_sidecar(path, STORE_META, recorded)
 
 
 def _super_group_centroids(

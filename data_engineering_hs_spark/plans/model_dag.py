@@ -76,9 +76,9 @@ class ModelRunner:
         sources: dict[str, DataFrame],
         warehouse_dir: str | None = None,
     ):
-        from urllib.parse import urlparse
+        from data_engineering_hs_spark.sources.parquet import _local_path
 
-        if warehouse_dir and urlparse(warehouse_dir).scheme:
+        if warehouse_dir and _local_path(warehouse_dir) != warehouse_dir:
             # the materialization probes are driver-local os.path; on
             # a remote URI they report every target as absent, which
             # silently degrades incremental models to the FIRST-RUN

@@ -51,14 +51,28 @@ def read_pruned(
     return df
 
 
+def _local_path(path: str) -> str | None:
+    """Driver-local filesystem path for a store `path`, or None for
+    remote URIs (s3a://, hdfs://, …) — the ONE URI resolver of the
+    store lifecycle. Spark's writers accept ``file://`` URIs but plain
+    open()/os.path do NOT parse them, so the scheme is stripped;
+    schemeless paths return unchanged."""
+    from urllib.parse import urlparse
+
+    parsed = urlparse(path)
+    if parsed.scheme == "":
+        return path
+    if parsed.scheme == "file":
+        return parsed.path or "/"
+    return None
+
+
 def _require_local_swap_path(path: str, op: str) -> None:
     """The rename-aside swap (swap_in/recover_swap) is POSIX os.replace
     and the file listings are os.listdir — reject URI paths up front
-    (streaming_cdc_apply pattern) instead of dying mid-protocol with a
-    confusing FileNotFoundError after work was already done."""
-    from urllib.parse import urlparse
-
-    if urlparse(path).scheme:
+    instead of dying mid-protocol with a confusing FileNotFoundError
+    after work was already done."""
+    if _local_path(path) != path:
         raise ValueError(
             f"{op} requires a driver-local path (got {path!r}): the "
             "crash-safe swap is POSIX renames, which URIs (s3a/hdfs/"
@@ -66,6 +80,46 @@ def _require_local_swap_path(path: str, op: str) -> None:
             "compact remote tables with a transactional format's "
             "OPTIMIZE"
         )
+
+
+NORM_META = "_norm_meta.json"
+STORE_META = "_store_meta.json"
+
+
+def read_sidecar(path: str, name: str) -> dict | None:
+    """The JSON sidecar `name` (NORM_META, STORE_META) beside a
+    store's data, or None when the store has none — a missing file,
+    or a remote URI, where sidecars degrade to the documented caller
+    contract. Other read errors propagate: an unreadable stamp must
+    not silently disable the check it carries."""
+    import json
+    import os
+
+    local = _local_path(path)
+    if local is None:
+        return None
+    try:
+        with open(os.path.join(local, name)) as fh:
+            return json.load(fh)
+    except (FileNotFoundError, NotADirectoryError):
+        return None
+
+
+def write_sidecar(path: str, name: str, meta: dict) -> None:
+    """Write a JSON sidecar beside a store's data (leading underscore
+    ⇒ invisible to the parquet scan and carried by staged_rewrite).
+    Skipped for remote URIs; on a driver-local path — including a
+    ``file://`` URI — an OSError (missing dir, permissions, disk
+    full) PROPAGATES: swallowing it would silently disable the guard
+    the sidecar carries."""
+    import json
+    import os
+
+    local = _local_path(path)
+    if local is None:
+        return
+    with open(os.path.join(local, name), "w") as fh:
+        json.dump(meta, fh, indent=0, sort_keys=True)
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -90,16 +144,8 @@ def _lease_file(path: str) -> str | None:
     where POSIX flock doesn't exist — there the single-writer
     contract is documented-only (a transactional table format or
     S3 conditional puts are the real mechanism at that layer)."""
-    from urllib.parse import urlparse
-
-    parsed = urlparse(path)
-    if parsed.scheme == "":
-        local = path
-    elif parsed.scheme == "file":
-        local = parsed.path or "/"
-    else:
-        return None
-    return local.rstrip("/") + LEASE_SUFFIX
+    local = _local_path(path)
+    return None if local is None else local.rstrip("/") + LEASE_SUFFIX
 
 
 def store_writer_lease(path: str, op: str):
@@ -236,6 +282,79 @@ def check_no_concurrent_writer(
         )
 
 
+def staged_rewrite(
+    path: str, op: str, write, suffix: str = "__compact"
+) -> None:
+    """Rewrite a driver-local store through the rename-aside swap —
+    the ONE staged-rewrite path every store mutator that replaces a
+    whole directory goes through. In order:
+
+    1. snapshot the live data files (BEFORE the caller's read, so a
+       commit landing after it is seen by the checks below, never
+       silently missing from the rewrite);
+    2. ``write(tmp)``: the caller reads the store and writes the new
+       version to ``<path>.<suffix>``;
+    3. copy every ``_*.json`` sidecar (normalization stamp, store
+       meta) into tmp — they are invisible to the parquet scan, so
+       the swap would otherwise DROP them and a stamped store would
+       silently degrade to the unstamped-legacy contract;
+    4. check_no_concurrent_writer (pre-swap tripwire);
+    5. swap_in(staged=…) (post-park verification, crash-safe renames;
+       recover_swap finishes any crash point).
+
+    The caller rejects URI paths up front (_require_local_swap_path)
+    and holds the store lease where its contract calls for one."""
+    import os
+    import shutil
+
+    norm = path.rstrip("/")
+    staged = snapshot_data_files(norm)
+    tmp = norm + "." + suffix
+    write(tmp)
+    for f in os.listdir(norm):
+        if f.startswith("_") and f.endswith(".json"):
+            shutil.copyfile(os.path.join(norm, f), os.path.join(tmp, f))
+    check_no_concurrent_writer(norm, staged, op, tmp)
+    swap_in(tmp, norm, staged=staged, op=op)
+
+
+def _resize_rewrite(
+    spark: SparkSession, path: str, op: str, target_file_bytes: int, write
+) -> dict:
+    """staged_rewrite of a flat parquet directory into n_out =
+    ceil(on-disk bytes / target_file_bytes) files, laid out by
+    ``write(df, tmp, n_out)`` — the sizing shared by compact_parquet
+    and operators.scale.optimize_table. Returns {"files_before",
+    "files_after", "bytes"}."""
+    import math
+    import os
+
+    def data_files() -> list[str]:
+        return [
+            os.path.join(path, f)
+            for f in os.listdir(path)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+
+    before = data_files()
+    if not before:
+        # empty existing dir (no increment committed yet): nothing to
+        # compact — a clean no-op beats the raw UNABLE_TO_INFER_SCHEMA
+        # the parquet read would otherwise throw (missing dirs still
+        # FileNotFoundError on the listdir above, deliberately loud)
+        return {"files_before": 0, "files_after": 0, "bytes": 0}
+    total = sum(os.path.getsize(f) for f in before)
+    n_out = max(1, math.ceil(total / target_file_bytes))
+    staged_rewrite(
+        path, op, lambda tmp: write(spark.read.parquet(path), tmp, n_out)
+    )
+    return {
+        "files_before": len(before),
+        "files_after": len(data_files()),
+        "bytes": total,
+    }
+
+
 def compact_parquet(
     spark: SparkSession,
     path: str,
@@ -251,14 +370,12 @@ def compact_parquet(
     coalesce (no shuffle — each output file concatenates input splits;
     row order within files may differ run-to-run but content is
     identical); shuffle=True uses repartition for evenly-sized files
-    when the inputs are skewed. Crash-safe swap: the compacted copy
-    writes to `<path>.__compact`, the original is renamed aside to
-    `<path>.__old`, the copy takes its place, then the old dir is
-    removed — every crash point leaves a COMPLETE dataset under a
-    predictable name (recovery: if `path` is missing, rename
-    `<path>.__old` — or `<path>.__compact` if `__old` is also gone —
-    back to `path`; a leftover `__old` beside a live `path` is
-    post-swap garbage, delete it).
+    when the inputs are skewed. Crash-safe swap (staged_rewrite): the
+    compacted copy writes to `<path>.__compact`, the original is
+    renamed aside to `<path>.__old`, the copy takes its place, then
+    the old dir is removed — every crash point leaves a COMPLETE
+    dataset under a predictable name (recovery: recover_swap).
+    `_*.json` sidecars ride along.
 
     Returns {"files_before", "files_after", "bytes"}. NOT for
     partitioned layouts (compact each partition directory); the swap
@@ -268,78 +385,30 @@ def compact_parquet(
     note) — run in the maintenance window, like any
     non-transactional lakehouse compaction.
 
+    SINGLE-WRITER (enforced, r16): the listing, staging read,
+    rewrite, and swap all run under the store lease — an append
+    racing this compaction fails up front (its side) or is excluded
+    (ours) instead of landing files in the pre-swap directory that
+    the rename-aside then strands. The staged-snapshot tripwire stays
+    as defense against out-of-band writers.
+
     Degenerate cardinalities (pinned in
     tests/test_store_lifecycle_edges.py): an EXISTING-but-empty dir
     is a zero-stat no-op; a MISSING path raises FileNotFoundError
     (an empty store is a normal pre-first-commit state, a missing
     one is a caller mistake).
     """
-    import math
-    import os
-    import shutil
-
     _require_local_swap_path(path, "compact_parquet")
-    # SINGLE-WRITER (enforced, r16): the listing, staging read,
-    # rewrite, and swap all run under the store lease — an append
-    # racing this compaction now fails up front (its side) or is
-    # excluded (ours) instead of landing files in the pre-swap
-    # directory that the rename-aside then strands. The staged-
-    # snapshot tripwire stays as defense against out-of-band writers.
     with store_writer_lease(path, "compact_parquet"):
-        return _compact_parquet_locked(
-            spark, path, target_file_bytes, shuffle
+        return _resize_rewrite(
+            spark,
+            path,
+            "compact_parquet",
+            target_file_bytes,
+            lambda df, tmp, n: (
+                df.repartition(n) if shuffle else df.coalesce(n)
+            ).write.mode("overwrite").parquet(tmp),
         )
-
-
-def _compact_parquet_locked(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int,
-    shuffle: bool,
-) -> dict:
-    import math
-    import os
-    import shutil
-
-    def data_files(d: str) -> list[str]:
-        return [
-            os.path.join(d, f)
-            for f in os.listdir(d)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
-
-    before = data_files(path)
-    if not before:
-        # empty existing dir (no increment committed yet): nothing to
-        # compact — a clean no-op beats the raw UNABLE_TO_INFER_SCHEMA
-        # the parquet read would otherwise throw (missing dirs still
-        # FileNotFoundError on the listdir above, deliberately loud)
-        return {"files_before": 0, "files_after": 0, "bytes": 0}
-    staged = snapshot_data_files(path)
-    total = sum(os.path.getsize(f) for f in before)
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    sized = df.repartition(n_out) if shuffle else df.coalesce(n_out)
-    norm = path.rstrip("/")
-    tmp = norm + ".__compact"
-    sized.write.mode("overwrite").parquet(tmp)
-    # Carry `_*.json` sidecars (normalization stamp, store meta)
-    # through the rewrite: they are invisible to the parquet scan, so
-    # the rename-aside swap would otherwise DROP them and a stamped
-    # store would silently degrade to the unstamped-legacy contract
-    # after one compaction (same carry as _compact_ingest_impl).
-    for f in os.listdir(norm):
-        if f.startswith("_") and f.endswith(".json"):
-            shutil.copyfile(os.path.join(norm, f), os.path.join(tmp, f))
-    # Swap via rename-aside (shared protocol): rmtree(path) before
-    # the rename would leave a crash window with NO dataset at path.
-    check_no_concurrent_writer(norm, staged, "compact_parquet", tmp)
-    swap_in(tmp, norm, staged=staged, op="compact_parquet")
-    return {
-        "files_before": len(before),
-        "files_after": len(data_files(path)),
-        "bytes": total,
-    }
 
 
 def swap_in(
@@ -352,8 +421,8 @@ def swap_in(
     in, drop the parked copy. Every crash point leaves a complete
     dataset at a name recover_swap knows how to finish from.
     DRIVER-LOCAL paths only (POSIX os.replace) — callers that accept
-    user paths must reject URIs up front, the way
-    streaming_cdc_apply does.
+    user paths reject URIs up front (_require_local_swap_path). Called
+    only through staged_rewrite.
 
     `staged` (the snapshot_data_files set the rewrite was staged
     from) closes the concurrent-writer race the PRE-swap check
@@ -408,8 +477,9 @@ def swap_in(
 
 
 def recover_swap(path: str, tmp_suffixes: tuple[str, ...] = ("__compact", "__merge")) -> str:
-    """Recovery for the rename-aside swap protocol used by
-    compact_parquet and streaming.pipelines.streaming_cdc_apply.
+    """Recovery for the rename-aside swap protocol (staged_rewrite:
+    `__compact` for the compaction family, `__merge` for
+    streaming.pipelines.streaming_cdc_apply).
 
     Crash states and actions (every state holds ≥1 COMPLETE dataset):
     - `path` present → swap finished (or never started): delete any
@@ -429,36 +499,29 @@ def recover_swap(path: str, tmp_suffixes: tuple[str, ...] = ("__compact", "__mer
     # SINGLE-WRITER (enforced, r16): recovery racing a live writer
     # would finish/roll back a swap under its feet — take the lease.
     with store_writer_lease(path, "recover_swap"):
-        return _recover_swap_locked(path, tmp_suffixes)
-
-
-def _recover_swap_locked(path: str, tmp_suffixes: tuple[str, ...]) -> str:
-    import os
-    import shutil
-
-    norm = path.rstrip("/")
-    old = norm + ".__old"
-    tmps = [norm + "." + s for s in tmp_suffixes]
-    if os.path.exists(norm):
-        shutil.rmtree(old, ignore_errors=True)
-        for t in tmps:
-            shutil.rmtree(t, ignore_errors=True)
-        return "intact"
-    complete = [
-        t for t in tmps if os.path.exists(os.path.join(t, "_SUCCESS"))
-    ]
-    if complete:
-        os.replace(complete[0], norm)
-        shutil.rmtree(old, ignore_errors=True)
-        for t in tmps:
-            shutil.rmtree(t, ignore_errors=True)
-        return "completed_swap"
-    if os.path.exists(old):
-        os.replace(old, norm)
-        for t in tmps:
-            shutil.rmtree(t, ignore_errors=True)
-        return "rolled_back"
-    raise FileNotFoundError(f"no recoverable dataset for {path}")
+        norm = path.rstrip("/")
+        old = norm + ".__old"
+        tmps = [norm + "." + s for s in tmp_suffixes]
+        if os.path.exists(norm):
+            shutil.rmtree(old, ignore_errors=True)
+            for t in tmps:
+                shutil.rmtree(t, ignore_errors=True)
+            return "intact"
+        complete = [
+            t for t in tmps if os.path.exists(os.path.join(t, "_SUCCESS"))
+        ]
+        if complete:
+            os.replace(complete[0], norm)
+            shutil.rmtree(old, ignore_errors=True)
+            for t in tmps:
+                shutil.rmtree(t, ignore_errors=True)
+            return "completed_swap"
+        if os.path.exists(old):
+            os.replace(old, norm)
+            for t in tmps:
+                shutil.rmtree(t, ignore_errors=True)
+            return "rolled_back"
+        raise FileNotFoundError(f"no recoverable dataset for {path}")
 
 
 def delete_keys_partitioned(
@@ -490,67 +553,55 @@ def delete_keys_partitioned(
     only.
     """
     with store_writer_lease(path, "delete_keys_partitioned"):
-        return _delete_keys_partitioned_locked(
-            spark, path, keys, key_col, partition_col
+        df = spark.read.parquet(path)
+        # null-safe key matching throughout: a doomed NULL key must
+        # delete NULL-key rows (plain equi-joins silently drop them)
+        doomed = keys.select(F.col(key_col).alias("__doomed_key")).distinct()
+        key_match = F.col(key_col).eqNullSafe(F.col("__doomed_key"))
+        parts = [
+            r[0]
+            for r in df.join(doomed, key_match, "left_semi")
+            .select(partition_col)
+            .distinct()
+            .collect()  # partition VALUES only — dim-sized by definition
+        ]
+        if not parts:
+            return {"partitions_rewritten": 0, "rows_deleted": 0}
+        # isin() never matches NULL, so a NULL partition value (the
+        # __HIVE_DEFAULT_PARTITION__ directory) gets its own branch;
+        # the literal isin keeps static partition pruning for the rest
+        non_null = [v for v in parts if v is not None]
+        cond = (
+            F.col(partition_col).isin(non_null) if non_null else F.lit(False)
         )
-
-
-def _delete_keys_partitioned_locked(
-    spark: SparkSession,
-    path: str,
-    keys: DataFrame,
-    key_col: str,
-    partition_col: str,
-) -> dict:
-    df = spark.read.parquet(path)
-    # null-safe key matching throughout: a doomed NULL key must
-    # delete NULL-key rows (plain equi-joins silently drop them)
-    doomed = keys.select(F.col(key_col).alias("__doomed_key")).distinct()
-    key_match = F.col(key_col).eqNullSafe(F.col("__doomed_key"))
-    parts = [
-        r[0]
-        for r in df.join(doomed, key_match, "left_semi")
-        .select(partition_col)
-        .distinct()
-        .collect()  # partition VALUES only — dim-sized by definition
-    ]
-    if not parts:
-        return {"partitions_rewritten": 0, "rows_deleted": 0}
-    # isin() never matches NULL, so a NULL partition value (the
-    # __HIVE_DEFAULT_PARTITION__ directory) gets its own branch;
-    # the literal isin keeps static partition pruning for the rest
-    non_null = [v for v in parts if v is not None]
-    cond = (
-        F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-    )
-    if len(non_null) < len(parts):
-        cond = cond | F.col(partition_col).isNull()
-    affected = df.filter(cond)
-    before = affected.count()
-    kept = affected.join(doomed, key_match, "left_anti").localCheckpoint(
-        eager=True
-    )
-    kept_n = kept.count()
-    (
-        kept.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-    # dynamic overwrite only replaces partitions PRESENT in the
-    # written frame — a partition whose every row is doomed writes
-    # nothing and would silently survive. Drop those directories
-    # explicitly (see remove_partition_dirs for the on-disk name
-    # resolution).
-    kept_parts = {
-        r[0] for r in kept.select(partition_col).distinct().collect()
-    }
-    gone = [v for v in parts if v not in kept_parts]
-    remove_partition_dirs(spark, path, partition_col, gone)
-    return {
-        "partitions_rewritten": len(parts),
-        "rows_deleted": before - kept_n,
-    }
+        if len(non_null) < len(parts):
+            cond = cond | F.col(partition_col).isNull()
+        affected = df.filter(cond)
+        before = affected.count()
+        kept = affected.join(doomed, key_match, "left_anti").localCheckpoint(
+            eager=True
+        )
+        kept_n = kept.count()
+        (
+            kept.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_col)
+            .parquet(path)
+        )
+        # dynamic overwrite only replaces partitions PRESENT in the
+        # written frame — a partition whose every row is doomed writes
+        # nothing and would silently survive. Drop those directories
+        # explicitly (see remove_partition_dirs for the on-disk name
+        # resolution).
+        kept_parts = {
+            r[0] for r in kept.select(partition_col).distinct().collect()
+        }
+        gone = [v for v in parts if v not in kept_parts]
+        remove_partition_dirs(spark, path, partition_col, gone)
+        return {
+            "partitions_rewritten": len(parts),
+            "rows_deleted": before - kept_n,
+        }
 
 
 def remove_partition_dirs(

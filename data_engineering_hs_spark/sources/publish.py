@@ -43,9 +43,9 @@ def _require_local_root(root: str, op: str) -> None:
     would 'succeed' invisibly to every remote reader — the silent
     wrongness the docstring's driver-local restriction exists to
     prevent (same guard as streaming_cdc_apply / ModelRunner)."""
-    from urllib.parse import urlparse
+    from data_engineering_hs_spark.sources.parquet import _local_path
 
-    if urlparse(root).scheme:
+    if _local_path(root) != root:
         raise ValueError(
             f"{op} requires a driver-local root (got {root!r}): the "
             "marker flip is a POSIX os.replace and the probes are "

@@ -428,10 +428,11 @@ def _run_namespace(checkpoint_dir: str) -> str:
     authority would collide distinct stores."""
     import hashlib
     import os
-    from urllib.parse import urlparse
+
+    from data_engineering_hs_spark.sources.parquet import _local_path
 
     norm = checkpoint_dir.rstrip("/") or "/"
-    if not urlparse(norm).scheme:
+    if _local_path(norm) == norm:  # schemeless
         norm = os.path.abspath(norm)
     return hashlib.md5(norm.encode()).hexdigest()[:10]
 
@@ -681,75 +682,18 @@ def retire_runs(
 def _compact_ingest_impl(
     spark, path: str, files_per_partition: int, retire: frozenset
 ) -> dict:
+    import os
+    from urllib.parse import unquote
+
     from data_engineering_hs_spark.sources.parquet import (
         _require_local_swap_path,
+        staged_rewrite,
         store_writer_lease,
     )
 
     op = "retire_runs" if retire else "compact_ingest_store"
     _require_local_swap_path(path, op)
-    # SINGLE-WRITER (enforced, r16): maintenance on the ingest store
-    # takes the store lease — a live trigger's batch commit is NOT
-    # leased (failing production batches in favor of maintenance
-    # would be backwards), so the staged-snapshot tripwire remains
-    # the guard on that side: a batch landing mid-swap rolls the
-    # compaction back with the batch intact.
-    with store_writer_lease(path, op):
-        return _compact_ingest_locked(
-            spark, path, files_per_partition, retire, op
-        )
-
-
-def _compact_ingest_locked(
-    spark, path: str, files_per_partition: int, retire: frozenset,
-    op: str,
-) -> dict:
-    import os
-
-    from data_engineering_hs_spark.sources.parquet import (
-        check_no_concurrent_writer,
-        snapshot_data_files,
-        swap_in,
-    )
-
     norm = path.rstrip("/")
-    if not os.path.isdir(norm):
-        if retire:
-            raise ValueError(
-                f"retire_runs: {norm} does not exist — nothing to retire"
-            )
-        return {
-            "files_before": 0, "files_after": 0,
-            "partitions_before": 0, "partitions_after": 0,
-        }
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(norm)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    _migrate_legacy_layout(spark, fs, jvm, norm)
-    if retire:
-        # Partition directory names are URI-escaped by Spark on write
-        # (PartitioningUtils.escapePathName: '%', '/', ':', non-ASCII
-        # etc. → %XX, '%' itself always escaped, so unquote is a
-        # faithful inverse). Compare UNESCAPED values or a run value
-        # with any special character would always trip the 'not
-        # present' guard despite existing (ADVICE r12). Run
-        # namespaces are hex digests today, but runs= accepts
-        # arbitrary caller values.
-        from urllib.parse import unquote
-
-        present = {
-            unquote(d.split("=", 1)[1])
-            for d in os.listdir(norm)
-            if d.startswith("run=") and os.path.isdir(os.path.join(norm, d))
-        }
-        missing = sorted(retire - present)
-        if missing:
-            raise ValueError(
-                f"retire_runs: run(s) {missing} not present in {norm} "
-                f"(existing runs: {sorted(present)}) — a silently "
-                "skipped retirement would leave the caller believing "
-                "the listing cost shrank"
-            )
 
     def stats(d: str) -> tuple[int, int]:
         files, parts = 0, set()
@@ -760,90 +704,137 @@ def _compact_ingest_locked(
                     parts.add(r)
         return files, len(parts)
 
-    files_before, parts_before = stats(norm)
-    if files_before == 0:
-        # empty EXISTING store (dir created, no increment committed,
-        # or a 0-row first batch): nothing to rewrite — a clean no-op
-        # beats the raw UNABLE_TO_INFER_SCHEMA the parquet read would
-        # throw. Retirement of named runs whose dirs exist but hold
-        # no data removes those empty dirs (nothing to fold; leaving
-        # them would keep the listing cost the caller asked to shed).
-        import shutil as _shutil
+    def run_dirs() -> dict[str, str]:
+        # run value → directory name. Partition directory names are
+        # URI-escaped by Spark on write (PartitioningUtils.
+        # escapePathName: '%', '/', ':', non-ASCII etc. → %XX, '%'
+        # itself always escaped, so unquote is a faithful inverse).
+        # Compare UNESCAPED values or a run value with any special
+        # character would always trip the 'not present' guard despite
+        # existing (ADVICE r12). Run namespaces are hex digests today,
+        # but runs= accepts arbitrary caller values.
+        return {
+            unquote(d.split("=", 1)[1]): d
+            for d in os.listdir(norm)
+            if d.startswith("run=") and os.path.isdir(os.path.join(norm, d))
+        }
 
+    # SINGLE-WRITER (enforced, r16): maintenance on the ingest store
+    # takes the store lease — a live trigger's batch commit is NOT
+    # leased (failing production batches in favor of maintenance
+    # would be backwards), so the staged-snapshot tripwire remains
+    # the guard on that side: a batch landing mid-swap rolls the
+    # compaction back with the batch intact.
+    with store_writer_lease(path, op):
+        if not os.path.isdir(norm):
+            if retire:
+                raise ValueError(
+                    f"retire_runs: {norm} does not exist — nothing to retire"
+                )
+            return {
+                "files_before": 0, "files_after": 0,
+                "partitions_before": 0, "partitions_after": 0,
+            }
+        jvm = spark._jvm
+        root = jvm.org.apache.hadoop.fs.Path(norm)
+        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+        _migrate_legacy_layout(spark, fs, jvm, norm)
         if retire:
-            for d in os.listdir(norm):
-                if d.startswith("run=") and os.path.isdir(
-                    os.path.join(norm, d)
-                ):
-                    from urllib.parse import unquote
-
-                    if unquote(d.split("=", 1)[1]) in retire:
-                        _shutil.rmtree(os.path.join(norm, d))
+            present = set(run_dirs())
+            missing = sorted(retire - present)
+            if missing:
+                raise ValueError(
+                    f"retire_runs: run(s) {missing} not present in {norm} "
+                    f"(existing runs: {sorted(present)}) — a silently "
+                    "skipped retirement would leave the caller believing "
+                    "the listing cost shrank"
+                )
+        files_before, parts_before = stats(norm)
         out = {
-            "files_before": 0, "files_after": 0,
-            "partitions_before": 0, "partitions_after": 0,
+            "files_before": files_before, "files_after": 0,
+            "partitions_before": parts_before, "partitions_after": 0,
         }
         if retire:
             out["runs_retired"] = sorted(retire)
-        return out
-    # staging snapshot for the pre-swap concurrent-writer tripwire: a
-    # trigger committing a batch after this point must abort the swap
-    # (its partition would silently vanish in the rename otherwise)
-    staged = snapshot_data_files(norm)
-    df = spark.read.parquet(norm)
-    # max batch per run from partition-column metadata (no data read)
-    run_max = df.groupBy("run").agg(F.max("batch_id").alias("__max"))
-    relabel = (F.col("batch_id") < F.col("__max")) | (
-        F.col("run") == F.lit("compacted")
-    )
-    if retire:
-        relabel = relabel | F.col("run").isin(*sorted(retire))
-    merged = (
-        df.join(F.broadcast(run_max), "run")
-        .withColumn(
-            "run", F.when(relabel, F.lit("compacted")).otherwise(F.col("run"))
-        )
-        .withColumn(
-            "batch_id",
-            F.when(relabel, F.lit(-1)).otherwise(F.col("batch_id")),
-        )
-        .drop("__max")
-    )
-    # one write task (= one file) per surviving partition; salt for
-    # a hot consolidated partition when asked
-    if files_per_partition > 1:
-        merged = merged.repartition(
-            F.col("run"),
-            F.col("batch_id"),
-            F.pmod(
-                F.xxhash64(*[c for c in df.columns if c not in ("run", "batch_id")][:1]),
-                F.lit(files_per_partition),
-            ),
-        )
-    else:
-        merged = merged.repartition("run", "batch_id")
-    tmp = norm + ".__compact"
-    merged.write.mode("overwrite").partitionBy("run", "batch_id").parquet(tmp)
-    # carry the normalization stamp through the rewrite (the sidecar
-    # is not a data file, so the swap would otherwise drop it and the
-    # store would degrade to the unstamped-legacy contract)
-    import shutil as _shutil
+        if files_before == 0:
+            # empty EXISTING store (dir created, no increment committed,
+            # or a 0-row first batch): nothing to rewrite — a clean
+            # no-op beats the raw UNABLE_TO_INFER_SCHEMA the parquet
+            # read would throw. Retirement of named runs whose dirs
+            # exist but hold no data removes those empty dirs (nothing
+            # to fold; leaving them would keep the listing cost the
+            # caller asked to shed).
+            import shutil
 
-    _meta = os.path.join(norm, "_norm_meta.json")
-    if os.path.exists(_meta):
-        _shutil.copyfile(_meta, os.path.join(tmp, "_norm_meta.json"))
-    check_no_concurrent_writer(norm, staged, op, tmp)
-    swap_in(tmp, norm, staged=staged, op=op)
-    files_after, parts_after = stats(norm)
-    out = {
-        "files_before": files_before,
-        "files_after": files_after,
-        "partitions_before": parts_before,
-        "partitions_after": parts_after,
-    }
-    if retire:
-        out["runs_retired"] = sorted(retire)
-    return out
+            for run, d in run_dirs().items():
+                if run in retire:
+                    shutil.rmtree(os.path.join(norm, d))
+            return out
+
+        def write(tmp: str) -> None:
+            df = _string_run(spark.read.parquet(norm), norm)
+            # max batch per run from partition-column metadata (no
+            # data read)
+            run_max = df.groupBy("run").agg(F.max("batch_id").alias("__max"))
+            relabel = (F.col("batch_id") < F.col("__max")) | (
+                F.col("run") == F.lit("compacted")
+            )
+            if retire:
+                relabel = relabel | F.col("run").isin(*sorted(retire))
+            merged = (
+                df.join(F.broadcast(run_max), "run")
+                .withColumn(
+                    "run",
+                    F.when(relabel, F.lit("compacted")).otherwise(F.col("run")),
+                )
+                .withColumn(
+                    "batch_id",
+                    F.when(relabel, F.lit(-1)).otherwise(F.col("batch_id")),
+                )
+                .drop("__max")
+            )
+            # one write task (= one file) per surviving partition; salt
+            # for a hot consolidated partition when asked
+            if files_per_partition > 1:
+                data_cols = [c for c in df.columns if c not in ("run", "batch_id")]
+                merged = merged.repartition(
+                    F.col("run"),
+                    F.col("batch_id"),
+                    F.pmod(
+                        F.xxhash64(*data_cols[:1]),
+                        F.lit(files_per_partition),
+                    ),
+                )
+            else:
+                merged = merged.repartition("run", "batch_id")
+            merged.write.mode("overwrite").partitionBy("run", "batch_id").parquet(tmp)
+
+        staged_rewrite(norm, op, write)
+        out["files_after"], out["partitions_after"] = stats(norm)
+        return out
+
+
+def _string_run(df: DataFrame, path: str) -> DataFrame:
+    """`df`, a read of the run-namespaced dataset at `path`
+    (``run=<ns>/batch_id=N/``), with ``run`` typed as a STRING.
+    Partition discovery infers value types, so a dataset whose every
+    run namespace is all digits (a hex digest is, about 1 time in
+    100) reads ``run`` as a number: compaction's ``run ==
+    'compacted'`` then fails CAST_INVALID_INPUT, and a leading-zero
+    namespace loses its zero (``run=0123456789`` reads as 123456789)
+    — a cast after the read cannot restore it. Re-reading with an
+    explicit ``run`` type makes Spark cast the raw directory string
+    instead of inferring; a string-typed ``run`` returns as is."""
+    from pyspark.sql import types as T
+
+    if isinstance(df.schema["run"].dataType, T.StringType):
+        return df
+    return df.sparkSession.read.schema(
+        T.StructType([
+            T.StructField("run", T.StringType()) if f.name == "run" else f
+            for f in df.schema.fields
+        ])
+    ).parquet(path)
 
 
 def _dedup_ingest_batch(
@@ -893,6 +884,7 @@ def _dedup_ingest_batch(
     _prepare_run_layout(spark, sink_dir, run_ns, batch_id)
     store = read_fingerprint_store(spark, store_path)
     if store is not None and "batch_id" in store.columns:
+        store = _string_run(store, store_path)
         # replay-independence: never let this batch's own (possibly
         # partial) prior commit influence its survivor set. Other
         # runs' and legacy partitions stay visible — cross-run dedup
@@ -972,24 +964,16 @@ def streaming_cdc_apply(
     format (Delta/Iceberg MERGE) — rename-aside cannot be made safe
     on eventually-consistent stores.
     """
-    from urllib.parse import urlparse
-
     from pyspark.sql import Window
 
     from data_engineering_hs_spark.operators.cdc import apply_changeset
     from data_engineering_hs_spark.sources.parquet import (
+        _require_local_swap_path,
         recover_swap,
-        swap_in,
+        staged_rewrite,
     )
 
-    if urlparse(table_path).scheme:
-        raise ValueError(
-            f"streaming_cdc_apply requires a driver-local table_path "
-            f"(got {table_path!r}): the crash-safe swap is POSIX "
-            "os.replace renames, which URIs (s3a/hdfs/abfs — and "
-            "file://, pass the plain path) don't support; use a "
-            "transactional table format for remote storage"
-        )
+    _require_local_swap_path(table_path, "streaming_cdc_apply")
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -1021,19 +1005,17 @@ def streaming_cdc_apply(
                     "seq_col so the batch can reduce to the last op "
                     "per key"
                 )
-        from data_engineering_hs_spark.sources.parquet import (
-            snapshot_data_files,
-        )
-
-        staged = snapshot_data_files(norm)
-        current = spark.read.parquet(norm)
-        merged = apply_changeset(current, b, keys=keys)
-        tmp = norm + ".__merge"
-        merged.write.mode("overwrite").parquet(tmp)
         # the sink is single-writer by checkpoint contract, but an
         # out-of-band writer to the same table would vanish in the
-        # swap — same post-park verification as the compaction family
-        swap_in(tmp, norm, staged=staged, op="streaming_cdc_apply")
+        # swap — same writer checks as the compaction family
+        staged_rewrite(
+            norm,
+            "streaming_cdc_apply",
+            lambda tmp: apply_changeset(
+                spark.read.parquet(norm), b, keys=keys
+            ).write.mode("overwrite").parquet(tmp),
+            suffix="__merge",
+        )
 
     writer = (
         changes_stream.writeStream.outputMode("append")

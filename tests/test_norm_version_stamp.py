@@ -206,25 +206,69 @@ class TestBucketedTableStamp:
         shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
 
 
-class TestCompactParquetSidecarCarry:
-    def test_compact_parquet_carries_norm_stamp(self, spark, tmp_path):
-        """compact_parquet's rename-aside swap must carry _*.json
-        sidecars (r15, ADVICE): before the fix one compaction silently
-        dropped _norm_meta.json and the mismatch protection vanished."""
-        from data_engineering_hs_spark.sources.parquet import (
-            compact_parquet,
+def _fp_store(spark, store):
+    append_fingerprints(_survivors(spark, 1, 2), store)
+    append_fingerprints(_survivors(spark, 3), store)
+
+
+def _ingest_store(spark, store):
+    from data_engineering_hs_spark.streaming.pipelines import (
+        _dedup_ingest_batch,
+    )
+
+    for i, rows in enumerate(([(1, "a"), (2, "b")], [(3, "c")])):
+        _dedup_ingest_batch(
+            spark.createDataFrame(rows, "doc_id long, text string"), i,
+            store, store + "_sink", "text", "doc_id",
         )
 
+
+def _compact_parquet(spark, store):
+    from data_engineering_hs_spark.sources.parquet import compact_parquet
+
+    return compact_parquet(spark, store)
+
+
+def _optimize_zorder(spark, store):
+    from data_engineering_hs_spark.operators.scale import optimize_table
+
+    return optimize_table(spark, store, zorder_cols=["fingerprint"])
+
+
+def _compact_ingest(spark, store):
+    from data_engineering_hs_spark.streaming.pipelines import (
+        compact_ingest_store,
+    )
+
+    return compact_ingest_store(spark, store)
+
+
+class TestCompactParquetSidecarCarry:
+    @pytest.mark.parametrize(
+        "build, rewrite",
+        [
+            pytest.param(_fp_store, _compact_parquet, id="compact_parquet"),
+            pytest.param(_fp_store, _optimize_zorder, id="optimize_table_zorder"),
+            pytest.param(_ingest_store, _compact_ingest, id="compact_ingest_store"),
+        ],
+    )
+    def test_compact_parquet_carries_norm_stamp(
+        self, spark, tmp_path, build, rewrite
+    ):
+        """Every rename-aside rewrite must carry `_*.json` sidecars
+        (r15, ADVICE): before the fix one compaction silently dropped
+        _norm_meta.json and the mismatch protection vanished — the
+        z-order rewrite kept dropping it after compact_parquet was
+        fixed."""
         store = str(tmp_path / "fp")
-        append_fingerprints(_survivors(spark, 1, 2), store)
-        append_fingerprints(_survivors(spark, 3), store)
+        build(spark, store)
         meta_path = os.path.join(store, "_norm_meta.json")
         assert os.path.exists(meta_path)
-        stats = compact_parquet(spark, store)
+        stats = rewrite(spark, store)
         assert stats["files_before"] >= 2
         assert json.load(open(meta_path)) == {
             "normalization_version": NORMALIZATION_VERSION
-        }, "compact_parquet dropped the normalization sidecar"
+        }, "the rewrite dropped the normalization sidecar"
         assert read_fingerprint_store(spark, store).count() == 3
 
 

@@ -1266,14 +1266,15 @@ class TestProductQuantization:
         # stays best-effort (the documented degradation)
         import pytest
 
-        from data_engineering_hs_spark.operators.similarity import (
-            _write_store_meta,
+        from data_engineering_hs_spark.sources.parquet import (
+            STORE_META,
+            write_sidecar,
         )
 
         with pytest.raises(OSError):
-            _write_store_meta(str(tmp_path / "no_such_dir"), kind="x")
-        # non-local URI: open() fails the same way but is swallowed
-        _write_store_meta("s3a://bucket/store", kind="x")
+            write_sidecar(str(tmp_path / "no_such_dir"), STORE_META, {"kind": "x"})
+        # non-local URI: no sidecar, no error
+        write_sidecar("s3a://bucket/store", STORE_META, {"kind": "x"})
 
     def test_append_equals_rebuild_for_both_stores(self, spark, tmp_path):
         # incremental maintenance must be indistinguishable from a

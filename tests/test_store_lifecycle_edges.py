@@ -148,6 +148,53 @@ class TestIngestStoreEdges:
         ]
 
 
+    def test_all_digit_run_namespace_survives_compaction(
+        self, spark, tmp_path
+    ):
+        # A hex run namespace is all digits about 1 time in 100; when
+        # every run of a store is, partition discovery typed `run` as
+        # a number and compaction died casting 'compacted'. Pick a
+        # checkpoint whose namespace is all digits AND starts with 0,
+        # so a cast-after-read fix (which drops the zero and rewrites
+        # the run under a different directory) fails here too.
+        from data_engineering_hs_spark.streaming.pipelines import (
+            _run_namespace,
+            compact_ingest_store,
+            streaming_dedup_ingest,
+        )
+
+        for i in range(200_000):
+            ckpt = str(tmp_path / f"ckpt{i}")
+            ns = _run_namespace(ckpt)
+            if ns.isdigit() and ns.startswith("0"):
+                break
+        else:
+            pytest.fail("no all-digit run namespace in 200k candidates")
+        src = str(tmp_path / "src")
+        for rows in ([(1, "a b"), (2, "c d")], [(3, "a b"), (4, "e f")],
+                     [(5, "g h")]):
+            self._batch(spark, rows).coalesce(1).write.mode("append").parquet(src)
+        store, sink = str(tmp_path / "fp"), str(tmp_path / "corpus")
+        q = streaming_dedup_ingest(
+            spark.readStream.schema(self._batch(spark, []).schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src),
+            store, sink, ckpt,
+        )
+        assert q.awaitTermination(300), "stream drain timed out"
+        def runs(d):
+            return sorted(e for e in os.listdir(d) if e.startswith("run="))
+
+        assert runs(store) == runs(sink) == [f"run={ns}"]
+        for d in (store, sink):
+            st = compact_ingest_store(spark, d)
+            assert st["partitions_before"] == 3 and st["partitions_after"] == 2
+            assert runs(d) == sorted(["run=compacted", f"run={ns}"])
+        assert spark.read.parquet(store).count() == 4
+        texts = [r.text for r in spark.read.parquet(sink).collect()]
+        assert sorted(texts) == ["a b", "c d", "e f", "g h"]
+
+
 class TestCellStoreEdges:
     @pytest.fixture()
     def store(self, spark, tmp_path):
