@@ -64,10 +64,6 @@ def regex_token_count(c: ColumnOrName) -> Column:
     return F.size(F.regexp_extract_all(_col(c), F.lit(TOKEN_REGEX), 0))
 
 
-def char_count(c: ColumnOrName) -> Column:
-    return F.length(_col(c))
-
-
 def punct_ratio(c: ColumnOrName) -> Column:
     """Fraction of characters that are not letters/digits/space.
     Unicode classes, not [A-Za-z0-9]: the ASCII class counted every

@@ -116,13 +116,6 @@ def cosine_from(d: Column, norm_a: Column, norm_b: Column) -> Column:
     return F.when(nn == 0, F.lit(0.0)).otherwise(guarded)
 
 
-def l2_distance(a: ColumnOrName, b: ColumnOrName) -> Column:
-    diffs = F.zip_with(
-        _col(a), _col(b), lambda x, y: (x.cast("double") - y.cast("double"))
-    )
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
 def dot_pandas(a: ColumnOrName, b: ColumnOrName) -> Column:
     """Arrow-batched vectorized dot product (numpy einsum).
 
@@ -191,24 +184,6 @@ def _pair_arrays(x: "pd.Series", y: "pd.Series"):
     )
 
 
-def cosine_pandas(a: ColumnOrName, b: ColumnOrName) -> Column:
-    """Vectorized cosine (see dot_pandas caveats); 0.0 for zero norms."""
-    from pyspark.sql.types import DoubleType
-
-    @F.pandas_udf(DoubleType())
-    def _pcos(x: pd.Series, y: pd.Series) -> pd.Series:
-        xa, ya, bad = _pair_arrays(x, y)
-        d = np.einsum("ij,ij->i", xa, ya)
-        nn = np.linalg.norm(xa, axis=1) * np.linalg.norm(ya, axis=1)
-        out = np.where(nn == 0, 0.0, d / np.where(nn == 0, 1.0, nn))
-        # same degenerate-vector contract as cosine_from: non-finite
-        # similarity (corrupt/overflowed components) scores 0.0
-        out = np.where(np.isfinite(out), out, 0.0)
-        return pd.Series(out).astype("Float64").mask(bad)
-
-    return _pcos(_col(a), _col(b))
-
-
 def is_finite_vector(a: ColumnOrName) -> Column:
     """True iff the array is non-null and every component is finite —
     the corpus-hygiene pre-filter for embedding pipelines. The
@@ -223,9 +198,3 @@ def is_finite_vector(a: ColumnOrName) -> Column:
         lambda x: F.isnan(x.cast("double"))
         | (F.abs(x.cast("double")) == F.lit(float("inf"))),
     )
-
-
-def mean_vector(a: ColumnOrName) -> Column:
-    """Elementwise mean of an array column is an aggregate — see
-    operators.similarity.centroids for the groupBy form."""
-    raise NotImplementedError("use operators.similarity.centroids")

@@ -1,26 +1,17 @@
 """As-of (temporal) join — an operator Spark lacks natively.
 
 For each left row, attach the most recent right row (per key) whose
-timestamp is <= the left row's timestamp. Two implementations:
+timestamp is <= the left row's timestamp (a backward as-of join).
 
-- asof_join: composition of built-ins (the scale path). Union-tag the
-  two sides, sort within key partitions, and carry the last-seen right
-  row forward with last(..., ignorenulls) over an unbounded-preceding
-  window. ONE shuffle on the key, no range-explosion join, no Python.
-  This is the classic "sort-merge as-of" expressed declaratively.
-- asof_join_pandas: applyInPandas + pandas.merge_asof per key group —
-  the fallback shape for semantics the window form can't express
-  (nearest/forward direction with tolerance), at Arrow-batch cost.
-- asof_join_arrow: the EXACT-dtype twin of asof_join_pandas
-  (cogroup + applyInArrow, no pandas anywhere). The pandas boundary
-  converts any null-bearing int64 column to float64 on Arrow input —
-  UPSTREAM of user code — silently rounding values above 2^53;
-  the arrow form keeps every column as its Arrow type end-to-end,
-  so null-bearing longs in the 2^60 range survive bit-exact.
+asof_join is a composition of built-ins: union-tag the two sides,
+sort within key partitions, and carry the last-seen right row forward
+with last(..., ignorenulls) over an unbounded-preceding window. ONE
+shuffle on the key, no range-explosion join, no Python. This is the
+classic "sort-merge as-of" expressed declaratively.
 
 Tie semantics: right rows with ts equal to the left ts DO match
-(inclusive, merge_asof default). Ordering among equal timestamps is
-broken by the right id column for determinism.
+(inclusive, merge_asof's default). Ordering among equal timestamps is
+broken by the caller's `ts_tiebreak` column for determinism.
 """
 
 from __future__ import annotations
@@ -32,12 +23,10 @@ from pyspark.sql import functions as F
 def _check_asof_output_names(
     left_cols: list[str], value_cols: list[str]
 ) -> None:
-    """All three asof forms emit left columns plus asof_<value_col>.
-    A left column already named asof_<value_col> (or a duplicated
-    value_col) would produce duplicate output names — the window form
-    silently shadows, and the arrow form's declared StructType carries
-    duplicate fields that fail later with a confusing schema-mismatch
-    error deep in a task. Fail fast with the actual collision instead.
+    """asof_join emits left columns plus asof_<value_col>. A left
+    column already named asof_<value_col> (or a duplicated value_col)
+    would produce duplicate output names that the window form silently
+    shadows. Fail fast with the actual collision instead.
     """
     out = [f"asof_{c}" for c in value_cols]
     dups = sorted({c for c in out if out.count(c) > 1})
@@ -51,50 +40,6 @@ def _check_asof_output_names(
             f"left column(s) {clash} collide with as-of output name(s); "
             "rename them before joining"
         )
-
-
-def _check_asof_tolerance(tolerance):
-    """Normalize/validate tolerance at the API boundary (r15,
-    ADVICE): non-finite values either misfire deep inside an executor
-    task (the int64 fast path's floor(inf) → OverflowError; pandas'
-    merge_asof validation → MergeError) or silently match nothing.
-    Uniform contract across BOTH tolerance-taking forms:
-
-    - NaN → ValueError (every |diff| <= NaN is False: the join would
-      return ALL-NULL asof columns, reading as 'no right rows
-      matched' rather than 'the caller passed garbage');
-    - -inf → ValueError (matches nothing, same silent-garbage shape);
-    - +inf → None (unbounded — exactly what omitting tolerance
-      means, and the one form every backend supports);
-    - any negative FINITE value → ValueError (|diff| <= negative is
-      False for every row: the arrow form would return all-NULL asof
-      columns while pandas merge_asof raises its own error — the
-      r15-unified contract would silently re-diverge);
-    - anything else passes through unchanged.
-
-    Returns the normalized tolerance."""
-    import math
-
-    if isinstance(tolerance, float) and not math.isfinite(tolerance):
-        if math.isnan(tolerance):
-            raise ValueError(
-                "tolerance=NaN matches nothing (every |diff| <= NaN "
-                "is False); pass None for unbounded or a finite "
-                "tolerance"
-            )
-        if tolerance < 0:
-            raise ValueError(
-                "tolerance=-inf matches nothing; pass None for "
-                "unbounded or a finite tolerance"
-            )
-        return None  # +inf == unbounded
-    if tolerance is not None and tolerance < 0:
-        raise ValueError(
-            f"tolerance={tolerance!r} is negative and matches "
-            "nothing (every |diff| <= tolerance is False); pass a "
-            "non-negative tolerance or None for unbounded"
-        )
-    return tolerance
 
 
 def asof_join(
@@ -170,314 +115,4 @@ def asof_join(
     return carried.filter(F.col("__side") == 1).select(
         *[F.col(f"__l.{c}").alias(c) for c in left.columns],
         *[F.col(f"__m.{c}").alias(f"asof_{c}") for c in value_cols],
-    )
-
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    value_cols: list[str],
-    direction: str = "backward",
-    tolerance=None,
-) -> DataFrame:
-    """merge_asof fallback: per-key pandas cogroup. Supports forward/
-    nearest directions and tolerances the window form doesn't.
-
-    DTYPE LIMITATION (use asof_join_arrow when it bites): an int64
-    value column that already contains nulls arrives float64 at the
-    pandas boundary (Arrow input conversion — upstream of this
-    function's object-dtype hardening), silently rounding values
-    above 2^53; pinned in tests/test_asof_and_components.py
-    (TestAsofJoinArrow.test_null_bearing_longs_above_2_53_exact).
-    asof_join_arrow has identical semantics with exact dtypes."""
-    _check_asof_output_names(left.columns, value_cols)
-    tolerance = _check_asof_tolerance(tolerance)
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    fields = [left.schema[c] for c in left.columns] + [
-        T.StructField(f"asof_{c}", right.schema[c].dataType) for c in value_cols
-    ]
-    schema = T.StructType(fields)
-    # plain bools for the worker closure — capturing the DataFrames
-    # themselves would pickle a SparkContext reference (SPARK-5063)
-    left_ts_integral = isinstance(
-        left.schema[left_ts].dataType, T.IntegralType
-    )
-    right_ts_integral = isinstance(
-        right.schema[right_ts].dataType, T.IntegralType
-    )
-
-    def merge(key, ldf: pd.DataFrame, rdf: pd.DataFrame) -> pd.DataFrame:
-        # merge_asof RAISES on null merge keys; the window form
-        # tolerates them — match that: null-ts left rows pass through
-        # with null asof columns, null-ts right rows can never match
-        null_left = ldf[ldf[left_ts].isna()].copy()
-        ldf = ldf[ldf[left_ts].notna()].sort_values(left_ts)
-        rdf = rdf[rdf[right_ts].notna()].sort_values(right_ts)[
-            [right_ts, *value_cols]
-        ].rename(columns={c: f"asof_{c}" for c in value_cols})
-        # merge_asof REFUSES mismatched key dtypes, and an integral ts
-        # column that carried nulls arrives float64 (Arrow) while the
-        # other side stays int — a single null ts on one side crashed
-        # the whole join with MergeError. The NaNs are filtered above,
-        # so when the DECLARED Spark type is integral the float column
-        # holds only exact integral values: cast it back. Gated on the
-        # Spark schema, not the pandas dtype, so a genuinely-double ts
-        # is never truncated.
-        for pdf_, col_, integral in (
-            (ldf, left_ts, left_ts_integral),
-            (rdf, right_ts, right_ts_integral),
-        ):
-            if integral:
-                # also normalizes int32-vs-int64 width mismatches
-                pdf_[col_] = pdf_[col_].astype("int64")
-        # Integral value columns ride the merge as OBJECT dtype: the
-        # left join puts NaN on unmatched rows, which would coerce an
-        # int64 column to float64 and silently ROUND matched values
-        # above 2^53 (2^60+1 came back as 2^60 before this). Object
-        # columns carry exact Python ints; Arrow turns the NaNs into
-        # nulls. (A right column that itself holds nulls already
-        # arrives float64 from the Arrow boundary — that conversion is
-        # upstream of this function.)
-        for c in value_cols:
-            ac = f"asof_{c}"
-            if pd.api.types.is_integer_dtype(rdf[ac]):
-                rdf[ac] = rdf[ac].astype(object)
-        merged = pd.merge_asof(
-            ldf,
-            rdf,
-            left_on=left_ts,
-            right_on=right_ts,
-            direction=direction,
-            tolerance=tolerance,
-        )
-        keep = list(ldf.columns) + [f"asof_{c}" for c in value_cols]
-        if len(null_left):
-            for c in value_cols:
-                null_left[f"asof_{c}"] = None
-            merged = pd.concat([merged[keep], null_left[keep]])
-        return merged[keep]
-
-    return (
-        left.groupBy(on)
-        .cogroup(right.groupBy(on))
-        .applyInPandas(merge, schema=schema)
-    )
-
-
-def asof_join_arrow(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    value_cols: list[str],
-    direction: str = "backward",
-    tolerance=None,
-) -> DataFrame:
-    """Arrow-native as-of join (cogroup + applyInArrow) — the
-    exact-dtype twin of asof_join_pandas.
-
-    WHY IT EXISTS (r12 dtype-lens residual, r13 fix): the pandas
-    boundary converts a null-bearing int64 column to float64 during
-    Arrow→pandas input conversion — before any user code runs — so
-    values above 2^53 round silently through asof_join_pandas even
-    after its own object-dtype hardening (that hardening can only
-    protect columns that ARRIVE integral). This form never touches
-    pandas: per key group both sides stay pyarrow Tables, the match
-    is computed as an int64 index array, and value columns are
-    attached with pa.Table.take (null index → null row), so every
-    dtype — including null-bearing longs in the 2^60 range — survives
-    bit-exact.
-
-    Semantics match asof_join_pandas: backward/forward/nearest,
-    optional tolerance (nearest breaks exact-distance ties backward,
-    like merge_asof); null-ts left rows pass through with null asof
-    columns; null-ts right rows never match. Among equal right
-    timestamps the LAST under a stable (ts) sort of the group wins —
-    callers needing a deterministic tie should keep right timestamps
-    unique per key (the pandas form's unstable sort_values makes its
-    equal-ts winner arbitrary anyway).
-
-    Scale shape: one cogroup shuffle on the key (same as the pandas
-    form); per-group work is numpy searchsorted + Arrow take —
-    vectorized, no per-row Python in the index math. Integer
-    nearest/tolerance comparisons run in numpy int64 whenever the
-    group's combined timestamp span provably fits (a cheap min/max
-    check, true for any real clock domain); only a span at the very
-    edge of int64 — where subtraction could wrap — falls back to
-    exact object-space arithmetic.
-    """
-    if direction not in ("backward", "forward", "nearest"):
-        raise ValueError(f"direction must be backward/forward/nearest, got {direction!r}")
-    _check_asof_output_names(left.columns, value_cols)
-    tolerance = _check_asof_tolerance(tolerance)
-
-    import math
-
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from pyspark.sql import types as T
-
-    fields = [left.schema[c] for c in left.columns] + [
-        T.StructField(f"asof_{c}", right.schema[c].dataType) for c in value_cols
-    ]
-    schema = T.StructType(fields)
-    left_cols = list(left.columns)
-
-    _I64_MAX = 2**63 - 1
-
-    def _int64_span_safe(*arrs) -> bool:
-        # True when every value fits in int64 AND the combined span
-        # does, so no pairwise int64 subtraction can wrap. O(1) per
-        # group (numpy min/max), checked once — the price of keeping
-        # the hot path fully vectorized.
-        nonempty = [a for a in arrs if len(a)]
-        if not nonempty:
-            return True
-        lo = min(int(a.min()) for a in nonempty)
-        hi = max(int(a.max()) for a in nonempty)
-        return -(2**63) <= lo and hi <= _I64_MAX and hi - lo <= _I64_MAX
-
-    def _exact_diff_ok(lt_np, matched_ts_np, tol) -> "np.ndarray":
-        # |lt - rts| <= tol. Integer timestamps: numpy int64 when the
-        # span check proves subtraction can't wrap (tol floored to an
-        # int — exact for integral diffs — and clamped to int64: the
-        # diffs are span-bounded, so a larger tol passes everything
-        # anyway); object-space exact arithmetic on the wraparound
-        # fringe. Float/datetime timestamps subtract natively.
-        if lt_np.dtype.kind in ("i", "u"):
-            if _int64_span_safe(lt_np, matched_ts_np):
-                a = lt_np.astype(np.int64, copy=False)
-                b = matched_ts_np.astype(np.int64, copy=False)
-                # non-finite tol: floor() raises (OverflowError on
-                # inf) deep in an executor task, while the object-
-                # space fallback compares gracefully — map +inf to
-                # everything-passes and -inf to nothing-passes here.
-                # The API boundary already normalizes +inf→None and
-                # rejects NaN/-inf (_check_asof_tolerance); this
-                # branch stays as defense-in-depth for internal
-                # callers.
-                if isinstance(tol, float) and math.isinf(tol):
-                    tol_i = _I64_MAX if tol > 0 else -1
-                else:
-                    tol_i = min(math.floor(tol), _I64_MAX)
-                return np.abs(a - b) <= tol_i
-            lo = lt_np.astype(object)
-            ro = matched_ts_np.astype(object)
-            return np.array(
-                [abs(a - b) <= tol for a, b in zip(lo, ro)], dtype=bool
-            )
-        return np.abs(lt_np - matched_ts_np) <= tol
-
-    def _usable_ts(col: "pa.ChunkedArray") -> "pa.ChunkedArray":
-        # NaN in a floating ts behaves like null (the pandas twin's
-        # isna() semantics) — searchsorted would otherwise rank NaN
-        # after every real timestamp and hand it the last right row
-        mask = pc.is_valid(col)
-        if pa.types.is_floating(col.type):
-            mask = pc.and_(mask, pc.invert(pc.is_nan(pc.fill_null(col, 0.0))))
-        return mask
-
-    def merge(ltab: pa.Table, rtab: pa.Table) -> pa.Table:
-        lvalid_mask = _usable_ts(ltab[left_ts])
-        lvalid = ltab.filter(lvalid_mask)
-        lnull = ltab.filter(pc.invert(lvalid_mask))
-        r = rtab.filter(_usable_ts(rtab[right_ts]))
-        # stable ascending sort of the right side on ts
-        r = r.take(pc.sort_indices(r, sort_keys=[(right_ts, "ascending")]))
-        rts = r[right_ts].combine_chunks().to_numpy(zero_copy_only=False)
-        lt = lvalid[left_ts].combine_chunks().to_numpy(zero_copy_only=False)
-        n = len(rts)
-
-        if n == 0 or len(lt) == 0:
-            idx = np.full(len(lt), -1, dtype=np.int64)
-        elif direction == "backward":
-            idx = np.searchsorted(rts, lt, side="right") - 1
-        elif direction == "forward":
-            f = np.searchsorted(rts, lt, side="left")
-            idx = np.where(f < n, f, -1)
-        else:  # nearest
-            b = np.searchsorted(rts, lt, side="right") - 1
-            f = np.searchsorted(rts, lt, side="left")
-            f = np.where(f < n, f, -1)
-            idx = np.where(b < 0, f, b)
-            both = (b >= 0) & (f >= 0)
-            if both.any():
-                # exact-distance compare; tie → backward
-                bo = rts[np.clip(b, 0, n - 1)]
-                fo = rts[np.clip(f, 0, n - 1)]
-                if lt.dtype.kind in ("i", "u"):
-                    if _int64_span_safe(lt, rts):
-                        l64 = lt.astype(np.int64, copy=False)
-                        b64 = bo.astype(np.int64, copy=False)
-                        f64 = fo.astype(np.int64, copy=False)
-                        # garbage lanes (not `both`) can't wrap either:
-                        # the span check covers every lt/rts value
-                        closer_fwd = both & (
-                            np.abs(f64 - l64) < np.abs(l64 - b64)
-                        )
-                    else:
-                        lo = lt.astype(object)
-                        closer_fwd = np.array(
-                            [
-                                bool(bb and (abs(fv - a) < abs(a - bv)))
-                                for a, bv, fv, bb in zip(
-                                    lo,
-                                    bo.astype(object),
-                                    fo.astype(object),
-                                    both,
-                                )
-                            ],
-                            dtype=bool,
-                        )
-                else:
-                    closer_fwd = both & (np.abs(fo - lt) < np.abs(lt - bo))
-                idx = np.where(closer_fwd, f, idx)
-        if n and tolerance is not None and len(lt):
-            matched = idx >= 0
-            if matched.any():
-                ok = np.zeros(len(lt), dtype=bool)
-                ok[matched] = _exact_diff_ok(
-                    lt[matched], rts[np.clip(idx[matched], 0, n - 1)], tolerance
-                )
-                idx = np.where(matched & ~ok, -1, idx)
-
-        # null index → null row: pa.Table.take propagates null indices.
-        # Built from the numpy array with a mask (mask=True ⇒ null) —
-        # no per-row Python list.
-        idx = idx.astype(np.int64, copy=False)
-        take_idx = pa.array(idx, type=pa.int64(), mask=idx < 0)
-        out_cols = [lvalid[c] for c in left_cols]
-        out_names = list(left_cols)
-        for c in value_cols:
-            out_cols.append(r[c].take(take_idx))
-            out_names.append(f"asof_{c}")
-        # from_arrays, not pa.table(dict(...)): a dict would silently
-        # collapse duplicate names (guarded up front, but keep the
-        # construction collision-proof too)
-        out = pa.Table.from_arrays(out_cols, names=out_names)
-        if len(lnull):
-            null_cols = [lnull[c] for c in left_cols] + [
-                pa.nulls(len(lnull), type=r.schema.field(c).type)
-                if c in r.schema.names
-                else pa.nulls(len(lnull))
-                for c in value_cols
-            ]
-            out = pa.concat_tables(
-                [out, pa.Table.from_arrays(null_cols, names=out_names)]
-            )
-        return out
-
-    return (
-        left.groupBy(on)
-        .cogroup(right.groupBy(on))
-        .applyInArrow(merge, schema=schema)
     )

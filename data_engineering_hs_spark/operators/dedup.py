@@ -700,14 +700,11 @@ def incremental_exact_dedup(
     are 8-byte fingerprints, never text.
 
     Scale notes: the anti-join shuffles batch + store on the
-    fingerprint. Commit the store with commit_fingerprints_bucketed
-    (table bucketed on `fingerprint`) and read it back with
-    read_fingerprint_store_table: the store side then reads
-    Exchange-free and the batch side (the small one) pays the only
-    shuffle — plan-asserted in tests/test_scale_ops.py. Emission is
-    at-least-once under retries — wrap in
-    foreachBatch + checkpoint (streaming/pipelines) for
-    effectively-exactly-once, same contract as the JDBC upsert sink.
+    fingerprint; commit the store with append_fingerprints and read
+    it with read_fingerprint_store. Emission is at-least-once under
+    retries — wrap in foreachBatch + checkpoint (streaming/pipelines)
+    for effectively-exactly-once, same contract as the JDBC upsert
+    sink.
     """
     from pyspark.sql import Window
 
@@ -856,95 +853,6 @@ def append_fingerprints(survivors: DataFrame, path: str) -> None:
         ).write.mode("append").parquet(path)
 
 
-def commit_fingerprints_bucketed(
-    survivors: DataFrame, table_name: str, num_buckets: int = 32
-) -> None:
-    """Scale-path store commit: append the increment's fingerprints to
-    a managed table BUCKETED (+sorted) on `fingerprint`
-    (operators.scale.write_bucketed). At 100 TB the store dwarfs each
-    increment; with a plain parquet store the anti-join re-shuffles
-    the WHOLE store every increment, while the bucketed store reads
-    pre-clustered and the only Exchange left in the plan is the small
-    batch side (plan-asserted in tests/test_scale_ops.py). Appends
-    validate against the existing bucket spec, so every increment
-    lands bucket-aligned. The normalization-version check runs BEFORE
-    the append (same abort-before-mixing contract as the path-based
-    append_fingerprints): a refused commit leaves the stamped table's
-    rows untouched.
-
-    SINGLE-WRITER (documented, r16): saveAsTable(mode='append') on a
-    file-based managed table has no writer-writer exclusion — two
-    racing commits of the same increment double-commit (duplicate
-    rows), the same class the path-based appends now enforce with a
-    flock lease. No path is exposed here to lease on (the warehouse
-    location is catalog-owned), so the contract is documented: one
-    committer per table; a metastore deployment enforces it with
-    catalog/table-level locking or a transactional format."""
-    from data_engineering_hs_spark.operators.scale import write_bucketed
-
-    _check_table_norm_version(survivors.sparkSession, table_name)
-    write_bucketed(
-        survivors.select("fingerprint"),
-        table_name,
-        ["fingerprint"],
-        num_buckets=num_buckets,
-        sort_cols=["fingerprint"],
-        mode="append",
-    )
-    _stamp_table_norm_version(survivors.sparkSession, table_name)
-
-
-def _table_norm_version(spark, table_name: str) -> int | None:
-    rows = spark.sql(f"SHOW TBLPROPERTIES {table_name}").collect()
-    for r in rows:
-        if r["key"] == "normalization_version":
-            return int(r["value"])
-    return None
-
-
-def _stamp_table_norm_version(spark, table_name: str) -> None:
-    """TBLPROPERTIES twin of stamp_normalization_version for the
-    bucketed managed-table stores. The property does NOT survive
-    saveAsTable(mode='overwrite') — that drops and recreates the
-    table — so compact_band_store re-stamps after its rewrite."""
-    from data_engineering_hs_spark.functions.text import (
-        NORMALIZATION_VERSION,
-    )
-
-    _check_table_norm_version(spark, table_name)
-    spark.sql(
-        f"ALTER TABLE {table_name} SET TBLPROPERTIES("
-        f"'normalization_version'='{NORMALIZATION_VERSION}')"
-    )
-
-
-def _check_table_norm_version(spark, table_name: str) -> None:
-    from data_engineering_hs_spark.functions.text import (
-        NORMALIZATION_VERSION,
-    )
-
-    if not spark.catalog.tableExists(table_name):
-        return
-    recorded = _table_norm_version(spark, table_name)
-    if recorded is not None and recorded != NORMALIZATION_VERSION:
-        raise RuntimeError(
-            f"table {table_name} was built with normalization_version="
-            f"{recorded} but this code computes version "
-            f"{NORMALIZATION_VERSION}: its persisted hashes are not "
-            "comparable. Rebuild the store from the source corpus."
-        )
-
-
-def read_fingerprint_store_table(spark, table_name: str) -> DataFrame | None:
-    """Bucketed-table twin of read_fingerprint_store; None before the
-    first committed increment. Raises on a mismatched normalization
-    stamp (TBLPROPERTIES)."""
-    if not spark.catalog.tableExists(table_name):
-        return None
-    _check_table_norm_version(spark, table_name)
-    return spark.table(table_name)
-
-
 def incremental_minhash_lsh(
     batch: DataFrame,
     store: DataFrame | None,
@@ -966,11 +874,8 @@ def incremental_minhash_lsh(
     bands. Cross pairs join the batch's bands against the store on
     (band, bucket); the store side groups to capped member arrays
     first so a hot boilerplate bucket is bounded, same contract as
-    minhash_lsh_pairs. At scale commit the store with
-    commit_lsh_bands_bucketed (table bucketed on (band, bucket)) and
-    read it with read_lsh_store_table so the per-increment groupBy
-    reads Exchange-free (plan-asserted in tests/test_scale_ops.py).
-    Feed the pairs to
+    minhash_lsh_pairs. Commit the store with append_lsh_bands and
+    read it with read_lsh_store. Feed the pairs to
     ngram_jaccard_pairs/verify + dup_groups exactly as in the batch
     path.
     """
@@ -993,9 +898,8 @@ def incremental_minhash_lsh(
     # member arrays (collect_list) only materialize for the touched
     # ~10% of buckets instead of every bucket in the corpus, which is
     # what bounds the aggregation state when the store is 1000x the
-    # batch. The filter preserves the bucketed scan's clustering, so
-    # the grouping itself adds no Exchange (the broadcast of the tiny
-    # touched set is the only new exchange).
+    # batch. The prune is a broadcast semi-join, so the only exchange
+    # it adds is the broadcast of the tiny touched set.
     touched = new_bands.select("band", "bucket").distinct()
     old = (
         store.join(F.broadcast(touched), ["band", "bucket"], "left_semi")
@@ -1105,97 +1009,6 @@ def append_lsh_bands(new_bands: DataFrame, path: str) -> None:
                     "the increment's columns or rebuild the store."
                 )
         out.write.mode("append").parquet(path)
-
-
-def commit_lsh_bands_bucketed(
-    new_bands: DataFrame, table_name: str, num_buckets: int = 32
-) -> None:
-    """Scale-path band-store commit: append (id, band, bucket) triples
-    to a managed table BUCKETED on (band, bucket). The per-increment
-    store-side groupBy in incremental_minhash_lsh then aggregates
-    straight off the bucketed scan with NO Exchange — only the new
-    batch's bands shuffle (plan-asserted in tests/test_scale_ops.py).
-    The normalization-version check runs BEFORE the append
-    (abort-before-mixing, matching append_lsh_bands).
-
-    SINGLE-WRITER (documented, r16): same contract as
-    commit_fingerprints_bucketed — racing table appends
-    double-commit; serialize committers (catalog-level locking or a
-    transactional format in a metastore deployment)."""
-    from data_engineering_hs_spark.operators.scale import write_bucketed
-
-    _check_table_norm_version(new_bands.sparkSession, table_name)
-    write_bucketed(
-        new_bands,
-        table_name,
-        ["band", "bucket"],
-        num_buckets=num_buckets,
-        mode="append",
-    )
-    _stamp_table_norm_version(new_bands.sparkSession, table_name)
-
-
-def read_lsh_store_table(spark, table_name: str) -> DataFrame | None:
-    """Bucketed-table twin of read_lsh_store; None before the first
-    committed increment. Raises on a mismatched normalization stamp
-    (TBLPROPERTIES)."""
-    if not spark.catalog.tableExists(table_name):
-        return None
-    _check_table_norm_version(spark, table_name)
-    return spark.table(table_name)
-
-
-def compact_band_store(
-    spark, table_name: str, num_buckets: int = 32
-) -> None:
-    """Rewrite an append-accreted band store as one clean generation.
-
-    Every commit_lsh_bands_bucketed append adds `num_buckets` files;
-    after many small increments the store is thousands of tiny files
-    per bucket and scan setup dominates. Compaction reads the whole
-    store once, stages it (a table can't be overwritten while being
-    read), and rewrites it with the SAME bucket spec — rows,
-    bucketing, and the Exchange-free read contract are unchanged;
-    only the file count collapses. Run it on a cadence (e.g. every
-    N increments), not per commit.
-
-    saveAsTable(mode='overwrite') DROPS AND RECREATES the table, so
-    the normalization-version TBLPROPERTIES stamp does not ride
-    through on its own: the version is checked before the staging
-    read (compacting a mismatched store must abort, not launder it
-    into a fresh-looking one) and re-stamped after the rewrite.
-
-    SINGLE-WRITER (documented, r16): overwrite drops and recreates
-    the table — a commit_lsh_bands_bucketed racing this compaction
-    either lands before the staging read (carried into the rewrite),
-    lands after the drop (AnalysisException, loud), or its files are
-    dropped WITH the old table (lost). Run in a maintenance window
-    with committers drained, like the path-based compactions (which
-    enforce this with a flock lease; no path is exposed to lease on
-    here)."""
-    from data_engineering_hs_spark.operators.scale import write_bucketed
-
-    _check_table_norm_version(spark, table_name)
-    store = spark.table(table_name).localCheckpoint(eager=True)
-    # repartition on the bucket columns with the bucket count: hash
-    # partitioning and bucket-id assignment use the same murmur3 pmod,
-    # so each write task holds exactly one bucket → one file per
-    # bucket, the minimum possible
-    store = store.repartition(num_buckets, "band", "bucket")
-    # NO sort_cols: append-mode saveAsTable requires the incoming
-    # bucket spec — INCLUDING sortColumnNames — to match the table's,
-    # and commit_lsh_bands_bucketed appends with bucketBy only. A
-    # sorted compaction would make the very next increment throw
-    # AnalysisException (bucket-spec mismatch); the compaction must
-    # write the exact spec every commit path uses.
-    write_bucketed(
-        store,
-        table_name,
-        ["band", "bucket"],
-        num_buckets=num_buckets,
-        mode="overwrite",
-    )
-    _stamp_table_norm_version(spark, table_name)
 
 
 def dup_groups_star(pairs: DataFrame, max_iters: int = 30) -> DataFrame:

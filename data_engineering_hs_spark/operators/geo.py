@@ -104,19 +104,3 @@ def radius_join(
         F.col(point_lat), F.col(point_lon), F.col(center_lat), F.col(center_lon)
     ) <= F.lit(radius_deg) * F.lit(radius_deg)
     return p.join(c, ["__cx", "__cy"]).filter(within).drop("__cx", "__cy")
-
-
-def radius_join_naive(
-    points: DataFrame,
-    centers: DataFrame,
-    radius_deg: float,
-    point_lat: str = "lat",
-    point_lon: str = "lon",
-    center_lat: str = "c_lat",
-    center_lon: str = "c_lon",
-) -> DataFrame:
-    """Distance-condition join — parity baseline (nested-loop plan)."""
-    within = planar_sq_deg(
-        F.col(point_lat), F.col(point_lon), F.col(center_lat), F.col(center_lon)
-    ) <= F.lit(radius_deg) * F.lit(radius_deg)
-    return points.join(centers, within)

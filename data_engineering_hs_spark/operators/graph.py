@@ -21,9 +21,9 @@ small; the edges table is the only big operand and is never
 re-shuffled if pre-partitioned by src. The loop persist()s ranks
 per iteration, co-partitioned on the node key so the next join
 reuses the edge cache's partitioning, and cuts the lineage with a
-localCheckpoint every _LINEAGE_CUT_EVERY (5) rounds — without the
-cut, iteration k replans k joins deep (same lesson as dup_groups,
-dedup.py:38).
+localCheckpoint every _LINEAGE_CUT_EVERY (5) rounds, releasing that
+window's rank caches — without the cut, iteration k replans k joins
+deep (same lesson as dup_groups, dedup.py:38).
 """
 
 from __future__ import annotations
@@ -39,6 +39,18 @@ from data_engineering_hs_spark.functions.scalar import stable_round
 # the plan is truncated so analysis/cache-matching stays O(1) per
 # round instead of growing with the round number.
 _LINEAGE_CUT_EVERY = 5
+
+
+def _cut_lineage(frame: DataFrame, window: list[DataFrame]) -> DataFrame:
+    """Eagerly checkpoint `frame`, then release the persisted frames of
+    the lineage window it ends: the checkpoint now holds their result
+    and nothing later reads them, so N rounds hold at most one
+    window's caches instead of N."""
+    cut = frame.localCheckpoint(eager=True)
+    for f in window:
+        f.unpersist()
+    window.clear()
+    return cut
 
 
 def pagerank(
@@ -135,6 +147,7 @@ def pagerank(
         # (see functions.scalar.stable_round)
         stable_round(F.lit(1.0) / F.col("n"), round_decimals).alias("rank"),
     )
+    window = []  # rank caches since the last lineage cut
     for i in range(iterations):
         term = (
             F.col("rank")
@@ -174,7 +187,7 @@ def pagerank(
             # amplification is impossible.
             .persist()
         )
-        cached.append(ranks)
+        window.append(ranks)
         # Periodic LINEAGE CUT: persist does not truncate the logical
         # plan, and at 20+ iterations analysis + cache-matching over
         # the ever-deeper tree dominates wall time (measured: the
@@ -185,12 +198,12 @@ def pagerank(
         # node-sized exchange next round, the edge cache stays
         # co-partitioned) and the plan depth stays bounded.
         if (i + 1) % _LINEAGE_CUT_EVERY == 0 and (i + 1) < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = _cut_lineage(ranks, window)
     # Materialize once (same eager posture the old per-iteration
-    # checkpoints had), then release every intermediate cache — the
+    # checkpoints had), then release every remaining cache — the
     # result frame stands alone and repeated calls leak nothing.
     final = ranks.localCheckpoint(eager=True)
-    for frame in cached:
+    for frame in cached + window:
         frame.unpersist()
     return final
 
@@ -220,9 +233,10 @@ def label_propagation(
     Per round: one join of the (node-sized) label frame onto the
     edge list + one (node, label) count + one per-node argmax window
     — two shuffles on the node key, same budget as a dup_groups
-    round. Labels materialize per round via localCheckpoint to cut
-    the growing lineage. Isolated nodes (no edges) are not part of
-    the graph and don't appear in the output.
+    round. Labels materialize per round via a co-partitioned persist,
+    with a lineage cut every _LINEAGE_CUT_EVERY rounds. Isolated
+    nodes (no edges) are not part of the graph and don't appear in
+    the output.
 
     Returns (node, community) — community is the surviving label.
     """
@@ -256,6 +270,7 @@ def label_propagation(
     from pyspark.sql import Window
 
     w = Window.partitionBy("a").orderBy(F.desc("cnt"), F.asc("label"))
+    window = []  # label caches since the last lineage cut
     for i in range(iterations):
         labels = (
             und.join(labels.withColumnRenamed("node", "b"), "b")
@@ -267,15 +282,15 @@ def label_propagation(
             .select(F.col("a").alias("node"), "label")
             .persist()
         )
-        cached.append(labels)
+        window.append(labels)
         # periodic lineage cut — same planning-time bound as pagerank
         if (i + 1) % _LINEAGE_CUT_EVERY == 0 and (i + 1) < iterations:
-            labels = labels.localCheckpoint(eager=True)
-    # Materialize once, then release the intermediates (same leak
+            labels = _cut_lineage(labels, window)
+    # Materialize once, then release the remaining caches (same leak
     # rationale as pagerank above).
     final = labels.select(
         "node", F.col("label").alias("community")
     ).localCheckpoint(eager=True)
-    for frame in cached:
+    for frame in cached + window:
         frame.unpersist()
     return final

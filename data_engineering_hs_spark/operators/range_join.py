@@ -17,9 +17,6 @@ and warehouse range-join optimizations use the same shape). Pick
 `bucket_width` ≈ the typical interval length: too small explodes
 intervals into many buckets, too large puts many points+intervals in
 one bucket and the post-filter does the work.
-
-`range_join_naive` keeps the BETWEEN-condition form for parity
-testing — correct at small scale, quadratic at large.
 """
 
 from __future__ import annotations
@@ -89,24 +86,3 @@ def range_join(
             unmatched = unmatched.withColumn(c, F.lit(None).cast(iv.schema[c].dataType))
         return matched.unionByName(unmatched)
     raise ValueError(f"unsupported how={how!r} (inner|left)")
-
-
-def range_join_naive(
-    points: DataFrame,
-    intervals: DataFrame,
-    point_col: str,
-    start_col: str,
-    end_col: str,
-    on: str | None = None,
-) -> DataFrame:
-    """BETWEEN-condition join — the parity baseline (nested-loop plan)."""
-    bounds = (F.col(point_col) >= F.col(start_col)) & (
-        F.col(point_col) <= F.col(end_col)
-    )
-    if on:
-        joined = points.join(
-            intervals.withColumnRenamed(on, f"__r_{on}"),
-            (points[on] == F.col(f"__r_{on}")) & bounds,
-        )
-        return joined.drop(f"__r_{on}")
-    return points.join(intervals, bounds)

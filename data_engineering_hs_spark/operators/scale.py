@@ -43,10 +43,6 @@ def write_bucketed(
     writer.saveAsTable(table_name, format="parquet")
 
 
-def read_table(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
-
-
 def salted_join(
     fact: DataFrame,
     dim: DataFrame,

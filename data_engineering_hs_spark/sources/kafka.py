@@ -18,7 +18,7 @@ source resolution.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql.streaming import DataStreamReader
 
 KAFKA_SOURCE_CLASS = "org.apache.spark.sql.kafka010.KafkaSourceProvider"
@@ -67,24 +67,3 @@ def kafka_stream_reader(
     if max_offsets_per_trigger is not None:
         reader = reader.option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
     return reader
-
-
-def kafka_value_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    **reader_kwargs,
-) -> DataFrame:
-    """Load the reader and project the binary `value` + metadata —
-    the exact input shape streaming/pipelines.py consumes."""
-    from pyspark.sql import functions as F
-
-    df = kafka_stream_reader(spark, bootstrap_servers, topic, **reader_kwargs).load()
-    return df.select(
-        F.col("key"),
-        F.col("value"),
-        F.col("topic"),
-        F.col("partition"),
-        F.col("offset"),
-        F.col("timestamp"),
-    )

@@ -553,9 +553,9 @@ def compact_ingest_store(spark, path: str, files_per_partition: int = 1) -> dict
     Why: the run-namespaced layout accretes one partition per batch
     forever — at one batch per trigger that is thousands of small
     partitions/files within days, and every batch re-lists them (the
-    small-files problem compact_parquet/compact_band_store solve for
-    their stores). Content is unchanged — same rows, no distinct —
-    so cross-run dedup results are identical before and after.
+    small-files problem compact_parquet solves for path stores).
+    Content is unchanged — same rows, no distinct — so cross-run
+    dedup results are identical before and after.
 
     Why each run's MAX batch stays in place: two safety invariants
     live on it. (1) Replay-independence — a crashed stream replays
@@ -581,8 +581,8 @@ def compact_ingest_store(spark, path: str, files_per_partition: int = 1) -> dict
     format's OPTIMIZE. Do not run concurrently with an active
     trigger's commit (the swap could drop a batch committed after the
     staging read) — run it between triggers or while the stream is
-    stopped, like compact_band_store's cadence contract. A violation
-    cannot vanish silently (r13 pre-check, r14 closure): the file set
+    stopped, like compact_parquet's maintenance-window contract. A
+    violation cannot vanish silently (r13 pre-check, r14 closure): the file set
     is re-snapshotted before the rename (check_no_concurrent_writer)
     AND re-verified after the park rename freezes the store
     (swap_in(staged=...)) — a commit in either window aborts with

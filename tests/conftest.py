@@ -21,7 +21,6 @@ SF001 = "/root/testdata/sf0.01"
 _SLOW_FILES = {
     "test_adversarial_lsh.py",
     "test_arrow_batch_boundaries.py",
-    "test_asof_and_components.py",
     "test_curate_scale.py",
     "test_fuzz_assertions.py",
     "test_fuzz_chunking.py",

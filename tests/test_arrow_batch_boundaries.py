@@ -11,9 +11,7 @@ At 100 TB every partition spans many batches, while the sf0.01 driver
 corpus often fits a single default-sized batch — exactly the
 green-but-wrong-at-scale window.
 
-asof_join_arrow was already probed clean at maxRecordsPerBatch=16 over
-20k-row groups (NEXT.md r14 pre-probe); this file pins the remaining
-vectorized call sites. Where a deterministic pure-Python mirror exists
+This file pins the vectorized call sites. Where a deterministic pure-Python mirror exists
 (the multimodal fakes) we compare against it — stronger than A/B.
 """
 

@@ -1,10 +1,11 @@
-"""Unit tests for the as-of join operator (both forms) and connected
-components over dup pairs."""
+"""Unit tests for the as-of join operator and connected components
+over dup pairs."""
 
 from __future__ import annotations
 
+import pytest
 
-from data_engineering_hs_spark.operators.asof import asof_join, asof_join_pandas
+from data_engineering_hs_spark.operators.asof import asof_join
 from data_engineering_hs_spark.operators.dedup import dup_groups
 
 
@@ -41,6 +42,25 @@ EXPECTED_BACKWARD = {
 }
 
 
+def _merge_asof_reference(left, right, on, ts, value_cols):
+    """pandas.merge_asof (backward, exact matches allowed) over the
+    collected frames: one record per left row with the left
+    columns plus asof_<value_col>, NaN read back as None. Both sides
+    share the timestamp column name `ts` and hold no null ts."""
+    import pandas as pd
+
+    lpdf = left.toPandas().sort_values(ts, kind="stable")
+    rpdf = (
+        right.toPandas()[[on, ts, *value_cols]]
+        .rename(columns={ts: "__rts", **{c: f"asof_{c}" for c in value_cols}})
+        .sort_values("__rts", kind="stable")
+    )
+    merged = pd.merge_asof(
+        lpdf, rpdf, left_on=ts, right_on="__rts", by=on
+    ).drop(columns="__rts")
+    return merged.astype(object).where(merged.notna(), None).to_dict("records")
+
+
 class TestAsofJoin:
     def test_window_form(self, spark):
         trades, quotes = _fixture(spark)
@@ -52,20 +72,23 @@ class TestAsofJoin:
         # all left rows survive (left-join semantics)
         assert out.count() == trades.count()
 
-    def test_pandas_form_matches_window_form(self, spark):
+    def test_window_form_matches_merge_asof(self, spark):
         trades, quotes = _fixture(spark)
-        out = asof_join_pandas(
+        out = asof_join(
             trades, quotes, on="sym", left_ts="t", right_ts="t", value_cols=["px"]
         )
         got = {r["trade_id"]: r["asof_px"] for r in out.collect()}
-        assert got == EXPECTED_BACKWARD
+        ref = {
+            r["trade_id"]: r["asof_px"]
+            for r in _merge_asof_reference(trades, quotes, "sym", "t", ["px"])
+        }
+        assert got == ref == EXPECTED_BACKWARD
 
     def test_null_ts_right_rows_never_match(self, spark):
         # ascending sort puts NULLs FIRST: without the right-side
         # filter a null-ts quote sat at every window's start and
         # matched trades that had no real predecessor — diverging
-        # from merge_asof (which never matches null keys). Both forms
-        # must agree: no match.
+        # from merge_asof (which never matches null keys).
         from pyspark.sql import types as T
 
         trades = spark.createDataFrame([("A", 5.0, 1)], ["sym", "t", "trade_id"])
@@ -79,78 +102,27 @@ class TestAsofJoin:
         quotes = spark.createDataFrame(
             [("A", None, 9.9), ("A", 100.0, 1.0)], qschema
         )
-        for fn in (asof_join, asof_join_pandas):
-            out = fn(
-                trades, quotes, on="sym", left_ts="t", right_ts="t",
-                value_cols=["px"],
-            )
-            got = {r["trade_id"]: r["asof_px"] for r in out.collect()}
-            assert got == {1: None}, fn.__name__
-
-    def test_pandas_form_forward_direction(self, spark):
-        trades, quotes = _fixture(spark)
-        out = asof_join_pandas(
+        out = asof_join(
             trades, quotes, on="sym", left_ts="t", right_ts="t",
-            value_cols=["px"], direction="forward",
+            value_cols=["px"],
         )
         got = {r["trade_id"]: r["asof_px"] for r in out.collect()}
-        assert got[100] == 100.0  # inclusive at tie
-        assert got[101] is None   # nothing after t=25 for A
-        assert got[102] == 50.0   # B@5 → next quote B@6
+        assert got == {1: None}
 
-    def test_pandas_form_long_values_above_2_53_exact(self, spark):
-        # r12 regression (same class as the avro fix): merge_asof's
-        # left join puts NaN on unmatched rows, coercing an int64
-        # asof column to float64 and silently rounding matched values
-        # above 2^53 — 2^60+1 came back as 2^60. Integral value
-        # columns now ride the merge as object dtype.
-        big = 2**60 + 1
-        left = spark.createDataFrame([("k", 5), ("k", 1)], "k string, lts long")
-        right = spark.createDataFrame(
-            [("k", 3, big)], "k string, rts long, v long"
-        )
-        out = asof_join_pandas(
-            left, right, on="k", left_ts="lts", right_ts="rts",
-            value_cols=["v"],
-        )
-        got = sorted((r.lts, r.asof_v) for r in out.collect())
-        assert got == [(1, None), (5, big)]
-
-
-class TestAsofJoinArrow:
-    """asof_join_arrow — the exact-dtype twin (r13, verdict item 5).
-
-    The decisive case is a NULL-BEARING int64 value column with
-    2^60-range values: the pandas boundary converts it to float64 on
-    Arrow INPUT (upstream of asof_join_pandas' object-dtype
-    hardening, which can only protect columns that arrive integral),
-    silently rounding 2^60+1 → 2^60. The arrow form keeps Arrow
-    types end-to-end and must return it bit-exact."""
-
-    def _frames(self, spark):
+    def test_null_bearing_longs_above_2_53_exact(self, spark):
+        # A NULL-bearing int64 value column with 2^60-range values
+        # must come back bit-exact: no float64 round trip anywhere.
         big = 2**60 + 1
         left = spark.createDataFrame(
             [("k", 1), ("k", 5), ("k", 9), ("j", 4)], "k string, lts long"
         )
-        # v carries a null AND a >2^53 value: arrives float64 at any
-        # pandas boundary, exact int64 at an arrow boundary
         right = spark.createDataFrame(
             [("k", 3, big), ("k", 7, None), ("j", 4, big - 2)],
             "k string, rts long, v long",
         )
-        return left, right, big
-
-    def test_null_bearing_longs_above_2_53_exact(self, spark):
-        from data_engineering_hs_spark.operators.asof import (
-            asof_join_arrow,
-            asof_join_pandas,
-        )
-
-        left, right, big = self._frames(spark)
         got = sorted(
-            ((r.k, r.lts, r.asof_v) for r in asof_join_arrow(
-                left, right, "k", "lts", "rts", ["v"]
-            ).collect())
+            (r.k, r.lts, r.asof_v)
+            for r in asof_join(left, right, "k", "lts", "rts", ["v"]).collect()
         )
         assert got == [
             ("j", 4, big - 2),
@@ -158,67 +130,8 @@ class TestAsofJoinArrow:
             ("k", 5, big),
             ("k", 9, None),  # matched right row EXISTS but its v is null
         ]
-        # the pandas form's documented limitation on the same input:
-        # the null in v forces float64 before user code runs, so big
-        # comes back rounded — this pin is the cross-reference in the
-        # asof_join_pandas docstring; if pandas/Arrow ever fix the
-        # input conversion, this assertion will flag it for removal
-        pnd = {
-            (r.k, r.lts): r.asof_v
-            for r in asof_join_pandas(
-                left, right, "k", "lts", "rts", ["v"]
-            ).collect()
-        }
-        assert pnd[("k", 5)] == big - 1  # rounded — the pandas boundary
-
-    def test_directions_and_tolerance(self, spark):
-        from data_engineering_hs_spark.operators.asof import asof_join_arrow
-
-        left = spark.createDataFrame(
-            [("k", 10), ("k", 14), ("k", 27)], "k string, lts long"
-        )
-        right = spark.createDataFrame(
-            [("k", 8, 80), ("k", 15, 150), ("k", 30, 300)],
-            "k string, rts long, v long",
-        )
-
-        def run(**kw):
-            return {
-                r.lts: r.asof_v
-                for r in asof_join_arrow(
-                    left, right, "k", "lts", "rts", ["v"], **kw
-                ).collect()
-            }
-
-        assert run() == {10: 80, 14: 80, 27: 150}
-        assert run(direction="forward") == {10: 150, 14: 150, 27: 300}
-        # nearest: 10→8 (d2) vs 15 (d5) → 80; 14→15 (d1) → 150;
-        # 27→30 (d3) vs 15 (d12) → 300
-        assert run(direction="nearest") == {10: 80, 14: 150, 27: 300}
-        assert run(tolerance=2) == {10: 80, 14: None, 27: None}
-        assert run(direction="nearest", tolerance=1) == {
-            10: None, 14: 150, 27: None,
-        }
-
-    def test_nearest_tie_breaks_backward_and_matches_pandas(self, spark):
-        from data_engineering_hs_spark.operators.asof import (
-            asof_join_arrow,
-            asof_join_pandas,
-        )
-
-        left = spark.createDataFrame([("k", 10)], "k string, lts long")
-        right = spark.createDataFrame(
-            [("k", 8, 80), ("k", 12, 120)], "k string, rts long, v long"
-        )
-        for form in (asof_join_arrow, asof_join_pandas):
-            got = form(
-                left, right, "k", "lts", "rts", ["v"], direction="nearest"
-            ).collect()
-            assert got[0]["asof_v"] == 80, form.__name__
 
     def test_null_ts_rows_and_empty_sides(self, spark):
-        from data_engineering_hs_spark.operators.asof import asof_join_arrow
-
         left = spark.createDataFrame(
             [("k", None), ("k", 5), ("solo", 1)], "k string, lts long"
         )
@@ -228,7 +141,7 @@ class TestAsofJoinArrow:
         got = sorted(
             (
                 (r.k, r.lts, r.asof_v)
-                for r in asof_join_arrow(
+                for r in asof_join(
                     left, right, "k", "lts", "rts", ["v"]
                 ).collect()
             ),
@@ -238,39 +151,19 @@ class TestAsofJoinArrow:
         # matches; a key with no right rows at all still emits
         assert got == [("k", 5, 40), ("k", None, None), ("solo", 1, None)]
 
-    def test_bad_direction_rejected(self, spark):
-        import pytest
-
-        from data_engineering_hs_spark.operators.asof import asof_join_arrow
-
-        left = spark.createDataFrame([("k", 1)], "k string, lts long")
-        with pytest.raises(ValueError, match="direction"):
-            asof_join_arrow(left, left, "k", "lts", "lts", [], direction="up")
-
     def test_output_name_collision_rejected_up_front(self, spark):
-        # a left column already named asof_<value_col> used to reach
-        # the arrow task and die with a schema-mismatch error (the
-        # dict-based table construction silently collapsed the
-        # duplicate); all three forms now fail fast at plan time
-        import pytest
-
-        from data_engineering_hs_spark.operators.asof import (
-            asof_join,
-            asof_join_arrow,
-            asof_join_pandas,
-        )
-
+        # a left column already named asof_<value_col> would be
+        # silently shadowed in the output; fail fast at plan time
         left = spark.createDataFrame(
             [("k", 1, 9)], "k string, lts long, asof_v long"
         )
         right = spark.createDataFrame([("k", 1, 5)], "k string, rts long, v long")
-        for fn in (asof_join, asof_join_pandas, asof_join_arrow):
-            with pytest.raises(ValueError, match="collide"):
-                fn(left, right, "k", "lts", "rts", ["v"])
+        with pytest.raises(ValueError, match="collide"):
+            asof_join(left, right, "k", "lts", "rts", ["v"])
         # duplicated value_cols produce duplicate output names — same
         # fail-fast contract
         with pytest.raises(ValueError, match="duplicate"):
-            asof_join_arrow(
+            asof_join(
                 left.drop("asof_v"), right, "k", "lts", "rts", ["v", "v"]
             )
 
@@ -319,8 +212,6 @@ class TestDupComponents:
         # check it returned identity labels (every node its own
         # component) — the silently-wrong partition the convergence
         # RuntimeError exists to prevent
-        import pytest
-
         pairs = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
         with pytest.raises(ValueError, match="max_iters"):
             dup_groups(pairs, max_iters=0)
@@ -338,10 +229,8 @@ class TestRangeJoin:
         return pts, ivs
 
     def test_matches_naive_with_key(self, spark):
-        from data_engineering_hs_spark.operators.range_join import (
-            range_join,
-            range_join_naive,
-        )
+        from data_engineering_hs_spark.operators.range_join import range_join
+        from tests.naive_mirrors import range_join_naive
 
         pts, ivs = self._data(spark)
         got = {
@@ -429,8 +318,8 @@ class TestAsofJoinEdges:
         # right rows: (ts=10, px=100, size=NULL), (ts=20, px=NULL,
         # size=5). The as-of match at ts=30 is the ts=20 ROW — px must
         # be NULL, not back-filled from ts=10 (a row that never
-        # existed). merge_asof semantics, pinned against the pandas
-        # twin.
+        # existed). merge_asof semantics, pinned against a local
+        # pandas.merge_asof reference.
         left = spark.createDataFrame([("A", 30, 1)], ["sym", "t", "lid"])
         right = spark.createDataFrame(
             [("A", 10, 100.0, None), ("A", 20, None, 5)],
@@ -440,10 +329,8 @@ class TestAsofJoinEdges:
             left, right, "sym", "t", "t", ["px", "size"]
         ).collect()[0]
         assert got["asof_px"] is None and got["asof_size"] == 5
-        got_pd = asof_join_pandas(
-            left, right, "sym", "t", "t", ["px", "size"]
-        ).collect()[0]
-        assert got_pd["asof_px"] is None and got_pd["asof_size"] == 5
+        (ref,) = _merge_asof_reference(left, right, "sym", "t", ["px", "size"])
+        assert ref["asof_px"] is None and ref["asof_size"] == 5
 
     def test_ts_tiebreak_outside_value_cols(self, spark):
         left = spark.createDataFrame([("A", 10, 1)], ["sym", "t", "lid"])
@@ -456,22 +343,6 @@ class TestAsofJoinEdges:
         ).collect()[0]
         # highest qid sorts last in the carry-forward -> wins
         assert got["asof_px"] == 1.0
-
-    def test_pandas_form_tolerates_null_ts(self, spark):
-        left = spark.createDataFrame(
-            [("A", 30, 1), ("A", None, 2)], "sym string, t long, lid int"
-        )
-        right = spark.createDataFrame(
-            [("A", 10, 100.0), ("A", None, 999.0)],
-            "sym string, t long, px double",
-        )
-        got = {
-            r["lid"]: r["asof_px"]
-            for r in asof_join_pandas(
-                left, right, "sym", "t", "t", ["px"]
-            ).collect()
-        }
-        assert got == {1: 100.0, 2: None}
 
 
 class TestRangeJoinNullColumns:
@@ -491,82 +362,3 @@ class TestRangeJoinNullColumns:
         rows = sorted((r["t"], r["tag"]) for r in out.collect())
         # matched null-note row appears ONCE (tagged), unmatched once
         assert rows == [(15, "w"), (99, None)]
-
-
-class TestAsofNonFiniteTolerance:
-    """r15, ADVICE: tolerance=inf with integer timestamps hit
-    math.floor(inf) → OverflowError deep inside an executor task on
-    the r14 int64 fast path, and pandas' merge_asof raises MergeError
-    executor-deep for inf on int64 keys. Uniform boundary contract on
-    both tolerance-taking forms: +inf normalizes to None (unbounded),
-    NaN and -inf are rejected with a clear ValueError."""
-
-    def _frames(self, spark):
-        left = spark.createDataFrame(
-            [("k", 10), ("k", 50)], "k string, lts long"
-        )
-        right = spark.createDataFrame(
-            [("k", 1, 100), ("k", 40, 200)], "k string, rts long, v long"
-        )
-        return left, right
-
-    def test_pos_inf_tolerance_is_unbounded_both_forms(self, spark):
-        from data_engineering_hs_spark.operators.asof import (
-            asof_join_arrow,
-            asof_join_pandas,
-        )
-
-        left, right = self._frames(spark)
-        for form in (asof_join_arrow, asof_join_pandas):
-            got = sorted(
-                (r.lts, r.asof_v)
-                for r in form(
-                    left, right, "k", "lts", "rts", ["v"],
-                    direction="nearest", tolerance=float("inf"),
-                ).collect()
-            )
-            # unbounded nearest: 10 → rts=1 (diff 9 < 30), 50 → rts=40
-            assert got == [(10, 100), (50, 200)], form.__name__
-
-    def test_nan_and_neg_inf_rejected_at_boundary(self, spark):
-        import pytest as _pytest
-
-        from data_engineering_hs_spark.operators.asof import (
-            asof_join_arrow,
-            asof_join_pandas,
-        )
-
-        left, right = self._frames(spark)
-        for form in (asof_join_arrow, asof_join_pandas):
-            with _pytest.raises(ValueError, match="tolerance=NaN"):
-                form(
-                    left, right, "k", "lts", "rts", ["v"],
-                    direction="backward", tolerance=float("nan"),
-                )
-            with _pytest.raises(ValueError, match="tolerance=-inf"):
-                form(
-                    left, right, "k", "lts", "rts", ["v"],
-                    direction="backward", tolerance=float("-inf"),
-                )
-
-    def test_negative_finite_tolerance_rejected_at_boundary(self, spark):
-        # r16 ADVICE close: a negative FINITE tolerance matched
-        # nothing in the arrow form (all-NULL asof columns) while
-        # pandas merge_asof raised its own error — the r15-unified
-        # contract silently re-diverged. Both forms now raise the
-        # same boundary ValueError, for int and float alike.
-        import pytest as _pytest
-
-        from data_engineering_hs_spark.operators.asof import (
-            asof_join_arrow,
-            asof_join_pandas,
-        )
-
-        left, right = self._frames(spark)
-        for form in (asof_join_arrow, asof_join_pandas):
-            for bad in (-5, -0.5):
-                with _pytest.raises(ValueError, match="negative"):
-                    form(
-                        left, right, "k", "lts", "rts", ["v"],
-                        direction="backward", tolerance=bad,
-                    )

@@ -28,10 +28,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from data_engineering_hs_spark.operators.geo import (
-    radius_join,
-    radius_join_naive,
-)
+from data_engineering_hs_spark.operators.geo import radius_join
+from tests.naive_mirrors import radius_join_naive
 
 FUZZ = settings(
     max_examples=8,

@@ -12,8 +12,8 @@ from data_engineering_hs_spark.operators.geo import (
     haversine_km,
     planar_sq_deg,
     radius_join,
-    radius_join_naive,
 )
+from tests.naive_mirrors import radius_join_naive
 
 
 def _frames(spark, n_points=500, n_centers=40, seed=7):

@@ -81,3 +81,36 @@ class TestLabelPropagation:
             map(tuple, label_propagation(e.repartition(13), iterations=3).collect())
         )
         assert a == b
+
+
+class TestLoopCacheRelease:
+    """The loops hold at most one lineage window of per-round caches:
+    each cut releases the rank/label frames it checkpointed, so the
+    cache count does not grow with the iteration count."""
+
+    def test_pagerank_releases_rank_caches_at_each_cut(self, spark, monkeypatch):
+        from data_engineering_hs_spark.operators import graph
+
+        jsc = spark.sparkContext._jsc
+        e = spark.createDataFrame(
+            [(i, (i * 7 + 3) % 40) for i in range(40)], "src long, dst long"
+        )
+        frame_cls = type(e)  # the concrete DataFrame class in use
+        seen = []
+        original = frame_cls.localCheckpoint
+
+        def counting(self, *args, **kwargs):
+            # entry of each checkpoint = state left by the previous one
+            seen.append(jsc.getPersistentRDDs().size())
+            return original(self, *args, **kwargs)
+
+        monkeypatch.setattr(frame_cls, "localCheckpoint", counting)
+        before = jsc.getPersistentRDDs().size()
+        graph.pagerank(e, iterations=12)
+        # calls: the node count, the cuts after rounds 5 and 10, the
+        # final result — the last entry reads the state after cut 2
+        assert len(seen) == 4
+        # edges, nodes, out-weights and the node count stay to the
+        # end; the rest is at most one window's worth
+        static = 4
+        assert seen[-1] - before <= static + graph._LINEAGE_CUT_EVERY, seen

@@ -4,9 +4,8 @@ fingerprints persisted BEFORE the change no longer match the ones the
 engine now computes — previously-seen docs with tab/newline-edged
 text re-fingerprint differently and the store anti-join silently
 re-admits them as 'new'. Stores now stamp
-functions.text.NORMALIZATION_VERSION beside the data (sidecar for
-path stores, TBLPROPERTIES for the bucketed-table twins); reads and
-commits fail loudly on a mismatch. Unstamped stores (pre-r14 or
+functions.text.NORMALIZATION_VERSION in a sidecar beside the data;
+reads and commits fail loudly on a mismatch. Unstamped stores (pre-r14 or
 remote URIs) pass — indistinguishable from fresh; the pre-r13 rebuild
 requirement is the documented contract."""
 
@@ -109,101 +108,6 @@ class TestStreamingIngestStoreStamp:
             _dedup_ingest_batch(
                 mk([(3, "gamma")]), 2, store, sink, "text", "doc_id"
             )
-
-
-class TestBucketedTableStamp:
-    def test_table_property_stamped_and_checked(self, spark):
-        import shutil
-
-        from data_engineering_hs_spark.operators.dedup import (
-            commit_fingerprints_bucketed,
-            read_fingerprint_store_table,
-        )
-
-        t = "norm_stamp_fp"
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-        commit_fingerprints_bucketed(_survivors(spark, 1, 2), t)
-        assert read_fingerprint_store_table(spark, t).count() == 2
-        spark.sql(
-            f"ALTER TABLE {t} SET TBLPROPERTIES('normalization_version'='1')"
-        )
-        with pytest.raises(RuntimeError, match="normalization_version"):
-            read_fingerprint_store_table(spark, t)
-        with pytest.raises(RuntimeError, match="normalization_version"):
-            commit_fingerprints_bucketed(_survivors(spark, 3), t)
-        # abort-before-mixing (r15, ADVICE): the refused commit must
-        # check BEFORE the append — the incomparable fingerprints must
-        # not have landed in the table before the raise
-        assert (
-            spark.table(t).count() == 2
-        ), "refused bucketed commit leaked rows into the stamped table"
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-
-    def test_lsh_commit_checks_before_append(self, spark):
-        import shutil
-
-        from data_engineering_hs_spark.operators.dedup import (
-            commit_lsh_bands_bucketed,
-        )
-
-        t = "norm_stamp_bands"
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-        bands = spark.createDataFrame(
-            [(1, 0, 123)], "id long, band int, bucket long"
-        )
-        commit_lsh_bands_bucketed(bands, t)
-        spark.sql(
-            f"ALTER TABLE {t} SET TBLPROPERTIES('normalization_version'='1')"
-        )
-        more = spark.createDataFrame(
-            [(2, 1, 456)], "id long, band int, bucket long"
-        )
-        with pytest.raises(RuntimeError, match="normalization_version"):
-            commit_lsh_bands_bucketed(more, t)
-        assert (
-            spark.table(t).count() == 1
-        ), "refused bucketed band commit leaked rows into the stamped table"
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-
-    def test_stamp_survives_band_store_compaction(self, spark):
-        import shutil
-
-        from data_engineering_hs_spark.operators.dedup import (
-            _table_norm_version,
-            commit_lsh_bands_bucketed,
-            compact_band_store,
-            read_lsh_store_table,
-        )
-
-        t = "norm_stamp_bands_compact"
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-        bands = spark.createDataFrame(
-            [(1, 0, 123), (2, 1, 456)], "id long, band int, bucket long"
-        )
-        commit_lsh_bands_bucketed(bands, t)
-        assert _table_norm_version(spark, t) == NORMALIZATION_VERSION
-        # saveAsTable(overwrite) drops+recreates the table, losing
-        # TBLPROPERTIES — compaction must re-stamp (r15, ADVICE)
-        compact_band_store(spark, t)
-        assert _table_norm_version(spark, t) == NORMALIZATION_VERSION, (
-            "compaction dropped the normalization stamp — the store "
-            "degraded to the unstamped-legacy contract"
-        )
-        assert read_lsh_store_table(spark, t).count() == 2
-        # compacting a MISMATCHED store aborts loud, rows untouched
-        spark.sql(
-            f"ALTER TABLE {t} SET TBLPROPERTIES('normalization_version'='1')"
-        )
-        with pytest.raises(RuntimeError, match="normalization_version"):
-            compact_band_store(spark, t)
-        assert spark.table(t).count() == 2
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
 
 
 def _fp_store(spark, store):

@@ -104,10 +104,7 @@ class TestPlanShapes:
 
 
 class TestRound6PlanShapes:
-    def test_bm25_one_pass_shape(self, spark, monkeypatch):
-        # the proxy leaf pinned below is the checkpoint form; the
-        # persist form (cluster deployments) renders differently
-        monkeypatch.setenv("SPARK_GRAFT_BM25_MATERIALIZE", "checkpoint")
+    def test_bm25_one_pass_shape(self, spark):
         # r16 restructure: ONE corpus tokenize pass behind a lazy
         # localCheckpoint (the pre-r16 shape re-scanned the corpus
         # four times: tf, df re-derived through tf, dl, stats). The

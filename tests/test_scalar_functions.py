@@ -180,12 +180,8 @@ class TestHardeningEdges:
 
 
 class TestVectorAndSourceEdges:
-    def test_pandas_dot_and_cosine_tolerate_null_and_ragged(self, spark):
-        from data_engineering_hs_spark.functions.vector import (
-            cosine_pandas,
-            dot,
-            dot_pandas,
-        )
+    def test_pandas_dot_tolerates_null_and_ragged(self, spark):
+        from data_engineering_hs_spark.functions.vector import dot, dot_pandas
 
         df = spark.createDataFrame(
             [
@@ -196,16 +192,12 @@ class TestVectorAndSourceEdges:
             "i int, a array<double>, b array<double>",
         )
         got = {
-            r["i"]: (r["d"], r["c"])
-            for r in df.select(
-                "i",
-                dot_pandas("a", "b").alias("d"),
-                cosine_pandas("a", "b").alias("c"),
-            ).collect()
+            r["i"]: r["d"]
+            for r in df.select("i", dot_pandas("a", "b").alias("d")).collect()
         }
-        assert got[1][0] == 11.0
-        assert got[2] == (None, None)
-        assert got[3] == (None, None)
+        assert got[1] == 11.0
+        assert got[2] is None
+        assert got[3] is None
         # fold parity on the null row
         fold = df.select("i", dot("a", "b").alias("d")).collect()
         assert {r["i"]: r["d"] for r in fold}[2] is None
@@ -216,11 +208,7 @@ class TestVectorAndSourceEdges:
         # the Arrow path must too (zero-padded, exact) — not NULL.
         # Forcing everything into one Arrow batch makes the mixed-dim
         # case deterministic rather than partition-dependent.
-        from data_engineering_hs_spark.functions.vector import (
-            cosine_pandas,
-            dot,
-            dot_pandas,
-        )
+        from data_engineering_hs_spark.functions.vector import dot, dot_pandas
 
         df = spark.createDataFrame(
             [
@@ -231,18 +219,16 @@ class TestVectorAndSourceEdges:
             "i int, a array<double>, b array<double>",
         ).coalesce(1)
         got = {
-            r["i"]: (r["d"], r["c"], r["f"])
+            r["i"]: (r["d"], r["f"])
             for r in df.select(
                 "i",
                 dot_pandas("a", "b").alias("d"),
-                cosine_pandas("a", "b").alias("c"),
                 dot("a", "b").alias("f"),
             ).collect()
         }
-        assert got[1][0] == 11.0 and got[1][0] == got[1][2]
-        assert got[2][0] == 9.0 and got[2][0] == got[2][2]
-        assert got[1][1] is not None and got[2][1] is not None
-        assert got[3][0] is None and got[3][1] is None
+        assert got[1][0] == 11.0 and got[1][0] == got[1][1]
+        assert got[2][0] == 9.0 and got[2][0] == got[2][1]
+        assert got[3][0] is None
 
     def test_read_document_array_malformed_raises(self, spark, tmp_path):
         import pytest as _pytest

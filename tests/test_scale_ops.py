@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF001
 from data_engineering_hs_spark.operators.scale import (
-    read_table,
     salted_join,
     write_bucketed,
 )
@@ -37,8 +36,8 @@ class TestBucketedJoin:
                        sort_cols=["o_orderkey"])
         write_bucketed(lineitem, "b_lineitem", ["l_orderkey"], num_buckets=8,
                        sort_cols=["l_orderkey"])
-        bo = read_table(spark, "b_orders")
-        bl = read_table(spark, "b_lineitem")
+        bo = spark.table("b_orders")
+        bl = spark.table("b_lineitem")
         # disable broadcast so the join would otherwise shuffle
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
@@ -165,9 +164,8 @@ class TestRuntimeBloomFilter:
 
 
 class TestBucketedIncrementalStores:
-    """The incremental dedup stores at scale: persisted as tables
-    bucketed on their join/groupBy keys, the per-increment store-side
-    work reads Exchange-free (NEXT.md §6)."""
+    """A band store written as a table bucketed on its groupBy keys
+    aggregates Exchange-free (NEXT.md §6)."""
 
     def test_bucketed_lsh_store_groupby_has_no_exchange(self, spark):
         import shutil
@@ -183,7 +181,7 @@ class TestBucketedIncrementalStores:
         )
         bands = lsh_band_buckets(docs, "text", "doc_id")
         write_bucketed(bands, "b_lsh_store", ["band", "bucket"], num_buckets=8)
-        store = read_table(spark, "b_lsh_store")
+        store = spark.table("b_lsh_store")
         grouped = store.groupBy("band", "bucket").agg(
             F.collect_list("doc_id").alias("ids")
         )
@@ -192,109 +190,6 @@ class TestBucketedIncrementalStores:
         # store-side aggregation shuffles nothing
         assert "Exchange" not in plan, plan
         assert grouped.count() > 0
-
-    def test_bucketed_fingerprint_store_antijoin_batch_side_only(self, spark):
-        # incremental_exact_dedup against a store committed via
-        # commit_fingerprints_bucketed: the anti-join's ONLY Exchange
-        # is the (small) batch side — the store reads pre-clustered.
-        # Control: the same store as plain parquet shuffles BOTH sides.
-        import shutil
-
-        from data_engineering_hs_spark.operators.dedup import (
-            commit_fingerprints_bucketed,
-            incremental_exact_dedup,
-            read_fingerprint_store_table,
-        )
-
-        spark.sql("DROP TABLE IF EXISTS b_fp_store")
-        shutil.rmtree("spark-warehouse/b_fp_store", ignore_errors=True)
-        b1 = spark.createDataFrame(
-            [(i, f"doc body {i % 30}") for i in range(60)], ["doc_id", "text"]
-        )
-        s1 = incremental_exact_dedup(b1, None)
-        commit_fingerprints_bucketed(s1, "b_fp_store", num_buckets=32)
-        # second increment appends with the same bucket spec
-        b2 = spark.createDataFrame(
-            [(i, f"doc body {i % 45}") for i in range(60, 120)],
-            ["doc_id", "text"],
-        )
-        store = read_fingerprint_store_table(spark, "b_fp_store")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            out = incremental_exact_dedup(b2, store)
-            plan = out._jdf.queryExecution().executedPlan().toString()
-            assert plan.count("Exchange") == 1, plan
-            survivors2 = out
-            commit_fingerprints_bucketed(survivors2, "b_fp_store", num_buckets=32)
-            # appended store still reads Exchange-free on the store side
-            store3 = read_fingerprint_store_table(spark, "b_fp_store")
-            b3 = spark.createDataFrame(
-                [(i, f"doc body {i % 50}") for i in range(120, 160)],
-                ["doc_id", "text"],
-            )
-            out3 = incremental_exact_dedup(b3, store3)
-            plan3 = out3._jdf.queryExecution().executedPlan().toString()
-            assert plan3.count("Exchange") == 1, plan3
-            # control: plain (unbucketed) store shuffles both sides
-            plain = store.select("fingerprint").localCheckpoint(eager=True)
-            out_plain = incremental_exact_dedup(b2, plain)
-            plan_plain = out_plain._jdf.queryExecution().executedPlan().toString()
-            assert plan_plain.count("Exchange") >= 2, plan_plain
-            # and results agree between bucketed and plain stores
-            assert sorted(r["doc_id"] for r in out.collect()) == sorted(
-                r["doc_id"] for r in out_plain.collect()
-            )
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-
-    def test_bucketed_lsh_store_incremental_parity_and_fewer_exchanges(
-        self, spark
-    ):
-        # incremental_minhash_lsh with the band store as a bucketed
-        # table: same pairs as with a plain parquet store, strictly
-        # fewer Exchanges in the plan (the store-side groupBy reads
-        # straight off the bucketed scan).
-        import shutil
-
-        from data_engineering_hs_spark.operators.dedup import (
-            commit_lsh_bands_bucketed,
-            incremental_minhash_lsh,
-            read_lsh_store_table,
-        )
-
-        spark.sql("DROP TABLE IF EXISTS b_band_store")
-        shutil.rmtree("spark-warehouse/b_band_store", ignore_errors=True)
-        corpus = spark.createDataFrame(
-            [(i, f"shared boilerplate sentence variant {i % 4} tail {i}")
-             for i in range(30)],
-            ["doc_id", "text"],
-        )
-        from data_engineering_hs_spark.operators.dedup import lsh_band_buckets
-
-        commit_lsh_bands_bucketed(
-            lsh_band_buckets(corpus, "text", "doc_id"), "b_band_store",
-            num_buckets=32,
-        )
-        batch = spark.createDataFrame(
-            [(i, f"shared boilerplate sentence variant {i % 4} tail {i - 100}")
-             for i in range(100, 120)],
-            ["doc_id", "text"],
-        )
-        store_bucketed = read_lsh_store_table(spark, "b_band_store")
-        store_plain = store_bucketed.localCheckpoint(eager=True)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            pairs_b, _ = incremental_minhash_lsh(batch, store_bucketed, "text", "doc_id")
-            pairs_p, _ = incremental_minhash_lsh(batch, store_plain, "text", "doc_id")
-            plan_b = pairs_b._jdf.queryExecution().executedPlan().toString()
-            plan_p = pairs_p._jdf.queryExecution().executedPlan().toString()
-            assert plan_b.count("Exchange") < plan_p.count("Exchange"), (
-                plan_b.count("Exchange"), plan_p.count("Exchange"))
-            got_b = sorted((r["id_a"], r["id_b"]) for r in pairs_b.collect())
-            got_p = sorted((r["id_a"], r["id_b"]) for r in pairs_p.collect())
-            assert got_b == got_p and len(got_b) > 0
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
 
 
 class TestZOrder:
@@ -533,71 +428,6 @@ class TestIncrementalMaterializedView:
         assert not os.path.exists(os.path.join(dangling, "stray.parquet"))
         spark.sql("DROP TABLE IF EXISTS mvdb.t_mv_q")
         spark.sql("DROP DATABASE IF EXISTS mvdb")
-
-
-class TestBandStoreCompaction:
-    def test_compaction_preserves_rows_and_bucketing(self, spark):
-        import glob
-        import shutil
-
-        from data_engineering_hs_spark.operators.dedup import (
-            commit_lsh_bands_bucketed,
-            compact_band_store,
-            lsh_band_buckets,
-        )
-
-        spark.sql("DROP TABLE IF EXISTS b_lsh_compact")
-        shutil.rmtree("spark-warehouse/b_lsh_compact", ignore_errors=True)
-        for start in (0, 40, 80, 120):
-            docs = spark.createDataFrame(
-                [(i, f"words of doc number {i % 9} repeated here again")
-                 for i in range(start, start + 40)],
-                ["doc_id", "text"],
-            )
-            commit_lsh_bands_bucketed(
-                lsh_band_buckets(docs, "text", "doc_id"),
-                "b_lsh_compact", num_buckets=4,
-            )
-        before_rows = {
-            tuple(r) for r in spark.table("b_lsh_compact").collect()
-        }
-        files_before = len(
-            glob.glob("spark-warehouse/b_lsh_compact/part-*")
-        )
-        compact_band_store(spark, "b_lsh_compact", num_buckets=4)
-        files_after = len(glob.glob("spark-warehouse/b_lsh_compact/part-*"))
-        assert files_after < files_before
-        after_rows = {
-            tuple(r) for r in spark.table("b_lsh_compact").collect()
-        }
-        assert after_rows == before_rows
-        # the Exchange-free store-side contract survives compaction
-        grouped = (
-            spark.table("b_lsh_compact")
-            .groupBy("band", "bucket")
-            .agg(F.collect_list("doc_id").alias("ids"))
-        )
-        plan = grouped._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        # the compact-then-append workflow the docstring prescribes:
-        # the NEXT increment after a compaction must land cleanly
-        # (append-mode saveAsTable rejects any bucket-spec mismatch,
-        # including sortColumnNames, so a sorted compaction would
-        # throw AnalysisException right here)
-        docs2 = spark.createDataFrame(
-            [(i, f"words of doc number {i % 9} repeated here again")
-             for i in range(160, 200)],
-            ["doc_id", "text"],
-        )
-        commit_lsh_bands_bucketed(
-            lsh_band_buckets(docs2, "text", "doc_id"),
-            "b_lsh_compact", num_buckets=4,
-        )
-        appended = {
-            tuple(r) for r in spark.table("b_lsh_compact").collect()
-        }
-        assert after_rows < appended  # strict superset: old + new rows
-        spark.sql("DROP TABLE IF EXISTS b_lsh_compact")
 
 
 class TestOptimizeTable:
