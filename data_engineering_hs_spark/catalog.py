@@ -17,6 +17,7 @@ pruning, and pin decimal/timestamp semantics across engines.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -141,6 +142,33 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+def _freshness(path: str) -> tuple | None:
+    """Stat token that changes when a local dataset is rewritten, or
+    None when ``path`` cannot be stat'ed (missing, remote URI).
+
+    The root's (st_ino, st_mtime_ns, st_size) catches a single file
+    rewritten in place or swapped in by rename (new inode at the same
+    mtime); for a directory each first-level child's
+    (name, st_mtime_ns, st_size) is folded in, so a file added to,
+    removed from or renamed inside ``root/part=x/`` (which moves
+    ``part=x``'s mtime but not the root's) changes the token too.
+    Deeper changes are not seen: a file rewritten IN PLACE two or more
+    levels down moves no first-level stat."""
+    try:
+        st = os.stat(path)
+        token: tuple = (st.st_ino, st.st_mtime_ns, st.st_size)
+        if stat.S_ISDIR(st.st_mode):
+            children = []
+            with os.scandir(path) as entries:
+                for e in entries:
+                    cst = e.stat()
+                    children.append((e.name, cst.st_mtime_ns, cst.st_size))
+            token += tuple(sorted(children))
+        return token
+    except OSError:
+        return None
+
+
 # ---------------------------------------------------------------------------
 # Adaptive input rebalance (r16 optimization round, guide §2.5) —
 # OPT-IN per call site, and a metadata no-op whenever the input
@@ -197,26 +225,16 @@ def _rebalance_partitions(path: str, cores: int) -> int | None:
     """Partition count to hash-repartition an unsplittable local
     parquet dataset to (the caller supplies the key column), or None
     to leave the scan alone. Metadata-only; result memoized per
-    (path, cores, min_bytes, freshness) where freshness is the root
-    stat's (mtime_ns, size) — one extra stat per call, and a dataset
-    REWRITTEN at the same path (testdata regen, load_table over a
-    mutable store) re-probes instead of silently applying a stale
-    decision (r16 advice: the old memo keyed on path alone and never
-    invalidated). Only the ROOT is stat'ed: a write that lands/moves
-    files directly under it updates its mtime, and a single-file
-    dataset's in-place rewrite updates the file's own — but a file
-    added or rewritten inside an existing partition SUBDIRECTORY
-    changes neither, so that memo entry stays stale until the root
-    changes."""
+    (path, cores, min_bytes, _freshness(path)), so a dataset REWRITTEN
+    at the same path (testdata regen, load_table over a mutable store)
+    re-probes instead of silently applying a stale decision. The one
+    case still missed is _freshness's: a file rewritten in place two
+    or more levels down (``root/part=x/data.parquet``) keeps the stale
+    entry until a first-level stat changes."""
     min_bytes = int(
         os.environ.get("SPARK_GRAFT_REBALANCE_MIN_BYTES", str(256 * 1024))
     )
-    try:
-        st = os.stat(path)
-        fresh = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        fresh = None
-    key = (path, cores, min_bytes, fresh)
+    key = (path, cores, min_bytes, _freshness(path))
     if key in _REBALANCE_PROBE_CACHE:
         return _REBALANCE_PROBE_CACHE[key]
     result: int | None = None
@@ -254,6 +272,48 @@ def _rebalance_partitions(path: str, cores: int) -> int | None:
         result = None
     _REBALANCE_PROBE_CACHE[key] = result
     return result
+
+
+# Session confs that change the StructType parquet inference produces
+# for the same files (the events footer probe flips nanosAsLong).
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# path -> ((freshness, inference confs), inferred schema). One entry
+# per path: a rewritten dataset replaces its entry, never adds one.
+_SCHEMA_MEMO: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once.
+
+    Schema inference is a Spark job over the footers (~70 ms wall per
+    load_table on a 4-core host, against ~14 ms with the schema
+    given), paid on every read and again by every register_views
+    set-up.
+    The inferred StructType is memoized per path, keyed on the
+    dataset's _freshness token and the session's inference confs, and
+    later reads pass it with ``spark.read.schema``. The memo holds a
+    schema, never a DataFrame: each call is still a fresh relation
+    with fresh attribute ids, so self-joins, plan shapes and pushed
+    filters are those of a plain read. Paths that cannot be stat'ed
+    (remote URIs) always infer."""
+    fresh = _freshness(path)
+    if fresh is None:
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(k, None) for k in _PARQUET_INFERENCE_CONFS)
+    key = (fresh, confs)
+    hit = _SCHEMA_MEMO.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_MEMO[path] = (key, df.schema)
+    return df
 
 
 def load_table(
@@ -310,9 +370,9 @@ def load_table(
         # (the scan consults it at execution, not at read()).
         if _parquet_ts_is_nanos(path):
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = normalize_event_ts(spark.read.parquet(path))
+        df = normalize_event_ts(_read_parquet(spark, path))
     else:
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
     if _TABLE_CACHE_ENABLED:
         df = df.cache()
         _TABLE_CACHE[key] = df

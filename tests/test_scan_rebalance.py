@@ -100,6 +100,21 @@ def test_probe_refreshes_when_file_rewritten(tmp_path):
     assert _rebalance_partitions(p, 8) is None
 
 
+def test_probe_refreshes_when_file_added_in_partition_dir(tmp_path):
+    # the freshness token folds in first-level children: a file added
+    # under root/part=x/ moves part=x's mtime, not the root's
+    part = tmp_path / "ds" / "part=x"
+    part.mkdir(parents=True)
+    _write_parquet(str(part / "f0.parquet"), 4000, 4000)
+    root = str(tmp_path / "ds")
+    assert _rebalance_partitions(root, 8) == 8
+    root_mtime = os.stat(root).st_mtime_ns
+    for i in range(1, 8):  # 8 files now fill 8 cores: probe should skip
+        _write_parquet(str(part / f"f{i}.parquet"), 10, 10)
+    assert os.stat(root).st_mtime_ns == root_mtime
+    assert _rebalance_partitions(root, 8) is None
+
+
 @pytest.mark.usefixtures("spark")
 def test_load_table_opt_in_spreads_rows_and_keeps_values(spark):
     base = load_table(spark, SF_DIR, "lineitem")
