@@ -134,7 +134,8 @@ _RECHECK_THIS_ROUND = frozenset(
         # referenced k+3 times inside CodegenFallback HOFs and
         # re-evaluated per reference; binding it once measured
         # -20.6 % on d_minhash_lsh at sf0.1, values bit-identical —
-        # scripts_ab_shingle_bind.py). Oracles unchanged; re-front
+        # `git show 7c6b345:scripts_ab_shingle_bind.py`). Oracles
+        # unchanged; re-front
         # every shingle-path row. All 10 swept green at sf0.01.
         "d_minhash_lsh",
         "d_minhash_lsh_audit",
@@ -147,7 +148,8 @@ _RECHECK_THIS_ROUND = frozenset(
         "d_decontam_overlap",
         "t_curate_training_set",
         # r16 second bind_once wave (same A/B discipline,
-        # scripts_ab_bind_once.py): segment_dedup re-split per
+        # `git show 7c6b345:scripts_ab_bind_once.py`): segment_dedup
+        # re-split per
         # SEGMENT per row (-46.7 % on t_segment_dedup at sf0.1),
         # lang_id per marker set (-4.2 %), quality_score 3 splits
         # -> 1 (-2.6 %); stopword_ratio/mean_word_length internal.
@@ -160,7 +162,8 @@ _RECHECK_THIS_ROUND = frozenset(
         # r16 optimization round: _bm25_scored restructured to ONE
         # corpus tokenize pass (reduced-proxy localCheckpoint, df via
         # window) — -12.8% on s_bm25_topk at sf0.1, full-frame values
-        # bit-identical (scripts_ab_bm25_onepass.py asserts before
+        # bit-identical (`git show 7c6b345:scripts_ab_bm25_onepass.py`
+        # asserts before
         # timing); oracles unchanged; both consumers re-fronted.
         # d_minhash_lsh / t_segment_dedup (adaptive scan rebalance,
         # values compared on/off) are already in the set above.

@@ -187,8 +187,9 @@ def _freshness(path: str) -> tuple | None:
 # The guide's remedy for unsplittable input (§2.5 "one huge
 # unsplittable file … otherwise repartition immediately after the
 # read") is a repartition straight after the read. MEASURED (r16
-# interleaved A/Bs at sf0.1, scripts_ab_rebalance.py): a BLANKET
-# rebalance of every table is a +33% LOSS on the headline total — the
+# interleaved A/Bs at sf0.1, `git show 7c6b345:scripts_ab_rebalance.py`):
+# a BLANKET rebalance of every table is a +33% LOSS on the headline
+# total — the
 # exchange (and round-robin's sortBeforeRepartition local sort over
 # the full row) costs more than the freed cores buy on scan-light
 # queries (q1 +80%, s_bm25 +99%, w_topk +50%). It wins only where
@@ -206,8 +207,8 @@ def _freshness(path: str) -> tuple | None:
 #     (at real scale the branch exits on the file count, so driver
 #     listing stays bounded), and the remaining < cores files must
 #     hold < cores TOTAL row groups; tiny inputs
-#     (< SPARK_GRAFT_REBALANCE_MIN_BYTES, default 256 KiB) stay
-#     serial — a shuffle would cost more than the scan.
+#     (< _REBALANCE_MIN_BYTES, 256 KiB) stay serial — a shuffle would
+#     cost more than the scan.
 # The partition count is defaultParallelism (NOT a constant), so the
 # driver's lower-core scaling runs get proportionally fewer
 # partitions. Catalyst pushes filters and column pruning THROUGH
@@ -218,6 +219,7 @@ def _freshness(path: str) -> tuple | None:
 # independent by construction).
 # ---------------------------------------------------------------------------
 
+_REBALANCE_MIN_BYTES = 256 * 1024
 _REBALANCE_PROBE_CACHE: dict[tuple, int | None] = {}
 
 
@@ -225,49 +227,45 @@ def _rebalance_partitions(path: str, cores: int) -> int | None:
     """Partition count to hash-repartition an unsplittable local
     parquet dataset to (the caller supplies the key column), or None
     to leave the scan alone. Metadata-only; result memoized per
-    (path, cores, min_bytes, _freshness(path)), so a dataset REWRITTEN
+    (path, cores, _freshness(path)), so a dataset REWRITTEN
     at the same path (testdata regen, load_table over a mutable store)
     re-probes instead of silently applying a stale decision. The one
     case still missed is _freshness's: a file rewritten in place two
     or more levels down (``root/part=x/data.parquet``) keeps the stale
     entry until a first-level stat changes."""
-    min_bytes = int(
-        os.environ.get("SPARK_GRAFT_REBALANCE_MIN_BYTES", str(256 * 1024))
-    )
-    key = (path, cores, min_bytes, _freshness(path))
+    key = (path, cores, _freshness(path))
     if key in _REBALANCE_PROBE_CACHE:
         return _REBALANCE_PROBE_CACHE[key]
     result: int | None = None
     try:
-        if min_bytes >= 0:  # negative disables the rebalance entirely
-            if os.path.isfile(path):
-                files = [path]
-            else:
-                files = []
-                for root, dirs, fnames in os.walk(path):
-                    dirs[:] = sorted(
-                        d for d in dirs if not d.startswith((".", "_"))
-                    )
-                    files += [
-                        os.path.join(root, f)
-                        for f in sorted(fnames)
-                        if f.endswith(".parquet")
-                        and not f.startswith((".", "_"))
-                    ]
-                    if len(files) >= cores:
-                        break
-            if 0 < len(files) < cores:
-                import pyarrow.parquet as pq
+        if os.path.isfile(path):
+            files = [path]
+        else:
+            files = []
+            for root, dirs, fnames in os.walk(path):
+                dirs[:] = sorted(
+                    d for d in dirs if not d.startswith((".", "_"))
+                )
+                files += [
+                    os.path.join(root, f)
+                    for f in sorted(fnames)
+                    if f.endswith(".parquet")
+                    and not f.startswith((".", "_"))
+                ]
+                if len(files) >= cores:
+                    break
+        if 0 < len(files) < cores:
+            import pyarrow.parquet as pq
 
-                units = 0
-                nbytes = 0
-                for f in files:
-                    units += pq.ParquetFile(f).metadata.num_row_groups
-                    nbytes += os.path.getsize(f)
-                    if units >= cores:
-                        break
-                if units < cores and nbytes >= min_bytes:
-                    result = cores
+            units = 0
+            nbytes = 0
+            for f in files:
+                units += pq.ParquetFile(f).metadata.num_row_groups
+                nbytes += os.path.getsize(f)
+                if units >= cores:
+                    break
+            if units < cores and nbytes >= _REBALANCE_MIN_BYTES:
+                result = cores
     except Exception:  # noqa: BLE001 — remote URI / odd footer: let Spark scan as-is
         result = None
     _REBALANCE_PROBE_CACHE[key] = result

@@ -164,8 +164,8 @@ def word_shingle_seq(c: ColumnOrName, k: int = 3) -> Column:
     per reference per row. Binding it once as a 1-element
     `transform` lambda variable (the cosine_from/stable_round
     single-evaluation shape) measured **−20.6 %** on d_minhash_lsh
-    at sf0.1 (scripts_ab_shingle_bind.py, interleaved median-of-7,
-    values bit-identical).
+    at sf0.1 (`git show 7c6b345:scripts_ab_shingle_bind.py`,
+    interleaved median-of-7, values bit-identical).
     """
     if k < 1:
         raise ValueError(

@@ -369,7 +369,8 @@ def _pairs_from_banded(
     child, which re-evaluates the pair-generation pipeline once more;
     that pass costs more than the exchange it saves, locally and at
     scale (the sample is a second pass over the pair occurrences).
-    Evidence: scripts_ab_minhash_r17.py --only-fusion.
+    Evidence: `git show 7c6b345:scripts_ab_minhash_r17.py`
+    --only-fusion.
     """
     buckets = (
         banded.groupBy("band", "bucket")

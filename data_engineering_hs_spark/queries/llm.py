@@ -387,7 +387,8 @@ def d_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitioning of (id_a, id_b) so this orderBy reuses the exchange
     # (4 exchanges → 3) measured +5.4% — repartitionByRange's range-
     # bound SAMPLING pass re-evaluates the pair pipeline and costs
-    # more than the exchange it saves (scripts_ab_minhash_r17.py).
+    # more than the exchange it saves
+    # (`git show 7c6b345:scripts_ab_minhash_r17.py`).
     return D.minhash_lsh_pairs(d, "text", "doc_id").orderBy("id_a", "id_b")
 
 

@@ -16,12 +16,6 @@ from data_engineering_hs_spark.operators import relational as R
 from data_engineering_hs_spark.queries.registry import register
 
 
-def _revenue_cents():
-    # Exact integer-cents revenue: deterministic across engines
-    # (see functions.scalar.money_cents).
-    return discounted_revenue_cents()
-
-
 # ---------------------------------------------------------------------------
 # Flagship: the revenue_analysis daily-KPI shape (SURVEY §3.1) transplanted
 # onto lineitem/orders/customer/nation. Exercises P2-P6, J1-J3, A4-A6, W1,
@@ -100,7 +94,7 @@ def flagship_daily_kpi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.col("o_custkey").alias("custkey"),
             F.col("l_returnflag").alias("returnflag"),
-            F.when(F.col("l_returnflag") != "R", _revenue_cents())
+            F.when(F.col("l_returnflag") != "R", discounted_revenue_cents())
             .otherwise(F.lit(0).cast("long"))
             .alias("revenue_cents"),
         )

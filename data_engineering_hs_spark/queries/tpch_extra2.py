@@ -21,10 +21,6 @@ from data_engineering_hs_spark.queries.registry import register
 _REV_CENTS = "CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)"
 
 
-def _rev_cents() -> F.Column:
-    return discounted_revenue_cents()
-
-
 @register(
     "q7_nation_volume",
     oracle=f"""
@@ -72,7 +68,7 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cust_nation",
             F.year(F.to_date("l_shipdate")).alias("ship_year"),
         )
-        .agg((F.sum(_rev_cents()).cast("double") / 100.0).alias("volume"))
+        .agg((F.sum(discounted_revenue_cents()).cast("double") / 100.0).alias("volume"))
         .orderBy("supp_nation", "cust_nation", "ship_year")
     )
 
@@ -116,7 +112,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     cn = n.select(
         F.col("n_nationkey").alias("cn_key"), F.col("n_regionkey").alias("cn_region")
     )
-    vol = _rev_cents()
+    vol = discounted_revenue_cents()
     nation_vol = F.when(F.col("supp_nation") == "NATION_3", vol).otherwise(
         F.lit(0).cast("long")
     )
@@ -202,7 +198,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.to_date("l_shipdate") < F.lit("1996-04-01").cast("date"))
         )
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(F.sum(_rev_cents()).alias("total_cents"))
+        .agg(F.sum(discounted_revenue_cents()).alias("total_cents"))
     )
     top = revenue.agg(F.max("total_cents").alias("max_cents"))
     return (
@@ -290,7 +286,7 @@ def q19_bracketed_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         l.join(p, l.l_partkey == p.p_partkey)
         .filter(bracket)
         .agg(
-            (F.sum(_rev_cents()).cast("double") / 100.0).alias("revenue"),
+            (F.sum(discounted_revenue_cents()).cast("double") / 100.0).alias("revenue"),
             F.count("*").alias("n_lines"),
         )
     )

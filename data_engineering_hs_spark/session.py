@@ -39,7 +39,6 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "data_engineering_hs_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
@@ -47,12 +46,6 @@ def get_spark(
     On a cluster, ``master`` is left to spark-submit; locally defaults
     to ``local[$SPARK_GRAFT_CPUS]``.
     """
-    if shuffle_partitions is None:
-        # read per call, not at import: a harness that sets the env
-        # var after importing this module must still be honored
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-        )
     builder = SparkSession.builder.appName(app_name)
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -77,7 +70,7 @@ def get_spark(
         # per-iteration O(E) re-shuffle dwarfs partition-count
         # overhead. plans/r17/pagerank_iteration_after.txt is captured
         # with the default.
-        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.shuffle.partitions": "32",
         "spark.sql.codegen.cache.maxEntries": "2048",
         # Nested-schema pruning so struct projections reach the scan
         # (the reference projects 9 of ~15 nested order fields,
@@ -88,10 +81,8 @@ def get_spark(
         # 1 TB input into ~1M tasks at 1m splits); at local test SFs a
         # single 11 MB parquet would scan as ONE task while 31 cores
         # idle, so LOCAL masters split small files across the machine.
-        # SPARK_GRAFT_MAX_PARTITION_BYTES overrides either way.
-        "spark.sql.files.maxPartitionBytes": os.environ.get(
-            "SPARK_GRAFT_MAX_PARTITION_BYTES",
-            "1m" if master.startswith("local") else "128m",
+        "spark.sql.files.maxPartitionBytes": (
+            "1m" if master.startswith("local") else "128m"
         ),
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         "spark.ui.enabled": "false",

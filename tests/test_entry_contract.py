@@ -130,3 +130,43 @@ def test_stamp_script_only_trusts_the_newest_round(tmp_path):
     assert side["a_having"] == "OLD_HASH_FROM_R01"     # (b) older round kept
     assert "a_group_count" not in side                 # (c) mismatch skipped
     assert side["t_langid"] is None                    # (d) stays flagged
+
+
+def _env_keys_read(tree) -> set[str]:
+    # os.environ.get(K, ...), os.getenv(K, ...) and os.environ[K]; a
+    # key that is not a string literal is reported as "<dynamic>"
+    import ast
+
+    keys = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and node.args and ast.unparse(
+            node.func
+        ) in ("os.environ.get", "os.getenv"):
+            key = node.args[0]
+        elif isinstance(node, ast.Subscript) and (
+            ast.unparse(node.value) == "os.environ"
+        ):
+            key = node.slice
+        else:
+            continue
+        keys.add(key.value if isinstance(key, ast.Constant) else "<dynamic>")
+    return keys
+
+
+def test_package_reads_only_deployment_env_vars():
+    # The engine's env surface is deployment settings only; A/B
+    # comparisons run two commits (scripts_ab.py), not in-process
+    # switches.
+    import ast
+    import os
+
+    import data_engineering_hs_spark as pkg
+
+    root = os.path.dirname(os.path.abspath(pkg.__file__))
+    keys = set()
+    for d, _, files in os.walk(root):
+        for f in files:
+            if f.endswith(".py"):
+                with open(os.path.join(d, f)) as fh:
+                    keys |= _env_keys_read(ast.parse(fh.read()))
+    assert keys == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}

@@ -79,12 +79,6 @@ def test_probe_skips_when_one_unit_fills_one_core(tmp_path):
     assert _rebalance_partitions(p, 1) is None
 
 
-def test_probe_disabled_by_env(tmp_path, monkeypatch):
-    p = _write_parquet(str(tmp_path / "one_rg2.parquet"), 4000, 4000)
-    monkeypatch.setenv("SPARK_GRAFT_REBALANCE_MIN_BYTES", "-1")
-    assert _rebalance_partitions(p, 8) is None
-
-
 def test_probe_missing_path_is_noop():
     assert _rebalance_partitions("/nonexistent/x.parquet", 8) is None
 
