@@ -10,7 +10,7 @@ Layout:
     session     - SparkSession factory (UTC, Arrow, AQE)
     catalog     - explicit StructType schemas + loaders for every dataset
     functions/  - curated scalar/text/vector expression library
-    operators/  - relational core + dedup/similarity/multimodal operators
+    operators/  - relational core + dedup/similarity operators
     sources/    - batch + incremental readers/writers (CSV/JSON/parquet/
                   Avro/REST/JDBC-style upsert)
     plans/      - dbt-style model-DAG runner with incremental materialization

@@ -14,9 +14,8 @@ store-shape argument as the incremental dedup stores
 partial-state merge is the engine-native upgrade that never rewrites
 history at all.
 
-Append-only stores accrete one row per key per increment; compact()
-collapses them back to one row per key (same merge, rewritten in
-place) when read amplification grows.
+Append-only stores accrete one row per key per increment; materialize()
+merges them at read time.
 """
 
 from __future__ import annotations
@@ -128,22 +127,3 @@ def materialize(
         for out, (fn, _src) in measures.items()
     ]
     return store.groupBy(*key_cols).agg(*aggs)
-
-
-def compact_store(
-    spark: SparkSession,
-    table_name: str,
-    key_cols: Sequence[str],
-    measures: Mapping[str, tuple[str, str]],
-    num_buckets: int = 32,
-) -> None:
-    """Collapse the append-only store back to one row per key.
-    The merged frame must materialize BEFORE the overwrite (writing a
-    table while reading it is undefined), so it stages through a
-    localCheckpoint."""
-    merged = materialize(spark, table_name, key_cols, measures)
-    merged = merged.localCheckpoint(eager=True)
-    write_bucketed(
-        merged, table_name, key_cols, num_buckets=num_buckets,
-        mode="overwrite",
-    )

@@ -3,28 +3,17 @@
 Thin, named, composable DataFrame combinators. Each documents the
 reference capability it re-expresses and the scale rationale for the
 chosen physical shape (broadcast vs shuffle, partial agg, etc.).
-Catalyst handles pushdown/pruning/reordering — these helpers only add
-the hints Catalyst can't infer (broadcast of known-small dims).
+Catalyst handles pushdown/pruning/reordering; the one hint it can't
+infer, broadcasting a known-small dim, is inlined at the call site
+(`F.broadcast`).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def broadcast_left_join(
-    fact: DataFrame, dim: DataFrame, on, how: str = "left"
-) -> DataFrame:
-    """Broadcast equi-join of a fact table against a small dimension.
-
-    Reference: revenue_analysis/main.ipynb:245-252 (events ⟕ items /
-    users with explicit broadcast rationale). At 100 TB the fact side
-    never shuffles: each executor gets the dim hashmap.
-    """
-    return fact.join(F.broadcast(dim), on, how)
 
 
 def semi_join(df: DataFrame, keys: DataFrame, on) -> DataFrame:
@@ -70,28 +59,6 @@ def mode_of(df: DataFrame, col: str, tiebreak_asc: bool = True) -> DataFrame:
     return (
         df.groupBy(col).agg(F.count("*").alias("mode_count")).orderBy(*order).limit(1)
     )
-
-
-def rolling(
-    df: DataFrame,
-    partition_cols: Sequence[str],
-    order_col: str,
-    frame_rows: tuple[int, int],
-    agg: Column,
-    out_col: str,
-) -> DataFrame:
-    """Rolling-frame window aggregate.
-
-    Reference: revenue_analysis/main.ipynb:284-287 — 7-day rolling
-    revenue, partition (country,category), rows [-6,0]. One shuffle
-    on the partition keys; rows within a partition sort locally.
-    """
-    w = (
-        Window.partitionBy(*partition_cols)
-        .orderBy(order_col)
-        .rowsBetween(frame_rows[0], frame_rows[1])
-    )
-    return df.withColumn(out_col, agg.over(w))
 
 
 def dedup(df: DataFrame, keys: Sequence[str] | None = None) -> DataFrame:

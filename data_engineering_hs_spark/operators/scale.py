@@ -241,98 +241,3 @@ def optimize_table(
                 df, tmp, zorder_cols, bits=bits, n_files=n
             ),
         )
-
-
-def register_bucketed_store(
-    spark: SparkSession,
-    table_name: str,
-    schema_ddl: str,
-    bucket_cols: Sequence[str],
-    num_buckets: int,
-    location: str,
-    sort_cols: Sequence[str] | None = None,
-) -> None:
-    """Re-attach an existing bucketed store DIRECTORY to a new
-    session's catalog.
-
-    Managed-table METADATA is session-scoped with the in-memory
-    catalog: the warehouse files outlive the session, the table
-    registration does not — a fresh session's spark.table() knows
-    nothing about last week's store. Bucket identity lives in the
-    FILE NAMES (the _000NN suffix saveAsTable writes), so declaring
-    the same CLUSTERED BY spec over the existing directory restores
-    the full Exchange-free read contract (proven in
-    tests/test_scale_ops.py: the re-registered table's groupBy plans
-    no Exchange). The bucket spec MUST match what the files were
-    written with — Spark trusts the declaration.
-    """
-    cols = ", ".join(bucket_cols)
-    sort = f"SORTED BY ({', '.join(sort_cols)}) " if sort_cols else ""
-    spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {table_name} ({schema_ddl}) "
-        f"USING PARQUET CLUSTERED BY ({cols}) {sort}"
-        f"INTO {num_buckets} BUCKETS LOCATION '{location}'"
-    )
-
-
-def suggest_join_strategy(
-    skew_row,
-    dim_rows: int | None = None,
-    broadcast_row_limit: int = 100_000,
-    hot_share_ppm: int = 20_000,
-) -> dict:
-    """Turn a `quality.profiling.key_skew_stats` measurement into the
-    join-strategy decision it exists to inform. Driver-side pure
-    function over the 1-row diagnostic — call it in the planning step
-    of a pipeline, cite the returned reason in the job's docs/logs.
-
-    Policy (the one this repo applies to its own queries):
-    - dim side known and small (row count under `broadcast_row_limit`;
-      the 100k default proxies Spark's 10 MB autoBroadcastJoinThreshold
-      at ~100 B/row — raise it only alongside the byte threshold and
-      executor headroom) → 'broadcast': no shuffle at all, skew
-      irrelevant.
-    - hot key holds more than `hot_share_ppm` of rows (default 2%) →
-      'salted': a plain hash join would put >2% of the table in one
-      task; AQE skew-split helps sort-merge joins but salting also
-      covers aggregations and older planners.
-    - otherwise → 'shuffle': plain hash/sort-merge join under AQE.
-
-    `skew_row` is anything dict-like with n_keys / n_rows /
-    max_share_ppm (a collected Row works: row.asDict()).
-    """
-    get = (
-        skew_row.get
-        if hasattr(skew_row, "get")
-        else skew_row.asDict().get
-    )
-    if dim_rows is not None and dim_rows < broadcast_row_limit:
-        # decided before touching the skew stat: the broadcast branch
-        # doesn't depend on it, and an empty-frame measurement
-        # legitimately carries max_share_ppm = NULL
-        return {
-            "strategy": "broadcast",
-            "reason": f"dim has {dim_rows} rows (< {broadcast_row_limit}); "
-            "broadcasting avoids the shuffle entirely, key skew is moot",
-        }
-    raw_share = get("max_share_ppm")
-    if raw_share is None:
-        return {
-            "strategy": "shuffle",
-            "reason": "no skew measurement (empty frame): plain "
-            "shuffle join under AQE",
-        }
-    share = int(raw_share)
-    if share > hot_share_ppm:
-        return {
-            "strategy": "salted",
-            "reason": f"hottest key holds {share} ppm of rows "
-            f"(> {hot_share_ppm}); a plain shuffle join straggles on "
-            "one task — use salted_join (or rely on AQE skew-split "
-            "for pure sort-merge joins)",
-        }
-    return {
-        "strategy": "shuffle",
-        "reason": f"hottest key holds {share} ppm (<= {hot_share_ppm}) "
-        "and the dim is large/unknown: plain shuffle join under AQE",
-    }

@@ -15,7 +15,7 @@ rps ≈ per_task_rps × num_tasks.
 
 from __future__ import annotations
 
-import json
+import math
 import time
 from collections.abc import Callable, Iterator
 
@@ -71,11 +71,14 @@ def fetch_with_retry(
             return status, attempt, body
         if status == 429:
             # RFC 7231 allows Retry-After as either delta-seconds or
-            # an HTTP-date; a date (or garbage) must fall back to the
-            # backoff, not raise out of the task mid-fetch
+            # an HTTP-date; a date, garbage, or a negative/non-finite
+            # number (time.sleep raises on -1, nan and inf) must fall
+            # back to the backoff, not raise out of the task mid-fetch
             try:
                 retry_after = float(headers.get("Retry-After", backoff_base))
             except (TypeError, ValueError):
+                retry_after = math.nan
+            if not 0 <= retry_after < math.inf:
                 retry_after = backoff_base * (2 ** (attempt - 1))
             if attempt < max_attempts:
                 time.sleep(retry_after)
@@ -200,28 +203,3 @@ def flatten_orders(fetched: DataFrame) -> DataFrame:
         F.col("o.total").alias("total"),
         F.col("o.created_at").alias("created_at"),
     )
-
-
-def make_flaky_transport(
-    responses: dict[int, dict],
-    fail_plan: dict[int, list[tuple[int, dict]]] | None = None,
-) -> Transport:
-    """Test transport: canned JSON per id, with an optional per-id
-    plan of (status, headers) failures to emit before succeeding —
-    replays the server's 429/5xx behavior (orders_server main.py:
-    150,159-163) deterministically."""
-    state: dict[int, int] = {}
-
-    def transport(url: str) -> tuple[int, dict, str]:
-        _id = int(url.rstrip("/").rsplit("/", 1)[-1])
-        plan = (fail_plan or {}).get(_id, [])
-        k = state.get(_id, 0)
-        if k < len(plan):
-            state[_id] = k + 1
-            status, headers = plan[k]
-            return status, headers, ""
-        if _id in responses:
-            return 200, {}, json.dumps(responses[_id])
-        return 404, {}, ""
-
-    return transport

@@ -1,17 +1,21 @@
-"""Naive parity baselines for the bucketized join operators.
+"""Naive parity baselines and test fixtures that stay out of the package.
 
-Each mirror states its join condition directly, so Spark plans it as a
-nested-loop join: correct at test scale, quadratic at large. Tests
+Each join mirror states its join condition directly, so Spark plans it
+as a nested-loop join: correct at test scale, quadratic at large. Tests
 compare the scale-path operators in `operators/range_join.py` and
-`operators/geo.py` against these.
+`operators/geo.py` against these. `make_flaky_transport` is a canned
+transport for `sources/rest.py`.
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_engineering_hs_spark.operators.geo import planar_sq_deg
+from data_engineering_hs_spark.sources.rest import Transport
 
 
 def range_join_naive(
@@ -49,3 +53,28 @@ def radius_join_naive(
         F.col(point_lat), F.col(point_lon), F.col(center_lat), F.col(center_lon)
     ) <= F.lit(radius_deg) * F.lit(radius_deg)
     return points.join(centers, within)
+
+
+def make_flaky_transport(
+    responses: dict[int, dict],
+    fail_plan: dict[int, list[tuple[int, dict]]] | None = None,
+) -> Transport:
+    """Canned JSON per id, with an optional per-id plan of
+    (status, headers) failures to emit before succeeding — replays the
+    server's 429/5xx behavior (orders_server main.py:150,159-163)
+    deterministically."""
+    state: dict[int, int] = {}
+
+    def transport(url: str) -> tuple[int, dict, str]:
+        _id = int(url.rstrip("/").rsplit("/", 1)[-1])
+        plan = (fail_plan or {}).get(_id, [])
+        k = state.get(_id, 0)
+        if k < len(plan):
+            state[_id] = k + 1
+            status, headers = plan[k]
+            return status, headers, ""
+        if _id in responses:
+            return 200, {}, json.dumps(responses[_id])
+        return 404, {}, ""
+
+    return transport

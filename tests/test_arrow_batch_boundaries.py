@@ -12,7 +12,7 @@ corpus often fits a single default-sized batch — exactly the
 green-but-wrong-at-scale window.
 
 This file pins the vectorized call sites. Where a deterministic pure-Python mirror exists
-(the multimodal fakes) we compare against it — stronger than A/B.
+we compare against it — stronger than A/B.
 """
 
 from __future__ import annotations
@@ -49,73 +49,6 @@ def arrow_batch_size(spark, n: int):
 def tiny_batches(spark):
     with arrow_batch_size(spark, 3):
         yield spark
-
-
-def _media_df(spark, n=25, parts=9):
-    # parts > rows/3 also exercises EMPTY partitions (no batches at
-    # all reach the udf iterator) alongside multi-batch ones
-    rows = [(i, bytes([i % 251]) * (40 + i)) for i in range(n)]
-    return spark.createDataFrame(
-        rows, "media_id long, content binary"
-    ).repartition(parts)
-
-
-class TestMultimodalBatchInvariance:
-    def test_extract_features_matches_python_mirror(self, tiny_batches):
-        from data_engineering_hs_spark.operators import multimodal as M
-
-        import numpy as np
-
-        df = _media_df(tiny_batches)
-        got = {
-            r["media_id"]: r["features"]
-            for r in M.extract_features(
-                df, M.deterministic_fake_decode, batch_size=2
-            ).collect()
-        }
-        # FEATURES_SCHEMA is array<float>: the mirror's float64 values
-        # round to float32 on the Arrow wire — compare at float32
-        want = {
-            i: [
-                float(np.float32(x))
-                for x in M.deterministic_fake_decode(
-                    bytes([i % 251]) * (40 + i)
-                )
-            ]
-            for i in range(25)
-        }
-        assert got == want
-
-    def test_resize_matches_python_mirror(self, tiny_batches):
-        from data_engineering_hs_spark.operators import multimodal as M
-
-        df = _media_df(tiny_batches)
-        got = {
-            r["media_id"]: bytes(r["content"])
-            for r in M.resize_images(df, width=8, height=4).collect()
-        }
-        want = {
-            i: M.deterministic_fake_resize(bytes([i % 251]) * (40 + i), 8, 4)
-            for i in range(25)
-        }
-        assert got == want
-
-    def test_sample_frames_matches_python_mirror(self, tiny_batches):
-        from data_engineering_hs_spark.operators import multimodal as M
-
-        df = _media_df(tiny_batches)
-        got = {
-            (r["media_id"], r["frame_no"]): bytes(r["frame"])
-            for r in M.sample_frames(df, n_frames=4).collect()
-        }
-        want = {
-            (i, j): fr
-            for i in range(25)
-            for j, fr in enumerate(
-                M.deterministic_fake_frames(bytes([i % 251]) * (40 + i), 4)
-            )
-        }
-        assert got == want
 
 
 class TestRestFetchBatchInvariance:

@@ -170,3 +170,190 @@ def test_package_reads_only_deployment_env_vars():
                 with open(os.path.join(d, f)) as fh:
                     keys |= _env_keys_read(ast.parse(fh.read()))
     assert keys == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
+
+
+# Package modules that no registry query, __spark_entry__, bench.py or
+# perfbench script imports. Each maps to a SURVEY §2 reference unit
+# (lab06 avro/kafka, lab01 csv, lab05 jdbc, lab02 json, orders_server
+# rest, magic_shop, revenue_analysis); plans.inspect waits on ROADMAP
+# item 1.
+REFERENCE_MODULES = {
+    "sources.avro",
+    "sources.csv",
+    "sources.jdbc",
+    "sources.json",
+    "sources.kafka",
+    "sources.rest",
+    "plans.magic_shop",
+    "plans.revenue",
+    "plans.inspect",
+}
+
+# Public package names that no non-test file references, each with its
+# reason: the SURVEY §2 reference row it implements, or the ROADMAP
+# item that retires it. A registry query restating the operation
+# inline counts as no caller.
+TEST_ONLY_API = {
+    "functions.scalar.full_name": "F2/F4: dim_customers.sql:9",
+    "functions.scalar.split_packed_list": "F7: lab01/tasks.ipynb:1 items column",
+    "functions.scalar.to_log_timestamp": "F16: lab02/tasks.ipynb:189",
+    "functions.scalar.time_of_day_between": "P6: lab03/sql/script1.sql:17-18",
+    "functions.scalar.epoch_millis_to_ts": "F15: async_data_gen.py:53-54",
+    "functions.scalar.ts_to_epoch_millis": "F15: async_data_gen.py:53-54",
+    "functions.scalar.cents_to_amount": "pending item 8",
+    "functions.scalar.to_money": "F20: stg_orders.sql:9",
+    "functions.scalar.outstanding": "P13/F20: fct_orders.sql:43-44",
+    "functions.scalar.json_get": "F22: revenue_analysis/main.ipynb cell 83febe4b",
+    "functions.scalar.json_decode": "S16: spark_kafka_foreachbatch.py:69",
+    "functions.text.stopword_ratio": "pending item 8",
+    "functions.text.mean_word_length": "pending item 8",
+    "functions.text.char_ngrams": "pending item 8",
+    "operators.dedup.exact_duplicates": (
+        "pending item 8: d_exact_dup_summary inlines its own form"
+    ),
+    "operators.dedup.ngram_jaccard_pairs": (
+        "pending item 8: d_ngram_jaccard inlines its own form"
+    ),
+    "operators.dedup.append_fingerprints": "pending item 8",
+    "operators.dedup.read_lsh_store": "pending item 8",
+    "operators.dedup.append_lsh_bands": "pending item 8",
+    "operators.geo.haversine_km": "pending item 8",
+    "operators.scale.salted_join": "pending item 8",
+    "operators.scale.optimize_table": "pending item 8",
+    "operators.similarity.kmeans_centroids": (
+        "pending item 8: s_centroids inlines its own form"
+    ),
+    "operators.similarity.compact_cell_store": "pending item 8",
+    "operators.sketch.cms_merge": "pending item 8",
+    "operators.timeseries.fill_forward": "pending item 8",
+    "plans.inspect.plan_summary": "pending item 1: profile() replaces it",
+    "plans.magic_shop.build_runner": "S29: magic_shop dbt model DAG",
+    "plans.revenue.load_inputs": "S5: revenue_analysis/main.ipynb:153-160",
+    "plans.revenue.daily_kpis": "A4/W1: revenue_analysis/main.ipynb:264-287",
+    "plans.revenue.write_and_prune": "S8/S9: revenue_analysis/main.ipynb:298",
+    "sources.avro.decode_record": "S15: spark_kafka_foreachbatch.py:51-75",
+    "sources.avro.write_container": "S13: avro_test.ipynb:51",
+    "sources.avro.read_container_bytes": "S13: avro_test.ipynb:74",
+    "sources.avro.read_avro": "S13: avro_test.ipynb:10-23",
+    "sources.avro.decode_avro_column": "S15: spark_kafka_foreachbatch.py:51-75",
+    "sources.csv.read_with_header": "S2/S4: spark.ipynb:205-208",
+    "sources.csv.read_with_quarantine": "S22: fuel_ingest_dag.py:130-134",
+    "sources.csv.write_csv": "S2: lab01/tasks.ipynb cell 8586febd",
+    "sources.jdbc.foreach_batch_jdbc_upsert": "S21: fuel_ingest_dag.py:169-182",
+    "sources.jdbc.read_jdbc_table": "S21: fuel_ingest_dag.py:169-182",
+    "sources.json.read_document_array": "S6: lab02/tasks.ipynb:160-166",
+    "sources.kafka.kafka_connector_available": "S14: spark_kafka_foreachbatch.py:31-37",
+    "sources.kafka.kafka_stream_reader": "S14: spark_kafka_foreachbatch.py:31-37",
+    "sources.parquet.read_pruned": "S9: revenue_analysis/main.ipynb cell cf747d35",
+    "sources.parquet.delete_keys_partitioned": "pending item 8",
+    "sources.publish.vacuum": "pending item 8",
+    "sources.rest.fetch_ids": "S24: client_async.py:89-131",
+    "sources.rest.flatten_orders": "S25: client_async.py:32-42",
+    "sources.upsert.read_watermark": "S23: fuel_ingest_dag.py:199-206",
+    "sources.upsert.commit_watermark": "S23: fuel_ingest_dag.py:199-206",
+    "streaming.kv.ttl_filter": "S26: coffee_shop/main.ipynb:96-106",
+    "streaming.pipelines.kafka_shaped_ingest": (
+        "S14/S19: spark_kafka_foreachbatch.py:79-98"
+    ),
+    "streaming.pipelines.file_watch_ingest": "S20: fuel_ingest_dag.py:92-111",
+    "streaming.pipelines.dedup_within_watermark": "T8: fuel_ingest_dag.py:1-4,175",
+    "streaming.pipelines.run_to_memory": "S18: socket_streaming.py:19",
+    "streaming.pipelines.retire_runs": "pending item 8",
+    "streaming.pipelines.progress_summary": "pending item 8",
+}
+
+
+def _census_files():
+    """(package module paths by dotted name, the entry scripts, the
+    root scripts) — the AST inputs of the caller census."""
+    import os
+
+    here = os.path.dirname(os.path.abspath(E.__file__))
+    modules = {}
+    for d, _, files in os.walk(os.path.join(here, "data_engineering_hs_spark")):
+        for f in files:
+            if f.endswith(".py"):
+                rel = os.path.relpath(os.path.join(d, f[:-3]), here)
+                name = rel.replace(os.sep, ".").removesuffix(".__init__")
+                modules[name] = os.path.join(d, f)
+    bench_dir = os.path.join(here, "perfbench")
+    entries = [os.path.join(here, f) for f in ("__spark_entry__.py", "bench.py")]
+    entries += [
+        os.path.join(bench_dir, f)
+        for f in sorted(os.listdir(bench_dir))
+        if f.endswith(".py") and not f.startswith("test_")
+    ]
+    scripts = [os.path.join(here, f) for f in os.listdir(here) if f.endswith(".py")]
+    return modules, entries, scripts
+
+
+def _parse(path):
+    import ast
+
+    with open(path) as fh:
+        return ast.parse(fh.read())
+
+
+def _package_imports(path, modules) -> set[str]:
+    # imported package modules, anywhere in the file (function-local
+    # imports included); a dotted string naming a module counts, since
+    # perfbench resolves its timing wrappers with importlib
+    import ast
+
+    out = set()
+    for node in ast.walk(_parse(path)):
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            names = [node.module] + [f"{node.module}.{a.name}" for a in node.names]
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            names = [node.value]
+        else:
+            continue
+        for name in names:
+            parts = name.split(".")
+            out |= {".".join(parts[:i]) for i in range(1, len(parts) + 1)}
+    return out & set(modules)
+
+
+def test_every_module_is_reached_or_a_reference_unit():
+    modules, entries, _ = _census_files()
+    todo = set().union(*(_package_imports(p, modules) for p in entries))
+    reached = set()
+    while todo:
+        m = todo.pop()
+        reached.add(m)
+        todo |= _package_imports(modules[m], modules) - reached
+    assert {m.partition(".")[2] for m in set(modules) - reached} == (
+        REFERENCE_MODULES
+    )
+
+
+def test_every_public_name_has_a_non_test_caller_or_a_reason():
+    import ast
+
+    modules, entries, scripts = _census_files()
+    referenced = set()
+    for path in set(modules.values()) | set(entries) | set(scripts):
+        for node in ast.walk(_parse(path)):
+            if isinstance(node, ast.Name):
+                referenced.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                referenced.add(node.attr)
+            elif isinstance(node, ast.alias):
+                referenced.add(node.name.rsplit(".", 1)[-1])
+    uncalled = set()
+    for name, path in modules.items():
+        for node in _parse(path).body:
+            if (
+                isinstance(node, (ast.FunctionDef, ast.ClassDef))
+                and not node.name.startswith("_")
+                and node.name not in referenced
+                # registered queries are reached through REGISTRY
+                and not any(
+                    isinstance(d, ast.Call) and ast.unparse(d.func) == "register"
+                    for d in node.decorator_list
+                )
+            ):
+                uncalled.add(f"{name.partition('.')[2]}.{node.name}")
+    assert uncalled == set(TEST_ONLY_API)

@@ -9,8 +9,8 @@ from data_engineering_hs_spark.sources.rest import (
     fetch_ids,
     fetch_with_retry,
     flatten_orders,
-    make_flaky_transport,
 )
+from tests.naive_mirrors import make_flaky_transport
 
 
 def _order(i: int) -> dict:
@@ -104,17 +104,17 @@ class TestDistributedFetch:
 class TestRetryAndInputEdges:
     def test_retry_after_http_date_falls_back_to_backoff(self):
         # RFC 7231 allows an HTTP-date Retry-After; float() on it must
-        # not escape the retry loop as a ValueError
-        t = make_flaky_transport(
-            {7: _order(7)},
-            fail_plan={
-                7: [(429, {"Retry-After": "Wed, 21 Oct 2026 07:28:00 GMT"})]
-            },
-        )
-        status, attempts, body = fetch_with_retry(
-            "http://x/item/7", t, backoff_base=0.0
-        )
-        assert status == 200 and attempts == 2 and body
+        # not escape the retry loop as a ValueError, and a hostile
+        # negative or non-finite delay must not reach time.sleep
+        for retry_after in ("Wed, 21 Oct 2026 07:28:00 GMT", "-1", "nan", "inf"):
+            t = make_flaky_transport(
+                {7: _order(7)},
+                fail_plan={7: [(429, {"Retry-After": retry_after})]},
+            )
+            status, attempts, body = fetch_with_retry(
+                "http://x/item/7", t, backoff_base=0.0
+            )
+            assert status == 200 and attempts == 2 and body, retry_after
 
     def test_null_and_unparseable_ids_are_dropped(self, spark):
         responses = {1: _order(1), 2: _order(2)}

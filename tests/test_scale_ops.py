@@ -363,7 +363,7 @@ class TestIncrementalMaterializedView:
         }
         assert got == want
 
-    def test_merge_reads_exchange_free_and_compact_preserves(self, spark):
+    def test_merge_reads_exchange_free(self, spark):
         from data_engineering_hs_spark.operators import incremental as I
 
         self._fresh(spark, "t_mv_b")
@@ -380,20 +380,6 @@ class TestIncrementalMaterializedView:
         mv = I.materialize(spark, "t_mv_b", ["k"], self.MEASURES)
         plan = mv._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
-        before = {tuple(r) for r in mv.collect()}
-        # store holds one row per key per increment; compaction
-        # collapses to one per key without changing the MV
-        store_rows = spark.table("t_mv_b").count()
-        assert store_rows == 10  # 5 keys x 2 increments
-        I.compact_store(spark, "t_mv_b", ["k"], self.MEASURES, num_buckets=8)
-        assert spark.table("t_mv_b").count() == 5
-        after = {
-            tuple(r)
-            for r in I.materialize(
-                spark, "t_mv_b", ["k"], self.MEASURES
-            ).collect()
-        }
-        assert after == before
 
     def test_bootstrap_repairs_dangling_dir_qualified_name(self, spark):
         """A dangling warehouse dir (left by a dead session whose
@@ -487,72 +473,6 @@ class TestOptimizeTable:
         assert spark.read.parquet(out).count() == 5000
 
 
-class TestRegisterBucketedStore:
-    def test_reattached_store_keeps_exchange_free_reads(self, spark, tmp_path):
-        """Simulates the cross-session catalog loss: write a bucketed
-        store, lose the registration (DROP on a copied dir), re-attach
-        with register_bucketed_store — rows and the Exchange-free
-        grouping contract must survive."""
-        import shutil
-
-        from data_engineering_hs_spark.operators.scale import (
-            register_bucketed_store,
-            write_bucketed,
-        )
-
-        spark.sql("DROP TABLE IF EXISTS b_reattach_src")
-        shutil.rmtree("spark-warehouse/b_reattach_src", ignore_errors=True)
-        spark.sql("DROP TABLE IF EXISTS b_reattach_back")
-        df = spark.range(500).selectExpr(
-            "id % 5 AS band", "id % 11 AS bucket", "id AS doc_id"
-        )
-        write_bucketed(
-            df, "b_reattach_src", ["band", "bucket"], num_buckets=8,
-            sort_cols=["band", "bucket"],
-        )
-        before = {tuple(r) for r in spark.table("b_reattach_src").collect()}
-        loc = str(tmp_path / "store_copy")
-        shutil.copytree("spark-warehouse/b_reattach_src", loc)
-        spark.sql("DROP TABLE b_reattach_src")  # the "new session"
-        register_bucketed_store(
-            spark,
-            "b_reattach_back",
-            "band BIGINT, bucket BIGINT, doc_id BIGINT",
-            ["band", "bucket"],
-            8,
-            loc,
-            sort_cols=["band", "bucket"],
-        )
-        t = spark.table("b_reattach_back")
-        assert {tuple(r) for r in t.collect()} == before
-        g = t.groupBy("band", "bucket").agg(F.collect_list("doc_id"))
-        plan = g._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        spark.sql("DROP TABLE b_reattach_back")
-
-
-class TestSuggestJoinStrategy:
-    def test_decision_matrix(self, spark):
-        from data_engineering_hs_spark.operators.scale import (
-            suggest_join_strategy,
-        )
-        from data_engineering_hs_spark.quality.profiling import key_skew_stats
-
-        skewed = spark.createDataFrame(
-            [(1,)] * 90 + [(k,) for k in range(2, 12)], ["k"]
-        )
-        row = key_skew_stats(skewed, "k").collect()[0]
-        # small dim wins regardless of skew
-        assert (
-            suggest_join_strategy(row, dim_rows=25)["strategy"] == "broadcast"
-        )
-        # 900k ppm hot key, big dim -> salt
-        assert suggest_join_strategy(row)["strategy"] == "salted"
-        uniform = spark.createDataFrame([(k % 50,) for k in range(5000)], ["k"])
-        urow = key_skew_stats(uniform, "k").collect()[0]
-        assert suggest_join_strategy(urow)["strategy"] == "shuffle"
-
-
 class TestScaleGuards:
     def test_salted_join_rejects_outer(self, spark):
         import pytest as _pytest
@@ -576,17 +496,6 @@ class TestScaleGuards:
         )
         with _pytest.raises(TypeError, match="non-numeric"):
             zorder_write(df, str(tmp_path / "z"), ["country", "amount"])
-
-    def test_suggest_join_strategy_null_share(self):
-        from data_engineering_hs_spark.operators.scale import (
-            suggest_join_strategy,
-        )
-
-        row = {"n_keys": 0, "n_rows": 0, "max_share_ppm": None}
-        assert suggest_join_strategy(row, dim_rows=10)["strategy"] == (
-            "broadcast"
-        )
-        assert suggest_join_strategy(row)["strategy"] == "shuffle"
 
     def test_optimize_table_recovers_from_leftover_old_dir(
         self, spark, tmp_path

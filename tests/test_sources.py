@@ -539,55 +539,6 @@ class TestDeleteKeysPartitioned:
         }
 
 
-class TestOrcAndBinary:
-    def test_orc_round_trip_with_pushdown(self, spark, tmp_path):
-        from data_engineering_hs_spark.sources import orc as O
-
-        out = str(tmp_path / "orc1")
-        df = spark.range(1000).select(
-            F.col("id"),
-            (F.col("id") % 10).alias("k"),
-            F.concat(F.lit("row"), F.col("id")).alias("s"),
-        )
-        O.write_orc(df, out)
-        back = O.read_orc(spark, out).filter(F.col("k") == 3).select("id")
-        assert back.count() == 100
-        plan = back._jdf.queryExecution().executedPlan().toString()
-        # filter + projection reach the ORC scan, same contract as
-        # the parquet path
-        assert "PushedFilters: [" in plan and "k" in plan.split(
-            "PushedFilters"
-        )[1][:80], plan
-        assert "ReadSchema" in plan
-
-    def test_orc_partitioned_write_prunes(self, spark, tmp_path):
-        from data_engineering_hs_spark.sources import orc as O
-
-        out = str(tmp_path / "orc2")
-        df = spark.range(100).withColumn(
-            "part", (F.col("id") % 4).cast("int")
-        )
-        O.write_orc(df, out, partition_cols=["part"])
-        pruned = O.read_orc(spark, out).filter(F.col("part") == 2)
-        assert pruned.count() == 25
-        plan = pruned._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan
-
-    def test_binary_file_ingest(self, spark, tmp_path):
-        from data_engineering_hs_spark.sources.orc import read_binary_files
-
-        d = tmp_path / "blobs"
-        d.mkdir()
-        (d / "a.bin").write_bytes(b"\x00\x01\x02payload-a")
-        (d / "b.bin").write_bytes(b"payload-b" * 100)
-        (d / "skip.txt").write_text("not a blob")
-        df = read_binary_files(spark, str(d), glob="*.bin")
-        rows = {r["path"].split("/")[-1]: r for r in df.collect()}
-        assert set(rows) == {"a.bin", "b.bin"}
-        assert bytes(rows["a.bin"]["content"]) == b"\x00\x01\x02payload-a"
-        assert rows["b.bin"]["length"] == 900
-
-
 class TestDeleteKeysPartitionedEdges:
     def test_escaped_partition_value_fully_doomed(self, spark, tmp_path):
         # timestamps in partition values get percent-escaped on disk
