@@ -152,7 +152,7 @@ _RECHECK_THIS_ROUND = frozenset(
         # re-split per
         # SEGMENT per row (-46.7 % on t_segment_dedup at sf0.1),
         # lang_id per marker set (-4.2 %), quality_score 3 splits
-        # -> 1 (-2.6 %); stopword_ratio/mean_word_length internal.
+        # -> 1 (-2.6 %).
         # Values bit-identical (asserted pre-timing); all touched
         # rows swept green at sf0.01 AND sf0.1.
         "t_segment_dedup",

@@ -131,11 +131,6 @@ def discounted_revenue_cents() -> Column:
     ).cast("long")
 
 
-def cents_to_amount(c: ColumnOrName) -> Column:
-    """BIGINT cents → double amount (single deterministic division)."""
-    return _col(c).cast("double") / F.lit(100.0)
-
-
 def bind_once(c: Column, build) -> Column:
     """Evaluate `c` ONCE and build an expression from the bound value
     — the single-evaluation shape, shared (r16).

@@ -5,8 +5,8 @@ so they vectorize over 100 TB document scans. Used by the dedup /
 quality / language-ID operators over the `documents` table.
 
 Capabilities: tokenization, token counting, shingling, quality
-scores (length / punctuation / stopword ratios), n-gram sets,
-rolling-hash fingerprints, language-ID heuristic.
+scores (length / punctuation / stopword ratios), rolling-hash
+fingerprints, language-ID heuristic.
 """
 
 from __future__ import annotations
@@ -40,9 +40,9 @@ def tokens(c: ColumnOrName) -> Column:
     was silently wrong on tab/newline-edged text (near-universal in
     real corpora): `trim` strips only 0x20, so '\\ta b\\n' split to
     ['', 'a', 'b', ''] — inflating token_count and diluting
-    mean_word_length / stopword_ratio / quality_score corpus-wide,
-    and leaking '' tokens into shingles → MinHash signatures
-    (r13 unicode/edge-whitespace lens find; regression-pinned).
+    quality_score corpus-wide, and leaking '' tokens into shingles →
+    MinHash signatures (r13 unicode/edge-whitespace lens find;
+    regression-pinned).
     Whitespace is Java `\\s` = [ \\t\\n\\x0B\\f\\r] — ASCII only by
     contract: NBSP / U+2009 / U+3000 are NOT token separators here,
     in DuckDB's RE2, or in the SQL oracles (pinned), though Python's
@@ -76,39 +76,6 @@ def punct_ratio(c: ColumnOrName) -> Column:
     return F.length(clean).cast("double") / F.greatest(F.length(_col(c)), F.lit(1)).cast("double")
 
 
-def stopword_ratio(c: ColumnOrName) -> Column:
-    """Fraction of whitespace tokens that are English stopwords.
-
-    tokens(c) is bind_once'd (r16): the old form referenced the
-    split twice (the filter input and the denominator size) and the
-    filter HOF is CodegenFallback — two full splits per row."""
-    sw = F.array([F.lit(w) for w in STOPWORDS])
-
-    def build(toks: Column) -> Column:
-        n_sw = F.size(
-            F.filter(toks, lambda t: F.array_contains(sw, F.lower(t)))
-        )
-        return n_sw.cast("double") / F.greatest(
-            F.size(toks), F.lit(1)
-        ).cast("double")
-
-    return bind_once(tokens(c), build)
-
-
-def mean_word_length(c: ColumnOrName) -> Column:
-    # tokens(c) bind_once'd (r16): the aggregate input and the
-    # denominator size were two separate splits per row
-    def build(toks: Column) -> Column:
-        total = F.aggregate(
-            toks, F.lit(0), lambda acc, t: acc + F.length(t)
-        )
-        return total.cast("double") / F.greatest(
-            F.size(toks), F.lit(1)
-        ).cast("double")
-
-    return bind_once(tokens(c), build)
-
-
 def quality_score(c: ColumnOrName) -> Column:
     """Composite [0,1] document-quality heuristic: long enough,
     not punctuation-soup, some-but-not-all stopwords. The weights are
@@ -116,8 +83,8 @@ def quality_score(c: ColumnOrName) -> Column:
 
     The token array is bind_once'd across the length and stopword
     components (r16): the composite previously split the text three
-    times per row (token_count once, stopword_ratio's filter input
-    and denominator twice); one bound split feeds both components,
+    times per row (token_count once, the stopword filter input and
+    denominator twice); one bound split feeds both components,
     with the same arithmetic on the same values. punct_ratio stays on
     the raw string (regex character classes, not tokens)."""
     sw_list = F.array([F.lit(w) for w in STOPWORDS])
@@ -196,28 +163,6 @@ def word_shingle_seq(c: ColumnOrName, k: int = 3) -> Column:
 def word_shingles(c: ColumnOrName, k: int = 3) -> Column:
     """Distinct k-word shingles → array<string> (the MinHash input)."""
     return F.array_distinct(word_shingle_seq(c, k))
-
-
-def char_ngrams(c: ColumnOrName, n: int = 5) -> Column:
-    """Distinct character n-grams → array<string> (SimHash/Jaccard
-    input). A short non-empty string is its own single gram; NULL and
-    empty strings yield an EMPTY array — the old [NULL]/[''] outputs
-    made every pair of blank documents Jaccard-identical and
-    clustered unrelated empties as near-duplicates."""
-    if n < 1:
-        raise ValueError(
-            f"char n-gram width must be >= 1 (got {n}): n=0 would "
-            "silently emit arrays of empty-string grams"
-        )
-    s = _col(c)
-    ln = F.length(s)
-    idx = F.sequence(F.lit(1), F.greatest(ln - n + 1, F.lit(1)))
-    grams = F.transform(idx, lambda i: F.substring(s, i, n))
-    return (
-        F.when(ln >= n, F.array_distinct(grams))
-        .when(ln > 0, F.array(s))
-        .otherwise(F.array().cast("array<string>"))
-    )
 
 
 # Version of the content-identity normalization (normalized_text /

@@ -23,6 +23,7 @@ self-joins, no collect.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -212,12 +213,11 @@ def hash_split(
         ("test", 0.05),
     ),
     seed: str = "v1",
-    buckets: int = 10_000,
     out_col: str = "split",
 ) -> DataFrame:
     """Deterministic content-keyed train/val/test assignment.
 
-    bucket = first 8 hex digits of md5(seed:id) mod `buckets`;
+    bucket = first 8 hex digits of md5(seed:id) mod 10,000;
     cumulative weight thresholds map buckets to split names. The
     assignment is a pure function of (seed, id) — stable under
     repartitioning, reordering, incremental appends, and engine
@@ -232,15 +232,18 @@ def hash_split(
     NULL ids upstream (quality.assertions not_null) rather than
     relying on that accident.
     """
-    # `not (w > 0)` rather than `w <= 0`: NaN fails BOTH comparisons,
-    # and a NaN weight would otherwise die far away in
-    # int(round(acc * buckets)) with no mention of the bad weight.
-    if not splits or any(not (w > 0) for _, w in splits):
+    # `0 < w < inf` rather than `w <= 0`: NaN fails BOTH comparisons
+    # and inf makes the weight total inf (inf/inf is NaN), and either
+    # would otherwise die far away in int(round(acc * buckets)) with
+    # no mention of the bad weight.
+    if not splits or any(not (0 < w < math.inf) for _, w in splits):
         raise ValueError(
             f"hash_split needs at least one split, every weight > 0 "
-            f"(got {list(splits)!r}): a non-positive or NaN weight "
-            "silently yields an empty or inverted split range"
+            f"and finite (got {list(splits)!r}): a non-positive, "
+            "infinite or NaN weight yields an empty, inverted or "
+            "undefined split range"
         )
+    buckets = 10_000
     total = sum(w for _, w in splits)
     bucket = _det_bucket(_det_key(seed, id_col), buckets)
     expr = None

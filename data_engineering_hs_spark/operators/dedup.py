@@ -4,8 +4,10 @@ Exact + near-dup family, all expressed as DataFrame plans (no Python
 in the hot path except none at all — hashing uses xxhash64, a JVM
 built-in):
 
-- exact_duplicates:    fingerprint (xxhash64 of normalized text) →
-                       groupBy. One shuffle on an 8-byte key.
+- incremental_exact_dedup:
+                       fingerprint (xxhash64 of normalized text) →
+                       anti-join against a fingerprint store. One
+                       shuffle on an 8-byte key.
 - minhash_signatures / minhash_lsh_pairs:
                        shingle → k seeded xxhash64 minima → band →
                        bucket-join. The standard MinHash-LSH
@@ -15,9 +17,6 @@ built-in):
                        bands only (never of shingles × seeds).
 - simhash64:           64-bit SimHash (Charikar 2002) over token
                        hashes via bit-counting in arrays.
-- ngram_jaccard_pairs: exact Jaccard verification over candidate
-                       pairs (used standalone at small scale, or as
-                       the verify stage after LSH).
 - embedding_near_dups: cosine > threshold pairs over an embedding
                        column (see operators.similarity).
 
@@ -133,52 +132,6 @@ def dup_groups(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
             "WRONG partition — raise max_iters or use dup_groups_star"
         )
     return labels.select(F.col("node").alias("doc_id"), "component")
-
-
-def exact_duplicates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_group_size: int = 100_000,
-) -> DataFrame:
-    """Groups of ids sharing identical normalized text.
-
-    Returns (fingerprint, n_docs, doc_ids, truncated) for groups with
-    n>1. At 100 TB: groupBy on the 8-byte xxhash64 fingerprint, never
-    on the full text; collect_list only over intra-group ids — and
-    CAPPED at max_group_size (same skew discipline as
-    minhash_lsh_pairs' buckets): one hot fingerprint (an empty or
-    boilerplate page duplicated tens of millions of times) would
-    otherwise materialize every id in a single aggregation buffer on
-    one reducer. n_docs stays the TRUE group size; `truncated` marks
-    groups whose id array was bounded. The cap is a window rank, not
-    a post-collect slice: slicing AFTER collect_list still builds the
-    full array in the buffer; ranking first bounds it strictly, and
-    the rank window and the groupBy share one fingerprint Exchange
-    (Spark stacks them — the semdedup cap discipline). The window
-    sort spills via the external sorter, which a hot group survives;
-    an unbounded in-memory array does not.
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("fingerprint").orderBy(F.col(id_col))
-    ranked = df.select(
-        F.col(id_col), fingerprint64(text_col).alias("fingerprint")
-    ).withColumn("__rn", F.row_number().over(w))
-    return (
-        ranked.groupBy("fingerprint")
-        .agg(
-            F.count("*").alias("n_docs"),
-            # collect_list skips NULLs, so the when() bounds the buffer
-            F.sort_array(
-                F.collect_list(
-                    F.when(F.col("__rn") <= max_group_size, F.col(id_col))
-                )
-            ).alias("doc_ids"),
-        )
-        .withColumn("truncated", F.col("n_docs") > max_group_size)
-        .filter(F.col("n_docs") > 1)
-    )
 
 
 def minhash_signatures(
@@ -390,74 +343,6 @@ def _pairs_from_banded(
     return (
         pairs.groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
         .agg(F.max("truncated").alias("truncated"))
-    )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.5,
-    candidate_pairs: DataFrame | None = None,
-) -> DataFrame:
-    """Exact word-set Jaccard over pairs.
-
-    With `candidate_pairs` (id_a, id_b) supplied — e.g. from LSH —
-    verification joins token sets to just those pairs. Without it,
-    falls back to the all-pairs self-join (only sane at small n;
-    callers at scale must pass candidates).
-
-    Docs with NO tokens (null/empty/whitespace text) never pair:
-    Jaccard is 0 against any non-empty doc and UNDEFINED against
-    another empty one — and that 0/0 was a job-killing ANSI
-    DIVIDE_BY_ZERO on any corpus holding two blank docs (fuzz-found;
-    same contract as char_ngrams, which stopped clustering blank
-    docs as near-identical for the same reason). A candidate pair
-    with an empty side is dropped, not scored.
-
-    Scale shape (measured on a 5M-doc corpus with 500k candidates):
-    the corpus is semi-join PRUNED to the candidate id set BEFORE
-    tokenization, so the token arrays are built and shuffled for
-    ~2×|pairs| docs, not the whole corpus — the candidate id frames
-    are ids-only and broadcast at any realistic pair count, making
-    the prune shuffle-free on the corpus side.
-    """
-    if candidate_pairs is not None:
-        # materialize ONCE: candidates are typically an expensive LSH
-        # pipeline and are referenced three times below (two prune
-        # sides + the pair join) — without this the whole candidate
-        # pipeline re-evaluates per reference (same reasoning as
-        # dup_groups' edge checkpoint)
-        candidate_pairs = candidate_pairs.localCheckpoint(eager=True)
-        cand_ids = (
-            candidate_pairs.select(F.col("id_a").alias(id_col))
-            .unionByName(candidate_pairs.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        df = df.join(F.broadcast(cand_ids), id_col, "left_semi")
-    toks = df.select(
-        F.col(id_col), F.array_distinct(tokens(text_col)).alias("tok_set")
-    ).filter(F.size("tok_set") > 0)
-    a = toks.alias("a")
-    b = toks.alias("b")
-    if candidate_pairs is not None:
-        pairs = (
-            candidate_pairs.join(
-                a, candidate_pairs.id_a == F.col(f"a.{id_col}")
-            ).join(b, candidate_pairs.id_b == F.col(f"b.{id_col}"))
-        )
-    else:
-        pairs = a.join(b, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    inter = F.size(F.array_intersect("a.tok_set", "b.tok_set"))
-    union = F.size(F.array_union("a.tok_set", "b.tok_set"))
-    jac = inter.cast("double") / union.cast("double")
-    return (
-        pairs.select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            jac.alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -692,8 +577,8 @@ def incremental_exact_dedup(
     """Survivors of a NEW batch against an append-only fingerprint
     store: rows whose content fingerprint is absent from the store
     AND first of its fingerprint within the batch (lowest id wins).
-    Output keeps the `fingerprint` column so the caller can
-    append_fingerprints() the survivors.
+    Output keeps the `fingerprint` column so the caller can commit
+    the survivors' fingerprints to the store.
 
     This is the corpus-growth shape — a 100-TB corpus is built batch
     by batch, and re-fingerprinting the whole corpus per increment is
@@ -701,11 +586,11 @@ def incremental_exact_dedup(
     are 8-byte fingerprints, never text.
 
     Scale notes: the anti-join shuffles batch + store on the
-    fingerprint; commit the store with append_fingerprints and read
-    it with read_fingerprint_store. Emission is at-least-once under
-    retries — wrap in foreachBatch + checkpoint (streaming/pipelines)
-    for effectively-exactly-once, same contract as the JDBC upsert
-    sink.
+    fingerprint. streaming.pipelines.streaming_dedup_ingest is the
+    store's writer: it commits each batch's fingerprints to a
+    per-batch partition and reads the store back with
+    read_fingerprint_store, for effectively-exactly-once emission
+    under retries (same contract as the JDBC upsert sink).
     """
     from pyspark.sql import Window
 
@@ -821,39 +706,6 @@ def read_fingerprint_store(spark, path: str) -> DataFrame | None:
     return _read_parquet_if_exists(spark, path)
 
 
-def append_fingerprints(survivors: DataFrame, path: str) -> None:
-    """Commit one increment's fingerprints. Append-only; survivors
-    are already distinct on fingerprint by construction
-    (incremental_exact_dedup keeps one row per fingerprint). Stamps
-    the normalization version beside the data; aborts before writing
-    into a store stamped with an older version.
-
-    The fingerprint is cast to LONG at the boundary (r15 schema-drift
-    probe): a caller-supplied INT column would otherwise append an
-    int32-footer parquet file into a bigint store, and a plain
-    parquet read samples ONE footer to infer the directory schema —
-    which footer wins is file-order roulette, so the store would read
-    correctly or throw depending on listing order. The cast makes
-    every committed file bigint regardless of caller dtype.
-
-    SINGLE-WRITER (enforced, r16): the commit runs under
-    store_writer_lease — two racing appends of a 100-row increment
-    were probed to leave 197 rows (duplicates AND lost task files,
-    because both jobs share `path/_temporary` and one committer's
-    cleanup deletes the other's in-flight output). A second writer
-    now raises ConcurrentWriterError instead. Remote store URIs have
-    no flock — there the contract is this paragraph."""
-    from data_engineering_hs_spark.sources.parquet import (
-        store_writer_lease,
-    )
-
-    with store_writer_lease(path, "append_fingerprints"):
-        stamp_normalization_version(path)
-        survivors.select(
-            F.col("fingerprint").cast("long").alias("fingerprint")
-        ).write.mode("append").parquet(path)
-
-
 def incremental_minhash_lsh(
     batch: DataFrame,
     store: DataFrame | None,
@@ -875,10 +727,8 @@ def incremental_minhash_lsh(
     bands. Cross pairs join the batch's bands against the store on
     (band, bucket); the store side groups to capped member arrays
     first so a hot boilerplate bucket is bounded, same contract as
-    minhash_lsh_pairs. Commit the store with append_lsh_bands and
-    read it with read_lsh_store. Feed the pairs to
-    ngram_jaccard_pairs/verify + dup_groups exactly as in the batch
-    path.
+    minhash_lsh_pairs. Feed the pairs to dup_groups exactly as in
+    the batch path.
     """
     # The band triples feed BOTH halves (within-batch pairs and the
     # store cross-pairs) plus the returned commit frame — checkpoint
@@ -928,88 +778,6 @@ def incremental_minhash_lsh(
         .agg(F.max("truncated").alias("truncated"))
     )
     return pairs, new_bands
-
-
-def read_lsh_store(spark, path: str) -> DataFrame | None:
-    """Persisted band-bucket store (parquet of id/band/bucket rows);
-    None before the first committed increment. Works for any
-    Spark-readable URI, not just the driver-local filesystem.
-    Raises on a mismatched normalization stamp — band buckets hash
-    shingles of tokens(), so the r13 token fix re-buckets the same
-    text (check_normalization_version)."""
-    check_normalization_version(path)
-    return _read_parquet_if_exists(spark, path)
-
-
-def append_lsh_bands(new_bands: DataFrame, path: str) -> None:
-    """Commit one increment's band buckets; stamps the normalization
-    version beside the data (same contract as append_fingerprints).
-
-    Schema discipline (r15 schema-drift probe): `band`/`bucket` are
-    fixed by the producer contract (posexplode int, xxhash64 long)
-    and are cast to those types here; the id column's type is the
-    caller's, so it is VALIDATED against the existing store's footer
-    schema instead — a drifted increment (renamed id, widened type)
-    would otherwise append a mixed-schema parquet directory whose
-    read either null-fills or type-errors depending on which footer
-    Spark happens to sample. Loud beats roulette.
-
-    SINGLE-WRITER (enforced, r16): stamp, drift-check, and commit all
-    run under store_writer_lease — the drift check is only sound if
-    the store cannot change between the check and the write, and
-    racing appends double-commit AND lose in-flight task files
-    (shared `path/_temporary`; see append_fingerprints). A second
-    writer raises ConcurrentWriterError. Remote store URIs have no
-    flock — there the contract is this paragraph."""
-    from pyspark.errors import AnalysisException
-
-    from data_engineering_hs_spark.operators.similarity import (
-        erase_nullability,
-    )
-    from data_engineering_hs_spark.sources.parquet import (
-        store_writer_lease,
-    )
-
-    with store_writer_lease(path, "append_lsh_bands"):
-        stamp_normalization_version(path)
-        out = new_bands.select(
-            *[
-                F.col(c).cast("int").alias(c)
-                if c == "band"
-                else F.col(c).cast("long").alias(c)
-                if c == "bucket"
-                else F.col(c)
-                for c in new_bands.columns
-            ]
-        )
-        try:
-            existing = out.sparkSession.read.parquet(path).schema
-        except AnalysisException:
-            # nonexistent or empty store — first append, nothing to
-            # drift against. Probing by read (not listdir) keeps the
-            # check live for remote URIs (s3a://, hdfs://) too, where
-            # the old local-dir probe silently skipped it.
-            existing = None
-        if existing is not None:
-            # nullability erased recursively: a parquet-read schema is
-            # all-nullable while computed columns (posexplode's band,
-            # containsNull=false arrays) are not, and the flags don't
-            # affect the footer layout (the d61c2ab false-positive class,
-            # handled by the same shared helper as append_to_cell_store)
-            want = [(f.name, erase_nullability(f.dataType))
-                    for f in existing.fields]
-            got = [(f.name, erase_nullability(f.dataType))
-                   for f in out.schema.fields]
-            if want != got:
-                raise ValueError(
-                    f"band-store schema drift: store at {path} holds "
-                    f"{existing.simpleString()} but this increment "
-                    f"carries {out.schema.simpleString()} — appending "
-                    "would create a mixed-schema directory whose read "
-                    "depends on which file's footer Spark samples. Align "
-                    "the increment's columns or rebuild the store."
-                )
-        out.write.mode("append").parquet(path)
 
 
 def dup_groups_star(pairs: DataFrame, max_iters: int = 30) -> DataFrame:

@@ -21,13 +21,9 @@ use the same shape). Reference parity: the reference's lab03 SQL
 exercises proximity predicates row-wise; this operator re-expresses
 them as a distributed equi-join.
 
-Distance metrics:
-- `planar_sq_deg` (default for oracles): squared euclidean distance
-  in degree space. Pure IEEE multiply/add — bit-identical across
-  engines, so results hash-match a DuckDB oracle exactly.
-- `haversine_km`: great-circle km. Uses libm trig whose last-ulp
-  behavior differs across runtimes — fine for applications, excluded
-  from bit-exact oracles (pytest covers it with a tolerance).
+Distance metric: `planar_sq_deg`, squared euclidean distance in
+degree space. Pure IEEE multiply/add — bit-identical across engines,
+so results hash-match a DuckDB oracle exactly.
 """
 
 from __future__ import annotations
@@ -35,27 +31,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-EARTH_RADIUS_KM = 6371.0
-
 
 def planar_sq_deg(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
     """Squared planar distance in degree space (deterministic)."""
     dlat = lat1 - lat2
     dlon = lon1 - lon2
     return dlat * dlat + dlon * dlon
-
-
-def haversine_km(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
-    """Great-circle distance in kilometres (application metric)."""
-    rlat1, rlat2 = F.radians(lat1), F.radians(lat2)
-    dlat = F.radians(lat2 - lat1) / 2
-    dlon = F.radians(lon2 - lon1) / 2
-    a = F.sin(dlat) ** 2 + F.cos(rlat1) * F.cos(rlat2) * F.sin(dlon) ** 2
-    # a is mathematically in [0, 1] but float error can push
-    # near-antipodal pairs a few ulps above 1, where asin(sqrt(a))
-    # returns NaN — a silently vanishing distance. Clamp (the standard
-    # haversine guard); antipodes return exactly pi*R.
-    return 2 * EARTH_RADIUS_KM * F.asin(F.sqrt(F.least(a, F.lit(1.0))))
 
 
 def _cell(col: Column, cell_deg: float) -> Column:

@@ -16,9 +16,10 @@
 Pair scoring has two strategies (see _pair_dot): the zip_with/
 aggregate fold (bit-exact vs the SQL oracles; unrolled element_at
 sums were MEASURED 3× slower — the giant codegen'd method blows the
-JIT limit) and the Arrow-batched numpy dot (dot_pandas). Default is
-the FOLD everywhere — the careful interleaved measurement (see
-_pair_dot) showed the Arrow path only wins when the scan is
+JIT limit) and the Arrow-batched numpy dot (dot_pandas). Only
+brute_force_topk offers both (its dot_strategy; the s_cosine_topk
+bench pair runs each); every other scorer uses the FOLD — the
+careful interleaved measurement (see _pair_dot) showed the Arrow path only wins when the scan is
 under-partitioned; at full parallelism the per-pair Arrow transfer
 of both vectors costs more than the einsum saves. The structural
 optimization stands regardless: norms are computed once per ROW
@@ -152,110 +153,6 @@ def centroids(
     )
 
 
-def kmeans_centroids(
-    df: DataFrame,
-    k: int = 10,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Lloyd's k-means over an embedding column → (label, centroid).
-
-    Deterministic farthest-first (k-means++-style greedy) seeding:
-    seed 0 is the smallest id; each next seed is the point with the
-    LOWEST max-cosine to the centers chosen so far (ties by id).
-    That costs k-1 broadcast passes over the data — at corpus scale,
-    train on a sample (seeding quality doesn't need every row).
-    Each Lloyd iteration = one broadcast assignment pass + one
-    positional mean aggregation (posexplode → groupBy(center, pos));
-    the driver loop holds only the iteration counter. Labels that end
-    up with no members simply drop out of the next round. The IVF
-    coarse quantizer trainer — replaces the label-derived centroids
-    when labels are absent or uninformative.
-
-    Recall note (measured on the sf0.01 `embeddings` table, which is
-    ISOTROPIC — mean-vector norm ≈ 1/sqrt(n), i.e. no real cluster
-    structure): recall@5 then tracks the probe fraction almost
-    linearly — nprobe/k of 2/10 → ~0.54, 4/10 → ~0.73, 6/10 → ~0.84.
-    On genuinely clustered embeddings the same machinery concentrates
-    neighbors in few cells and low nprobe recovers high recall; the
-    tests pin the isotropic floors.
-    """
-    # Non-finite vectors are excluded from TRAINING (r14 lens): under
-    # the cosine contract they score 0 against every center, which
-    # makes them the farthest-first argmin — with ≥ k-1 corrupt rows
-    # the seeding would pick ONLY garbage and the real structure never
-    # gets a centroid. They still ASSIGN at query time (sim 0, tie to
-    # the lowest label) — exclusion here only shapes the codebook.
-    # Zero vectors stay: a zero vector is far from everything in a
-    # mathematically meaningful way; corrupt is not.
-    df = df.filter(is_finite_vector(vec_col))
-    # The per-iteration pipeline re-reads `data` each round; checkpoint
-    # once (with the per-row norm — computed exactly once total) so
-    # iterations scan a materialized copy, not the source plan. The
-    # synthetic __rid keys the Lloyd argmax per INPUT ROW: a duplicate
-    # id with a different vector assigns by its own vector instead of
-    # inheriting its twin's winner (the by-id window mixed their
-    # candidates). Seeding still keys on id_col and assumes unique ids
-    # (with duplicates the farthest-point tie between twins is
-    # arbitrary — any __rid order would be partition-layout-dependent).
-    data = (
-        df.select(F.col(id_col), F.col(vec_col), norm(vec_col).alias("v_norm"))
-        .withColumn("__rid", F.monotonically_increasing_id())
-        .localCheckpoint(eager=True)
-    )
-
-    def with_cnorm(cent: DataFrame) -> DataFrame:
-        return cent.withColumn("c_norm", norm("centroid"))
-
-    def sim() -> Column:
-        return cosine_from(dot(vec_col, "centroid"), F.col("v_norm"), F.col("c_norm"))
-
-    first = data.orderBy(id_col).limit(1).localCheckpoint(eager=True)
-    centers = first.select(
-        F.lit(0).alias("label"), F.col(vec_col).alias("centroid")
-    ).localCheckpoint(eager=True)
-    # Already-chosen seeds are EXCLUDED from later rounds by id, not
-    # by similarity: cosine defines cos(zero-vector, x) = 0 including
-    # x = itself, so a zero embedding (padding/failed encode) would
-    # otherwise stay the argmin forever and be re-picked k-1 times.
-    seed_ids = first.select(F.col(id_col))
-    for j in range(1, k):
-        nearest = (
-            data.join(F.broadcast(seed_ids), id_col, "left_anti")
-            .join(F.broadcast(with_cnorm(centers)))
-            .groupBy(id_col)
-            .agg(
-                F.max(sim()).alias("max_sim"),
-                # vec is constant per id, so first() is deterministic
-                F.first(vec_col).alias("vec"),
-            )
-        )
-        far = (
-            nearest.orderBy(F.asc("max_sim"), F.asc(id_col))
-            .limit(1)
-            .localCheckpoint(eager=True)
-        )
-        centers = centers.unionByName(
-            far.select(F.lit(j).alias("label"), F.col("vec").alias("centroid"))
-        ).localCheckpoint(eager=True)
-        seed_ids = seed_ids.unionByName(far.select(F.col(id_col)))
-    for _ in range(iters):
-        # _nearest_topn ranks the slim (row, label, sim) projection —
-        # the vector must not ride the n×k candidate exchange every
-        # iteration — then the vector re-attaches from the
-        # checkpointed data by row id for the positional-mean step
-        assigned = _nearest_topn(
-            data, with_cnorm(centers), "__rid", vec_col, "v_norm",
-            "label", "centroid", "c_norm", 1,
-        ).join(data.select("__rid", vec_col), "__rid")
-        centers = (
-            centroids(assigned, label_col="label", vec_col=vec_col)
-            .localCheckpoint(eager=True)
-        )
-    return centers
-
-
 def _nearest_topn(
     base: DataFrame,
     cent: DataFrame,
@@ -323,7 +220,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     center_id_col: str = "label",
     center_vec_col: str = "centroid",
-    dot_strategy: str = "fold",
     super_k: int | None = None,
     probe_supers: int = 1,
     vector_store: str | None = None,
@@ -336,8 +232,10 @@ def ivf_topk(
     centers is tiny → broadcast everywhere; the only shuffle is the
     equi-join on center id. Recall depends on the nprobe/k ratio
     exactly as in FAISS-style IVF-Flat; on isotropic (structure-free)
-    embeddings it tracks nprobe/k nearly linearly (see
-    kmeans_centroids), so the ≥0.8 test floor uses nprobe=6 of 10.
+    embeddings it tracks nprobe/k nearly linearly (measured on the
+    sf0.01 `embeddings` table with Lloyd-trained centers: nprobe/k of
+    2/10 → ~0.54, 4/10 → ~0.73, 6/10 → ~0.84), so the ≥0.8 test floor
+    uses nprobe=6 of 10.
 
     ``super_k``/``probe_supers`` route the CORPUS assignment — the
     n×k side; queries are few and always assign flat — through the
@@ -463,7 +361,7 @@ def ivf_topk(
             "query_id",
             "neighbor_id",
             cosine_from(
-                _pair_dot(dot_strategy, "q_vec", "c_vec"),
+                dot("q_vec", "c_vec"),
                 F.col("q_norm"),
                 F.col("c_norm"),
             ).alias("cos_sim"),
@@ -487,7 +385,20 @@ def lsh_bucket_assign(
     derived Python-side from sha256(seed, plane, index) and embedded
     as literal factors — identical across jobs/clusters and free at
     runtime. Each plane dot is an unrolled element_at sum (codegen'd;
-    the earlier zip_with/aggregate fold ran interpreted)."""
+    the earlier zip_with/aggregate fold ran interpreted).
+
+    ``1 <= n_planes <= 63`` (one bit per plane of a signed long
+    bucket id) and ``dim >= 1``, checked before any plan is built."""
+    if not 1 <= n_planes <= 63:
+        raise ValueError(
+            f"n_planes must satisfy 1 <= n_planes <= 63 (got {n_planes}): "
+            "the bucket id holds one bit per plane in a signed long"
+        )
+    if dim < 1:
+        raise ValueError(
+            f"dim must be >= 1 (got {dim}): each plane dot sums dim "
+            "vector components"
+        )
     import hashlib
     import operator
     from functools import reduce
@@ -524,7 +435,6 @@ def lsh_topk(
     multiprobe_bits: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dot_strategy: str = "fold",
 ) -> DataFrame:
     """Hyperplane-LSH approximate top-k with multi-probe.
 
@@ -571,7 +481,7 @@ def lsh_topk(
             "query_id",
             "neighbor_id",
             cosine_from(
-                _pair_dot(dot_strategy, "q_vec", "c_vec"),
+                dot("q_vec", "c_vec"),
                 F.col("q_norm"),
                 F.col("c_norm"),
             ).alias("cos_sim"),
@@ -591,7 +501,6 @@ def embedding_near_dups(
     n_planes: int = 8,
     dim: int = 64,
     max_bucket_size: int = 1000,
-    dot_strategy: str = "fold",
 ) -> DataFrame:
     """Near-duplicate vector pairs: LSH-bucket candidates, exact
     cosine verify ≥ threshold → (id_a, id_b, cos_sim, truncated).
@@ -648,7 +557,7 @@ def embedding_near_dups(
             "id_a",
             "id_b",
             cosine_from(
-                _pair_dot(dot_strategy, "vec_a", "vec_b"),
+                dot("vec_a", "vec_b"),
                 F.col("norm_a"),
                 F.col("norm_b"),
             ).alias("cos_sim"),
@@ -1314,9 +1223,8 @@ def build_pq_code_store(
 
     Layout: ``<path>/cell=<label>/*.parquet`` holding (id, pq_code).
     Default is one file per cell: hash-repartition on cell before the
-    write (same one-file-per-bucket discipline as
-    scale.optimize_table) so a small nprobe opens a bounded file
-    count, not one shard per upstream task per cell.
+    write so a small nprobe opens a bounded file count, not one shard
+    per upstream task per cell.
     ``files_per_cell > 1`` salts the repartition key — a skewed
     corpus concentrates rows in few cells (exactly the boilerplate
     clusters SemDeDup's cap exists for), and a one-task-per-cell
@@ -1358,9 +1266,8 @@ def erase_nullability(dt):
     parquet footer layout — a COMPUTED increment (posexplode's
     containsNull=false band, a non-null array from zip_with) must
     compare equal to the all-nullable schema a parquet read reports.
-    Shared by every store-append drift check (append_to_cell_store,
-    append_lsh_bands); commit d61c2ab is the false-positive this
-    erasure exists to prevent."""
+    Used by append_to_cell_store's drift check; commit d61c2ab is the
+    false-positive this erasure exists to prevent."""
     from pyspark.sql import types as T
 
     if isinstance(dt, T.ArrayType):
@@ -1640,80 +1547,6 @@ def _verify_store_corpus(
         )
 
 
-def compact_cell_store(
-    spark, path: str, files_per_cell: int = 1
-) -> dict:
-    """Collapse an appended cell store back to ``files_per_cell``
-    files per cell — the compaction step of the build → append* →
-    compact lifecycle. Each append_to_cell_store call adds one file
-    per touched cell, so query-time opens grow as nprobe ·
-    appends-per-cell (SCALE.md round 11 counted it); this rewrites
-    the SAME rows into the canonical layout. Content is unchanged, so
-    the _store_meta.json sidecar (params + corpus stamp) carries over
-    verbatim and verify_corpus keeps matching.
-
-    Crash-safe via the shared rename-aside swap (sources.parquet.
-    swap_in): the compacted copy stages beside the store, the swap is
-    two POSIX renames, and recover_swap finishes any crash point.
-    DRIVER-LOCAL paths only, like every swap caller — a remote store
-    compacts by rebuilding (or a transactional format's OPTIMIZE).
-    Not concurrent-writer-safe BY CONTRACT, and a violation cannot
-    vanish silently (r13 pre-check, r14 closure): the file set is
-    re-snapshotted before the rename AND re-verified after the park
-    rename freezes the store — an append in either window aborts
-    with RuntimeError and the store rolled back intact; a writer
-    racing the renames fails loudly on ENOTEMPTY. Readers get no
-    such protection: a query spanning the swap sees old-or-new per
-    cell or a mid-scan FileNotFoundException (see swap_in's
-    CONCURRENT-READER VISIBILITY note) — compact between query
-    batches. Returns {"files_before", "files_after"}.
-
-    SINGLE-WRITER (enforced, r16): runs under store_writer_lease, so
-    an append_to_cell_store racing this compaction fails up front
-    with ConcurrentWriterError instead of tripping the staged-snapshot
-    check mid-swap (that tripwire stays as defense against writers
-    that bypass the mutators). Remote URIs: documented contract only.
-    """
-    import os
-
-    from data_engineering_hs_spark.sources.parquet import (
-        _require_local_swap_path,
-        staged_rewrite,
-    )
-
-    _require_local_swap_path(path, "compact_cell_store")
-
-    def n_files(d: str) -> int:
-        return sum(
-            1
-            for root, _dirs, files in os.walk(d)
-            for f in files
-            if f.endswith(".parquet")
-        )
-
-    with store_writer_lease(path, "compact_cell_store"):
-        if not os.path.isdir(path.rstrip("/")):
-            raise ValueError(
-                f"compact_cell_store: no store at {path} — build one with "
-                "build_ivf_store/build_pq_code_store first"
-            )
-        before = n_files(path)
-        if before == 0:
-            # dir exists but holds no data files: nothing to rewrite
-            return {"files_before": 0, "files_after": 0}
-        id_col = (read_sidecar(path, STORE_META) or {}).get("id_col")
-
-        def write(tmp: str) -> None:
-            df = spark.read.parquet(path)
-            _salted_cell_write(
-                df, tmp, id_col or [c for c in df.columns if c != "cell"][0],
-                files_per_cell, mode="overwrite",
-            )
-
-        staged_rewrite(path, "compact_cell_store", write)
-        return {"files_before": before, "files_after": n_files(path)}
-
-
 def read_cell_store(spark, path: str, probed_cells) -> DataFrame:
     """Partition-pruned read of a cell-partitioned store directory
     (build_pq_code_store or build_ivf_store) — only the probed cells'
@@ -1845,20 +1678,18 @@ def append_to_cell_store(
     the query paths, param-checked here too). Appends accumulate one
     file (``files_per_cell`` when salted) per touched cell per call —
     nprobe · files-per-cell opened at query time grows with append
-    count, so run compact_cell_store when increments pile up (same
-    rows, canonical one-file-per-cell layout, meta/stamp preserved). NOT atomic:
+    count, so rebuild the store when increments pile up. NOT atomic:
     files land at job commit and the stamp updates after — a crash
     in between leaves the stamp stale, which the query-time
     verify_corpus check then reports loudly (rebuild to recover).
 
-    SINGLE WRITER ONLY (the compact_parquet contract): the stamp
-    update is read-modify-write on _store_meta.json, so two concurrent
-    appends — or an append racing compact_cell_store's swap — would
-    last-writer-win and lose the other's XOR fold, after which
-    verify_corpus refuses a store that is actually complete (loud,
-    but a false refusal). Serialize maintenance externally. As a cheap
-    tripwire the sidecar is RE-READ just before the stamp write and a
-    drift since this append's read raises RuntimeError — the store
+    SINGLE WRITER ONLY: the stamp update is read-modify-write on
+    _store_meta.json, so two concurrent appends would last-writer-win
+    and lose the other's XOR fold, after which verify_corpus refuses a
+    store that is actually complete (loud, but a false refusal).
+    Serialize maintenance externally. As a cheap tripwire the sidecar
+    is RE-READ just before the stamp write and a drift since this
+    append's read raises RuntimeError — the store
     rows from both writers are intact (parquet appends don't collide);
     re-stamp by running a no-op append of zero rows after re-counting,
     or rebuild. (Since r16 the stamp tripwire is secondary: the
@@ -1879,9 +1710,9 @@ def append_to_cell_store(
     no-overlap probe, cell write, and stamp fold all run under
     store_writer_lease — every one of those steps is only sound
     against a frozen store, and racing appends double-commit AND lose
-    in-flight task files (shared `path/_temporary`; see the
-    append_fingerprints probe). A second writer (or a concurrent
-    compact_cell_store) raises ConcurrentWriterError. Remote store
+    in-flight task files (shared `path/_temporary`; see
+    sources.parquet.ConcurrentWriterError). A second writer raises
+    ConcurrentWriterError. Remote store
     URIs have no flock — there this paragraph is the contract.
     """
     with store_writer_lease(path, "append_to_cell_store"):
@@ -1963,8 +1794,8 @@ def append_to_cell_store(
         if read_sidecar(path, STORE_META) != meta_at_read:
             raise RuntimeError(
                 f"_store_meta.json at {path} changed while this append ran "
-                "(single-writer contract violated — a concurrent append or "
-                "compact_cell_store). This append's rows ARE in the store; "
+                "(single-writer contract violated — a concurrent append). "
+                "This append's rows ARE in the store; "
                 "the corpus stamp is now uncertain and was NOT overwritten. "
                 "Serialize maintenance, then re-certify the stamp (rebuild, "
                 "or re-stamp from a full store scan)."
@@ -2172,7 +2003,6 @@ def semdedup(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dot_strategy: str = "fold",
     max_cluster_size: int = 2000,
     super_k: int | None = None,
     probe_supers: int = 1,
@@ -2248,7 +2078,7 @@ def semdedup(
         .withColumn(
             "pair_sim",
             cosine_from(
-                _pair_dot(dot_strategy, "vec_a", "vec_b"),
+                dot("vec_a", "vec_b"),
                 F.col("norm_a"),
                 F.col("norm_b"),
             ),

@@ -51,23 +51,14 @@ def cms_build(
     df: DataFrame, key_col: str, depth: int = 4, width: int = 8192
 ) -> DataFrame:
     """Build the sketch: (d, cell, cnt) with depth·width rows at most.
-    Sketches MERGE by unioning and re-summing cell-wise (same depth/
-    width) — the property that lets daily shard sketches roll up into
-    weekly/monthly ones without rescanning (cms_merge)."""
+    Sketches merge by unioning and re-summing cell-wise (same depth/
+    width): counts are additive, so daily shard sketches roll up into
+    weekly/monthly ones without rescanning."""
     return (
         _cells(df, key_col, depth, width)
         .groupBy("d", "cell")
         .agg(F.count("*").alias("cnt"))
     )
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Cell-wise sum of same-shape sketches: sketch(A ∪ B) ==
-    cms_merge(sketch(A), sketch(B)) exactly (counts are additive)."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("d", "cell").agg(F.sum("cnt").alias("cnt"))
 
 
 def cms_estimate(

@@ -8,11 +8,9 @@ a fixed grid, then fill the gaps. All pure window/join plans:
   range) so silent periods appear as rows. The spine is generated
   from a per-key bounds AGGREGATE — one row per key exploding into
   its own range — so no global cross join materializes.
-- fill_forward (LOCF): last non-null value carried forward per key —
-  one window pass, one shuffle on the key.
 - interpolate_linear: gaps get v_prev + (v_next - v_prev) *
   (t - t_prev)/(t_next - t_prev); edges (before first / after last
-  observation) stay LOCF / backfill-able by choice. Two window
+  observation) take the nearest observation. Two window
   passes over the SAME (key × time) partitioning, so Catalyst reuses
   one exchange.
 
@@ -72,24 +70,6 @@ def resample(
         )
     )
     return spine.join(facts, keys + ["bucket_start"], "left")
-
-
-def fill_forward(
-    df: DataFrame,
-    ts_col: str,
-    value_col: str,
-    key_cols: Sequence[str],
-    out_col: str | None = None,
-) -> DataFrame:
-    """LOCF: null values take the latest preceding non-null per key."""
-    w = (
-        Window.partitionBy(*key_cols)
-        .orderBy(ts_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(
-        out_col or value_col, F.last(value_col, ignorenulls=True).over(w)
-    )
 
 
 def interpolate_linear(

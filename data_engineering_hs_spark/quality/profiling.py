@@ -10,11 +10,11 @@
   (n_keys, n_rows, top1_cnt, max_share_ppm, p99_cnt). max_share_ppm
   is the hot-key fraction in parts-per-million: > a few percent
   (tens of thousands of ppm) means a plain shuffle join will
-  straggle and the key needs AQE skew-split or salting
-  (operators.scale.salted_join). Run this BEFORE picking a join
-  strategy at scale; it is the measurement the salting decision
-  should cite. Every output is an INTEGER by design: the report is
-  hash-compared against cross-engine oracles, and doubles (a share
+  straggle and the key needs AQE skew-split or salting. Run this
+  BEFORE picking a join strategy at scale; it is the measurement the
+  salting decision should cite. Every output is an INTEGER by design:
+  the report is hash-compared against cross-engine oracles, and
+  doubles (a share
   ratio, an interpolated percentile) diverge by ulps between
   engines — floor-to-ppm and nearest-rank end the argument without
   losing any precision a skew decision could use.

@@ -315,7 +315,7 @@ def g_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Z-order (Morton) layout values — operators.scale.zorder_write's math,
+# Z-order (Morton) layout values — operators.scale.zvalue/scale_to_bits,
 # oracle-checked. The interleave SQL is generated from the same
 # (bits, ncols) parameters the Spark Column expression uses, so both
 # engines evaluate an identical bit-by-bit formula.
@@ -351,7 +351,7 @@ FROM scaled
 ORDER BY zval DESC, o_orderkey
 LIMIT 50
 """,
-    doc="Morton z-values over (custkey, totalprice) — zorder_write's math",
+    doc="Morton z-values over (custkey, totalprice) — scale.zvalue's math",
 )
 def o_zorder_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_engineering_hs_spark.operators.scale import scale_to_bits, zvalue

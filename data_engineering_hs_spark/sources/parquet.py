@@ -7,9 +7,7 @@ prunes to single directories (cell cf747d35). Snappy is Spark's
 default codec, matching generate_fuel_exports.py:202.
 
 Scale: dynamic partition overwrite replaces only touched partitions
-(the incremental materialization primitive used by plans.model_dag);
-sortWithinPartitions gives MergeTree-style clustering for read
-locality (fct_orders.sql:13-15 order_by analog).
+(the incremental materialization primitive used by plans.model_dag).
 """
 
 from __future__ import annotations
@@ -17,7 +15,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def write_partitioned(
@@ -26,14 +23,10 @@ def write_partitioned(
     partition_cols: Sequence[str],
     mode: str = "overwrite",
     dynamic: bool = False,
-    cluster_by: Sequence[str] | None = None,
 ) -> None:
     """S8: partitioned parquet write; dynamic=True overwrites only the
     partitions present in df (incremental delete+insert semantics)."""
-    writer = df
-    if cluster_by:
-        writer = df.sortWithinPartitions(*cluster_by)
-    w = writer.write.mode(mode)
+    w = df.write.mode(mode)
     if dynamic:
         w = w.option("partitionOverwriteMode", "dynamic")
     w.partitionBy(*partition_cols).parquet(path)
@@ -125,8 +118,8 @@ def write_sidecar(path: str, name: str, meta: dict) -> None:
 class ConcurrentWriterError(RuntimeError):
     """Another process/thread holds the writer lease on this store.
 
-    The path-based persistent stores (fingerprint, LSH-band, cell
-    stores and their compactions) are SINGLE-WRITER: the r16 race
+    The path-based persistent stores (the ingest store and its
+    compaction, the cell store) are SINGLE-WRITER: the r16 race
     probe showed two barrier-released appends of a 100-row increment
     leave 197 rows — duplicates from the double-commit AND rows LOST
     outright, because both jobs share `path/_temporary` and one
@@ -318,99 +311,6 @@ def staged_rewrite(
     swap_in(tmp, norm, staged=staged, op=op)
 
 
-def _resize_rewrite(
-    spark: SparkSession, path: str, op: str, target_file_bytes: int, write
-) -> dict:
-    """staged_rewrite of a flat parquet directory into n_out =
-    ceil(on-disk bytes / target_file_bytes) files, laid out by
-    ``write(df, tmp, n_out)`` — the sizing shared by compact_parquet
-    and operators.scale.optimize_table. Returns {"files_before",
-    "files_after", "bytes"}."""
-    import math
-    import os
-
-    def data_files() -> list[str]:
-        return [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
-
-    before = data_files()
-    if not before:
-        # empty existing dir (no increment committed yet): nothing to
-        # compact — a clean no-op beats the raw UNABLE_TO_INFER_SCHEMA
-        # the parquet read would otherwise throw (missing dirs still
-        # FileNotFoundError on the listdir above, deliberately loud)
-        return {"files_before": 0, "files_after": 0, "bytes": 0}
-    total = sum(os.path.getsize(f) for f in before)
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    staged_rewrite(
-        path, op, lambda tmp: write(spark.read.parquet(path), tmp, n_out)
-    )
-    return {
-        "files_before": len(before),
-        "files_after": len(data_files()),
-        "bytes": total,
-    }
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 << 20,
-    shuffle: bool = False,
-) -> dict:
-    """Small-files compaction: rewrite a parquet directory into
-    ~target-size files. The maintenance twin of the many-small-files
-    scan (S1): streaming sinks and per-batch appends accrete KB-scale
-    files whose per-file open/footer cost eventually dominates scans.
-
-    n_out = ceil(on-disk bytes / target_file_bytes). Default path is
-    coalesce (no shuffle — each output file concatenates input splits;
-    row order within files may differ run-to-run but content is
-    identical); shuffle=True uses repartition for evenly-sized files
-    when the inputs are skewed. Crash-safe swap (staged_rewrite): the
-    compacted copy writes to `<path>.__compact`, the original is
-    renamed aside to `<path>.__old`, the copy takes its place, then
-    the old dir is removed — every crash point leaves a COMPLETE
-    dataset under a predictable name (recovery: recover_swap).
-    `_*.json` sidecars ride along.
-
-    Returns {"files_before", "files_after", "bytes"}. NOT for
-    partitioned layouts (compact each partition directory); the swap
-    is not concurrent-reader-safe — a reader spanning the swap sees
-    an old-or-new mix per partition or a mid-scan
-    FileNotFoundException (see swap_in's CONCURRENT-READER VISIBILITY
-    note) — run in the maintenance window, like any
-    non-transactional lakehouse compaction.
-
-    SINGLE-WRITER (enforced, r16): the listing, staging read,
-    rewrite, and swap all run under the store lease — an append
-    racing this compaction fails up front (its side) or is excluded
-    (ours) instead of landing files in the pre-swap directory that
-    the rename-aside then strands. The staged-snapshot tripwire stays
-    as defense against out-of-band writers.
-
-    Degenerate cardinalities (pinned in
-    tests/test_store_lifecycle_edges.py): an EXISTING-but-empty dir
-    is a zero-stat no-op; a MISSING path raises FileNotFoundError
-    (an empty store is a normal pre-first-commit state, a missing
-    one is a caller mistake).
-    """
-    _require_local_swap_path(path, "compact_parquet")
-    with store_writer_lease(path, "compact_parquet"):
-        return _resize_rewrite(
-            spark,
-            path,
-            "compact_parquet",
-            target_file_bytes,
-            lambda df, tmp, n: (
-                df.repartition(n) if shuffle else df.coalesce(n)
-            ).write.mode("overwrite").parquet(tmp),
-        )
-
-
 def swap_in(
     tmp: str, path: str, staged: frozenset | None = None, op: str = "swap_in"
 ) -> None:
@@ -524,86 +424,6 @@ def recover_swap(path: str, tmp_suffixes: tuple[str, ...] = ("__compact", "__mer
         raise FileNotFoundError(f"no recoverable dataset for {path}")
 
 
-def delete_keys_partitioned(
-    spark: SparkSession,
-    path: str,
-    keys: DataFrame,
-    key_col: str,
-    partition_col: str,
-) -> dict:
-    """Targeted delete (GDPR / right-to-be-forgotten job) from a
-    partitioned parquet table: rewrite ONLY the partitions that
-    contain doomed keys, via dynamic partition overwrite.
-
-    Plan: one semi-join finds the affected partition values (a few
-    rows); the rewrite scans just those partitions (partition-pruned
-    — the filter is on the partition column), anti-joins the doomed
-    keys, and dynamically overwrites those partitions alone. The rest
-    of the table keeps its files byte-identical (asserted in tests).
-    At 100 TB the cost is proportional to the partitions touched, not
-    the table — the same bound a Delta DELETE with partition
-    predicates achieves.
-
-    Returns {"partitions_rewritten", "rows_deleted"}.
-
-    SINGLE-WRITER (enforced, r16): the dynamic partition overwrite
-    rewrites live partitions in place — racing any other mutator
-    interleaves commits (see the append_fingerprints probe). Runs
-    under store_writer_lease; remote URIs are documented-contract
-    only.
-    """
-    with store_writer_lease(path, "delete_keys_partitioned"):
-        df = spark.read.parquet(path)
-        # null-safe key matching throughout: a doomed NULL key must
-        # delete NULL-key rows (plain equi-joins silently drop them)
-        doomed = keys.select(F.col(key_col).alias("__doomed_key")).distinct()
-        key_match = F.col(key_col).eqNullSafe(F.col("__doomed_key"))
-        parts = [
-            r[0]
-            for r in df.join(doomed, key_match, "left_semi")
-            .select(partition_col)
-            .distinct()
-            .collect()  # partition VALUES only — dim-sized by definition
-        ]
-        if not parts:
-            return {"partitions_rewritten": 0, "rows_deleted": 0}
-        # isin() never matches NULL, so a NULL partition value (the
-        # __HIVE_DEFAULT_PARTITION__ directory) gets its own branch;
-        # the literal isin keeps static partition pruning for the rest
-        non_null = [v for v in parts if v is not None]
-        cond = (
-            F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-        )
-        if len(non_null) < len(parts):
-            cond = cond | F.col(partition_col).isNull()
-        affected = df.filter(cond)
-        before = affected.count()
-        kept = affected.join(doomed, key_match, "left_anti").localCheckpoint(
-            eager=True
-        )
-        kept_n = kept.count()
-        (
-            kept.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(path)
-        )
-        # dynamic overwrite only replaces partitions PRESENT in the
-        # written frame — a partition whose every row is doomed writes
-        # nothing and would silently survive. Drop those directories
-        # explicitly (see remove_partition_dirs for the on-disk name
-        # resolution).
-        kept_parts = {
-            r[0] for r in kept.select(partition_col).distinct().collect()
-        }
-        gone = [v for v in parts if v not in kept_parts]
-        remove_partition_dirs(spark, path, partition_col, gone)
-        return {
-            "partitions_rewritten": len(parts),
-            "rows_deleted": before - kept_n,
-        }
-
-
 def remove_partition_dirs(
     spark: SparkSession, path: str, partition_col: str, values: "list"
 ) -> int:
@@ -612,10 +432,9 @@ def remove_partition_dirs(
     percent-escaped and NULL is spelled __HIVE_DEFAULT_PARTITION__,
     so a hand-built f"{col}={v}" path misses exactly the values that
     get escaped. Listing and deletion go through SPARK'S filesystem
-    (not os.listdir), so the callers that pair this with a dynamic
-    partition overwrite — delete_keys_partitioned's GDPR job runs
-    against object stores by nature — work on any URI instead of
-    succeeding the rewrite and then dying on a driver-local listing.
+    (not os.listdir), so a caller that pairs this with a dynamic
+    partition overwrite works on any URI instead of succeeding the
+    rewrite and then dying on a driver-local listing.
     Returns the number of directories removed."""
     from urllib.parse import unquote
 

@@ -11,7 +11,8 @@ Writers stage a complete new version directory, then flip `_LATEST`
 with one atomic rename — readers that resolve the marker before the
 flip keep reading the old, still-complete version; readers after see
 the whole new set. A crash mid-publish leaves a stale marker and an
-orphan version directory: invisible to readers, reclaimed by vacuum.
+orphan version directory, invisible to readers (it carries no
+`_COMMITTED` marker); deleting it is left to the storage layer.
 This is the same commit protocol as Iceberg's version-hint file,
 minus the manifest layer (file-level pruning stays parquet-native).
 
@@ -28,7 +29,6 @@ HDFS client).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -141,7 +141,7 @@ def read_published(
     vdir = os.path.join(root, f"v={v}")
     if not os.path.isdir(vdir):
         raise FileNotFoundError(
-            f"version {v} is missing (vacuumed or never published)"
+            f"version {v} is missing (deleted or never published)"
         )
     if not _is_committed(root, v):
         raise ValueError(
@@ -151,33 +151,7 @@ def read_published(
     path = os.path.join(vdir, table)
     if not os.path.isdir(path):
         raise FileNotFoundError(
-            f"version {v} of {table} is missing (vacuumed or never "
+            f"version {v} of {table} is missing (deleted or never "
             f"published)"
         )
     return spark.read.parquet(path)
-
-
-def vacuum(root: str, keep: int = 2) -> list[int]:
-    """Drop all but the newest `keep` COMMITTED versions, plus every
-    uncommitted version (crashed publishes, whatever their number —
-    the _COMMITTED marker, not position relative to _LATEST, is what
-    distinguishes them). Never touches the marker's version.
-    Returns the removed version numbers.
-
-    Run in the maintenance window only: an uncommitted version is
-    indistinguishable from a publish IN FLIGHT, so a concurrent
-    vacuum could tear it down mid-stage — the same single-writer
-    caveat as compact_parquet's swap."""
-    _require_local_root(root, "vacuum")
-    committed = current_version(root)
-    if committed is None:
-        return []
-    removed = []
-    live = [v for v in _versions(root) if _is_committed(root, v)]
-    doomed = set(live[:-keep]) if keep > 0 else set(live[:-1])
-    doomed |= {v for v in _versions(root) if not _is_committed(root, v)}
-    doomed.discard(committed)
-    for v in sorted(doomed):
-        shutil.rmtree(os.path.join(root, f"v={v}"), ignore_errors=True)
-        removed.append(v)
-    return removed

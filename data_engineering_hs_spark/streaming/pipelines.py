@@ -24,8 +24,6 @@ processAllAvailable drain a bounded source to completion.
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -382,11 +380,9 @@ def streaming_dedup_ingest(
     test-pinned: replayed docs dedup against the old run's prints and
     the corpus keeps every old partition), while a WIPED-IN-PLACE
     checkpoint (same dir, so same namespace, restarting at 0 against
-    retained higher batches) is refused — see _prepare_run_layout,
-    which also migrates both legacy layouts (root-level files,
-    single-level batch_id=N dirs) before the first namespaced write
-    would wedge partition discovery. This is the streaming twin of
-    the reference DAG's filename-watermark + ON CONFLICT load.
+    retained higher batches) is refused — see _prepare_run_layout.
+    This is the streaming twin of the reference DAG's
+    filename-watermark + ON CONFLICT load.
     """
     run_ns = _run_namespace(checkpoint_dir)
 
@@ -438,44 +434,25 @@ def _run_namespace(checkpoint_dir: str) -> str:
 
 
 def _prepare_run_layout(spark, path: str, run_ns: str, batch_id: int) -> None:
-    """Layout guard for a run-namespaced dataset
-    (``path/run=<ns>/batch_id=N/``), run before each batch touches it.
-    One Hadoop-FS listStatus of the root (works for any Spark URI, not
-    just driver-local) does two jobs:
+    """Wiped-checkpoint guard for a run-namespaced dataset
+    (``path/run=<ns>/batch_id=N/``), run before each batch touches it,
+    scoped to THIS run's namespace. One Hadoop-FS listStatus of the
+    run's directory (works for any Spark URI, not just driver-local).
 
-    1. LEGACY MIGRATION: earlier layouts — root-level parquet files
-       (the pre-partitioning append store) and single-level
-       ``batch_id=N/`` dirs (the r10 layout) — mixed with ``run=<ns>/``
-       dirs wedge Spark partition discovery permanently ('Conflicting
-       directory structures detected', which _read_parquet_if_exists
-       rightly does NOT treat as absent). Before the first namespaced
-       write can create that mix: batch_id=N dirs RENAME under
-       ``run=legacy/`` (a metadata move, no data rewrite) and root
-       files rewrite into ``run=legacy/batch_id=-1/`` then delete
-       (write-then-delete: a crash between the two re-migrates on
-       replay, duplicating some legacy fingerprints — harmless, the
-       store is only ever anti-joined).
-
-    2. WIPED-CHECKPOINT GUARD, scoped to THIS run's namespace: batch
-       ids restart at 0 when the checkpoint's contents are deleted in
-       place (same dir ⇒ same namespace), and the dynamic overwrite
-       would then silently replace this run's EARLIER batch partitions
-       one by one — deleting committed fingerprints/corpus rows. A
-       legitimate same-checkpoint replay only re-runs the LAST batch,
-       so max(this run's batch_id) <= incoming batch_id is an
-       invariant; max > incoming raises with guidance. A fresh
-       checkpoint DIR is a different namespace and sails through —
-       that's the supported full-source-replay recovery.
+    Batch ids restart at 0 when the checkpoint's contents are deleted
+    in place (same dir ⇒ same namespace), and the dynamic overwrite
+    would then silently replace this run's EARLIER batch partitions
+    one by one — deleting committed fingerprints/corpus rows. A
+    legitimate same-checkpoint replay only re-runs the LAST batch, so
+    max(this run's batch_id) <= incoming batch_id is an invariant;
+    max > incoming raises with guidance. A fresh checkpoint DIR is a
+    different namespace and sails through — that's the supported
+    full-source-replay recovery.
     """
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return
-    _migrate_legacy_layout(spark, fs, jvm, path)
-    ns_dir = jvm.org.apache.hadoop.fs.Path(
+    ns_dir = spark._jvm.org.apache.hadoop.fs.Path(
         path.rstrip("/") + f"/run={run_ns}"
     )
+    fs = ns_dir.getFileSystem(spark._jsc.hadoopConfiguration())
     max_batch = None
     if fs.exists(ns_dir):
         for st in fs.listStatus(ns_dir):
@@ -502,47 +479,7 @@ def _prepare_run_layout(spark, path: str, run_ns: str, batch_id: int) -> None:
         )
 
 
-def _migrate_legacy_layout(spark, fs, jvm, path: str) -> None:
-    """The legacy-migration half of _prepare_run_layout (docstring
-    there), shared with compact_ingest_store so compaction of a
-    pre-namespace store migrates it first instead of wedging on
-    conflicting directory structures."""
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    legacy_files, legacy_batch_dirs = [], []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.startswith(("_", ".")):
-            continue
-        if st.isFile():
-            legacy_files.append(st.getPath().toString())
-        elif st.isDirectory() and name.startswith("batch_id="):
-            legacy_batch_dirs.append((name, st.getPath()))
-    if legacy_files or legacy_batch_dirs:
-        legacy_root = jvm.org.apache.hadoop.fs.Path(
-            path.rstrip("/") + "/run=legacy"
-        )
-        fs.mkdirs(legacy_root)
-        for name, p in legacy_batch_dirs:
-            dst = jvm.org.apache.hadoop.fs.Path(f"{legacy_root}/{name}")
-            if not fs.rename(p, dst):
-                # Hadoop rename fails FALSE, not loudly (e.g. dst
-                # already exists); a silently un-migrated dir would
-                # leave the layout wedged while we proceed as if fixed
-                raise RuntimeError(
-                    f"legacy-layout migration failed: could not rename "
-                    f"{p} to {dst} — migrate or remove it manually"
-                )
-        if legacy_files:
-            # explicit file list: no partition discovery, so a mixed
-            # (wedged) layout reads fine and this also REPAIRS it
-            spark.read.parquet(*legacy_files).write.mode("append").parquet(
-                path.rstrip("/") + "/run=legacy/batch_id=-1"
-            )
-            for f in legacy_files:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(f), False)
-
-
-def compact_ingest_store(spark, path: str, files_per_partition: int = 1) -> dict:
+def compact_ingest_store(spark, path: str) -> dict:
     """Collapse a run-namespaced ingest dataset
     (``path/run=<ns>/batch_id=N/`` — streaming_dedup_ingest's
     fingerprint store or corpus sink) into few partitions: every batch
@@ -552,8 +489,7 @@ def compact_ingest_store(spark, path: str, files_per_partition: int = 1) -> dict
 
     Why: the run-namespaced layout accretes one partition per batch
     forever — at one batch per trigger that is thousands of small
-    partitions/files within days, and every batch re-lists them (the
-    small-files problem compact_parquet solves for path stores).
+    partitions/files within days, and every batch re-lists them.
     Content is unchanged — same rows, no distinct — so cross-run
     dedup results are identical before and after.
 
@@ -567,12 +503,10 @@ def compact_ingest_store(spark, path: str, files_per_partition: int = 1) -> dict
     the incoming batch id against max(batch_id) under the run's
     directory — merging the max away would let a wiped-in-place
     restart sail through. Keeping one partition per historical run is
-    the entire residual cost; when run count itself becomes the
-    listing problem, retire_runs folds runs whose checkpoints the
-    caller ASSERTS are gone for good. Earlier batches of a live run are safe
+    the entire residual cost. Earlier batches of a live run are safe
     to merge mid-stream: only the last batch can ever replay. The
     relabeled rows can never collide with a real run (namespaces are
-    hex digests; 'compacted'/'legacy' are reserved).
+    hex digests; 'compacted' is reserved).
 
     Crash-safe via the shared rename-aside swap (stage the full new
     layout beside the store, two POSIX renames, recover_swap finishes
@@ -581,18 +515,16 @@ def compact_ingest_store(spark, path: str, files_per_partition: int = 1) -> dict
     format's OPTIMIZE. Do not run concurrently with an active
     trigger's commit (the swap could drop a batch committed after the
     staging read) — run it between triggers or while the stream is
-    stopped, like compact_parquet's maintenance-window contract. A
-    violation cannot vanish silently (r13 pre-check, r14 closure): the file set
-    is re-snapshotted before the rename (check_no_concurrent_writer)
-    AND re-verified after the park rename freezes the store
-    (swap_in(staged=...)) — a commit in either window aborts with
-    RuntimeError and the store rolled back intact (late batch
-    included); a writer racing the renames themselves fails the swap
-    loudly on ENOTEMPTY with both datasets preserved.
+    stopped. A violation cannot vanish silently (r13 pre-check, r14
+    closure): the file set is re-snapshotted before the rename
+    (check_no_concurrent_writer) AND re-verified after the park
+    rename freezes the store (swap_in(staged=...)) — a commit in
+    either window aborts with RuntimeError and the store rolled back
+    intact (late batch included); a writer racing the renames
+    themselves fails the swap loudly on ENOTEMPTY with both datasets
+    preserved.
 
-    Legacy layouts (pre-namespace root files / bare batch_id=N dirs)
-    are migrated first, same as the per-batch path. Returns
-    {"files_before", "files_after", "partitions_before",
+    Returns {"files_before", "files_after", "partitions_before",
     "partitions_after"}. Missing path and existing-but-empty store
     are both zero-stat no-ops (pinned in
     tests/test_store_lifecycle_edges.py). Readers spanning the swap
@@ -600,90 +532,7 @@ def compact_ingest_store(spark, path: str, files_per_partition: int = 1) -> dict
     (see sources.parquet.swap_in's CONCURRENT-READER VISIBILITY
     note) — compact between triggers.
     """
-    return _compact_ingest_impl(spark, path, files_per_partition, frozenset())
-
-
-def retire_runs(
-    spark,
-    path: str,
-    *,
-    checkpoint_dirs: Sequence[str] = (),
-    runs: Sequence[str] = (),
-    checkpoints_gone_for_good: bool = False,
-    files_per_partition: int = 1,
-) -> dict:
-    """Fold CLOSED runs' partitions — including each run's max batch,
-    which compact_ingest_store deliberately preserves — into
-    ``run=compacted/batch_id=-1``, removing those runs' directories
-    from a streaming_dedup_ingest store/sink.
-
-    compact_ingest_store keeps one partition per historical run
-    forever because two safety invariants live on each run's max-batch
-    partition (last-batch replay-independence and the wiped-checkpoint
-    guard). When run count itself becomes the listing problem
-    (thousands of abandoned checkpoints), this folds named runs in —
-    but retirement DESTROYS both invariants for those runs, and
-    whether a checkpoint is gone for good CANNOT be inferred from the
-    store: a "finished" stream can always be restarted against its
-    old checkpoint, and its replayed last batch would then anti-join
-    against its OWN folded fingerprints, silently dropping every row
-    of that batch from the corpus. So the caller must assert it:
-
-    - ``checkpoints_gone_for_good=True`` is required (a loud
-      ValueError otherwise). It means: the checkpoints behind every
-      named run are deleted/unreachable and will NEVER drive another
-      trigger against this store.
-    - Name runs either by their checkpoint dir (``checkpoint_dirs=``,
-      mapped through the same normalization streaming_dedup_ingest
-      uses) or by the ``run=<ns>`` value seen in the store layout
-      (``runs=``). ``legacy`` is retirable; ``compacted`` is already
-      the fold target and is rejected; a run absent from the store is
-      a ValueError (typo protection — silently "retiring" nothing
-      would leave the caller believing the listing cost shrank).
-
-    Content is unchanged (same rows, no distinct), so cross-run dedup
-    results are identical before and after. Crash-safe via the same
-    rename-aside swap as compact_ingest_store, with the same
-    contracts: DRIVER-LOCAL paths only, never concurrent with an
-    active trigger's commit (violations trip the same pre-swap
-    concurrent-writer check and abort loudly). Returns the compaction
-    stats dict plus ``runs_retired``. A named run whose dir exists
-    but holds NO data files is removed outright (nothing to fold;
-    the dir itself is the listing cost being shed); a missing store
-    or a named run with no dir at all raises (typo protection).
-    Reader visibility during the swap is old-or-new per partition
-    (see sources.parquet.swap_in's CONCURRENT-READER VISIBILITY
-    note).
-    """
-    if not checkpoints_gone_for_good:
-        raise ValueError(
-            "retire_runs folds runs' max-batch partitions into the "
-            "consolidated partition, destroying last-batch replay-"
-            "independence and the wiped-checkpoint guard for those "
-            "runs. Only do this for checkpoints that are gone for "
-            "good, and assert it: checkpoints_gone_for_good=True."
-        )
-    retire = {_run_namespace(c) for c in checkpoint_dirs} | set(runs)
-    if not retire:
-        raise ValueError(
-            "retire_runs: name at least one run via checkpoint_dirs= "
-            "or runs="
-        )
-    if "compacted" in retire:
-        raise ValueError(
-            "retire_runs: 'compacted' is the fold target, not a "
-            "retirable run"
-        )
-    return _compact_ingest_impl(
-        spark, path, files_per_partition, frozenset(retire)
-    )
-
-
-def _compact_ingest_impl(
-    spark, path: str, files_per_partition: int, retire: frozenset
-) -> dict:
     import os
-    from urllib.parse import unquote
 
     from data_engineering_hs_spark.sources.parquet import (
         _require_local_swap_path,
@@ -691,7 +540,7 @@ def _compact_ingest_impl(
         store_writer_lease,
     )
 
-    op = "retire_runs" if retire else "compact_ingest_store"
+    op = "compact_ingest_store"
     _require_local_swap_path(path, op)
     norm = path.rstrip("/")
 
@@ -704,21 +553,6 @@ def _compact_ingest_impl(
                     parts.add(r)
         return files, len(parts)
 
-    def run_dirs() -> dict[str, str]:
-        # run value → directory name. Partition directory names are
-        # URI-escaped by Spark on write (PartitioningUtils.
-        # escapePathName: '%', '/', ':', non-ASCII etc. → %XX, '%'
-        # itself always escaped, so unquote is a faithful inverse).
-        # Compare UNESCAPED values or a run value with any special
-        # character would always trip the 'not present' guard despite
-        # existing (ADVICE r12). Run namespaces are hex digests today,
-        # but runs= accepts arbitrary caller values.
-        return {
-            unquote(d.split("=", 1)[1]): d
-            for d in os.listdir(norm)
-            if d.startswith("run=") and os.path.isdir(os.path.join(norm, d))
-        }
-
     # SINGLE-WRITER (enforced, r16): maintenance on the ingest store
     # takes the store lease — a live trigger's batch commit is NOT
     # leased (failing production batches in favor of maintenance
@@ -726,49 +560,16 @@ def _compact_ingest_impl(
     # the guard on that side: a batch landing mid-swap rolls the
     # compaction back with the batch intact.
     with store_writer_lease(path, op):
-        if not os.path.isdir(norm):
-            if retire:
-                raise ValueError(
-                    f"retire_runs: {norm} does not exist — nothing to retire"
-                )
-            return {
-                "files_before": 0, "files_after": 0,
-                "partitions_before": 0, "partitions_after": 0,
-            }
-        jvm = spark._jvm
-        root = jvm.org.apache.hadoop.fs.Path(norm)
-        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-        _migrate_legacy_layout(spark, fs, jvm, norm)
-        if retire:
-            present = set(run_dirs())
-            missing = sorted(retire - present)
-            if missing:
-                raise ValueError(
-                    f"retire_runs: run(s) {missing} not present in {norm} "
-                    f"(existing runs: {sorted(present)}) — a silently "
-                    "skipped retirement would leave the caller believing "
-                    "the listing cost shrank"
-                )
         files_before, parts_before = stats(norm)
         out = {
             "files_before": files_before, "files_after": 0,
             "partitions_before": parts_before, "partitions_after": 0,
         }
-        if retire:
-            out["runs_retired"] = sorted(retire)
         if files_before == 0:
-            # empty EXISTING store (dir created, no increment committed,
-            # or a 0-row first batch): nothing to rewrite — a clean
-            # no-op beats the raw UNABLE_TO_INFER_SCHEMA the parquet
-            # read would throw. Retirement of named runs whose dirs
-            # exist but hold no data removes those empty dirs (nothing
-            # to fold; leaving them would keep the listing cost the
-            # caller asked to shed).
-            import shutil
-
-            for run, d in run_dirs().items():
-                if run in retire:
-                    shutil.rmtree(os.path.join(norm, d))
+            # missing path, or an empty EXISTING store (dir created,
+            # no increment committed, or a 0-row first batch): nothing
+            # to rewrite — a clean no-op beats the raw
+            # UNABLE_TO_INFER_SCHEMA the parquet read would throw
             return out
 
         def write(tmp: str) -> None:
@@ -779,8 +580,6 @@ def _compact_ingest_impl(
             relabel = (F.col("batch_id") < F.col("__max")) | (
                 F.col("run") == F.lit("compacted")
             )
-            if retire:
-                relabel = relabel | F.col("run").isin(*sorted(retire))
             merged = (
                 df.join(F.broadcast(run_max), "run")
                 .withColumn(
@@ -793,21 +592,10 @@ def _compact_ingest_impl(
                 )
                 .drop("__max")
             )
-            # one write task (= one file) per surviving partition; salt
-            # for a hot consolidated partition when asked
-            if files_per_partition > 1:
-                data_cols = [c for c in df.columns if c not in ("run", "batch_id")]
-                merged = merged.repartition(
-                    F.col("run"),
-                    F.col("batch_id"),
-                    F.pmod(
-                        F.xxhash64(*data_cols[:1]),
-                        F.lit(files_per_partition),
-                    ),
-                )
-            else:
-                merged = merged.repartition("run", "batch_id")
-            merged.write.mode("overwrite").partitionBy("run", "batch_id").parquet(tmp)
+            # one write task (= one file) per surviving partition
+            merged.repartition("run", "batch_id").write.mode(
+                "overwrite"
+            ).partitionBy("run", "batch_id").parquet(tmp)
 
         staged_rewrite(norm, op, write)
         out["files_after"], out["partitions_after"] = stats(norm)
@@ -883,12 +671,12 @@ def _dedup_ingest_batch(
     _prepare_run_layout(spark, store_path, run_ns, batch_id)
     _prepare_run_layout(spark, sink_dir, run_ns, batch_id)
     store = read_fingerprint_store(spark, store_path)
-    if store is not None and "batch_id" in store.columns:
+    if store is not None:
         store = _string_run(store, store_path)
         # replay-independence: never let this batch's own (possibly
         # partial) prior commit influence its survivor set. Other
-        # runs' and legacy partitions stay visible — cross-run dedup
-        # is the point of retaining the store.
+        # runs' partitions stay visible — cross-run dedup is the point
+        # of retaining the store.
         own = (F.col("run") == run_ns) & (F.col("batch_id") == batch_id)
         store = store.filter(~own).select("fingerprint")
     # Materialize once: both writes below would otherwise re-run
@@ -936,7 +724,7 @@ def streaming_cdc_apply(
 
     Each micro-batch runs operators.cdc.apply_changeset against the
     current table version and swaps the merged result in with the
-    same rename-aside protocol as compact_parquet (every crash point
+    same rename-aside protocol as compact_ingest_store (every crash point
     leaves a complete table at a predictable name). Replay-safe
     WITHOUT a transactional log because apply_changeset is
     idempotent: re-applying a changeset deletes already-absent keys
@@ -1025,50 +813,3 @@ def streaming_cdc_apply(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def progress_summary(query) -> dict:
-    """Operational rollup of a StreamingQuery's recentProgress — rows
-    in, peak processing rate, batch wall time, and the last event-time
-    watermark. Reads the query's progress JSON only (no Spark jobs),
-    so it's free to call on a live stream.
-
-    WINDOW, NOT LIFETIME: recentProgress is a ring buffer of the last
-    spark.sql.streaming.numRecentProgressUpdates entries (default
-    100), so on a long-running query every summed value covers only
-    that window — an alert on "rows_total stopped growing" or a
-    throughput ratio over these fields is wrong past 100 triggers.
-    ``window_capped`` is True when the buffer is plausibly full;
-    treat the totals as per-window rates then (or aggregate the
-    listener's progress events yourself for true lifetime counters —
-    the engine does not retain them).
-
-    Returns {"n_batches", "rows_total", "peak_rows_per_sec",
-    "total_batch_ms", "last_watermark", "window_capped"} (zeros/None
-    when the query has made no progress yet).
-    """
-    progress = [p for p in (query.recentProgress or []) if p]
-    rows_total = 0
-    peak_rate = 0.0
-    total_ms = 0
-    last_wm = None
-    for p in progress:
-        rows_total += int(p.get("numInputRows") or 0)
-        rate = float(p.get("processedRowsPerSecond") or 0.0)
-        peak_rate = max(peak_rate, rate)
-        total_ms += int((p.get("durationMs") or {}).get("triggerExecution") or 0)
-        wm = (p.get("eventTime") or {}).get("watermark")
-        if wm:
-            last_wm = wm
-    return {
-        "n_batches": len(progress),
-        "rows_total": rows_total,
-        "peak_rows_per_sec": peak_rate,
-        "total_batch_ms": total_ms,
-        "last_watermark": last_wm,
-        # ring buffer plausibly full — totals are window-scoped, and
-        # the true lifetime counts are unrecoverable from here (100 is
-        # numRecentProgressUpdates' default; StreamingQuery exposes no
-        # session handle to read a changed value through)
-        "window_capped": len(progress) >= 100,
-    }

@@ -86,16 +86,6 @@ class TestEmptyInputOps:
         )
         assert out.count() == 0
 
-    def test_exact_dedup_empty_docs(self, spark):
-        from data_engineering_hs_spark.operators.dedup import (
-            exact_duplicates,
-        )
-
-        docs = spark.createDataFrame(
-            [], "doc_id long, text string"
-        )
-        assert exact_duplicates(docs, "text", "doc_id").count() == 0
-
     def test_boilerplate_ratio_fractional_empty_docs(self, spark):
         # ceil(frac * 0 docs) = 0 threshold over an empty counts frame
         # — still zero rows, no division blowup

@@ -190,9 +190,9 @@ REFERENCE_MODULES = {
 }
 
 # Public package names that no non-test file references, each with its
-# reason: the SURVEY §2 reference row it implements, or the ROADMAP
-# item that retires it. A registry query restating the operation
-# inline counts as no caller.
+# reason: the SURVEY §2 reference row it implements (its row id first),
+# or the one ROADMAP item that retires it (plan_summary, item 1). A
+# registry query restating the operation inline counts as no caller.
 TEST_ONLY_API = {
     "functions.scalar.full_name": "F2/F4: dim_customers.sql:9",
     "functions.scalar.split_packed_list": "F7: lab01/tasks.ipynb:1 items column",
@@ -200,32 +200,10 @@ TEST_ONLY_API = {
     "functions.scalar.time_of_day_between": "P6: lab03/sql/script1.sql:17-18",
     "functions.scalar.epoch_millis_to_ts": "F15: async_data_gen.py:53-54",
     "functions.scalar.ts_to_epoch_millis": "F15: async_data_gen.py:53-54",
-    "functions.scalar.cents_to_amount": "pending item 8",
     "functions.scalar.to_money": "F20: stg_orders.sql:9",
     "functions.scalar.outstanding": "P13/F20: fct_orders.sql:43-44",
     "functions.scalar.json_get": "F22: revenue_analysis/main.ipynb cell 83febe4b",
     "functions.scalar.json_decode": "S16: spark_kafka_foreachbatch.py:69",
-    "functions.text.stopword_ratio": "pending item 8",
-    "functions.text.mean_word_length": "pending item 8",
-    "functions.text.char_ngrams": "pending item 8",
-    "operators.dedup.exact_duplicates": (
-        "pending item 8: d_exact_dup_summary inlines its own form"
-    ),
-    "operators.dedup.ngram_jaccard_pairs": (
-        "pending item 8: d_ngram_jaccard inlines its own form"
-    ),
-    "operators.dedup.append_fingerprints": "pending item 8",
-    "operators.dedup.read_lsh_store": "pending item 8",
-    "operators.dedup.append_lsh_bands": "pending item 8",
-    "operators.geo.haversine_km": "pending item 8",
-    "operators.scale.salted_join": "pending item 8",
-    "operators.scale.optimize_table": "pending item 8",
-    "operators.similarity.kmeans_centroids": (
-        "pending item 8: s_centroids inlines its own form"
-    ),
-    "operators.similarity.compact_cell_store": "pending item 8",
-    "operators.sketch.cms_merge": "pending item 8",
-    "operators.timeseries.fill_forward": "pending item 8",
     "plans.inspect.plan_summary": "pending item 1: profile() replaces it",
     "plans.magic_shop.build_runner": "S29: magic_shop dbt model DAG",
     "plans.revenue.load_inputs": "S5: revenue_analysis/main.ipynb:153-160",
@@ -245,8 +223,6 @@ TEST_ONLY_API = {
     "sources.kafka.kafka_connector_available": "S14: spark_kafka_foreachbatch.py:31-37",
     "sources.kafka.kafka_stream_reader": "S14: spark_kafka_foreachbatch.py:31-37",
     "sources.parquet.read_pruned": "S9: revenue_analysis/main.ipynb cell cf747d35",
-    "sources.parquet.delete_keys_partitioned": "pending item 8",
-    "sources.publish.vacuum": "pending item 8",
     "sources.rest.fetch_ids": "S24: client_async.py:89-131",
     "sources.rest.flatten_orders": "S25: client_async.py:32-42",
     "sources.upsert.read_watermark": "S23: fuel_ingest_dag.py:199-206",
@@ -258,8 +234,6 @@ TEST_ONLY_API = {
     "streaming.pipelines.file_watch_ingest": "S20: fuel_ingest_dag.py:92-111",
     "streaming.pipelines.dedup_within_watermark": "T8: fuel_ingest_dag.py:1-4,175",
     "streaming.pipelines.run_to_memory": "S18: socket_streaming.py:19",
-    "streaming.pipelines.retire_runs": "pending item 8",
-    "streaming.pipelines.progress_summary": "pending item 8",
 }
 
 
@@ -357,3 +331,17 @@ def test_every_public_name_has_a_non_test_caller_or_a_reason():
             ):
                 uncalled.add(f"{name.partition('.')[2]}.{node.name}")
     assert uncalled == set(TEST_ONLY_API)
+
+
+def test_every_test_only_reason_cites_a_reference_row():
+    # a name with no caller stays only as a SURVEY §2 reference unit
+    # (its row id first) or for the one ROADMAP item 1 retirement; a
+    # bare "pending" entry cannot come back
+    import re
+
+    bad = {
+        name: why
+        for name, why in TEST_ONLY_API.items()
+        if not re.match(r"^([A-Z]+\d+|pending item 1\b)", why)
+    }
+    assert bad == {}

@@ -1,52 +1,9 @@
-"""Unit test for the exact-duplicate grouping operator (planted dups —
-the testdata corpus has none)."""
+"""Unit tests for the dedup operators' edge contracts: dup-group
+convergence, band validation, incremental (batch-over-batch) exact and
+MinHash-LSH dedup, and canonicalization (planted dups — the testdata
+corpus has none)."""
 
 from __future__ import annotations
-
-from data_engineering_hs_spark.operators.dedup import exact_duplicates
-
-
-class TestExactDuplicates:
-    def test_planted_duplicates_group(self, spark):
-        docs = spark.createDataFrame(
-            [
-                (1, "The  quick brown fox"),
-                (2, "the quick BROWN fox "),   # same after normalization
-                (3, "completely different"),
-                (4, "The quick brown fox"),    # same again
-                (5, "also different"),
-            ],
-            ["doc_id", "text"],
-        )
-        groups = exact_duplicates(docs, "text", "doc_id").collect()
-        assert len(groups) == 1
-        assert groups[0]["n_docs"] == 3
-        assert groups[0]["doc_ids"] == [1, 2, 4]
-
-    def test_clean_corpus_yields_no_groups(self, spark):
-        docs = spark.createDataFrame(
-            [(1, "alpha"), (2, "beta")], ["doc_id", "text"]
-        )
-        assert exact_duplicates(docs, "text", "doc_id").count() == 0
-
-    def test_hot_group_is_capped_with_true_count(self, spark):
-        # a hot fingerprint (boilerplate page) keeps its TRUE n_docs
-        # but the id array is bounded by max_group_size + flagged —
-        # the skew cap that keeps one reducer's buffer finite
-        docs = spark.createDataFrame(
-            [(i, "same page") for i in range(50)] + [(100, "unique")],
-            ["doc_id", "text"],
-        )
-        g = exact_duplicates(
-            docs, "text", "doc_id", max_group_size=10
-        ).collect()
-        assert len(g) == 1
-        assert g[0]["n_docs"] == 50
-        assert g[0]["doc_ids"] == list(range(10))  # lowest ids kept
-        assert g[0]["truncated"] is True
-        # uncapped groups are unflagged
-        g2 = exact_duplicates(docs, "text", "doc_id").collect()
-        assert g2[0]["truncated"] is False and g2[0]["n_docs"] == 50
 
 
 class TestDupGroupConvergence:
@@ -88,39 +45,34 @@ class TestBandValidation:
 
 class TestIncrementalDedup:
     """Batch-over-batch growth: only the new increment is scanned;
-    the store is append-only fingerprints."""
+    the store is the fingerprints of every earlier increment's
+    survivors."""
 
-    def test_two_increment_round_trip(self, spark, tmp_path):
+    def test_two_increment_round_trip(self, spark):
         from data_engineering_hs_spark.operators.dedup import (
-            append_fingerprints,
             incremental_exact_dedup,
-            read_fingerprint_store,
         )
 
-        store_path = str(tmp_path / "fp_store")
         b1 = spark.createDataFrame(
             [(1, "alpha beta"), (2, "gamma delta"), (3, "ALPHA   beta")],
             ["doc_id", "text"],
         )
-        s1 = incremental_exact_dedup(b1, read_fingerprint_store(spark, store_path))
+        s1 = incremental_exact_dedup(b1, None)
         # doc 3 normalizes to doc 1's text → intra-batch dup, min id wins
         assert sorted(r.doc_id for r in s1.collect()) == [1, 2]
-        append_fingerprints(s1, store_path)
+        store = s1.select("fingerprint")
 
         b2 = spark.createDataFrame(
             [(10, "gamma delta"), (11, "epsilon zeta"), (12, "epsilon zeta")],
             ["doc_id", "text"],
         )
-        s2 = incremental_exact_dedup(b2, read_fingerprint_store(spark, store_path))
+        s2 = incremental_exact_dedup(b2, store)
         # 10 is a cross-increment dup; 12 an intra-batch dup
         assert sorted(r.doc_id for r in s2.collect()) == [11]
-        append_fingerprints(s2, store_path)
+        store = store.unionByName(s2.select("fingerprint"))
 
         # replaying increment 2 yields nothing new (idempotent growth)
-        s2_replay = incremental_exact_dedup(
-            b2, read_fingerprint_store(spark, store_path)
-        )
-        assert s2_replay.count() == 0
+        assert incremental_exact_dedup(b2, store).count() == 0
 
     def test_empty_store_passes_all_distinct(self, spark):
         from data_engineering_hs_spark.operators.dedup import (
@@ -139,15 +91,15 @@ class TestIncrementalDedup:
         # populated remote (s3a/hdfs) store read as "no store yet"
         # and re-admitted every previously-seen document
         from data_engineering_hs_spark.operators.dedup import (
-            append_fingerprints,
             incremental_exact_dedup,
             read_fingerprint_store,
-            read_lsh_store,
         )
 
         plain = str(tmp_path / "fp_store_uri")
         b = spark.createDataFrame([(1, "a b"), (2, "c d")], ["doc_id", "text"])
-        append_fingerprints(incremental_exact_dedup(b, None), plain)
+        incremental_exact_dedup(b, None).select("fingerprint").write.parquet(
+            plain
+        )
         uri = "file://" + plain
         store = read_fingerprint_store(spark, uri)
         assert store is not None and store.count() == 2
@@ -155,16 +107,14 @@ class TestIncrementalDedup:
         assert read_fingerprint_store(spark, "file://" + str(tmp_path / "nope")) is None
         empty = tmp_path / "empty_store"
         empty.mkdir()
-        assert read_lsh_store(spark, str(empty)) is None
+        assert read_fingerprint_store(spark, str(empty)) is None
 
 
 class TestIncrementalLsh:
-    def test_cross_increment_near_dup_found(self, spark, tmp_path):
+    def test_cross_increment_near_dup_found(self, spark):
         from data_engineering_hs_spark.operators.dedup import (
-            append_lsh_bands,
             incremental_minhash_lsh,
             lsh_band_buckets,
-            read_lsh_store,
         )
 
         base = ("the quick brown fox jumps over the lazy dog while the "
@@ -174,12 +124,8 @@ class TestIncrementalLsh:
                             "shuffles partitions and adaptive query execution")],
             ["doc_id", "text"],
         )
-        store_path = str(tmp_path / "lsh_store")
-        pairs1, bands1 = incremental_minhash_lsh(
-            b1, read_lsh_store(spark, store_path)
-        )
+        pairs1, bands1 = incremental_minhash_lsh(b1, None)
         assert pairs1.count() == 0  # nothing near-dup within b1
-        append_lsh_bands(bands1, store_path)
 
         # b2 doc 10 is b1 doc 1 with one word changed → near-dup ACROSS
         # increments; detected without re-signaturing b1
@@ -189,16 +135,13 @@ class TestIncrementalLsh:
                   "row groups and min max pruning statistics")],
             ["doc_id", "text"],
         )
-        pairs2, bands2 = incremental_minhash_lsh(
-            b2, read_lsh_store(spark, store_path)
-        )
+        pairs2, bands2 = incremental_minhash_lsh(b2, bands1)
         got = [(r.id_a, r.id_b) for r in pairs2.collect()]
         assert (1, 10) in got
         assert all(a < b for a, b in got)
 
-        # band triples in the store match what lsh_band_buckets emits
-        append_lsh_bands(bands2, store_path)
-        store = read_lsh_store(spark, store_path)
+        # the returned band triples are what lsh_band_buckets emits
+        store = bands1.unionByName(bands2)
         direct = lsh_band_buckets(
             b1.unionByName(b2), "text", "doc_id"
         )

@@ -38,40 +38,6 @@ def _grams(toks, n):
 
 
 # ---------------------------------------------------------------------------
-# ngram_jaccard_pairs (all-pairs fallback) vs naive set math
-# ---------------------------------------------------------------------------
-
-
-@given(texts=doc_texts, t=st.sampled_from([0.25, 0.5, 1.0]))
-@FUZZ
-def test_fuzz_jaccard_pairs_match_naive(spark, texts, t):
-    from data_engineering_hs_spark.operators.dedup import ngram_jaccard_pairs
-
-    rows = list(enumerate(texts))
-    df = spark.createDataFrame(
-        rows or [(None, None)], "doc_id int, text string"
-    ).filter("doc_id is not null")
-    got = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(df, "text", "doc_id", threshold=t).collect()
-    }
-    sets = {i: set(_toks(x)) for i, x in rows}
-    exp = {}
-    ids = sorted(sets)
-    for ai in range(len(ids)):
-        for bi in range(ai + 1, len(ids)):
-            a, b = ids[ai], ids[bi]
-            if not sets[a] or not sets[b]:
-                continue  # empty-token docs never pair (op contract)
-            j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
-            if j >= t:
-                exp[(a, b)] = j
-    assert set(got) == set(exp), (texts, t)
-    for k, v in exp.items():
-        assert got[k] == pytest.approx(v), (texts, t, k)
-
-
-# ---------------------------------------------------------------------------
 # repetition_stats vs naive Gopher fractions
 # ---------------------------------------------------------------------------
 

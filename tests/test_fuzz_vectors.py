@@ -186,54 +186,17 @@ def test_fuzz_mmr_matches_naive(spark, vecs):
 
 
 # ---------------------------------------------------------------------------
-# kmeans / IVF / PQ / SemDeDup degenerate-cardinality and corrupt inputs
+# IVF / PQ / SemDeDup degenerate-cardinality and corrupt inputs
 # ---------------------------------------------------------------------------
 
 
 class TestDegenerateCorpora:
-    def test_kmeans_single_point_and_k_exceeding_n(self, spark):
-        from data_engineering_hs_spark.operators.similarity import (
-            kmeans_centroids,
-        )
-
-        df = _mk(spark, [[1.0, 2.0, 3.0]])
-        cents = kmeans_centroids(df, k=5, iters=2).collect()
-        assert len(cents) == 1
-        assert cents[0]["centroid"] == [1.0, 2.0, 3.0]
-
-    def test_kmeans_all_identical_collapses_to_one_centroid(self, spark):
-        from data_engineering_hs_spark.operators.similarity import (
-            kmeans_centroids,
-        )
-
-        df = _mk(spark, [[0.5, 0.5, 0.0]] * 6)
-        cents = kmeans_centroids(df, k=3, iters=2).collect()
-        # all rows tie to every center; tiebreak sends them to one
-        # label and empty labels drop out
-        assert len(cents) == 1
-        assert cents[0]["centroid"] == [0.5, 0.5, 0.0]
-
-    def test_kmeans_survives_corrupt_and_zero_vectors(self, spark):
-        from data_engineering_hs_spark.operators.similarity import (
-            kmeans_centroids,
-        )
-
-        df = _mk(
-            spark,
-            [
-                [1.0, 0.0, 0.0],
-                [0.0, 1.0, 0.0],
-                [NAN, NAN, NAN],
-                [0.0, 0.0, 0.0],
-            ],
-        )
-        cents = kmeans_centroids(df, k=2, iters=2).collect()
-        assert 1 <= len(cents) <= 2  # no crash, labels may collapse
-
     def test_ivf_zero_and_corrupt_through_assignment(self, spark):
+        from pyspark.sql import functions as F
+
         from data_engineering_hs_spark.operators.similarity import (
+            centroids,
             ivf_topk,
-            kmeans_centroids,
         )
 
         vecs = [
@@ -245,8 +208,11 @@ class TestDegenerateCorpora:
             [NAN, 1.0, 0.0],  # corrupt vector
         ]
         df = _mk(spark, vecs)
-        cents = kmeans_centroids(
-            df.filter("vec_id < 4"), k=2, iters=2
+        # the two clean clusters: {0, 1} and {2, 3}
+        cents = centroids(
+            df.filter("vec_id < 4").withColumn(
+                "label", (F.col("vec_id") / 2).cast("int")
+            )
         )
         got = ivf_topk(
             df, df.filter("vec_id = 0"), cents, k=5, nprobe=2
@@ -304,7 +270,7 @@ class TestDegenerateCorpora:
 
     def test_semdedup_duplicates_and_corrupt(self, spark):
         from data_engineering_hs_spark.operators.similarity import (
-            kmeans_centroids,
+            centroids,
             semdedup,
         )
 
@@ -315,7 +281,12 @@ class TestDegenerateCorpora:
             [NAN, 1.0, 0.0],  # corrupt
         ]
         df = _mk(spark, vecs)
-        cents = kmeans_centroids(df.filter("vec_id < 3"), k=2, iters=2)
+        # clusters {0, 1} and {2}
+        cents = centroids(
+            df.filter("vec_id < 3").selectExpr(
+                "CAST(vec_id = 2 AS INT) AS label", "embedding"
+            )
+        )
         rows = {
             r["vec_id"]: r for r in semdedup(df, cents, threshold=0.95).collect()
         }

@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_hs_spark.operators.geo import (
-    haversine_km,
     planar_sq_deg,
     radius_join,
 )
@@ -82,34 +81,6 @@ class TestRadiusJoin:
 
 
 class TestMetrics:
-    def test_haversine_known_distance(self, spark):
-        # London (51.5074, -0.1278) → Paris (48.8566, 2.3522) ≈ 343 km
-        df = spark.range(1).select(
-            haversine_km(
-                F.lit(51.5074), F.lit(-0.1278), F.lit(48.8566), F.lit(2.3522)
-            ).alias("km")
-        )
-        km = df.collect()[0].km
-        assert km == pytest.approx(343.5, abs=2.0)
-
-    def test_haversine_antipodes_not_nan(self, spark):
-        # float error can push the haversine intermediate a few ulps
-        # above 1 for (near-)antipodal pairs, where asin(sqrt(a)) is
-        # NaN — the distance must instead be ~pi*R (r12 clamp)
-        import math
-
-        df = spark.range(1).select(
-            haversine_km(
-                F.lit(35.0), F.lit(45.0), F.lit(-35.0), F.lit(-135.0)
-            ).alias("km"),
-            haversine_km(
-                F.lit(0.0), F.lit(0.0), F.lit(0.0), F.lit(180.0)
-            ).alias("km2"),
-        )
-        row = df.collect()[0]
-        assert not math.isnan(row.km) and not math.isnan(row.km2)
-        assert row.km == pytest.approx(math.pi * 6371.0, rel=1e-6)
-        assert row.km2 == pytest.approx(math.pi * 6371.0, rel=1e-6)
 
     def test_planar_sq_exact(self, spark):
         df = spark.range(1).select(

@@ -8,13 +8,17 @@ RAISES (good if specific) vs SILENT (good only if the degenerate
 output is semantically defensible). Findings fixed:
 - word_shingle_seq/word_shingles k=0 emitted the raw token list as
   "0-shingles" (feeding minhash/common_ngrams GARBAGE signatures);
-- char_ngrams n=0 emitted arrays of empty-string grams;
 - pack_sequences target=0 marked EVERY item oversize in its own bin —
   one bin per item at corpus scale;
 - minhash_signatures num_hashes=0 died deep in the aggregate with an
   internal 'exprs should not be empty' assertion;
 - hash_split with a non-positive weight silently yielded an empty or
-  inverted split range;
+  inverted split range, and an infinite one died in int(round(NaN))
+  naming no weight;
+- hyperplane LSH (lsh_bucket_assign, and lsh_topk/embedding_near_dups
+  through it) died with internal errors on n_planes=0 (IndexError),
+  dim=0 (reduce of an empty iterable) and n_planes=64 (a bucket bit
+  that overflows a long);
 - chunk_documents chunk_tokens=0 raised, but blamed `overlap`.
 
 Defensible silents (pinned as contracts, not fixed): top-k with k<=0
@@ -51,12 +55,6 @@ class TestLoudMisconfigs:
         with pytest.raises(ValueError, match="k must be >= 1"):
             docs.select(word_shingles("text", k=0))
 
-    def test_char_ngrams_n0(self, docs):
-        from data_engineering_hs_spark.functions.text import char_ngrams
-
-        with pytest.raises(ValueError, match="width must be >= 1"):
-            docs.select(char_ngrams("text", n=0))
-
     def test_minhash_zero_hashes(self, docs):
         from data_engineering_hs_spark.operators.dedup import (
             minhash_signatures,
@@ -85,6 +83,9 @@ class TestLoudMisconfigs:
             # NaN fails both < and >; a naive w <= 0 guard passes it
             # and the failure surfaces far away in int(round(NaN))
             hash_split(docs, "doc_id", [("a", float("nan")), ("b", 0.5)])
+        with pytest.raises(ValueError, match="finite"):
+            # inf passes `w > 0`; the inf total then turns w/total NaN
+            hash_split(docs, "doc_id", [("a", float("inf")), ("b", 0.5)])
         with pytest.raises(ValueError, match="at least one split"):
             hash_split(docs, "doc_id", [])
 
@@ -97,6 +98,34 @@ class TestLoudMisconfigs:
 
         with pytest.raises(ValueError, match="chunk_tokens must be >= 1"):
             chunk_documents(docs, "text", "doc_id", chunk_tokens=0, overlap=0)
+
+    def test_hyperplane_lsh_sizes_out_of_range(self, spark, vecs):
+        from data_engineering_hs_spark.operators.similarity import (
+            embedding_near_dups,
+            lsh_bucket_assign,
+            lsh_topk,
+        )
+
+        cases = [
+            ({"n_planes": 0}, "n_planes"),
+            ({"n_planes": 64}, "n_planes"),
+            ({"dim": 0}, "dim must be >= 1"),
+        ]
+        sc = spark.sparkContext
+        sc.setJobGroup("hostile_lsh", "hostile_lsh")
+        try:
+            for kw, msg in cases:
+                with pytest.raises(ValueError, match=msg):
+                    lsh_bucket_assign(vecs, **kw)
+                with pytest.raises(ValueError, match=msg):
+                    lsh_topk(vecs, vecs, **kw)
+                with pytest.raises(ValueError, match=msg):
+                    embedding_near_dups(vecs, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # raised at the API boundary, before any Spark job
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup("hostile_lsh")) == 0
 
     def test_lsh_bands_must_divide(self, docs):
         from data_engineering_hs_spark.operators.dedup import (

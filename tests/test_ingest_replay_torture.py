@@ -1,8 +1,8 @@
 """Long replay-chain torture for the streaming-dedup-ingest state
 machine (r14 lens, from the r15 candidate queue). Existing tests
-drive 2-4 batches with one compaction; this runs a 12-step sequence
-of multi-run batches, same-batch replays, compactions, retirement,
-and a wiped-checkpoint attack, mirrored step by step against a plain
+drive 2-4 batches with one compaction; this runs a long sequence of
+multi-run batches, same-batch replays, compactions and a
+wiped-checkpoint attack, mirrored step by step against a plain
 Python dedup (normalized text, lowest-id-wins) — the invariant being
 that NO interleaving of maintenance operations changes the survivor
 set or readmits a previously-seen document.
@@ -45,7 +45,6 @@ class TestReplayTorture:
         from data_engineering_hs_spark.streaming.pipelines import (
             _dedup_ingest_batch,
             compact_ingest_store,
-            retire_runs,
         )
 
         schema = T2.StructType(
@@ -85,20 +84,16 @@ class TestReplayTorture:
         # independence — no mirror call, nothing may change
         ingest([(9, "zeta doc"), (10, "DELTA   doc")], 1, "runB")
 
-        # retire the closed run A; its folded fingerprints must keep
-        # guarding future batches
-        st = retire_runs(
-            spark, store, runs=["runA"], checkpoints_gone_for_good=True
-        )
-        assert st["runs_retired"] == ["runA"]
-        retire_runs(
-            spark, sink, runs=["runA"], checkpoints_gone_for_good=True
-        )
+        # second compaction: folds run B's batch 0 beside run A's
+        # consolidated batches
+        compact_ingest_store(spark, store)
+        compact_ingest_store(spark, sink)
 
-        # post-retirement: a doc retired WITH run A must still dedup
+        # a doc whose fingerprint was compacted with run A must still
+        # dedup
         ingest_and_mirror([(11, "gamma doc"), (12, "eta doc")], 2, "runB")
 
-        # second compaction after retirement
+        # third compaction, after the post-compaction batch
         compact_ingest_store(spark, store)
 
         # wiped-checkpoint attack: run B restarting at batch 0 after

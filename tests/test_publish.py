@@ -1,5 +1,5 @@
 """Versioned atomic publish (sources/publish.py): marker-flip commit,
-snapshot isolation for readers, crash orphans, vacuum policy."""
+snapshot isolation for readers, crash orphans, time travel."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ from data_engineering_hs_spark.sources.publish import (
     current_version,
     publish,
     read_published,
-    vacuum,
 )
 
 
@@ -34,7 +33,7 @@ class TestPublish:
         publish({"t": spark.createDataFrame([(1,), (2,)], "k long")}, root)
         assert current_version(root) == 2
         assert read_published(spark, root, "t").count() == 2
-        # v1 still complete on disk (time travel until vacuumed)
+        # v1 still complete on disk (time travel until deleted)
         assert spark.read.parquet(os.path.join(root, "v=1", "t")).count() == 1
 
     def test_crashed_publish_is_invisible(self, spark, tmp_path):
@@ -50,23 +49,6 @@ class TestPublish:
         v = publish({"t": spark.createDataFrame([(1,), (2,)], "k long")}, root)
         assert v == 3 and read_published(spark, root, "t").count() == 2
 
-    def test_vacuum_keeps_recent_and_reaps_orphans(self, spark, tmp_path):
-        root = str(tmp_path / "pub")
-        for n in range(1, 5):
-            publish(
-                {"t": spark.createDataFrame([(i,) for i in range(n)], "k long")},
-                root,
-            )
-        # orphan staged above the marker
-        spark.createDataFrame([(0,)], "k long").write.parquet(
-            os.path.join(root, "v=9", "t")
-        )
-        removed = vacuum(root, keep=2)
-        assert removed == [1, 2, 9]
-        assert current_version(root) == 4
-        assert read_published(spark, root, "t").count() == 4
-        assert os.path.isdir(os.path.join(root, "v=3"))
-
     def test_read_before_first_publish_raises(self, spark, tmp_path):
         with pytest.raises(FileNotFoundError):
             read_published(spark, str(tmp_path / "nothing"), "t")
@@ -76,13 +58,10 @@ class TestPublish:
         # URI root, os.makedirs would create a literal local 's3a:/…'
         # dir and the publish would 'succeed' invisibly to any remote
         # reader — reject loudly instead (streaming_cdc_apply pattern)
-        from data_engineering_hs_spark.sources.publish import vacuum
-
         df = spark.range(1)
         for call in (
             lambda: publish({"t": df}, "s3a://bucket/pub"),
             lambda: read_published(spark, "hdfs://nn/pub", "t"),
-            lambda: vacuum("s3a://bucket/pub"),
         ):
             with pytest.raises(ValueError, match="driver-local root"):
                 call()
@@ -103,12 +82,13 @@ def test_time_travel_reads_explicit_version(spark, tmp_path):
 
 
 def test_time_travel_guards(spark, tmp_path):
+    import shutil
+
     import pytest as _pytest
 
     from data_engineering_hs_spark.sources.publish import (
         publish,
         read_published,
-        vacuum,
     )
 
     root = str(tmp_path / "store")
@@ -123,11 +103,10 @@ def test_time_travel_guards(spark, tmp_path):
     os.makedirs(os.path.join(root, f"v={v3 + 1}"))
     with _pytest.raises(ValueError, match="never committed"):
         read_published(spark, root, "t", version=v3 + 1)
-    # vacuumed version: explicit error, not a silent empty frame
-    removed = vacuum(root, keep=1)
-    assert removed
+    # deleted version: explicit error, not a silent empty frame
+    shutil.rmtree(os.path.join(root, "v=1"))
     with _pytest.raises(FileNotFoundError):
-        read_published(spark, root, "t", version=removed[0])
+        read_published(spark, root, "t", version=1)
 
 
 def test_version_claim_is_exclusive(spark, tmp_path):
@@ -151,7 +130,6 @@ def test_crashed_orphan_below_later_commit_never_readable(spark, tmp_path):
     from data_engineering_hs_spark.sources.publish import (
         publish,
         read_published,
-        vacuum,
     )
 
     root = str(tmp_path / "store")
@@ -163,6 +141,3 @@ def test_crashed_orphan_below_later_commit_never_readable(spark, tmp_path):
     assert v3 == 3
     with _pytest.raises(ValueError, match="never committed"):
         read_published(spark, root, "a", version=2)
-    # vacuum reclaims the orphan even though its number < committed
-    removed = vacuum(root, keep=5)
-    assert 2 in removed and not os.path.exists(os.path.join(root, "v=2"))

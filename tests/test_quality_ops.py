@@ -192,32 +192,6 @@ class TestIvfRecall:
         }
         assert two == flat
 
-    def test_kmeans_centroids_beat_label_centroids(self, spark):
-        # Farthest-first-seeded Lloyd quantizer vs label-derived
-        # centroids at nprobe=2: measured recall@5 ~0.52-0.54 vs 0.36.
-        # The sf0.01 embeddings are ISOTROPIC (no cluster structure),
-        # so recall tracks the probe fraction — at nprobe=6 of 10 the
-        # same index measures ~0.84; pin both floors.
-        from data_engineering_hs_spark.operators.similarity import kmeans_centroids
-
-        e = spark.read.parquet(f"{SF001}/embeddings.parquet")
-        q = e.filter(F.col("vec_id") < 20)
-        truth = {
-            (r["query_id"], r["neighbor_id"])
-            for r in brute_force_topk(e, q, k=5).collect()
-        }
-        km = kmeans_centroids(e, k=10, iters=4)
-        got2 = {
-            (r["query_id"], r["neighbor_id"])
-            for r in ivf_topk(e, q, km, k=5, nprobe=2).collect()
-        }
-        assert len(truth & got2) / len(truth) >= 0.5
-        got6 = {
-            (r["query_id"], r["neighbor_id"])
-            for r in ivf_topk(e, q, km, k=5, nprobe=6).collect()
-        }
-        assert len(truth & got6) / len(truth) >= 0.8
-
     def test_lsh_topk_recall_floor(self, spark):
         # 4 planes, 1-bit multiprobe: measured recall@5 ≈ 0.44 while
         # scanning ~30% of the corpus; pin a conservative floor.
@@ -553,27 +527,6 @@ class TestSetSimilarityJoin:
         }
         assert (1, 2) in rows
         assert abs(rows[(1, 2)] - 0.55) < 1e-12
-
-
-class TestKmeansDegenerateInputs:
-    def test_zero_vector_cannot_be_reselected_as_seed(self, spark):
-        # cos(zero, x) = 0 for every x INCLUDING itself, so without
-        # id-based exclusion a low-id zero vector stays the argmin and
-        # seeds every cluster; k seeds must be k distinct vectors.
-        from data_engineering_hs_spark.operators.similarity import kmeans_centroids
-
-        zero = [0.0] * 64
-        def unit(i):
-            v = [0.0] * 64
-            v[i] = 1.0
-            return v
-
-        rows = [(0, zero)] + [(i, unit(i % 64)) for i in range(1, 30)]
-        df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-        cents = kmeans_centroids(df, k=4, iters=1).collect()
-        assert len(cents) == 4
-        distinct = {tuple(round(x, 6) for x in r["centroid"]) for r in cents}
-        assert len(distinct) == 4, "collapsed/duplicate centroids"
 
 
 class TestHashSplit:
@@ -1390,58 +1343,6 @@ class TestProductQuantization:
         append_to_cell_store(inc, cents, vstore)
         ivf_topk(e, q, cents, nprobe=2, vector_store=vstore).count()
 
-    def test_compact_cell_store_restores_layout_and_content(
-        self, spark, tmp_path
-    ):
-        # build -> append -> append accretes one file per cell per
-        # call; compaction rewrites the same rows back to one file per
-        # cell with content, meta params and corpus stamp all intact
-        import os
-
-        import pytest
-
-        from data_engineering_hs_spark.operators.similarity import (
-            _verify_store_corpus,
-            append_to_cell_store,
-            build_ivf_store,
-            centroids,
-            compact_cell_store,
-            ivf_topk,
-        )
-
-        e, _cb = self._setup(spark)
-        cents = centroids(e)
-        n = e.count()
-        a = e.filter(F.col("vec_id") < n * 0.6)
-        b = e.filter((F.col("vec_id") >= n * 0.6) & (F.col("vec_id") < n * 0.8))
-        c = e.filter(F.col("vec_id") >= n * 0.8)
-        store = str(tmp_path / "ivf_compact")
-        build_ivf_store(a, cents, store)
-        append_to_cell_store(b, cents, store)
-        append_to_cell_store(c, cents, store)
-        key = lambda r: (r["vec_id"], r["cell"], tuple(r["embedding"]))
-        pre = {key(r) for r in spark.read.parquet(store).collect()}
-        stats = compact_cell_store(spark, store)
-        assert stats["files_after"] < stats["files_before"]
-        cell_dirs = [d for d in os.listdir(store) if d.startswith("cell=")]
-        for d in cell_dirs:
-            files = [
-                f
-                for f in os.listdir(os.path.join(store, d))
-                if f.endswith(".parquet")
-            ]
-            assert len(files) == 1, d
-        post = {key(r) for r in spark.read.parquet(store).collect()}
-        assert post == pre
-        # meta (params + corpus stamp) carried over: the full corpus
-        # still verifies and the store still serves
-        _verify_store_corpus(e, store, "vec_id")
-        q = e.filter(F.col("vec_id") < 2)
-        assert ivf_topk(e, q, cents, k=3, nprobe=2, vector_store=store).count() == 6
-        # remote paths refused (swap protocol is POSIX renames)
-        with pytest.raises(ValueError, match="driver-local path"):
-            compact_cell_store(spark, "s3a://bucket/store")
-
     def test_append_refuses_without_meta_or_codebooks(
         self, spark, tmp_path
     ):
@@ -1779,26 +1680,6 @@ class TestCountMinSketch:
         # overestimate guarantee; at 3 keys x 1024 cells collisions
         # are absent in every depth row, so estimates are exact
         assert est == {"a": 50, "b": 7, "c": 1}
-
-    def test_merge_equals_sketch_of_union(self, spark):
-        from data_engineering_hs_spark.operators.sketch import (
-            cms_build,
-            cms_merge,
-        )
-
-        a = spark.createDataFrame([(i % 5,) for i in range(40)], ["k"])
-        b = spark.createDataFrame([(i % 9,) for i in range(33)], ["k"])
-        merged = {
-            (r["d"], r["cell"]): r["cnt"]
-            for r in cms_merge(
-                cms_build(a, "k", 3, 64), cms_build(b, "k", 3, 64)
-            ).collect()
-        }
-        union = {
-            (r["d"], r["cell"]): r["cnt"]
-            for r in cms_build(a.unionByName(b), "k", 3, 64).collect()
-        }
-        assert merged == union
 
     def test_unseen_key_estimates_zero_when_no_collision(self, spark):
         from data_engineering_hs_spark.operators.sketch import (

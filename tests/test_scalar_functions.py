@@ -74,7 +74,6 @@ class TestScalarHelpers:
         )
         row = df.select(
             S.money_cents("amount").alias("cents"),
-            S.cents_to_amount(S.money_cents("amount")).alias("back"),
             S.to_money("amount").alias("dec"),
             S.outstanding("total", "paid").alias("due"),
             S.outstanding("total", F.lit(None).cast("decimal(12,2)")).alias(
@@ -82,7 +81,6 @@ class TestScalarHelpers:
             ),
         ).collect()[0]
         assert row["cents"] == 1234
-        assert row["back"] == 12.34
         assert row["dec"] == Decimal("12.34")
         assert row["due"] == Decimal("70.00")
         assert row["due_null_paid"] == Decimal("100.00")
@@ -108,24 +106,6 @@ class TestHardeningEdges:
         )
         vals = [r[0] for r in df.select(punct_ratio("text")).collect()]
         assert all(v == 0.0 for v in vals), vals
-
-    def test_char_ngrams_null_and_empty_yield_empty(self, spark):
-        from pyspark.sql import functions as F
-
-        from data_engineering_hs_spark.functions.text import char_ngrams
-
-        df = spark.createDataFrame(
-            [(None,), ("",), ("ab",), ("abcdef",)], "text string"
-        )
-        got = df.select(
-            F.coalesce("text", F.lit("<null>")).alias("t"),
-            char_ngrams("text", 5).alias("g"),
-        ).collect()
-        by = {r["t"]: r["g"] for r in got}
-        assert by["<null>"] == []
-        assert by[""] == []
-        assert by["ab"] == ["ab"]  # short doc = its own single gram
-        assert len(by["abcdef"]) == 2
 
     def test_to_log_timestamp_null_on_garbage(self, spark):
         from data_engineering_hs_spark.functions.scalar import (

@@ -1,15 +1,12 @@
-"""Scale-path join strategy tests: bucketed co-located joins (no
-Exchange) and salted skew joins (correctness + key scatter)."""
+"""Scale-path tests: bucketed co-located joins (no Exchange) and the
+Morton z-value interleave."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from tests.conftest import SF001
-from data_engineering_hs_spark.operators.scale import (
-    salted_join,
-    write_bucketed,
-)
+from data_engineering_hs_spark.operators.scale import write_bucketed
 
 
 class TestBucketedJoin:
@@ -61,64 +58,6 @@ class TestBucketedJoin:
             assert "Exchange" in plan
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-
-
-class TestSaltedJoin:
-    def test_matches_plain_join(self, spark):
-        # 90% of fact rows share one hot key — the salted join must
-        # return exactly the same result as the plain join.
-        fact = spark.range(0, 2000).select(
-            F.when(F.col("id") % 10 != 0, F.lit(1))
-            .otherwise(F.col("id") % 50)
-            .alias("k"),
-            F.col("id").alias("v"),
-        )
-        dim = spark.range(0, 50).select(
-            F.col("id").alias("k"), F.concat(F.lit("d"), F.col("id")).alias("label")
-        )
-        plain = fact.join(dim, "k").select("k", "v", "label")
-        salted = salted_join(fact, dim, "k").select("k", "v", "label")
-        assert sorted(map(tuple, plain.collect())) == sorted(
-            map(tuple, salted.collect())
-        )
-
-    def test_hot_key_scatters_across_salts(self, spark):
-        fact = spark.range(0, 1000).select(
-            F.lit(1).alias("k"), F.col("id").alias("v")
-        )
-        salt = F.pmod(
-            F.xxhash64(F.col("k"), F.monotonically_increasing_id()), F.lit(16)
-        )
-        n_salts = fact.withColumn("s", salt).select("s").distinct().count()
-        assert n_salts >= 12  # hot key spreads over most of 16 buckets
-
-    def test_duplicate_hot_rows_scatter_and_match(self, spark):
-        # BYTE-IDENTICAL hot rows (the exact-duplicate corpus case): a
-        # content-hash salt would send them all to one bucket; the
-        # position-based salt must scatter them AND preserve results.
-        fact = spark.range(0, 1000).select(
-            F.lit(1).alias("k"), F.lit("same payload").alias("v")
-        )
-        salt = F.pmod(
-            F.xxhash64(F.col("k"), F.monotonically_increasing_id()), F.lit(16)
-        )
-        n_salts = fact.withColumn("s", salt).select("s").distinct().count()
-        assert n_salts >= 12, f"duplicate rows collapsed to {n_salts} salts"
-        dim = spark.createDataFrame([(1, "d1")], ["k", "label"])
-        out = salted_join(fact, dim, "k").select("k", "v", "label")
-        assert out.count() == 1000
-        assert {tuple(r) for r in out.collect()} == {(1, "same payload", "d1")}
-
-    def test_left_join_semantics_preserved(self, spark):
-        fact = spark.createDataFrame(
-            [(1, "a"), (2, "b"), (99, "orphan")], ["k", "v"]
-        )
-        dim = spark.createDataFrame([(1, "d1"), (2, "d2")], ["k", "label"])
-        out = {
-            (r["k"], r["label"])
-            for r in salted_join(fact, dim, "k", how="left").collect()
-        }
-        assert out == {(1, "d1"), (2, "d2"), (99, None)}
 
 
 class TestRuntimeBloomFilter:
@@ -193,70 +132,6 @@ class TestBucketedIncrementalStores:
 
 
 class TestZOrder:
-    def _file_ranges(self, path, cols):
-        """Per-parquet-file (min, max) of each column via footer stats."""
-        import glob
-
-        import pyarrow.parquet as pq
-
-        out = []
-        for f in sorted(glob.glob(f"{path}/part-*.parquet")):
-            md = pq.ParquetFile(f).metadata
-            mins = {c: None for c in cols}
-            maxs = {c: None for c in cols}
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for i in range(g.num_columns):
-                    col = g.column(i)
-                    name = col.path_in_schema
-                    if name in cols and col.statistics is not None:
-                        st = col.statistics
-                        mins[name] = st.min if mins[name] is None else min(mins[name], st.min)
-                        maxs[name] = st.max if maxs[name] is None else max(maxs[name], st.max)
-            out.append({c: (mins[c], maxs[c]) for c in cols})
-        return out
-
-    def _files_hit(self, ranges, col, lo, hi):
-        return sum(1 for r in ranges if not (r[col][1] < lo or r[col][0] > hi))
-
-    def test_zorder_layout_skips_files_on_both_dims(self, spark, tmp_path):
-        from data_engineering_hs_spark.catalog import load_table
-        from data_engineering_hs_spark.operators.scale import zorder_write
-
-        o = load_table(spark, SF001, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        naive = str(tmp_path / "naive")
-        zpath = str(tmp_path / "zorder")
-        # naive layout: same file count, orderkey-ranged (the default
-        # "however it arrived" layout a compaction would produce)
-        o.repartitionByRange(8, "o_orderkey").write.parquet(naive)
-        zorder_write(o, zpath, cols=["o_custkey", "o_totalprice"], n_files=8)
-
-        # same rows both layouts
-        assert spark.read.parquet(zpath).count() == o.count()
-
-        cols = ["o_custkey", "o_totalprice"]
-        nr = self._file_ranges(naive, cols)
-        zr = self._file_ranges(zpath, cols)
-        assert len(zr) == 8
-        # box predicate selective on BOTH dims: bottom ~quarter of each
-        ck_hi = o.agg(F.expr("percentile(o_custkey, 0.25)")).first()[0]
-        tp_hi = o.agg(F.expr("percentile(o_totalprice, 0.25)")).first()[0]
-        naive_hits = min(
-            self._files_hit(nr, "o_custkey", 0, ck_hi),
-            self._files_hit(nr, "o_totalprice", 0.0, tp_hi),
-        )
-        z_hits = min(
-            self._files_hit(zr, "o_custkey", 0, ck_hi),
-            self._files_hit(zr, "o_totalprice", 0.0, tp_hi),
-        )
-        # orderkey-ranged files are uncorrelated with custkey/price →
-        # every file intersects the box on at least one dim; z-order
-        # must prune strictly more
-        assert naive_hits == 8
-        assert z_hits < naive_hits
-
     def test_zvalue_interleave_known_bits(self, spark):
         from data_engineering_hs_spark.operators.scale import zvalue
 
@@ -270,9 +145,9 @@ class TestZOrder:
 
 class TestAqeSkewJoin:
     """AQE's skew-join split must actually fire on a pathological key
-    — the runtime complement to the explicit salted_join operator
-    (SCALE.md 'Joins'). Asserted on the FINAL adaptive plan: Spark
-    only marks SortMergeJoin(skew=true) after execution."""
+    — the engine's one skew fix (SCALE.md 'Joins'). Asserted on the
+    FINAL adaptive plan: Spark only marks SortMergeJoin(skew=true)
+    after execution."""
 
     CONFS = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -414,107 +289,3 @@ class TestIncrementalMaterializedView:
         assert not os.path.exists(os.path.join(dangling, "stray.parquet"))
         spark.sql("DROP TABLE IF EXISTS mvdb.t_mv_q")
         spark.sql("DROP DATABASE IF EXISTS mvdb")
-
-
-class TestOptimizeTable:
-    def test_optimize_compacts_and_zorders(self, spark, tmp_path):
-        import glob
-
-        import pyarrow.parquet as pq
-
-        from data_engineering_hs_spark.operators.scale import optimize_table
-
-        out = str(tmp_path / "t")
-        df = spark.range(20000).select(
-            F.col("id"),
-            (F.col("id") * 7919 % 1000).alias("a"),
-            (F.col("id") * 104729 % 1000).alias("b"),
-        )
-        # fragment: 40 tiny files
-        df.repartition(40).write.parquet(out)
-        assert len(glob.glob(out + "/*.parquet")) == 40
-        res = optimize_table(
-            spark, out, zorder_cols=["a", "b"], target_file_bytes=40 << 10
-        )
-        files = glob.glob(out + "/*.parquet")
-        assert res["files_after"] == len(files) < 40
-        # content identical
-        back = spark.read.parquet(out)
-        assert back.count() == 20000
-        assert back.agg(F.sum("id")).first()[0] == sum(range(20000))
-        # z-order clustering: per-file min/max ranges on BOTH columns
-        # must be tighter than the full [0, 1000) domain on average
-        spans_a, spans_b = [], []
-        for f in files:
-            md = pq.read_metadata(f)
-            lo_a = min(md.row_group(i).column(1).statistics.min
-                       for i in range(md.num_row_groups))
-            hi_a = max(md.row_group(i).column(1).statistics.max
-                       for i in range(md.num_row_groups))
-            lo_b = min(md.row_group(i).column(2).statistics.min
-                       for i in range(md.num_row_groups))
-            hi_b = max(md.row_group(i).column(2).statistics.max
-                       for i in range(md.num_row_groups))
-            spans_a.append(hi_a - lo_a)
-            spans_b.append(hi_b - lo_b)
-        assert sum(spans_a) / len(spans_a) < 900
-        assert sum(spans_b) / len(spans_b) < 900
-
-    def test_optimize_without_zorder_is_compaction(self, spark, tmp_path):
-        import glob
-
-        from data_engineering_hs_spark.operators.scale import optimize_table
-
-        out = str(tmp_path / "t2")
-        spark.range(5000).repartition(25).write.parquet(out)
-        res = optimize_table(spark, out)
-        assert res["files_before"] == 25
-        assert res["files_after"] < 25
-        assert spark.read.parquet(out).count() == 5000
-
-
-class TestScaleGuards:
-    def test_salted_join_rejects_outer(self, spark):
-        import pytest as _pytest
-
-        from data_engineering_hs_spark.operators.scale import salted_join
-
-        f = spark.createDataFrame([(1, "x")], "k long, v string")
-        d = spark.createDataFrame([(1, "d")], "k long, w string")
-        with _pytest.raises(ValueError, match="inner/left only"):
-            salted_join(f, d, "k", how="full")
-        with _pytest.raises(ValueError, match="inner/left only"):
-            salted_join(f, d, "k", how="right")
-
-    def test_zorder_write_rejects_string_columns(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from data_engineering_hs_spark.operators.scale import zorder_write
-
-        df = spark.createDataFrame(
-            [("de", 1.0)], "country string, amount double"
-        )
-        with _pytest.raises(TypeError, match="non-numeric"):
-            zorder_write(df, str(tmp_path / "z"), ["country", "amount"])
-
-    def test_optimize_table_recovers_from_leftover_old_dir(
-        self, spark, tmp_path
-    ):
-        import os
-
-        from data_engineering_hs_spark.operators.scale import optimize_table
-
-        path = str(tmp_path / "t")
-        spark.range(100).selectExpr(
-            "id", "cast(id % 7 as double) as a", "cast(id % 3 as double) as b"
-        ).write.parquet(path)
-        # leftover from a crash after the second rename
-        os.makedirs(path + ".__old")
-        with open(path + ".__old/junk", "w") as f:
-            f.write("x")
-        stats = optimize_table(
-            spark, path, zorder_cols=["a", "b"], target_file_bytes=1 << 20
-        )
-        assert stats["files_after"] >= 1
-        assert not os.path.exists(path + ".__old")
-        assert spark.read.parquet(path).count() == 100

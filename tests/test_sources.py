@@ -374,43 +374,9 @@ class TestEventsLoaderEncodings:
             assert _events_raw_ts_type(str(d)) == expect, unit
 
 
-class TestCompaction:
-    def test_many_small_files_compact_to_few(self, spark, tmp_path):
-        from data_engineering_hs_spark.sources.parquet import compact_parquet
-
-        path = str(tmp_path / "accreted")
-        # 30 single-row appends — the streaming-sink accretion pattern
-        # (each append may emit multiple part files depending on the
-        # range parallelism; the point is many tiny files)
-        for i in range(30):
-            spark.range(i, i + 1).write.mode("append").parquet(path)
-        before = spark.read.parquet(path)
-        expect = sorted(r.id for r in before.collect())
-
-        stats = compact_parquet(spark, path, target_file_bytes=1 << 30)
-        assert stats["files_before"] >= 30
-        assert stats["files_after"] == 1
-        after = spark.read.parquet(path)
-        assert sorted(r.id for r in after.collect()) == expect
-
-    def test_crash_safety_leaves_original(self, spark, tmp_path):
-        import os
-
-        from data_engineering_hs_spark.sources.parquet import compact_parquet
-
-        path = str(tmp_path / "t")
-        spark.range(100).write.parquet(path)
-        # a stale temp dir from a crashed run is simply overwritten
-        os.makedirs(path + ".__compact", exist_ok=True)
-        stats = compact_parquet(spark, path, target_file_bytes=1 << 30)
-        assert stats["files_after"] >= 1
-        assert not os.path.exists(path + ".__compact")
-        assert spark.read.parquet(path).count() == 100
-
-
 class TestSwapRecovery:
     """recover_swap must restore a complete dataset from every crash
-    state of the rename-aside protocol (compact_parquet /
+    state of the rename-aside protocol (compact_ingest_store /
     streaming_cdc_apply)."""
 
     def _mk(self, spark, d, rows):
@@ -459,127 +425,29 @@ class TestSwapRecovery:
         with _pytest.raises(FileNotFoundError):
             recover_swap(str(tmp_path / "absent"))
 
-    def test_swap_entry_points_reject_remote_paths(self, spark):
+    def test_swap_entry_points_reject_remote_paths(self, spark, tmp_path):
         # the swap is POSIX renames + os.listdir; a URI path must be
         # refused up front, not die mid-protocol after the rewrite
         import pytest as _pytest
 
-        from data_engineering_hs_spark.operators.scale import optimize_table
-        from data_engineering_hs_spark.sources.parquet import (
-            compact_parquet,
-            recover_swap,
+        from data_engineering_hs_spark.sources.parquet import recover_swap
+        from data_engineering_hs_spark.streaming.pipelines import (
+            compact_ingest_store,
+            streaming_cdc_apply,
         )
 
+        changes = spark.readStream.schema("k long, op string").parquet(
+            str(tmp_path)
+        )
         for call in (
-            lambda: compact_parquet(spark, "s3a://bucket/t"),
+            lambda: compact_ingest_store(spark, "s3a://bucket/t"),
             lambda: recover_swap("hdfs://nn/t"),
-            lambda: optimize_table(spark, "s3a://bucket/t", ["a"]),
+            lambda: streaming_cdc_apply(
+                changes, "s3a://bucket/t", str(tmp_path / "ckpt"), keys=["k"]
+            ),
         ):
             with _pytest.raises(ValueError, match="driver-local path"):
                 call()
-
-
-class TestDeleteKeysPartitioned:
-    def test_deletes_only_affected_partitions(self, spark, tmp_path):
-        import glob
-
-        from data_engineering_hs_spark.sources.parquet import (
-            delete_keys_partitioned,
-        )
-
-        path = str(tmp_path / "t")
-        rows = [(k, k % 3, f"u{k}") for k in range(30)]
-        spark.createDataFrame(rows, "k long, p int, v string").write.partitionBy(
-            "p"
-        ).parquet(path)
-        untouched = sorted(glob.glob(f"{path}/p=2/*.parquet"))
-        mtimes = [os.path.getmtime(f) for f in untouched]
-
-        # doom keys living only in partitions 0 and 1
-        doomed = spark.createDataFrame([(0,), (3,), (4,), (99,)], "k long")
-        stats = delete_keys_partitioned(spark, path, doomed, "k", "p")
-        assert stats == {"partitions_rewritten": 2, "rows_deleted": 3}
-
-        left = spark.read.parquet(path)
-        assert left.filter("k in (0, 3, 4)").count() == 0
-        assert left.count() == 27
-        # partition 2 files byte-untouched
-        assert sorted(glob.glob(f"{path}/p=2/*.parquet")) == untouched
-        assert [os.path.getmtime(f) for f in untouched] == mtimes
-
-    def test_fully_doomed_partition_is_dropped(self, spark, tmp_path):
-        from data_engineering_hs_spark.sources.parquet import (
-            delete_keys_partitioned,
-        )
-
-        path = str(tmp_path / "t")
-        spark.createDataFrame(
-            [(1, 0), (2, 0), (3, 1)], "k long, p int"
-        ).write.partitionBy("p").parquet(path)
-        doomed = spark.createDataFrame([(1,), (2,)], "k long")
-        stats = delete_keys_partitioned(spark, path, doomed, "k", "p")
-        assert stats["rows_deleted"] == 2
-        left = spark.read.parquet(path)
-        assert [r.k for r in left.collect()] == [3]
-        assert not os.path.exists(os.path.join(path, "p=0"))
-
-    def test_no_matching_keys_noop(self, spark, tmp_path):
-        from data_engineering_hs_spark.sources.parquet import (
-            delete_keys_partitioned,
-        )
-
-        path = str(tmp_path / "t")
-        spark.createDataFrame([(1, 0)], "k long, p int").write.partitionBy(
-            "p"
-        ).parquet(path)
-        doomed = spark.createDataFrame([(9,)], "k long")
-        assert delete_keys_partitioned(spark, path, doomed, "k", "p") == {
-            "partitions_rewritten": 0,
-            "rows_deleted": 0,
-        }
-
-
-class TestDeleteKeysPartitionedEdges:
-    def test_escaped_partition_value_fully_doomed(self, spark, tmp_path):
-        # timestamps in partition values get percent-escaped on disk
-        # (':' -> %3A) — a fully-doomed escaped partition must still
-        # be removed, not silently survive a hand-built path miss
-        from data_engineering_hs_spark.sources.parquet import (
-            delete_keys_partitioned,
-        )
-
-        path = str(tmp_path / "t_esc")
-        spark.createDataFrame(
-            [(1, "2024-01-01 10:00:00"), (2, "2024-02-02 11:30:00")],
-            "k long, p string",
-        ).write.partitionBy("p").parquet(path)
-        # sanity: the dir name really is escaped
-        assert any("%3A" in d for d in os.listdir(path))
-        doomed = spark.createDataFrame([(1,)], "k long")
-        stats = delete_keys_partitioned(spark, path, doomed, "k", "p")
-        assert stats["rows_deleted"] == 1
-        left = spark.read.parquet(path)
-        assert [r.k for r in left.collect()] == [2]
-        assert sum(d.startswith("p=") for d in os.listdir(path)) == 1
-
-    def test_null_partition_and_null_key(self, spark, tmp_path):
-        # a doomed NULL key must delete NULL-key rows, and a NULL
-        # partition value (__HIVE_DEFAULT_PARTITION__ dir) must be
-        # reachable by the delete
-        from data_engineering_hs_spark.sources.parquet import (
-            delete_keys_partitioned,
-        )
-
-        path = str(tmp_path / "t_null")
-        spark.createDataFrame(
-            [(1, "a"), (None, None), (3, None), (4, "b")],
-            "k long, p string",
-        ).write.partitionBy("p").parquet(path)
-        doomed = spark.createDataFrame([(None,), (1,)], "k long")
-        stats = delete_keys_partitioned(spark, path, doomed, "k", "p")
-        assert stats["rows_deleted"] == 2
-        left = spark.read.parquet(path)
-        assert sorted(r.k for r in left.collect()) == [3, 4]
 
 
 class TestUpsertEmptyTargetDir:

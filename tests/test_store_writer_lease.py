@@ -1,7 +1,8 @@
 """Single-writer lease on the path-based persistent stores (r16).
 
 The round-open race probe on pre-lease code: two barrier-released
-append_fingerprints of the same 100-row increment left **197 rows** —
+parquet appends of the same 100-row increment to one store left
+**197 rows** —
 duplicates from the double-commit AND rows LOST outright, because
 both jobs share `path/_temporary` and one FileOutputCommitter's
 cleanup deletes the other's in-flight task files. Not just growth:
@@ -12,11 +13,12 @@ kernel-owned, so a crashed writer's lease releases with its process
 descriptions even within one process, so two threads of one driver
 serialize the same as two drivers.
 
-Covered here: the lease primitive, every wired mutator failing loudly
-under a held lease (store untouched), the barrier-released torture
-race ending in a CLEAN state either way, release-on-completion,
-release-on-process-death, and the remote-URI documented-contract
-degrade.
+Covered here: the lease primitive, every wired mutator (ingest-store
+compaction, cell-store build and append, swap recovery) failing
+loudly under a held lease with the store untouched, barrier-released
+two-writer races ending in a CLEAN state either way,
+release-on-completion, release-on-process-death, and the remote-URI
+documented-contract degrade.
 """
 
 from __future__ import annotations
@@ -27,18 +29,41 @@ import sys
 import threading
 
 import pytest
-from pyspark.sql import functions as F
 
 from data_engineering_hs_spark.sources.parquet import (
     ConcurrentWriterError,
     _lease_file,
+    snapshot_data_files,
     store_writer_lease,
 )
 
 
-def _fp_increment(spark, lo: int, hi: int):
-    return spark.range(lo, hi).select(
-        F.col("id").alias("fingerprint")
+def _ingest_store(spark, path: str, n_batches: int = 3) -> None:
+    """A run-namespaced fingerprint store of n_batches batch
+    partitions, written by streaming_dedup_ingest's batch commit."""
+    from data_engineering_hs_spark.streaming.pipelines import (
+        _dedup_ingest_batch,
+    )
+
+    for b in range(n_batches):
+        docs = spark.createDataFrame(
+            [(b * 10 + i, f"doc {b} {i}") for i in range(5)],
+            "doc_id long, text string",
+        )
+        _dedup_ingest_batch(docs, b, path, path + "_sink", "text", "doc_id")
+
+
+def _vectors(spark, ids):
+    return spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in ids],
+        "vec_id long, embedding array<double>",
+    )
+
+
+def _centers(spark):
+    return spark.createDataFrame(
+        [(0, [0.0, 1.0]), (1, [8.0, 1.0])],
+        "label int, centroid array<double>",
     )
 
 
@@ -97,88 +122,65 @@ class TestLeasePrimitive:
 
 
 class TestMutatorsFailLoudUnderHeldLease:
-    def test_append_fingerprints_refused_store_untouched(
-        self, spark, tmp_path
-    ):
-        from data_engineering_hs_spark.operators.dedup import (
-            append_fingerprints,
+    def test_compaction_refused(self, spark, tmp_path):
+        from data_engineering_hs_spark.streaming.pipelines import (
+            compact_ingest_store,
         )
 
         store = str(tmp_path / "fp")
-        append_fingerprints(_fp_increment(spark, 0, 10), store)
+        _ingest_store(spark, store)
+        before = snapshot_data_files(store)
         with store_writer_lease(store, "other-writer"):
-            with pytest.raises(ConcurrentWriterError):
-                append_fingerprints(_fp_increment(spark, 10, 20), store)
-        assert spark.read.parquet(store).count() == 10
+            with pytest.raises(ConcurrentWriterError, match="other-writer"):
+                compact_ingest_store(spark, store)
+        assert snapshot_data_files(store) == before
         # lease released by the refused attempt's error path too
-        append_fingerprints(_fp_increment(spark, 10, 20), store)
-        assert spark.read.parquet(store).count() == 20
+        out = compact_ingest_store(spark, store)
+        assert out["partitions_after"] < out["partitions_before"]
+        assert spark.read.parquet(store).count() == 15
 
-    def test_append_lsh_bands_refused(self, spark, tmp_path):
-        from data_engineering_hs_spark.operators.dedup import (
-            append_lsh_bands,
+    def test_build_cell_store_refused(self, spark, tmp_path):
+        from data_engineering_hs_spark.operators.similarity import (
+            build_ivf_store,
         )
 
-        store = str(tmp_path / "bands")
-        bands = spark.createDataFrame(
-            [(1, 0, 123)], "id long, band int, bucket long"
-        )
-        with store_writer_lease(store, "compaction"):
+        store = str(tmp_path / "ivf")
+        with store_writer_lease(store, "maintenance"):
             with pytest.raises(ConcurrentWriterError):
-                append_lsh_bands(bands, store)
+                build_ivf_store(_vectors(spark, range(8)), _centers(spark), store)
         assert not os.path.isdir(store)
-        append_lsh_bands(bands, store)
-        assert spark.read.parquet(store).count() == 1
+        build_ivf_store(_vectors(spark, range(8)), _centers(spark), store)
+        assert spark.read.parquet(store).count() == 8
 
-    def test_compact_parquet_refused_under_append_lease(
-        self, spark, tmp_path
-    ):
-        from data_engineering_hs_spark.sources.parquet import (
-            compact_parquet,
-        )
+    def test_recover_swap_refused(self, spark, tmp_path):
+        from data_engineering_hs_spark.sources.parquet import recover_swap
 
         store = str(tmp_path / "t")
-        for lo in (0, 10):
-            _fp_increment(spark, lo, lo + 10).write.mode(
-                "append"
-            ).parquet(store)
-        with store_writer_lease(store, "append_fingerprints"):
+        spark.range(10).write.parquet(store)
+        os.makedirs(store + ".__old")  # a finished swap's leftover
+        with store_writer_lease(store, "compact_ingest_store"):
             with pytest.raises(ConcurrentWriterError):
-                compact_parquet(spark, store)
-        out = compact_parquet(spark, store)
-        assert out["files_after"] <= out["files_before"]
-        assert spark.read.parquet(store).count() == 20
+                recover_swap(store)
+        assert os.path.isdir(store + ".__old")
+        assert recover_swap(store) == "intact"
+        assert not os.path.exists(store + ".__old")
+        assert spark.read.parquet(store).count() == 10
 
-    def test_cell_store_append_and_compact_refused(
-        self, spark, tmp_path
-    ):
+    def test_cell_store_append_refused(self, spark, tmp_path):
         from data_engineering_hs_spark.operators.similarity import (
             append_to_cell_store,
             build_ivf_store,
-            compact_cell_store,
         )
 
-        corpus = spark.createDataFrame(
-            [(i, [float(i), 1.0]) for i in range(8)],
-            "vec_id long, embedding array<double>",
-        )
-        centers = spark.createDataFrame(
-            [(0, [0.0, 1.0]), (1, [8.0, 1.0])],
-            "label int, centroid array<double>",
-        )
+        centers = _centers(spark)
         store = str(tmp_path / "ivf")
-        build_ivf_store(corpus, centers, store)
-        inc = spark.createDataFrame(
-            [(100, [3.0, 1.0])], "vec_id long, embedding array<double>"
-        )
+        build_ivf_store(_vectors(spark, range(8)), centers, store)
+        inc = _vectors(spark, [100])
         with store_writer_lease(store, "maintenance"):
             with pytest.raises(ConcurrentWriterError):
                 append_to_cell_store(inc, centers, store)
-            with pytest.raises(ConcurrentWriterError):
-                compact_cell_store(spark, store)
-        # post-release both work; content is the clean union
+        # post-release the append works; content is the clean union
         append_to_cell_store(inc, centers, store)
-        compact_cell_store(spark, store)
         got = sorted(
             r[0]
             for r in spark.read.parquet(store).select("vec_id").collect()
@@ -186,100 +188,98 @@ class TestMutatorsFailLoudUnderHeldLease:
         assert got == [*range(8), 100]
 
 
+def _race(*fns) -> list[str]:
+    """Release fns from one barrier on their own threads; each
+    outcome is "done" or "refused" (ConcurrentWriterError) — any
+    other error fails the test."""
+    bar = threading.Barrier(len(fns))
+    outcomes: list[str] = [""] * len(fns)
+
+    def run(i, fn):
+        bar.wait()
+        try:
+            fn()
+            outcomes[i] = "done"
+        except ConcurrentWriterError:
+            outcomes[i] = "refused"
+        except Exception as e:  # noqa: BLE001 — reported by the assert below
+            outcomes[i] = f"error: {e!r}"
+
+    threads = [
+        threading.Thread(target=run, args=(i, fn)) for i, fn in enumerate(fns)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+        assert not t.is_alive(), "racing writer did not finish"
+    assert set(outcomes) <= {"done", "refused"}, outcomes
+    return outcomes
+
+
 class TestTortureRace:
     def test_barrier_released_double_append_ends_clean(
         self, spark, tmp_path
     ):
         """The round-open probe shape, now under enforcement. Two
-        threads release from a barrier into append_fingerprints of
-        the SAME 100-row increment. Any interleaving must end CLEAN:
-        each append either fully committed or was refused with
-        ConcurrentWriterError — never the pre-lease 197-row state
-        (duplicates + lost task files)."""
-        from data_engineering_hs_spark.operators.dedup import (
-            append_fingerprints,
+        threads release from a barrier into append_to_cell_store of
+        two increments. Any interleaving must end CLEAN: each append
+        either fully committed or was refused with
+        ConcurrentWriterError — rows and the corpus stamp both hold
+        exactly the committed increments (no duplicates, no lost task
+        files, no lost stamp fold)."""
+        import json
+
+        from data_engineering_hs_spark.operators.similarity import (
+            append_to_cell_store,
+            build_ivf_store,
         )
 
-        store = str(tmp_path / "fp")
-        inc = _fp_increment(spark, 0, 100).localCheckpoint(eager=True)
-        bar = threading.Barrier(2)
-        outcomes: list[str] = []
-        lock = threading.Lock()
-
-        def writer():
-            bar.wait()
-            try:
-                append_fingerprints(inc, store)
-                res = "committed"
-            except ConcurrentWriterError:
-                res = "refused"
-            with lock:
-                outcomes.append(res)
-
-        threads = [threading.Thread(target=writer) for _ in range(2)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        committed = outcomes.count("committed")
-        assert committed >= 1, outcomes
-        df = spark.read.parquet(store)
-        n, d = df.count(), df.distinct().count()
-        # rows = 100 per committed writer, all 100 values present,
-        # nothing torn — regardless of whether the race overlapped
-        # (one refused) or serialized (both committed)
-        assert d == 100
-        assert n == 100 * committed, (n, outcomes)
-
-    def test_append_racing_compaction_ends_clean(self, spark, tmp_path):
-        """Append vs compact_parquet from a barrier: with the lease,
-        one side fails up front with ConcurrentWriterError (or they
-        serialize); either way the store ends with EXACTLY the
-        committed increments — no stranded batch in a parked dir, no
-        partial _temporary debris counted as data."""
-        from data_engineering_hs_spark.operators.dedup import (
-            append_fingerprints,
-        )
-        from data_engineering_hs_spark.sources.parquet import (
-            compact_parquet,
-        )
-
-        store = str(tmp_path / "fp")
-        append_fingerprints(_fp_increment(spark, 0, 50), store)
-        inc = _fp_increment(spark, 50, 100).localCheckpoint(eager=True)
-        bar = threading.Barrier(2)
-        outcomes: dict[str, str] = {}
-
-        def appender():
-            bar.wait()
-            try:
-                append_fingerprints(inc, store)
-                outcomes["append"] = "committed"
-            except ConcurrentWriterError:
-                outcomes["append"] = "refused"
-
-        def compactor():
-            bar.wait()
-            try:
-                compact_parquet(spark, store)
-                outcomes["compact"] = "done"
-            except ConcurrentWriterError:
-                outcomes["compact"] = "refused"
-
-        threads = [
-            threading.Thread(target=appender),
-            threading.Thread(target=compactor),
+        centers = _centers(spark)
+        store = str(tmp_path / "ivf")
+        build_ivf_store(_vectors(spark, range(8)), centers, store)
+        incs = [
+            _vectors(spark, range(lo, lo + 50)).localCheckpoint(eager=True)
+            for lo in (100, 200)
         ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        assert set(outcomes) == {"append", "compact"}
-        df = spark.read.parquet(store)
-        expect = 100 if outcomes["append"] == "committed" else 50
-        assert df.count() == expect, outcomes
-        assert df.distinct().count() == expect
-        # no stranded parked/staging dirs left behind
+        outcomes = _race(
+            *[lambda inc=inc: append_to_cell_store(inc, centers, store)
+              for inc in incs]
+        )
+        assert "done" in outcomes, outcomes
+        want = set(range(8))
+        for inc, res in zip(incs, outcomes):
+            if res == "done":
+                want |= {r[0] for r in inc.select("vec_id").collect()}
+        ids = [r[0] for r in spark.read.parquet(store).select("vec_id").collect()]
+        assert sorted(ids) == sorted(want), outcomes
+        with open(os.path.join(store, "_store_meta.json")) as fh:
+            assert json.load(fh)["corpus_n"] == len(want)
+
+    def test_two_compactions_race_ends_clean(self, spark, tmp_path):
+        """Two compactions of one ingest store from a barrier: with
+        the lease, one fails up front with ConcurrentWriterError (or
+        they serialize); either way the store ends with EXACTLY its
+        rows — no stranded parked/staging dir, no partial _temporary
+        debris counted as data."""
+        from data_engineering_hs_spark.streaming.pipelines import (
+            compact_ingest_store,
+        )
+
+        store = str(tmp_path / "fp")
+        _ingest_store(spark, store)
+        before = sorted(
+            r[0] for r in spark.read.parquet(store).select("fingerprint").collect()
+        )
+        outcomes = _race(
+            lambda: compact_ingest_store(spark, store),
+            lambda: compact_ingest_store(spark, store),
+        )
+        assert "done" in outcomes, outcomes
+        after = sorted(
+            r[0] for r in spark.read.parquet(store).select("fingerprint").collect()
+        )
+        assert after == before, outcomes
         leftovers = [
             d
             for d in os.listdir(str(tmp_path))

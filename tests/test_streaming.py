@@ -322,67 +322,6 @@ class TestStreamingDedupIngest:
         healed = spark.read.parquet(store).filter(F.col("batch_id") == 0)
         assert healed.count() == 2
 
-    def test_legacy_flat_store_migrates_before_partitioned_write(
-        self, spark, tmp_path
-    ):
-        # a pre-partitioning store (root-level parquet from
-        # append_fingerprints) mixed with batch_id=N/ dirs wedges
-        # partition discovery permanently — the batch prep must
-        # migrate root files into batch_id=-1 first, and the legacy
-        # fingerprints must keep deduplicating
-        import os as _os
-
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T2
-
-        from data_engineering_hs_spark.operators.dedup import (
-            append_fingerprints,
-            fingerprint64,
-            read_fingerprint_store,
-        )
-        from data_engineering_hs_spark.streaming.pipelines import (
-            _dedup_ingest_batch,
-        )
-
-        schema = T2.StructType(
-            [
-                T2.StructField("doc_id", T2.LongType()),
-                T2.StructField("text", T2.StringType()),
-            ]
-        )
-        store = str(tmp_path / "fp_store_legacy")
-        sink = str(tmp_path / "corpus_legacy")
-        seen = spark.createDataFrame([(0, "alpha beta")], schema)
-        append_fingerprints(
-            seen.select(fingerprint64("text").alias("fingerprint")), store
-        )
-        # batch 0 re-sends the legacy doc plus a new one
-        batch0 = spark.createDataFrame(
-            [(1, "alpha beta"), (2, "gamma delta")], schema
-        )
-        _dedup_ingest_batch(batch0, 0, store, sink, "text", "doc_id")
-        # legacy print still deduplicates: only doc 2 survives
-        assert sorted(
-            r.doc_id for r in spark.read.parquet(sink).collect()
-        ) == [2]
-        # the store reads cleanly (no conflicting-layout wedge) and the
-        # legacy print lives in run=legacy/batch_id=-1, no root files
-        st = read_fingerprint_store(spark, store)
-        by_part = {
-            (r["run"], r["batch_id"]): r["n"]
-            for r in st.groupBy("run", "batch_id")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        assert by_part == {("legacy", -1): 1, ("main", 0): 1}
-        root_files = [
-            f
-            for f in _os.listdir(store)
-            if _os.path.isfile(_os.path.join(store, f))
-            and not f.startswith(("_", "."))
-        ]
-        assert root_files == []
-
     def test_wiped_checkpoint_same_run_refused_fresh_run_writes_beside(
         self, spark, tmp_path
     ):
@@ -507,12 +446,11 @@ class TestStreamingDedupIngest:
         with pytest.raises(ValueError, match="driver-local path"):
             compact_ingest_store(spark, "s3a://bucket/store")
 
-    def test_compact_ingest_store_salted_hot_partition(
+    def test_compact_ingest_store_hot_partition_is_one_file(
         self, spark, tmp_path
     ):
-        # files_per_partition > 1 salts the consolidated partition's
-        # write so one hot partition doesn't serialize behind a single
-        # task/file — same rows, bounded file count
+        # the consolidated partition collects every earlier batch and
+        # is written by one task: one file, same rows
         import os
 
         from pyspark.sql import types as T2
@@ -528,204 +466,21 @@ class TestStreamingDedupIngest:
                 T2.StructField("text", T2.StringType()),
             ]
         )
-        store = str(tmp_path / "fp_salted")
-        sink = str(tmp_path / "corpus_salted")
+        store = str(tmp_path / "fp_hot")
+        sink = str(tmp_path / "corpus_hot")
         for b in range(4):
             batch = spark.createDataFrame(
                 [(b * 10 + i, f"doc {b} {i}") for i in range(10)], schema
             )
             _dedup_ingest_batch(batch, b, store, sink, "text", "doc_id")
         pre = sorted(r.fingerprint for r in spark.read.parquet(store).collect())
-        st = compact_ingest_store(spark, store, files_per_partition=3)
+        st = compact_ingest_store(spark, store)
         assert st["partitions_after"] == 2  # max batch + consolidated
         comp_dir = os.path.join(store, "run=compacted", "batch_id=-1")
         files = [f for f in os.listdir(comp_dir) if f.endswith(".parquet")]
-        assert 1 <= len(files) <= 3
+        assert len(files) == 1
         post = sorted(r.fingerprint for r in spark.read.parquet(store).collect())
         assert post == pre
-
-    def test_compact_ingest_store_migrates_legacy_first(
-        self, spark, tmp_path
-    ):
-        # a pre-namespace store (bare batch_id=N dirs + root files)
-        # compacts instead of wedging on conflicting directory
-        # structures: migration runs first, then the merge
-        from pyspark.sql import types as T2
-
-        from data_engineering_hs_spark.streaming.pipelines import (
-            _dedup_ingest_batch,
-            compact_ingest_store,
-        )
-
-        store = str(tmp_path / "fp_legacy_compact")
-        sink = str(tmp_path / "corpus_legacy_compact")
-        schema = "fingerprint long"
-        # legacy generation 1: root-level files
-        spark.createDataFrame([(111,)], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(store)
-        # legacy generation 2: bare batch_id dirs
-        spark.createDataFrame([(222,)], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(store + "/batch_id=0")
-        spark.createDataFrame([(333,)], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(store + "/batch_id=1")
-        st = compact_ingest_store(spark, store)
-        assert st["partitions_after"] <= 2  # legacy max + consolidated
-        got = sorted(r.fingerprint for r in spark.read.parquet(store).collect())
-        assert got == [111, 222, 333]
-        # and the compacted store still serves an ordinary batch
-        batch = spark.createDataFrame(
-            [(1, "one"), (2, "two")],
-            T2.StructType(
-                [
-                    T2.StructField("doc_id", T2.LongType()),
-                    T2.StructField("text", T2.StringType()),
-                ]
-            ),
-        )
-        _dedup_ingest_batch(batch, 0, store, sink, "text", "doc_id")
-        assert sorted(
-            r.doc_id for r in spark.read.parquet(sink).collect()
-        ) == [1, 2]
-
-    def test_retire_runs_folds_closed_runs(self, spark, tmp_path):
-        # compact keeps each historical run's max partition forever;
-        # retire_runs folds named CLOSED runs in — behind the explicit
-        # gone-for-good assertion, with typo protection, and without
-        # touching live runs' invariants or any content
-        import os
-
-        import pytest
-        from pyspark.sql import types as T2
-
-        from data_engineering_hs_spark.streaming.pipelines import (
-            _dedup_ingest_batch,
-            _run_namespace,
-            retire_runs,
-        )
-
-        schema = T2.StructType(
-            [
-                T2.StructField("doc_id", T2.LongType()),
-                T2.StructField("text", T2.StringType()),
-            ]
-        )
-        store = str(tmp_path / "fp_retire")
-        sink = str(tmp_path / "corpus_retire")
-        mk = lambda rows: spark.createDataFrame(rows, schema)
-        # live run "main": two batches; two abandoned runs
-        _dedup_ingest_batch(mk([(1, "alpha")]), 0, store, sink, "text", "doc_id")
-        _dedup_ingest_batch(mk([(2, "beta")]), 1, store, sink, "text", "doc_id")
-        old_ckpt = str(tmp_path / "old_ckpt")
-        old_ns = _run_namespace(old_ckpt)
-        _dedup_ingest_batch(mk([(3, "gamma")]), 0, store, sink, "text", "doc_id", run_ns=old_ns)
-        _dedup_ingest_batch(mk([(4, "delta")]), 0, store, sink, "text", "doc_id", run_ns="dead")
-        pre_fp = sorted(r.fingerprint for r in spark.read.parquet(store).collect())
-        pre_ids = sorted(r.doc_id for r in spark.read.parquet(sink).collect())
-
-        # the assertion flag is mandatory
-        with pytest.raises(ValueError, match="gone for good"):
-            retire_runs(spark, store, runs=["dead"])
-        # naming no run, the fold target, or an absent run is loud
-        with pytest.raises(ValueError, match="at least one run"):
-            retire_runs(spark, store, checkpoints_gone_for_good=True)
-        with pytest.raises(ValueError, match="fold target"):
-            retire_runs(
-                spark, store, runs=["compacted"],
-                checkpoints_gone_for_good=True,
-            )
-        with pytest.raises(ValueError, match="not present"):
-            retire_runs(
-                spark, store, runs=["nope"], checkpoints_gone_for_good=True
-            )
-
-        for path in (store, sink):
-            st = retire_runs(
-                spark,
-                path,
-                checkpoint_dirs=[old_ckpt],
-                runs=["dead"],
-                checkpoints_gone_for_good=True,
-            )
-            assert sorted(st["runs_retired"]) == sorted({old_ns, "dead"})
-            # surviving partitions: main's max + consolidated
-            assert st["partitions_after"] == 2
-            run_dirs = {d for d in os.listdir(path) if d.startswith("run=")}
-            assert run_dirs == {"run=main", "run=compacted"}
-        # content unchanged
-        assert sorted(
-            r.fingerprint for r in spark.read.parquet(store).collect()
-        ) == pre_fp
-        assert sorted(
-            r.doc_id for r in spark.read.parquet(sink).collect()
-        ) == pre_ids
-        # the LIVE run's invariants survive: last-batch replay is
-        # byte-identical, wiped-in-place restart still refused, and
-        # cross-run dedup sees the folded runs' fingerprints
-        _dedup_ingest_batch(mk([(2, "beta")]), 1, store, sink, "text", "doc_id")
-        assert sorted(
-            r.doc_id for r in spark.read.parquet(sink).collect()
-        ) == pre_ids
-        with pytest.raises(RuntimeError, match="wiped in place"):
-            _dedup_ingest_batch(mk([(9, "x")]), 0, store, sink, "text", "doc_id")
-        _dedup_ingest_batch(
-            mk([(5, "gamma"), (6, "eta")]), 2, store, sink, "text", "doc_id"
-        )
-        assert sorted(
-            r.doc_id for r in spark.read.parquet(sink).collect()
-        ) == pre_ids + [6]
-        # remote paths refused like every swap caller
-        with pytest.raises(ValueError, match="driver-local path"):
-            retire_runs(
-                spark, "s3a://bucket/store", runs=["dead"],
-                checkpoints_gone_for_good=True,
-            )
-
-    def test_retire_runs_escaped_run_names(self, spark, tmp_path):
-        # r13 pin (ADVICE r12): Spark URI-escapes partition values on
-        # write (run=a:b → run=a%3Ab on disk), but the typo-protection
-        # presence check compared RAW os.listdir names — a run value
-        # with any special character always tripped the 'not present'
-        # ValueError despite existing. Presence now compares unescaped
-        # values. Run namespaces are hex today; runs= is caller input.
-        import os
-
-        from pyspark.sql import types as T2
-
-        from data_engineering_hs_spark.streaming.pipelines import (
-            _dedup_ingest_batch,
-            retire_runs,
-        )
-
-        schema = T2.StructType(
-            [
-                T2.StructField("doc_id", T2.LongType()),
-                T2.StructField("text", T2.StringType()),
-            ]
-        )
-        store = str(tmp_path / "fp_esc")
-        sink = str(tmp_path / "corpus_esc")
-        mk = lambda rows: spark.createDataFrame(rows, schema)
-        weird = "a:b täst"  # ':' and non-ASCII both escape on disk
-        _dedup_ingest_batch(mk([(1, "alpha")]), 0, store, sink, "text", "doc_id")
-        _dedup_ingest_batch(
-            mk([(2, "beta")]), 0, store, sink, "text", "doc_id", run_ns=weird
-        )
-        # the raw directory name is escaped — the precondition that
-        # made the old check wrong
-        assert not any(
-            d == f"run={weird}" for d in os.listdir(store)
-        ), "expected Spark to escape the partition value on disk"
-        st = retire_runs(
-            spark, store, runs=[weird], checkpoints_gone_for_good=True
-        )
-        assert st["runs_retired"] == [weird]
-        run_dirs = {d for d in os.listdir(store) if d.startswith("run=")}
-        assert run_dirs == {"run=main", "run=compacted"}
-        # both runs' fingerprints survive the fold
-        assert spark.read.parquet(store).select("fingerprint").distinct().count() == 2
 
     def test_reserved_partition_column_names_rejected(self, spark, tmp_path):
         # a batch already carrying run/batch_id columns would have
@@ -931,56 +686,6 @@ class TestStreamingCdcApply:
         assert q3.awaitTermination(300), 'stream drain timed out'
         got3 = sorted((r.k, r.v) for r in spark.read.parquet(table).collect())
         assert got3 == [(1, "a"), (2, "B2"), (5, "e")]
-
-
-class TestProgressSummary:
-    def test_summary_of_bounded_drain(self, spark, tmp_path):
-        import datetime as dt
-
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        from data_engineering_hs_spark.streaming.pipelines import (
-            progress_summary,
-        )
-
-        src = str(tmp_path / "src")
-        schema = T.StructType(
-            [
-                T.StructField("k", T.IntegerType()),
-                T.StructField("ts", T.TimestampType()),
-            ]
-        )
-        t0 = dt.datetime(2025, 3, 1, 12, 0, 0)
-        spark.createDataFrame(
-            [(i, t0 + dt.timedelta(minutes=i)) for i in range(100)], schema
-        ).coalesce(1).write.parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-        agg = (
-            stream.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "30 minutes"))
-            .agg(F.count("*").alias("n"))
-        )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("prog_t")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        s = progress_summary(q)
-        assert s["n_batches"] >= 1
-        assert s["rows_total"] == 100
-        assert s["peak_rows_per_sec"] > 0
-        assert s["total_batch_ms"] > 0
-        # watermark semantics: progress reports the watermark IN
-        # EFFECT for that batch, which lags the data by one trigger —
-        # a single-batch drain therefore reports the epoch, not
-        # max(ts)-10min. The summary surfaces whatever the engine
-        # reports; presence is the contract here.
-        assert s["last_watermark"] is not None
-        q.stop()
 
 
 class TestStreamingCdcApplyEdges:

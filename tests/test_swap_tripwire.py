@@ -1,12 +1,12 @@
 """Pre-swap concurrent-writer tripwire (r13, verdict item): the
-compaction family (compact_parquet, compact_ingest_store,
-retire_runs, compact_cell_store) documents 'never concurrent with an
-active writer', but before this check a batch committed between the
-staging read and the rename SILENTLY VANISHED in the swap. Each test
-injects a commit into the exact race window via the
-sources.parquet._pre_swap_test_hook seam and asserts: loud
-RuntimeError, live store untouched (interloper's data included), no
-staged-tmp or .__old debris left behind."""
+swap family (compact_ingest_store, streaming_cdc_apply's merge)
+documents 'never concurrent with an active writer', but before this
+check a batch committed between the staging read and the rename
+SILENTLY VANISHED in the swap. Each test injects a commit into the
+exact race window via the sources.parquet._pre_swap_test_hook (or,
+for the post-park check, _post_check_test_hook) seam and asserts:
+loud RuntimeError, live store untouched (interloper's data included),
+no staged-tmp or .__old debris left behind."""
 
 from __future__ import annotations
 
@@ -15,9 +15,16 @@ import os
 import shutil
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_engineering_hs_spark.sources import parquet as pq_mod
+
+_DOCS = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("text", T.StringType()),
+    ]
+)
 
 
 def _inject_copy_of_existing_file(store: str) -> None:
@@ -46,51 +53,60 @@ def hook():
 
 def _no_debris(store: str) -> bool:
     norm = store.rstrip("/")
-    return not os.path.exists(norm + ".__compact") and not os.path.exists(
-        norm + ".__old"
+    return not any(
+        os.path.exists(norm + s) for s in (".__compact", ".__merge", ".__old")
     )
 
 
 class TestSwapTripwire:
-    def test_compact_parquet_aborts_and_preserves_commit(
+    def test_streaming_cdc_apply_aborts_and_preserves_commit(
         self, spark, tmp_path, hook
     ):
-        store = str(tmp_path / "flat")
-        spark.range(100).repartition(4).write.parquet(store)
+        from data_engineering_hs_spark.streaming.pipelines import (
+            streaming_cdc_apply,
+        )
+
+        schema = "k long, v string, op string"
+        table = str(tmp_path / "tbl")
+        src = str(tmp_path / "changes")
+        spark.range(100).selectExpr("id AS k", "'v' AS v").repartition(
+            4
+        ).write.parquet(table)
+        spark.createDataFrame([(1, "x", "update")], schema).write.parquet(src)
+
+        def run(ckpt):
+            q = streaming_cdc_apply(
+                spark.readStream.schema(schema).parquet(src),
+                table, str(tmp_path / ckpt), keys=["k"],
+            )
+            assert q.awaitTermination(300), "stream drain timed out"
+
         hook(_inject_copy_of_existing_file)
-        with pytest.raises(RuntimeError, match="concurrent writer"):
-            pq_mod.compact_parquet(spark, store, target_file_bytes=1 << 30)
-        # live store intact INCLUDING the interloper's file; no debris
-        assert spark.read.parquet(store).count() > 100
-        assert _no_debris(store)
-        # disarmed, the same compaction succeeds
+        with pytest.raises(Exception, match="concurrent writer"):
+            run("ckpt")
+        # live table intact INCLUDING the interloper's file; no debris
+        assert spark.read.parquet(table).count() > 100
+        assert _no_debris(table)
+        # disarmed, the same merge applies
         pq_mod._pre_swap_test_hook = None
-        st = pq_mod.compact_parquet(spark, store, target_file_bytes=1 << 30)
-        assert st["files_after"] == 1
+        run("ckpt2")
+        assert spark.read.parquet(table).filter("k = 1 AND v = 'x'").count() >= 1
+        assert _no_debris(table)
 
     def test_compact_ingest_store_aborts_on_mid_compaction_batch(
         self, spark, tmp_path, hook
     ):
-        from pyspark.sql import types as T2
-
         from data_engineering_hs_spark.streaming.pipelines import (
             _dedup_ingest_batch,
             compact_ingest_store,
-            retire_runs,
         )
 
-        schema = T2.StructType(
-            [
-                T2.StructField("doc_id", T2.LongType()),
-                T2.StructField("text", T2.StringType()),
-            ]
-        )
         store = str(tmp_path / "fp")
         sink = str(tmp_path / "corpus")
-        mk = lambda rows: spark.createDataFrame(rows, schema)
+        mk = lambda rows: spark.createDataFrame(rows, _DOCS)
         _dedup_ingest_batch(mk([(1, "alpha")]), 0, store, sink, "text", "doc_id")
         _dedup_ingest_batch(mk([(2, "beta")]), 1, store, sink, "text", "doc_id")
-        _dedup_ingest_batch(mk([(3, "gamma")]), 0, store, sink, "text", "doc_id", run_ns="dead")
+        _dedup_ingest_batch(mk([(3, "gamma")]), 0, store, sink, "text", "doc_id", run_ns="other")
         pre = sorted(r.fingerprint for r in spark.read.parquet(store).collect())
 
         # a trigger commits batch 2 inside the race window
@@ -106,24 +122,12 @@ class TestSwapTripwire:
         post = sorted(r.fingerprint for r in spark.read.parquet(store).collect())
         assert len(post) == len(pre) + 1 and set(pre) <= set(post)
         assert _no_debris(store)
-
-        # retire_runs goes through the same guarded swap
-        hook(commit_batch)
-        with pytest.raises(RuntimeError, match="concurrent writer"):
-            retire_runs(
-                spark, store, runs=["dead"], checkpoints_gone_for_good=True
-            )
-        assert _no_debris(store)
-        # disarmed, both succeed on the (now larger) store
+        # disarmed, the compaction succeeds on the (now larger) store
         pq_mod._pre_swap_test_hook = None
-        st = retire_runs(
-            spark, store, runs=["dead"], checkpoints_gone_for_good=True
-        )
-        assert st["runs_retired"] == ["dead"]
+        st = compact_ingest_store(spark, store)
+        assert st["partitions_after"] < st["partitions_before"]
         final = sorted(r.fingerprint for r in spark.read.parquet(store).collect())
-        # the second injected commit REPLAYS batch 2 (idempotent — no
-        # new fingerprint); retirement folds, never drops content
-        assert len(final) == len(pre) + 1
+        assert final == post
 
     def test_post_park_verification_rolls_back_late_commit(
         self, spark, tmp_path
@@ -135,44 +139,30 @@ class TestSwapTripwire:
         # injects a commit into exactly that residual window via the
         # _post_check_test_hook seam and asserts the swap rolls back
         # with the late batch alive.
-        store = str(tmp_path / "flat")
-        spark.range(100).repartition(4).write.parquet(store)
+        from data_engineering_hs_spark.streaming.pipelines import (
+            _dedup_ingest_batch,
+            compact_ingest_store,
+        )
 
-        def late_commit(path):
-            _inject_copy_of_existing_file(path)
+        store = str(tmp_path / "fp")
+        sink = str(tmp_path / "corpus")
+        for b in range(3):
+            _dedup_ingest_batch(
+                spark.createDataFrame([(b, f"doc {b}")], _DOCS),
+                b, store, sink, "text", "doc_id",
+            )
+        n0 = spark.read.parquet(store).count()
 
-        pq_mod._post_check_test_hook = late_commit
+        pq_mod._post_check_test_hook = _inject_copy_of_existing_file
         try:
             with pytest.raises(RuntimeError, match="Rolled back"):
-                pq_mod.compact_parquet(spark, store, target_file_bytes=1 << 30)
+                compact_ingest_store(spark, store)
         finally:
             pq_mod._post_check_test_hook = None
         # live store restored INCLUDING the late commit; no debris
-        assert spark.read.parquet(store).count() > 100
+        assert spark.read.parquet(store).count() == n0 + 1
         assert _no_debris(store)
         # disarmed, the same compaction succeeds and keeps every row
-        n_before = spark.read.parquet(store).count()
-        st = pq_mod.compact_parquet(spark, store, target_file_bytes=1 << 30)
-        assert st["files_after"] == 1
-        assert spark.read.parquet(store).count() == n_before
-
-    def test_compact_cell_store_aborts_on_concurrent_append(
-        self, spark, tmp_path, hook
-    ):
-        from data_engineering_hs_spark.operators.similarity import (
-            build_ivf_store,
-            centroids,
-            compact_cell_store,
-        )
-
-        emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-        store = str(tmp_path / "cells")
-        build_ivf_store(emb, centroids(emb), store)
-        n0 = spark.read.parquet(store).count()
-        hook(_inject_copy_of_existing_file)
-        with pytest.raises(RuntimeError, match="concurrent writer"):
-            compact_cell_store(spark, store)
-        assert _no_debris(store)
-        # sidecar meta untouched and store still readable
-        assert os.path.exists(os.path.join(store, "_store_meta.json"))
-        assert spark.read.parquet(store).count() > n0
+        st = compact_ingest_store(spark, store)
+        assert st["partitions_after"] < st["partitions_before"]
+        assert spark.read.parquet(store).count() == n0 + 1

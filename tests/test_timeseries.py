@@ -1,11 +1,10 @@
-"""Unit tests for resample / fill_forward / interpolate_linear."""
+"""Unit tests for resample / interpolate_linear."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from data_engineering_hs_spark.operators.timeseries import (
-    fill_forward,
     interpolate_linear,
     resample,
 )
@@ -62,14 +61,6 @@ class TestResample:
         assert out[("a", 10)] == 20.0 and out[("a", 20)] == 30.0
         assert out[("a", 40)] == 40.0
         assert out[("b", 0)] == 7.0
-
-    def test_fill_forward(self, spark):
-        df = spark.createDataFrame(
-            [("a", 0, 1.0), ("a", 1, None), ("a", 2, None), ("a", 3, 4.0)],
-            ["k", "ts", "v"],
-        )
-        out = [r["v"] for r in fill_forward(df, "ts", "v", ["k"]).orderBy("ts").collect()]
-        assert out == [1.0, 1.0, 1.0, 4.0]
 
     def test_interpolate_reuses_one_exchange(self, spark):
         # both window passes partition on the same key → one shuffle
