@@ -377,10 +377,6 @@ def load_table(
     return _with_scan_parallel(df)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view for spark.sql use."""
     for name in TESTDATA_TABLES:

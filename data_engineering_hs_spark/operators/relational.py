@@ -61,11 +61,6 @@ def mode_of(df: DataFrame, col: str, tiebreak_asc: bool = True) -> DataFrame:
     )
 
 
-def dedup(df: DataFrame, keys: Sequence[str] | None = None) -> DataFrame:
-    """DISTINCT / dropDuplicates (lab03/sql/script1.sql:13)."""
-    return df.dropDuplicates(keys) if keys else df.distinct()
-
-
 def sample_exact(df: DataFrame, n: int, seed: int = 42, sort_key: str | None = None) -> DataFrame:
     """Deterministic pseudo-random exact-n sample: order by a seeded
     hash of the row key, take n. Unlike df.sample(fraction), yields

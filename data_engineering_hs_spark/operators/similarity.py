@@ -9,8 +9,11 @@
   nprobe nearest centroids per query. The scale path: the candidate
   set shrinks by ~k/nprobe and the join key (centroid id) is an
   equi-join, so Catalyst plans a plain shuffle/broadcast join.
-- lsh_bucket_topk: random-hyperplane LSH buckets (sign of dot with
-  fixed seeded vectors) as the non-learned alternative.
+- lsh_bucket_assign / lsh_topk: random-hyperplane LSH buckets (sign
+  of dot with fixed seeded vectors) as the non-learned alternative.
+- pq_topk / ivf_adc_topk: PQ asymmetric-distance scan with exact
+  rerank, over the whole corpus or over each query's probed IVF
+  cells; both run the one scan in _adc_rerank.
 - centroids: per-label mean vectors via posexplode + positional agg.
 
 Pair scoring has two strategies (see _pair_dot): the zip_with/
@@ -118,6 +121,14 @@ def brute_force_topk(
             ).alias("cos_sim"),
         )
     )
+    return _rank_topk(scored, k)
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """THE top-k tail of every exact-scored search: rank each query's
+    (query_id, neighbor_id, cos_sim) rows by descending cosine, ties
+    by ascending neighbor id, keep ranks <= k →
+    (query_id, rank, neighbor_id, cos_sim)."""
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
     )
@@ -176,7 +187,7 @@ def _nearest_topn(
     ``cosine_from(dot(vec, cent), ...)`` fold everywhere, so every
     caller is bit-exact with every other. Every coarse quantizer in
     this module (ivf_topk, ivf_adc_topk, assign_nearest_centroid both
-    modes, the kmeans Lloyd loop, build_pq_code_store) ranks through
+    modes, the cell-store builders and append) ranks through
     here — the r9 slim-exchange fix had to be applied to three
     separate copies of this discipline, which is exactly how copies
     drift.
@@ -220,10 +231,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     center_id_col: str = "label",
     center_vec_col: str = "centroid",
-    super_k: int | None = None,
-    probe_supers: int = 1,
-    vector_store: str | None = None,
-    verify_corpus: bool = True,
 ) -> DataFrame:
     """IVF approximate top-k: corpus rows are assigned to their nearest
     center; each query probes its `nprobe` nearest centers and ranks
@@ -235,52 +242,10 @@ def ivf_topk(
     embeddings it tracks nprobe/k nearly linearly (measured on the
     sf0.01 `embeddings` table with Lloyd-trained centers: nprobe/k of
     2/10 → ~0.54, 4/10 → ~0.73, 6/10 → ~0.84), so the ≥0.8 test floor
-    uses nprobe=6 of 10.
-
-    ``super_k``/``probe_supers`` route the CORPUS assignment — the
-    n×k side; queries are few and always assign flat — through the
-    two-level coarse quantizer (see assign_nearest_centroid), the
-    faiss IVF-with-IMI-coarse shape. The assignment rank windows
-    carry slim (id, center, sim) rows either way; vectors re-attach
-    by id afterward.
-
-    ``vector_store``: path to a build_ivf_store directory. Skips the
-    query-time n×k corpus assignment entirely — the probed cells are
-    collected to literals and the store read partition-prunes to
-    those cells' files; within-cell scoring stays exact cosine, so
-    the output equals the inline path's for the same probe set
-    (test-pinned). The serving configuration: SCALE.md measured the
-    inline assignment as the cost that only amortizes across query
-    batches. IN STORE MODE THE STORE IS THE CORPUS: candidates come
-    exclusively from its files (the corpus argument supplies only the
-    session), so a corpus filtered or grown since the build is NOT
-    honored — append_to_cell_store new rows, or rebuild.
-
-    CONTRACT CHANGE (round 11): the corpus argument is now
-    fingerprint-checked against the store's build stamp BY DEFAULT —
-    earlier docs read 'the corpus argument supplies only the session',
-    so a caller passing a placeholder frame will now get a ValueError
-    at query time against any stamped store. That error means the
-    check is doing its job (a placeholder can't certify freshness);
-    pass the real served corpus, or verify_corpus=False to opt out
-    and skip the one-column scan (e.g. a hot serving loop re-querying
-    an unchanged corpus). Pre-stamp stores skip the check either way.
-    Mutually exclusive with super_k (the
-    two-level quantizer routes the inline assignment the store
-    replaces; silently ignoring it would hide a caller mistake).
+    uses nprobe=6 of 10. Both assignments (queries to their nprobe
+    nearest centers, corpus rows to their nearest) rank slim
+    (id, center, sim) rows; vectors re-attach by id afterward.
     """
-    if vector_store is not None and super_k is not None:
-        raise ValueError(
-            "vector_store and super_k are mutually exclusive: the "
-            "store replaces the corpus assignment that super_k would "
-            "route two-level — pass one or the other"
-        )
-    if vector_store is not None:
-        _check_store_meta(
-            vector_store, kind="ivf_flat", id_col=id_col, vec_col=vec_col
-        )
-        if verify_corpus:
-            _verify_store_corpus(corpus, vector_store, id_col)
     cent = centers.select(
         F.col(center_id_col).alias("center_id"),
         F.col(center_vec_col).alias("center_vec"),
@@ -313,50 +278,18 @@ def ivf_topk(
         nprobe,
         "cell",
     )
-    if vector_store is not None:
-        # the probe list is collected (below) AND joined (cand) —
-        # checkpoint so the query scoring pass runs once
-        query_probes = query_probes.localCheckpoint(eager=False)
-        probed = _probed_cells(query_probes)
-        corpus_assigned = read_cell_store(
-            corpus.sparkSession, vector_store, probed
-        ).select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            norm(vec_col).alias("c_norm"),
-            "cell",
-        )
-    elif super_k is not None:
-        corpus_assigned = assign_nearest_centroid(
-            corpus,
-            centers.select(
-                F.col(center_id_col).alias("label"),
-                F.col(center_vec_col).alias("centroid"),
-            ),
-            id_col=id_col,
-            vec_col=vec_col,
-            super_k=super_k,
-            probe_supers=probe_supers,
-        ).select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            F.col("v_norm").alias("c_norm"),
-            F.col("cluster").alias("cell"),
-        )
-    else:
-        corpus_slim = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            norm(vec_col).alias("c_norm"),
-        )
-        corpus_assigned = assign(
-            corpus_slim, "neighbor_id", "c_vec", "c_norm", 1, "cell"
-        )
+    corpus_slim = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("c_vec"),
+        norm(vec_col).alias("c_norm"),
+    )
+    corpus_assigned = assign(
+        corpus_slim, "neighbor_id", "c_vec", "c_norm", 1, "cell"
+    )
     cand = corpus_assigned.join(F.broadcast(query_probes), "cell").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
+    return _rank_topk(
         cand.select(
             "query_id",
             "neighbor_id",
@@ -365,10 +298,8 @@ def ivf_topk(
                 F.col("q_norm"),
                 F.col("c_norm"),
             ).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
+        ),
+        k,
     )
 
 
@@ -475,8 +406,7 @@ def lsh_topk(
     cand = cb.join(F.broadcast(q_probes), "bucket").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
+    return _rank_topk(
         cand.select(
             "query_id",
             "neighbor_id",
@@ -485,11 +415,8 @@ def lsh_topk(
                 F.col("q_norm"),
                 F.col("c_norm"),
             ).alias("cos_sim"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
+        ).dropDuplicates(["query_id", "neighbor_id"]),
+        k,
     )
 
 
@@ -883,6 +810,25 @@ def pq_topk(
     alone.
     """
     codes = pq_encode(corpus, codebooks, m, bits, dim, id_col, vec_col)
+    coded = codes.select(F.col(id_col).alias("neighbor_id"), "pq_code")
+    lut = _adc_lut(queries, codebooks, m, dim, id_col, vec_col)
+    return _adc_rerank(
+        coded, lut, [], corpus, queries, k, shortlist, m, bits, id_col,
+        vec_col,
+    )
+
+
+def _adc_lut(
+    queries: DataFrame,
+    codebooks: DataFrame,
+    m: int,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Per-query ADC lookup table (query_id, subspace, code, pip, cn2):
+    pip = <q_sub, centroid>, cn2 = |centroid|² — |Q|·m·2^bits rows,
+    broadcast-sized."""
     q_sv = _pq_subvectors(queries, m, dim, id_col, vec_col).withColumnRenamed(
         id_col, "query_id"
     )
@@ -896,22 +842,53 @@ def pq_topk(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    lut = q_sv.join(codebooks, "subspace").select(
+    return q_sv.join(codebooks, "subspace").select(
         "query_id", "subspace", "code", ip.alias("pip"), cn2.alias("cn2")
     )
+
+
+def _adc_rerank(
+    coded: DataFrame,
+    lut: DataFrame,
+    cell_cols: list,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    shortlist: int,
+    m: int,
+    bits: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """THE ADC scan and exact rerank shared by pq_topk and ivf_adc_topk
+    → (query_id, rank, neighbor_id, cos_sim).
+
+    ``coded`` carries (neighbor_id, *cell_cols, pq_code); ``lut``
+    carries (query_id, *cell_cols, subspace, code, pip, cn2).
+    ``cell_cols`` is [] for pq_topk (every code meets every query) and
+    ["cell"] for ivf_adc_topk (a code meets only the queries that
+    probe its cell). Codes decode with bit math (no data movement),
+    join the broadcast LUT and partial-aggregate to one approximate
+    (query, neighbor) score per map task before the shuffle; each
+    query's top-`shortlist` then reranks EXACTLY against the raw
+    vectors. One copy, so the full-probe ivf_adc_topk ≡ pq_topk
+    guarantee cannot drift.
+    """
     mask = (1 << bits) - 1
-    decoded = codes.select(
-        F.col(id_col).alias("neighbor_id"),
+    decoded = coded.select(
+        "neighbor_id",
+        *cell_cols,
         F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("subspace"),
         "pq_code",
     ).select(
         "neighbor_id",
+        *cell_cols,
         "subspace",
         F.expr(f"CAST(shiftright(pq_code, subspace * {bits}) & {mask} AS INT)")
         .alias("code"),
     )
     approx = (
-        decoded.join(F.broadcast(lut), ["subspace", "code"])
+        decoded.join(F.broadcast(lut), [*cell_cols, "subspace", "code"])
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("pip").alias("aip"), F.sum("cn2").alias("an2"))
     )
@@ -946,10 +923,7 @@ def pq_topk(
         F.col(vec_col).alias("q_vec"),
         norm(vec_col).alias("q_norm"),
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
+    return _rank_topk(
         cand.join(cv, "neighbor_id")
         .join(F.broadcast(qv), "query_id")
         .select(
@@ -958,10 +932,8 @@ def pq_topk(
             cosine_from(
                 dot("q_vec", "c_vec"), F.col("q_norm"), F.col("c_norm")
             ).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
+        ),
+        k,
     )
 
 
@@ -981,7 +953,6 @@ def ivf_adc_topk(
     center_id_col: str = "label",
     center_vec_col: str = "centroid",
     code_store: str | None = None,
-    verify_corpus: bool = True,
 ) -> DataFrame:
     """IVF-ADC approximate top-k: coarse IVF cells + PQ asymmetric
     scoring restricted to each query's probed cells + exact rerank —
@@ -1030,24 +1001,20 @@ def ivf_adc_topk(
     against a different codebook scores garbage; rerank ids absent
     from the corpus drop at the inner join) — the static parameters
     (m/bits/dim/column names) are checked against the store's
-    _store_meta.json and mismatch raises.
+    _store_meta.json and mismatch raises. The corpus is also
+    fingerprint-checked against the store's corpus stamp on every
+    store query (one single-column scan): the rerank inner-joins the
+    caller's corpus, so a stale store would silently drop neighbors.
+    Pre-stamp stores skip the check.
 
-    CONTRACT CHANGE (round 11): the corpus is also fingerprint-checked
-    against the store's corpus stamp BY DEFAULT (here the corpus is
-    genuinely load-bearing — the rerank joins it, so staleness means
-    silently dropped neighbors). verify_corpus=False opts out of the
-    one-column scan; pre-stamp stores skip the check either way.
+    The ADC scan and rerank are _adc_rerank, shared with pq_topk.
     """
     if code_store is not None:
         _check_store_meta(
             code_store, kind="pq_code", id_col=id_col, vec_col=vec_col,
             m=m, bits=bits, dim=dim,
         )
-        if verify_corpus:
-            # the rerank inner-joins the caller's corpus: ids present
-            # in the store but absent there DROP silently — exactly
-            # the staleness this stamp check surfaces
-            _verify_store_corpus(corpus, code_store, id_col)
+        _verify_store_corpus(corpus, code_store, id_col)
     cent = centers.select(
         F.col(center_id_col).alias("cell"),
         F.col(center_vec_col).alias("cent_vec"),
@@ -1072,7 +1039,7 @@ def ivf_adc_topk(
     )
     if code_store is not None:
         probed = _probed_cells(probes)
-        coded = read_pq_code_store(
+        coded = read_cell_store(
             corpus.sparkSession, code_store, probed
         ).select(F.col(id_col).alias("neighbor_id"), "cell", "pq_code")
     else:
@@ -1091,105 +1058,20 @@ def ivf_adc_topk(
             id_col,
             "left_semi",
         )
-        # same LUT/encode construction as pq_topk (expressions kept
-        # identical so the full-probe equivalence is exact)
         codes = pq_encode(
             corpus_probed, codebooks, m, bits, dim, id_col, vec_col
         )
         coded = codes.select(
             F.col(id_col).alias("neighbor_id"), "pq_code"
         ).join(pruned, "neighbor_id")
-    q_sv = _pq_subvectors(queries, m, dim, id_col, vec_col).withColumnRenamed(
-        id_col, "query_id"
-    )
-    ip = F.aggregate(
-        F.zip_with("sv", "centroid", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cn2 = F.aggregate(
-        F.transform("centroid", lambda a: a * a),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    lut = q_sv.join(codebooks, "subspace").select(
-        "query_id", "subspace", "code", ip.alias("pip"), cn2.alias("cn2")
-    )
     # probe-restricted LUT: (query, cell, subspace, code) — still
     # broadcast-sized (|Q|·nprobe·m·2^bits rows)
-    lut_p = probes.join(lut, "query_id")
-    mask = (1 << bits) - 1
-    decoded = (
-        coded.select(
-            "neighbor_id",
-            "cell",
-            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("subspace"),
-            "pq_code",
-        )
-        .select(
-            "neighbor_id",
-            "cell",
-            "subspace",
-            F.expr(
-                f"CAST(shiftright(pq_code, subspace * {bits}) & {mask} AS INT)"
-            ).alias("code"),
-        )
+    lut_p = probes.join(
+        _adc_lut(queries, codebooks, m, dim, id_col, vec_col), "query_id"
     )
-    approx = (
-        decoded.join(F.broadcast(lut_p), ["cell", "subspace", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("pip").alias("aip"), F.sum("cn2").alias("an2"))
-    )
-    qn = queries.select(
-        F.col(id_col).alias("query_id"), norm(vec_col).alias("q_norm")
-    )
-    scored = (
-        approx.join(F.broadcast(qn), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.when(
-                (F.col("q_norm") == 0) | (F.col("an2") == 0), F.lit(0.0)
-            )
-            .otherwise(F.col("aip") / (F.col("q_norm") * F.sqrt("an2")))
-            .alias("approx_sim"),
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.asc("neighbor_id")
-    )
-    cand = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(vec_col).alias("c_norm"),
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(vec_col).alias("q_norm"),
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_from(
-                dot("q_vec", "c_vec"), F.col("q_norm"), F.col("c_norm")
-            ).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
+    return _adc_rerank(
+        coded, lut_p, ["cell"], corpus, queries, k, shortlist, m, bits,
+        id_col, vec_col,
     )
 
 
@@ -1205,9 +1087,6 @@ def build_pq_code_store(
     vec_col: str = "embedding",
     center_id_col: str = "label",
     center_vec_col: str = "centroid",
-    files_per_cell: int = 1,
-    super_k: int | None = None,
-    probe_supers: int = 1,
 ) -> None:
     """Encode the corpus ONCE and persist its PQ codes partitioned by
     coarse IVF cell — the physical index half of ivf_adc_topk.
@@ -1221,17 +1100,12 @@ def build_pq_code_store(
     the raw embedding column is never read at all (8 bytes of code
     per vector, however wide the embedding).
 
-    Layout: ``<path>/cell=<label>/*.parquet`` holding (id, pq_code).
-    Default is one file per cell: hash-repartition on cell before the
-    write so a small nprobe opens a bounded file count, not one shard
-    per upstream task per cell.
-    ``files_per_cell > 1`` salts the repartition key — a skewed
-    corpus concentrates rows in few cells (exactly the boilerplate
-    clusters SemDeDup's cap exists for), and a one-task-per-cell
-    write would serialize the hot cell's encode+write behind a single
-    straggler; salting splits it across files_per_cell tasks/files
-    while the read stays a partition prune (nprobe · files_per_cell
-    files opened).
+    Layout: ``<path>/cell=<label>/*.parquet`` holding (id, pq_code),
+    one file per cell: hash-repartition on cell before the write so a
+    small nprobe opens a bounded file count, not one shard per
+    upstream task per cell. The store is write-once: append_to_cell_store
+    grows IVF-Flat stores only, so rebuild a code store when the
+    corpus changes.
 
     CONTRACT: query-time calls must pass the SAME corpus, centers and
     codebooks the store was built from — the store's codes decode
@@ -1244,7 +1118,7 @@ def build_pq_code_store(
     codes = pq_encode(corpus, codebooks, m, bits, dim, id_col, vec_col)
     _write_cell_store(
         codes, corpus, centers, path, id_col, vec_col,
-        center_id_col, center_vec_col, files_per_cell,
+        center_id_col, center_vec_col,
         meta={
             "kind": "pq_code",
             "id_col": id_col,
@@ -1253,8 +1127,6 @@ def build_pq_code_store(
             "bits": bits,
             "dim": dim,
         },
-        super_k=super_k,
-        probe_supers=probe_supers,
     )
 
 
@@ -1326,25 +1198,13 @@ def _write_cell_store(
     vec_col: str,
     center_id_col: str,
     center_vec_col: str,
-    files_per_cell: int,
     meta: dict,
-    super_k: int | None = None,
-    probe_supers: int = 1,
 ) -> None:
     """Shared cell-partitioned store writer: assign each corpus row to
     its nearest coarse centroid, attach the payload columns by id, and
-    write ``<path>/cell=<label>/`` — one file per cell by default,
-    ``files_per_cell`` salted tasks/files when a hot cell would
-    serialize the write behind one straggler. One writer so the
-    salting/layout discipline can't drift between the PQ-code and
-    IVF-Flat stores (the same-round lesson that created _nearest_topn).
-
-    ``super_k`` routes the n×k assignment — the build's dominant stage
-    at large k — through the two-level coarse quantizer
-    (assign_nearest_centroid); exact at probe_supers=super_k,
-    approximate below (a borderline vector may land in a neighboring
-    cell, which IVF recall absorbs the same way it absorbs kmeans'
-    own assignment noise).
+    write ``<path>/cell=<label>/`` — one file per cell. One writer so
+    the layout discipline can't drift between the PQ-code and IVF-Flat
+    stores (the same-round lesson that created _nearest_topn).
 
     SINGLE-WRITER (enforced, r16): both builders route through here;
     two racing builds interleave their overwrite jobs into one torn
@@ -1375,8 +1235,8 @@ def _write_cell_store(
                 f"cell store build at {path!r} would write zero rows: the "
                 "corpus (after any encode-time exclusions) is empty. A "
                 "serving store needs a nonempty build; grow an existing "
-                "store with append_to_cell_store. The existing store, if "
-                "any, was left untouched."
+                "ivf_flat store with append_to_cell_store. The existing "
+                "store, if any, was left untouched."
             )
         if centers.limit(1).isEmpty():
             raise ValueError(
@@ -1397,18 +1257,12 @@ def _write_cell_store(
                 "existing store, if any, was left untouched."
             )
         cells = _assign_cells(
-            corpus, centers, id_col, vec_col, center_id_col, center_vec_col,
-            super_k, probe_supers,
+            corpus, centers, id_col, vec_col, center_id_col, center_vec_col
         )
-        _salted_cell_write(
-            payload.join(cells, id_col), path, id_col, files_per_cell,
-            mode="overwrite",
-        )
+        _cell_write(payload.join(cells, id_col), path, mode="overwrite")
         # corpus-identity stamp: read back what was WRITTEN (no TOCTOU
         # against a corpus mutating mid-build) and fingerprint the served
         # id set; query paths verify the caller's corpus against it.
-        # super_k/probe_supers ride along so append_to_cell_store can
-        # reproduce the build's assignment mode.
         spark = corpus.sparkSession
         meta = dict(meta)
         try:
@@ -1425,11 +1279,9 @@ def _write_cell_store(
                 f"cell store build at {path!r} wrote zero rows — empty "
                 "corpus, empty centers, or no id overlap between corpus "
                 "and assignment. A serving store needs a nonempty build; "
-                "grow an existing store with append_to_cell_store."
+                "grow an existing ivf_flat store with append_to_cell_store."
             ) from e
         meta.update(_corpus_stamp(written, meta["id_col"]))
-        if super_k is not None:
-            meta.update({"super_k": super_k, "probe_supers": probe_supers})
         write_sidecar(path, STORE_META, meta)
 
 
@@ -1440,25 +1292,11 @@ def _assign_cells(
     vec_col: str,
     center_id_col: str,
     center_vec_col: str,
-    super_k: int | None,
-    probe_supers: int,
 ) -> DataFrame:
     """(id, cell) nearest-coarse-centroid assignment for the cell
     stores — ONE implementation so build and append can't drift (an
     appended row assigned by different code than the build's would
     land in a different cell than a rebuild would put it)."""
-    if super_k is not None:
-        return assign_nearest_centroid(
-            corpus,
-            centers.select(
-                F.col(center_id_col).alias("label"),
-                F.col(center_vec_col).alias("centroid"),
-            ),
-            id_col=id_col,
-            vec_col=vec_col,
-            super_k=super_k,
-            probe_supers=probe_supers,
-        ).select(F.col(id_col), F.col("cluster").alias("cell"))
     cent = centers.select(
         F.col(center_id_col).alias("cell"),
         F.col(center_vec_col).alias("cent_vec"),
@@ -1473,19 +1311,9 @@ def _assign_cells(
     )
 
 
-def _salted_cell_write(
-    joined: DataFrame, path: str, id_col: str, files_per_cell: int, mode: str
-) -> None:
-    """One file per cell (files_per_cell salted tasks/files for hot
-    cells), shared by build (overwrite) and append."""
-    if files_per_cell > 1:
-        joined = joined.repartition(
-            F.col("cell"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(files_per_cell)),
-        )
-    else:
-        joined = joined.repartition("cell")
-    writer = joined.write.mode(mode).partitionBy("cell")
+def _cell_write(joined: DataFrame, path: str, mode: str) -> None:
+    """One file per cell, shared by build (overwrite) and append."""
+    writer = joined.repartition("cell").write.mode(mode).partitionBy("cell")
     if mode == "overwrite":
         # a BUILD is a full rebuild: under a caller session left on
         # partitionOverwriteMode=dynamic, overwrite would only replace
@@ -1524,10 +1352,9 @@ def _verify_store_corpus(
     built from last month's embeddings otherwise serves silently
     wrong neighbors — candidates missing for new rows, rerank rows
     dropping at the corpus join for deleted ones. Costs one
-    single-column corpus scan; pass verify_corpus=False on the query
-    paths to skip it (e.g. a hot serving loop that re-queries the
-    same corpus). Stores without a stamp (pre-existing layout) skip
-    the check, same degradation as _check_store_meta."""
+    single-column corpus scan; ivf_adc_topk runs it on every store
+    query. Stores without a stamp (pre-existing layout) skip the
+    check, same degradation as _check_store_meta."""
     recorded = read_sidecar(path, STORE_META)
     if recorded is None or "corpus_n" not in recorded:
         return
@@ -1542,8 +1369,7 @@ def _verify_store_corpus(
             f"caller: n={got['corpus_n']}; id-hash "
             f"{'matches' if got['corpus_idhash'] == recorded['corpus_idhash'] else 'differs'}) "
             "— the corpus changed since the build. Rebuild the store, "
-            "append_to_cell_store the new rows, or pass "
-            "verify_corpus=False if the difference is intentional"
+            "or append_to_cell_store the new rows of an ivf_flat store"
         )
 
 
@@ -1553,8 +1379,8 @@ def read_cell_store(spark, path: str, probed_cells) -> DataFrame:
     rows, and only their FILES.
 
     ``probed_cells`` are driver-side LITERALS (≤ n_cells values —
-    dimension-table-sized, like the centroid frame itself; the *_topk
-    callers collect them from the |Q|·nprobe probe frame), so
+    dimension-table-sized, like the centroid frame itself; ivf_adc_topk
+    collects them from the |Q|·nprobe probe frame), so
     Catalyst prunes at planning time: the scan's PartitionFilters
     lists the IN-set and non-probed cells' files are never opened
     (plan-asserted in tests/test_quality_ops.py). An empty probe list
@@ -1568,10 +1394,6 @@ def read_cell_store(spark, path: str, probed_cells) -> DataFrame:
     return df.filter(F.col("cell").isin(probed))
 
 
-# the PQ-code alias read_pq_code_store predates the generic name
-read_pq_code_store = read_cell_store
-
-
 def build_ivf_store(
     corpus: DataFrame,
     centers: DataFrame,
@@ -1580,56 +1402,35 @@ def build_ivf_store(
     vec_col: str = "embedding",
     center_id_col: str = "label",
     center_vec_col: str = "centroid",
-    files_per_cell: int = 1,
-    super_k: int | None = None,
-    probe_supers: int = 1,
 ) -> None:
     """Persist the corpus cell-partitioned by nearest coarse centroid
-    — the IVF-Flat serving index (raw vectors, exact within-cell
-    scoring), sibling of build_pq_code_store (8-byte codes, ADC).
+    — the IVF-Flat index (raw vectors), sibling of build_pq_code_store
+    (8-byte codes, ADC).
 
-    ivf_topk's inline path re-runs the n×k coarse assignment on every
-    call — SCALE.md's 1M measurement showed that cost only amortizes
-    when the assignment is reused across query batches, which is
-    precisely what this store does. ``cell`` is a partition column,
-    so a query batch reads only its probed cells' files
-    (PartitionFilters); within them the scoring is exact cosine, so
-    ivf_topk(vector_store=) returns EXACTLY what the inline path
-    returns for the same probe set (test-pinned).
-
-    Layout: ``<path>/cell=<label>/*.parquet`` holding (id, vec);
-    files_per_cell as in build_pq_code_store (hot-cell write
-    parallelism).
-
-    CONTRACT: in store mode ivf_topk's candidates come from THIS
-    directory — the store IS the corpus (the caller's corpus argument
-    supplies only the session); build from the corpus you want
-    served, append_to_cell_store new rows as it grows (or rebuild
-    to compact), and the corpus-identity stamp catches a drifted
-    corpus at query time (verify_corpus). Centers must be the
-    build-time ones or the query's probe cells disagree with the
-    stored assignment. Static parameters (column names) are recorded
-    in _store_meta.json and checked at query time.
+    Layout: ``<path>/cell=<label>/*.parquet`` holding (id, vec), one
+    file per cell, plus the _store_meta.json sidecar (kind, column
+    names, corpus stamp). The store grows by append_to_cell_store
+    (assign the increment only); _verify_store_corpus checks a caller's
+    corpus against the stamp. Centers must be the build-time ones on
+    every append, or the increment lands in cells a rebuild would not
+    put it in.
 
     CORRUPT-VECTOR ADMIT SEMANTICS (r15, sanctioned as-is): unlike
     build_pq_code_store (whose encoder EXCLUDES non-finite vectors —
     they are unencodable), the IVF-Flat build ADMITS them: cosine_from
     scores a non-finite similarity 0.0, so a corrupt row ties the
-    zero-vector contract and IVF↔brute-force parity on 0-scored ties
-    holds exactly. The residual hazard is skew, not correctness: every
-    non-finite vector lands in the lowest-label cell (all assignment
-    scores 0.0, ties break by label), so a corpus with a LARGE corrupt
-    fraction bloats one cell's files and every probe of that cell
-    scans them. Filter with functions.vector.is_finite_vector at
-    ingest if corrupt rates are non-trivial.
+    zero-vector contract. The residual hazard is skew, not
+    correctness: every non-finite vector lands in the lowest-label
+    cell (all assignment scores 0.0, ties break by label), so a corpus
+    with a LARGE corrupt fraction bloats one cell's files. Filter with
+    functions.vector.is_finite_vector at ingest if corrupt rates are
+    non-trivial.
     """
     _write_cell_store(
         corpus.select(F.col(id_col), F.col(vec_col)),
         corpus, centers, path, id_col, vec_col,
-        center_id_col, center_vec_col, files_per_cell,
+        center_id_col, center_vec_col,
         meta={"kind": "ivf_flat", "id_col": id_col, "vec_col": vec_col},
-        super_k=super_k,
-        probe_supers=probe_supers,
     )
 
 
@@ -1637,29 +1438,25 @@ def append_to_cell_store(
     new_rows: DataFrame,
     centers: DataFrame,
     path: str,
-    codebooks: DataFrame | None = None,
     center_id_col: str = "label",
     center_vec_col: str = "centroid",
-    files_per_cell: int = 1,
 ) -> None:
-    """Incremental maintenance for BOTH cell stores: assign and (for a
-    PQ store) encode ONLY the new rows, append them into their cell
-    partitions, and fold their ids into the corpus stamp — the
-    band-store discipline of incremental_minhash_lsh applied to the
-    serving indexes. A growing corpus (this engine's own ingest paths
-    exist precisely because corpora grow) otherwise pays the FULL
-    build per increment: SCALE.md measured build_pq_code_store at
-    361.7 s and build_ivf_store at 199.5 s for 1M vectors, both
-    linear in corpus size, while the append is linear in the
+    """Incremental maintenance for an IVF-Flat store (build_ivf_store):
+    assign ONLY the new rows, append them into their cell partitions,
+    and fold their ids into the corpus stamp — the band-store
+    discipline of incremental_minhash_lsh applied to the serving
+    index. A growing corpus otherwise pays the FULL build per
+    increment: SCALE.md measured build_ivf_store at 199.5 s for 1M
+    vectors, linear in corpus size, while the append is linear in the
     INCREMENT.
 
-    Everything build-specific comes from _store_meta.json (kind,
-    id/vec column names, m/bits/dim, super_k/probe_supers), so the
-    appended rows are assigned and encoded by the exact code path the
-    build used — append-then-read equals rebuild-from-the-grown-corpus
-    row for row (test-pinned). A store without the meta sidecar
-    cannot be appended to (raises): guessing the parameters is how a
-    store decodes garbage silently.
+    The id/vec column names come from _store_meta.json and the
+    increment is assigned by the build's own _assign_cells, so
+    append-then-read equals rebuild-from-the-grown-corpus row for row
+    (s_ivf_store_append audits it). A store without the meta sidecar,
+    or of any kind but ``ivf_flat`` (a pq_code store is write-once:
+    rebuild it), is refused with a ValueError before anything is
+    written.
 
     PARALLELISM: the increment's nearest-centroid assignment (k dots
     per row — the dominant stage) parallelizes at min(byte-splits,
@@ -1674,73 +1471,50 @@ def append_to_cell_store(
 
     CONTRACT: ``new_rows`` are NEW ids only (dedupe upstream — the
     store is append-only and a re-sent id would be served twice);
-    centers/codebooks must be the build-time ones (same contract as
-    the query paths, param-checked here too). Appends accumulate one
-    file (``files_per_cell`` when salted) per touched cell per call —
-    nprobe · files-per-cell opened at query time grows with append
-    count, so rebuild the store when increments pile up. NOT atomic:
-    files land at job commit and the stamp updates after — a crash
-    in between leaves the stamp stale, which the query-time
-    verify_corpus check then reports loudly (rebuild to recover).
-
-    SINGLE WRITER ONLY: the stamp update is read-modify-write on
-    _store_meta.json, so two concurrent appends would last-writer-win
-    and lose the other's XOR fold, after which verify_corpus refuses a
-    store that is actually complete (loud, but a false refusal).
-    Serialize maintenance externally. As a cheap tripwire the sidecar
-    is RE-READ just before the stamp write and a drift since this
-    append's read raises RuntimeError — the store
-    rows from both writers are intact (parquet appends don't collide);
-    re-stamp by running a no-op append of zero rows after re-counting,
-    or rebuild. (Since r16 the stamp tripwire is secondary: the
-    store_writer_lease around this function IS a lock, so two
-    lease-taking appends can no longer interleave at all — the
-    tripwire now only catches writers that bypass the mutators or
-    race on a remote URI, where flock has no analog.)
-
-    CORRUPT-VECTOR ADMIT SEMANTICS (r15, sanctioned as-is): appends
-    into an IVF-Flat store ADMIT non-finite vectors (scored 0.0 —
-    IVF↔brute-force parity on 0-scored ties), and they all land in the
-    LOWEST-LABEL cell (assignment ties break by label); PQ appends
-    exclude them (unencodable). If the increment can carry a
-    non-trivial corrupt fraction, pre-filter it with
-    functions.vector.is_finite_vector — see build_ivf_store.
+    centers must be the build-time ones. Appends accumulate one file
+    per touched cell per call — files opened per probed cell grow with
+    append count, so rebuild the store when increments pile up. NOT
+    atomic: files land at job commit and the stamp updates after — a
+    crash in between leaves the stamp stale, which _verify_store_corpus
+    then reports loudly (rebuild to recover).
 
     SINGLE-WRITER (enforced, r16): the meta read, dtype drift check,
-    no-overlap probe, cell write, and stamp fold all run under
-    store_writer_lease — every one of those steps is only sound
-    against a frozen store, and racing appends double-commit AND lose
-    in-flight task files (shared `path/_temporary`; see
-    sources.parquet.ConcurrentWriterError). A second writer raises
-    ConcurrentWriterError. Remote store
-    URIs have no flock — there this paragraph is the contract.
+    cell write, and stamp fold all run under store_writer_lease —
+    every one of those steps is only sound against a frozen store, and
+    racing appends double-commit AND lose in-flight task files (shared
+    `path/_temporary`; see sources.parquet.ConcurrentWriterError). A
+    second writer raises ConcurrentWriterError. The stamp update is
+    read-modify-write on _store_meta.json, so as a tripwire for
+    writers that bypass the lease (or race on a remote URI, where
+    flock has no analog) the sidecar is RE-READ just before the stamp
+    write and a drift since this append's read raises RuntimeError —
+    the rows from both writers are intact; re-certify the stamp or
+    rebuild.
+
+    CORRUPT-VECTOR ADMIT SEMANTICS (r15, sanctioned as-is): appends
+    ADMIT non-finite vectors (scored 0.0), and they all land in the
+    LOWEST-LABEL cell (assignment ties break by label) — see
+    build_ivf_store.
     """
     with store_writer_lease(path, "append_to_cell_store"):
         recorded = read_sidecar(path, STORE_META)
         if recorded is None:
             raise ValueError(
                 f"cell store at {path} has no readable {STORE_META} — "
-                "append needs the build parameters (kind, columns, m/bits/"
-                "dim, assignment mode); rebuild the store to (re)create it"
+                "append needs the build parameters (kind, columns); "
+                "rebuild the store to (re)create it"
             )
         meta_at_read = dict(recorded)
         kind = recorded.get("kind")
-        id_col, vec_col = recorded["id_col"], recorded["vec_col"]
-        if kind == "pq_code":
-            if codebooks is None:
-                raise ValueError(
-                    "appending to a pq_code store requires the build-time "
-                    "codebooks (codes must decode against the same LUT)"
-                )
-            payload = pq_encode(
-                new_rows, codebooks,
-                recorded["m"], recorded["bits"], recorded["dim"],
-                id_col, vec_col,
+        if kind != "ivf_flat":
+            raise ValueError(
+                f"cell store at {path} is of kind {kind!r}: "
+                "append_to_cell_store grows ivf_flat stores only — "
+                "rebuild the store from the grown corpus. Nothing was "
+                "written."
             )
-        elif kind == "ivf_flat":
-            payload = new_rows.select(F.col(id_col), F.col(vec_col))
-        else:
-            raise ValueError(f"unknown cell-store kind {kind!r} at {path}")
+        id_col, vec_col = recorded["id_col"], recorded["vec_col"]
+        payload = new_rows.select(F.col(id_col), F.col(vec_col))
         # Abort-before-mixing dtype check (r15 schema-drift probe): an
         # increment whose id/vec dtypes drifted (int id into a bigint
         # store, array<double> vecs into an array<float> store) used to
@@ -1753,7 +1527,7 @@ def append_to_cell_store(
             f.name: erase_nullability(f.dataType)
             for f in new_rows.sparkSession.read.parquet(path).schema.fields
         }
-        for c in (id_col, vec_col) if kind == "ivf_flat" else (id_col,):
+        for c in (id_col, vec_col):
             want = store_schema.get(c)
             got = erase_nullability(payload.schema[c].dataType)
             if want is not None and got != want:
@@ -1768,13 +1542,9 @@ def append_to_cell_store(
                 )
         cells = _assign_cells(
             new_rows, centers, id_col, vec_col, center_id_col,
-            center_vec_col, recorded.get("super_k"),
-            recorded.get("probe_supers", 1),
+            center_vec_col,
         )
-        _salted_cell_write(
-            payload.join(cells, id_col), path, id_col, files_per_cell,
-            mode="append",
-        )
+        _cell_write(payload.join(cells, id_col), path, mode="append")
         if "corpus_n" in recorded:
             # XOR-fold the increment in — no store rescan
             inc = _corpus_stamp(new_rows, id_col)
@@ -2004,8 +1774,6 @@ def semdedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cluster_size: int = 2000,
-    super_k: int | None = None,
-    probe_supers: int = 1,
 ) -> DataFrame:
     """SemDeDup-style cluster-scoped semantic dedup (Abbas et al.,
     arXiv:2303.09540) → (id, cluster, c_sim, removed, truncated).
@@ -2035,10 +1803,6 @@ def semdedup(
     a capped cluster carries ``truncated=True`` so callers can tell
     complete decisions from bounded ones. Rows beyond the cap are
     never compared, hence never removed (conservative: keep, flag).
-
-    ``super_k``/``probe_supers`` select the two-level assignment path
-    (see assign_nearest_centroid) — flat/exact by default; the 1M
-    stress measured the flat n×k assignment as the dominant stage.
     """
     # Cap rank + cluster size share one partitionBy(cluster) shuffle
     # (Spark stacks both Window operators on the same Exchange), and
@@ -2049,10 +1813,7 @@ def semdedup(
     # output join) — checkpoint once so the assignment pipeline does
     # not re-evaluate per reference.
     assigned = (
-        assign_nearest_centroid(
-            df, cents, id_col, vec_col, super_k=super_k,
-            probe_supers=probe_supers,
-        )
+        assign_nearest_centroid(df, cents, id_col, vec_col)
         .withColumn("__crn", F.row_number().over(wc))
         .withColumn("truncated", F.count(F.lit(1)).over(wsz) > max_cluster_size)
         .localCheckpoint(eager=True)

@@ -8,11 +8,9 @@ inference, and gzip decodes transparently — Catalyst parallelizes by
 file/split, so 50k files become one job, not 50k loop iterations.
 
 Scale note (many-small-files): at 100 TB the failure mode is driver
-file-listing and per-file task overhead. Mitigations built in here:
-pass a directory (not an expanded glob list) so listing is
-distributed (spark.sql.sources.parallelPartitionDiscovery), and
-`compact()` rewrites small files into right-sized parquet once, so
-downstream reads stop paying the small-file tax.
+file-listing and per-file task overhead. The mitigation built in
+here: pass a directory (not an expanded glob list) so listing is
+distributed (spark.sql.sources.parallelPartitionDiscovery).
 """
 
 from __future__ import annotations
@@ -149,22 +147,3 @@ def write_csv(
     df.write.mode(mode).option("header", header).option("timeZone", tz).csv(
         path
     )
-
-
-def compact(
-    spark: SparkSession,
-    src_glob: str,
-    schema: T.StructType,
-    dest_parquet: str,
-    target_partitions: int | None = None,
-) -> DataFrame:
-    """Many-small-files remediation: one pass CSV→parquet rewrite.
-
-    The scale answer to lab01's 50k-file layout: pay the listing cost
-    once, emit splittable columnar files sized by maxPartitionBytes.
-    """
-    df = read_headerless(spark, src_glob, schema)
-    if target_partitions:
-        df = df.repartition(target_partitions)
-    df.write.mode("overwrite").parquet(dest_parquet)
-    return spark.read.parquet(dest_parquet)

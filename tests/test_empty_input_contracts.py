@@ -196,7 +196,6 @@ class TestNoOverlapBuildIsLoudPreWrite:
                 vec_col="embedding",
                 center_id_col="label",
                 center_vec_col="centroid",
-                files_per_cell=1,
                 meta={},
             )
         after = sorted(

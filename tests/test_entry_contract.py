@@ -195,6 +195,7 @@ REFERENCE_MODULES = {
 # registry query restating the operation inline counts as no caller.
 TEST_ONLY_API = {
     "functions.scalar.full_name": "F2/F4: dim_customers.sql:9",
+    "functions.scalar.ilike": "F6/P9: lab03/sql/script1.sql:6,36",
     "functions.scalar.split_packed_list": "F7: lab01/tasks.ipynb:1 items column",
     "functions.scalar.to_log_timestamp": "F16: lab02/tasks.ipynb:189",
     "functions.scalar.time_of_day_between": "P6: lab03/sql/script1.sql:17-18",
@@ -214,6 +215,7 @@ TEST_ONLY_API = {
     "sources.avro.read_container_bytes": "S13: avro_test.ipynb:74",
     "sources.avro.read_avro": "S13: avro_test.ipynb:10-23",
     "sources.avro.decode_avro_column": "S15: spark_kafka_foreachbatch.py:51-75",
+    "sources.csv.read_headerless": "S1: lab01/tasks.ipynb:293",
     "sources.csv.read_with_header": "S2/S4: spark.ipynb:205-208",
     "sources.csv.read_with_quarantine": "S22: fuel_ingest_dag.py:130-134",
     "sources.csv.write_csv": "S2: lab01/tasks.ipynb cell 8586febd",
@@ -303,26 +305,80 @@ def test_every_module_is_reached_or_a_reference_unit():
     )
 
 
+def _resolved_refs(path, own, modules) -> set[tuple[str, str]]:
+    """(module, name) pairs the file at ``path`` references, each
+    resolved to the module it names: ``from m import n``, ``X.n`` with
+    ``X`` bound to module ``m`` by an import, a bare ``n`` inside the
+    file's own module ``own``, and perfbench's ``("m", "n")`` wrapper
+    tuples. A same-spelled name elsewhere does not count."""
+    import ast
+
+    tree = _parse(path)
+    bound: dict[str, set[str]] = {}  # local name -> modules it may be
+    refs = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.asname:  # import a.b.c as X: X is a.b.c
+                    bound.setdefault(a.asname, set()).add(a.name)
+                else:  # import a.b.c: a is a, reached through a.b.c.n
+                    root = a.name.split(".")[0]
+                    bound.setdefault(root, set()).add(root)
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            for a in node.names:
+                full = f"{node.module}.{a.name}"
+                if full in modules:
+                    bound.setdefault(a.asname or a.name, set()).add(full)
+                else:
+                    refs.add((node.module, a.name))
+        elif isinstance(node, ast.Tuple) and len(node.elts) >= 2 and all(
+            isinstance(e, ast.Constant) and isinstance(e.value, str)
+            for e in node.elts[:2]
+        ):
+            refs.add((node.elts[0].value, node.elts[1].value))
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and own:
+            refs.add((own, node.id))
+        elif isinstance(node, ast.Attribute):
+            chain, v = [], node.value
+            while isinstance(v, ast.Attribute):
+                chain.insert(0, v.attr)
+                v = v.value
+            if isinstance(v, ast.Name):
+                for m in bound.get(v.id, ()):
+                    refs.add((".".join([m, *chain]), node.attr))
+    return refs
+
+
 def test_every_public_name_has_a_non_test_caller_or_a_reason():
     import ast
 
     modules, entries, scripts = _census_files()
     referenced = set()
-    for path in set(modules.values()) | set(entries) | set(scripts):
-        for node in ast.walk(_parse(path)):
-            if isinstance(node, ast.Name):
-                referenced.add(node.id)
-            elif isinstance(node, ast.Attribute):
-                referenced.add(node.attr)
-            elif isinstance(node, ast.alias):
-                referenced.add(node.name.rsplit(".", 1)[-1])
+    for name, path in modules.items():
+        referenced |= _resolved_refs(path, name, modules)
+    for path in set(entries) | set(scripts):
+        referenced |= _resolved_refs(path, None, modules)
+    # a package module re-exporting a name (``from m import n`` at its
+    # top level) passes the reference on to the defining module
+    reexports = {
+        (name, a.asname or a.name): (node.module, a.name)
+        for name, path in modules.items()
+        for node in _parse(path).body
+        if isinstance(node, ast.ImportFrom) and node.module
+        for a in node.names
+    }
+    for ref in list(referenced):
+        while ref in reexports and reexports[ref] not in referenced:
+            ref = reexports[ref]
+            referenced.add(ref)
     uncalled = set()
     for name, path in modules.items():
         for node in _parse(path).body:
             if (
                 isinstance(node, (ast.FunctionDef, ast.ClassDef))
                 and not node.name.startswith("_")
-                and node.name not in referenced
+                and (name, node.name) not in referenced
                 # registered queries are reached through REGISTRY
                 and not any(
                     isinstance(d, ast.Call) and ast.unparse(d.func) == "register"
@@ -331,6 +387,90 @@ def test_every_public_name_has_a_non_test_caller_or_a_reason():
             ):
                 uncalled.add(f"{name.partition('.')[2]}.{node.name}")
     assert uncalled == set(TEST_ONLY_API)
+
+
+# Mode parameters (default None or a bool) of public package functions
+# that no non-test call sets, each with the reason it stays. Every
+# other such parameter was retired to its default.
+UNSET_MODE_PARAMS = {
+    "catalog.enable_table_cache(enabled)": (
+        "False switches the cache off again and unpersists its frames"
+    ),
+    "operators.asof.asof_join(ts_tiebreak)": (
+        "orders equal-timestamp right rows; None leaves the winner to the engine"
+    ),
+    "operators.cdc.snapshot_diff(compare_cols)": (
+        "restricts the update test to named columns; None compares all"
+    ),
+    "operators.geo.radius_join(cell_deg)": (
+        "grid cell size; None derives it from the radius"
+    ),
+    "operators.relational.mode_of(tiebreak_asc)": (
+        "A8: tie order of the most common value (lab01/tasks.ipynb:588)"
+    ),
+    "operators.scale.write_bucketed(sort_cols)": (
+        "SORTED BY of the bucket spec; None writes unsorted buckets"
+    ),
+    "session.get_spark(master)": (
+        "deployment setting: spark-submit or the driver supplies it"
+    ),
+    "sources.jdbc.jdbc_upsert_batch(staging_table)": (
+        "names the MERGE staging table; None uses <table>_stage"
+    ),
+    "sources.json.read_jsonl(keep_corrupt)": (
+        "S5: PERMISSIVE corrupt-record capture (the quarantine read)"
+    ),
+    "streaming.kv.stateful_counter(ttl_ms)": (
+        "S26: Redis EXPIRE; None keeps a key's count forever"
+    ),
+    "streaming.pipelines.streaming_dedup_ingest(available_now)": (
+        "False runs the stream continuously, the production trigger"
+    ),
+}
+
+
+def test_every_mode_parameter_is_set_by_a_non_test_caller_or_a_reason():
+    # a None/bool default that only tests override is a code path no
+    # query, tool or benchmark runs: retire it or say why it stays
+    import ast
+
+    modules, entries, scripts = _census_files()
+    calls: dict[str, list] = {}
+    for path in set(modules.values()) | set(entries) | set(scripts):
+        for node in ast.walk(_parse(path)):
+            if isinstance(node, ast.Call):
+                f = node.func
+                callee = getattr(f, "id", None) or getattr(f, "attr", None)
+                calls.setdefault(callee, []).append(node)
+    unset = set()
+    for name, path in modules.items():
+        for fn in _parse(path).body:
+            if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+                continue
+            sites = calls.get(fn.name, [])
+            a = fn.args
+            pos = [p.arg for p in a.posonlyargs + a.args]
+            params = list(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+            params += [
+                (p.arg, d)
+                for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                if d is not None
+            ]
+            for param, default in params:
+                if not (
+                    isinstance(default, ast.Constant)
+                    and (default.value is None or isinstance(default.value, bool))
+                ):
+                    continue
+                i = pos.index(param) if param in pos else None
+                if sites and not any(
+                    any(k.arg in (param, None) for k in c.keywords)
+                    or (i is not None and len(c.args) > i)
+                    or any(isinstance(x, ast.Starred) for x in c.args)
+                    for c in sites
+                ):
+                    unset.add(f"{name.partition('.')[2]}.{fn.name}({param})")
+    assert unset == set(UNSET_MODE_PARAMS)
 
 
 def test_every_test_only_reason_cites_a_reference_row():

@@ -369,12 +369,12 @@ class TestIvfFlatCorruptAdmitPinned:
       excludes them as unencodable) and ALL land in the LOWEST-LABEL
       cell (every assignment score is 0.0; ties break by label) — the
       hazard is bounded, observable SKEW of one cell, not correctness;
-    - the corpus stamp counts the FULL admitted corpus, so
-      verify_corpus=True passes with the same corrupt-heavy frame the
+    - the corpus stamp counts the FULL admitted corpus, so the
+      corpus check passes with the same corrupt-heavy frame the
       store was built from;
     - queries never surface a corrupt row above finite candidates
-      (cosine_from scores non-finite similarity 0.0), and store-mode
-      ivf_topk matches brute force on the corrupt-heavy corpus.
+      (cosine_from scores non-finite similarity 0.0), and ivf_topk
+      matches brute force on the corrupt-heavy corpus.
     """
 
     def _fixtures(self, spark):
@@ -427,6 +427,7 @@ class TestIvfFlatCorruptAdmitPinned:
         self, spark, tmp_path
     ):
         from data_engineering_hs_spark.operators.similarity import (
+            _verify_store_corpus,
             brute_force_topk,
             build_ivf_store,
             ivf_topk,
@@ -435,13 +436,11 @@ class TestIvfFlatCorruptAdmitPinned:
         corpus, centers, n_fin, n_cor = self._fixtures(spark)
         store = str(tmp_path / "ivf")
         build_ivf_store(corpus, centers, store)
+        # the SAME corrupt-heavy frame verifies: the stamp counts the
+        # full admitted corpus
+        _verify_store_corpus(corpus, store, "vec_id")
         q = corpus.filter("vec_id = 0")
-        # verify_corpus=True with the SAME corrupt-heavy frame: the
-        # stamp counts the full admitted corpus, so this must pass
-        got = ivf_topk(
-            corpus, q, centers, k=4, nprobe=2,
-            vector_store=store, verify_corpus=True,
-        ).collect()
+        got = ivf_topk(corpus, q, centers, k=4, nprobe=2).collect()
         want = brute_force_topk(corpus, q, k=4).collect()
         assert [(r["rank"], r["neighbor_id"]) for r in sorted(
             got, key=lambda r: r["rank"]

@@ -172,26 +172,6 @@ class TestIvfRecall:
         recall = len(truth & approx) / len(truth)
         assert recall >= 0.2, f"IVF recall@5 = {recall}"
 
-    def test_hier_corpus_assignment_full_probe_matches_flat(self, spark):
-        # super_k with probe_supers == super_k restores the full
-        # candidate set, so the two-level corpus assignment yields the
-        # IDENTICAL ivf result set (the s_hier_assign guarantee,
-        # applied through the IVF path).
-        e = spark.read.parquet(f"{SF001}/embeddings.parquet")
-        q = e.filter(F.col("vec_id") < 10)
-        cents = centroids(e)
-        flat = {
-            (r["query_id"], r["rank"], r["neighbor_id"])
-            for r in ivf_topk(e, q, cents, k=5, nprobe=2).collect()
-        }
-        two = {
-            (r["query_id"], r["rank"], r["neighbor_id"])
-            for r in ivf_topk(
-                e, q, cents, k=5, nprobe=2, super_k=4, probe_supers=4
-            ).collect()
-        }
-        assert two == flat
-
     def test_lsh_topk_recall_floor(self, spark):
         # 4 planes, 1-bit multiprobe: measured recall@5 ≈ 0.44 while
         # scanning ~30% of the corpus; pin a conservative floor.
@@ -1074,7 +1054,7 @@ class TestProductQuantization:
             build_pq_code_store,
             centroids,
             ivf_adc_topk,
-            read_pq_code_store,
+            read_cell_store,
         )
 
         e, cb = self._setup(spark)
@@ -1093,7 +1073,7 @@ class TestProductQuantization:
             assert len(files) == 1, f"{d}: {files}"
         # pruned read: literal IN-filter on the partition column must
         # reach the scan as a PartitionFilter, not a post-scan filter
-        pruned = read_pq_code_store(spark, store, [1, 3])
+        pruned = read_cell_store(spark, store, [1, 3])
         plan = pruned._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters" in plan and "cell" in plan
         assert pruned.select("cell").distinct().count() == 2
@@ -1114,72 +1094,6 @@ class TestProductQuantization:
         }
         assert stored == inline and len(stored) == 15
 
-    def test_code_store_salted_write_bounds_files_per_cell(
-        self, spark, tmp_path
-    ):
-        # files_per_cell=4 splits a cell's write across <=4 tasks
-        # (hot-cell write parallelism) while the content round-trips
-        import os
-
-        from data_engineering_hs_spark.operators.similarity import (
-            build_pq_code_store,
-            centroids,
-        )
-
-        e, cb = self._setup(spark)
-        store = str(tmp_path / "pq_store_salted")
-        build_pq_code_store(e, centroids(e), cb, store, files_per_cell=4)
-        total = 0
-        for d in os.listdir(store):
-            if not d.startswith("cell="):
-                continue
-            files = [
-                f
-                for f in os.listdir(os.path.join(store, d))
-                if f.endswith(".parquet")
-            ]
-            assert 1 <= len(files) <= 4, f"{d}: {len(files)} files"
-            total += 1
-        assert total == centroids(e).count()
-        assert spark.read.parquet(store).count() == e.count()
-
-    def test_ivf_vector_store_matches_inline_and_prunes(
-        self, spark, tmp_path
-    ):
-        # IVF-Flat serving index: ivf_topk(vector_store=) must equal
-        # the inline path exactly (same probe set, exact within-cell
-        # cosine — no quantization anywhere), and the store read must
-        # partition-prune to the probed cells.
-        from data_engineering_hs_spark.operators.similarity import (
-            build_ivf_store,
-            centroids,
-            ivf_topk,
-            read_cell_store,
-        )
-
-        e, _cb = self._setup(spark)
-        cents = centroids(e)
-        store = str(tmp_path / "ivf_store")
-        build_ivf_store(e, cents, store)
-        q = e.filter(F.col("vec_id") < 3)
-        inline = {
-            (r["query_id"], r["rank"], r["neighbor_id"], r["cos_sim"])
-            for r in ivf_topk(e, q, cents, k=5, nprobe=2).collect()
-        }
-        stored_df = ivf_topk(e, q, cents, k=5, nprobe=2, vector_store=store)
-        plan = stored_df._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan and "cell" in plan
-        stored = {
-            (r["query_id"], r["rank"], r["neighbor_id"], r["cos_sim"])
-            for r in stored_df.collect()
-        }
-        assert stored == inline and len(stored) == 15
-        # pruned read returns only the requested cells
-        assert (
-            read_cell_store(spark, store, [0]).select("cell").distinct().count()
-            == 1
-        )
-
     def test_store_meta_mismatch_raises(self, spark, tmp_path):
         # a store built with one (m, bits, dim, columns) must refuse a
         # query with different static parameters — decoding against a
@@ -1191,7 +1105,6 @@ class TestProductQuantization:
             build_pq_code_store,
             centroids,
             ivf_adc_topk,
-            ivf_topk,
         )
 
         e, cb = self._setup(spark)
@@ -1203,13 +1116,12 @@ class TestProductQuantization:
             ivf_adc_topk(
                 e, q, cents, cb, nprobe=2, m=4, bits=8, code_store=store
             )
+        # an IVF-Flat store read as a code store: the recorded kind
+        # differs, so the query refuses instead of decoding vectors
         vstore = str(tmp_path / "ivf_store_meta")
         build_ivf_store(e, cents, vstore)
-        with pytest.raises(ValueError, match="different parameters"):
-            ivf_topk(
-                e, q, cents, nprobe=2, id_col="other_id",
-                vec_col="embedding", vector_store=vstore,
-            )
+        with pytest.raises(ValueError, match="kind: store='ivf_flat'"):
+            ivf_adc_topk(e, q, cents, cb, nprobe=2, code_store=vstore)
 
     def test_store_meta_write_failure_is_loud_on_local_paths(
         self, spark, tmp_path
@@ -1229,34 +1141,23 @@ class TestProductQuantization:
         # non-local URI: no sidecar, no error
         write_sidecar("s3a://bucket/store", STORE_META, {"kind": "x"})
 
-    def test_append_equals_rebuild_for_both_stores(self, spark, tmp_path):
+    def test_append_equals_rebuild(self, spark, tmp_path):
         # incremental maintenance must be indistinguishable from a
         # rebuild: build from 80% of the corpus, append the remaining
         # 20%, and the store contents equal a from-scratch build of
-        # the full corpus row for row (same assignment + encode paths
-        # via _assign_cells/pq_encode, parameters from the meta)
+        # the full corpus row for row (same assignment path via
+        # _assign_cells, column names from the meta)
         from data_engineering_hs_spark.operators.similarity import (
             append_to_cell_store,
             build_ivf_store,
-            build_pq_code_store,
             centroids,
         )
 
-        e, cb = self._setup(spark)
+        e, _cb = self._setup(spark)
         cents = centroids(e)
         cut = int(e.count() * 0.8)
         base = e.filter(F.col("vec_id") < cut)
         inc = e.filter(F.col("vec_id") >= cut)
-
-        pq_grown = str(tmp_path / "pq_grown")
-        pq_full = str(tmp_path / "pq_full")
-        build_pq_code_store(base, cents, cb, pq_grown, m=8, bits=4)
-        append_to_cell_store(inc, cents, pq_grown, codebooks=cb)
-        build_pq_code_store(e, cents, cb, pq_full, m=8, bits=4)
-        cols = ["vec_id", "cell", "pq_code"]
-        grown = {tuple(r) for r in spark.read.parquet(pq_grown).select(cols).collect()}
-        full = {tuple(r) for r in spark.read.parquet(pq_full).select(cols).collect()}
-        assert grown == full and len(full) == e.count()
 
         ivf_grown = str(tmp_path / "ivf_grown")
         ivf_full = str(tmp_path / "ivf_full")
@@ -1268,33 +1169,6 @@ class TestProductQuantization:
         full_v = {key(r) for r in spark.read.parquet(ivf_full).collect()}
         assert grown_v == full_v and len(full_v) == e.count()
 
-    def test_append_reproduces_two_level_assignment(self, spark, tmp_path):
-        # a super_k build records its assignment mode in the meta; the
-        # append must reproduce it (flat-assigning the increment would
-        # place borderline vectors in different cells than a rebuild)
-        from data_engineering_hs_spark.operators.similarity import (
-            append_to_cell_store,
-            build_ivf_store,
-            centroids,
-        )
-
-        e, _cb = self._setup(spark)
-        cents = centroids(e)
-        cut = int(e.count() * 0.8)
-        grown, full = str(tmp_path / "g2"), str(tmp_path / "f2")
-        build_ivf_store(
-            e.filter(F.col("vec_id") < cut), cents, grown,
-            super_k=4, probe_supers=2,
-        )
-        append_to_cell_store(
-            e.filter(F.col("vec_id") >= cut), cents, grown
-        )
-        build_ivf_store(e, cents, full, super_k=4, probe_supers=2)
-        cols = ["vec_id", "cell"]
-        g = {tuple(r) for r in spark.read.parquet(grown).select(cols).collect()}
-        f = {tuple(r) for r in spark.read.parquet(full).select(cols).collect()}
-        assert g == f
-
     def test_stale_store_corpus_raises_and_append_heals(
         self, spark, tmp_path
     ):
@@ -1303,12 +1177,12 @@ class TestProductQuantization:
         import pytest
 
         from data_engineering_hs_spark.operators.similarity import (
+            _verify_store_corpus,
             append_to_cell_store,
             build_ivf_store,
             build_pq_code_store,
             centroids,
             ivf_adc_topk,
-            ivf_topk,
         )
 
         e, cb = self._setup(spark)
@@ -1323,25 +1197,20 @@ class TestProductQuantization:
         # grown corpus vs base-built store: loud
         with pytest.raises(ValueError, match="different corpus"):
             ivf_adc_topk(e, q, cents, cb, nprobe=2, code_store=store)
-        # matching corpus: fine; opt-out also fine
+        # matching corpus: fine
         ivf_adc_topk(base, q, cents, cb, nprobe=2, code_store=store).count()
-        ivf_adc_topk(
-            e, q, cents, cb, nprobe=2, code_store=store,
-            verify_corpus=False,
-        ).count()
-        # append the increment: the stamp folds it in and the grown
-        # corpus now verifies (and the base corpus no longer does)
-        append_to_cell_store(inc, cents, store, codebooks=cb)
-        ivf_adc_topk(e, q, cents, cb, nprobe=2, code_store=store).count()
-        with pytest.raises(ValueError, match="different corpus"):
-            ivf_adc_topk(base, q, cents, cb, nprobe=2, code_store=store)
 
+        # an IVF-Flat store heals by append: the stamp folds the
+        # increment in, so the grown corpus now verifies (and the base
+        # corpus no longer does) — the check s_ivf_store_append runs
         vstore = str(tmp_path / "ivf_stale")
         build_ivf_store(base, cents, vstore)
         with pytest.raises(ValueError, match="different corpus"):
-            ivf_topk(e, q, cents, nprobe=2, vector_store=vstore)
+            _verify_store_corpus(e, vstore, "vec_id")
         append_to_cell_store(inc, cents, vstore)
-        ivf_topk(e, q, cents, nprobe=2, vector_store=vstore).count()
+        _verify_store_corpus(e, vstore, "vec_id")
+        with pytest.raises(ValueError, match="different corpus"):
+            _verify_store_corpus(base, vstore, "vec_id")
 
     def test_append_refuses_without_meta_or_codebooks(
         self, spark, tmp_path
@@ -1361,11 +1230,23 @@ class TestProductQuantization:
         inc = e.filter(F.col("vec_id") < 10)
         store = str(tmp_path / "pq_meta")
         build_pq_code_store(e, cents, cb, store, m=8, bits=4)
-        with pytest.raises(ValueError, match="codebooks"):
+
+        def files():
+            return sorted(
+                (os.path.join(r, f), os.path.getsize(os.path.join(r, f)))
+                for r, _, fs in os.walk(store)
+                for f in fs
+            )
+
+        # a code store is write-once: append refuses it by kind,
+        # before any write
+        before = files()
+        with pytest.raises(ValueError, match="'pq_code'"):
             append_to_cell_store(inc, cents, store)
+        assert files() == before
         os.remove(os.path.join(store, "_store_meta.json"))
         with pytest.raises(ValueError, match="no readable"):
-            append_to_cell_store(inc, cents, store, codebooks=cb)
+            append_to_cell_store(inc, cents, store)
 
     def test_store_sidecar_works_on_file_uri(self, spark, tmp_path):
         # Spark's writers accept file:// URIs but plain open() does
@@ -1378,9 +1259,9 @@ class TestProductQuantization:
 
         from data_engineering_hs_spark.operators.similarity import (
             _check_store_meta,
+            _verify_store_corpus,
             build_ivf_store,
             centroids,
-            ivf_topk,
         )
 
         e, _cb = self._setup(spark)
@@ -1395,19 +1276,19 @@ class TestProductQuantization:
 
         with pytest.raises(ValueError, match="different parameters"):
             _check_store_meta(store_uri, kind="ivf_flat", id_col="other")
-        q = e.filter(F.col("vec_id") < 2)
-        assert (
-            ivf_topk(e, q, cents, k=3, nprobe=2, vector_store=store_uri)
-            .count() == 6
-        )
+        # and the corpus stamp is read through it: the served corpus
+        # verifies, a shrunk one is refused
+        _verify_store_corpus(e, store_uri, "vec_id")
+        with pytest.raises(ValueError, match="different corpus"):
+            _verify_store_corpus(e.limit(5), store_uri, "vec_id")
 
     def test_append_single_writer_tripwire(
         self, spark, tmp_path, monkeypatch
     ):
         # a concurrent writer touching the sidecar between this
         # append's read and its stamp write must raise (last-writer-
-        # wins would lose the other's XOR fold and verify_corpus would
-        # then falsely refuse a complete store) — and must NOT
+        # wins would lose the other's XOR fold and the corpus stamp
+        # check would then falsely refuse a complete store) — and must NOT
         # overwrite the interloper's sidecar
         import json
         import os
@@ -1423,7 +1304,7 @@ class TestProductQuantization:
         sim.build_ivf_store(e.filter(F.col("vec_id") < n * 0.8), cents, store)
         meta_path = os.path.join(store, "_store_meta.json")
 
-        real_write = sim._salted_cell_write
+        real_write = sim._cell_write
 
         def racy_write(*args, **kwargs):
             # simulate a concurrent append finishing mid-flight: the
@@ -1433,7 +1314,7 @@ class TestProductQuantization:
             json.dump(interloper, open(meta_path, "w"))
             return real_write(*args, **kwargs)
 
-        monkeypatch.setattr(sim, "_salted_cell_write", racy_write)
+        monkeypatch.setattr(sim, "_cell_write", racy_write)
         inc = e.filter(F.col("vec_id") >= n * 0.8)
         with pytest.raises(RuntimeError, match="single-writer"):
             sim.append_to_cell_store(inc, cents, store)
@@ -1442,57 +1323,17 @@ class TestProductQuantization:
         # the increment's rows DID land (parquet appends don't collide)
         assert spark.read.parquet(store).count() == n
 
-    def test_store_build_two_level_full_probe_matches_flat(
-        self, spark, tmp_path
-    ):
-        # super_k routes the build's n x k assignment through the
-        # two-level quantizer; at probe_supers=super_k it is EXACT, so
-        # the stored (id -> cell) mapping must equal the flat build's
-        from data_engineering_hs_spark.operators.similarity import (
-            build_ivf_store,
-            centroids,
-        )
-
-        e, _cb = self._setup(spark)
-        cents = centroids(e)
-        flat, two = str(tmp_path / "flat"), str(tmp_path / "two")
-        build_ivf_store(e, cents, flat)
-        build_ivf_store(e, cents, two, super_k=4, probe_supers=4)
-        a = spark.read.parquet(flat).select("vec_id", "cell")
-        b = spark.read.parquet(two).select("vec_id", "cell")
-        assert a.exceptAll(b).unionByName(b.exceptAll(a)).count() == 0
-        assert a.count() == e.count()
-
-    def test_vector_store_conflicts_with_super_k(self, spark, tmp_path):
-        import pytest
-
-        from data_engineering_hs_spark.operators.similarity import (
-            build_ivf_store,
-            centroids,
-            ivf_topk,
-        )
-
-        e, _cb = self._setup(spark)
-        cents = centroids(e)
-        store = str(tmp_path / "ivf_store_conflict")
-        build_ivf_store(e, cents, store)
-        with pytest.raises(ValueError, match="mutually exclusive"):
-            ivf_topk(
-                e, e.limit(1), cents, nprobe=2, super_k=2,
-                vector_store=store,
-            )
-
     def test_code_store_empty_probe_list_is_empty(self, spark, tmp_path):
         from data_engineering_hs_spark.operators.similarity import (
             build_pq_code_store,
             centroids,
-            read_pq_code_store,
+            read_cell_store,
         )
 
         e, cb = self._setup(spark)
         store = str(tmp_path / "pq_store_empty_probe")
         build_pq_code_store(e, centroids(e), cb, store)
-        assert read_pq_code_store(spark, store, []).count() == 0
+        assert read_cell_store(spark, store, []).count() == 0
 
     def test_inline_path_prunes_before_encode(self, spark):
         # the probed-cell semi-join must restrict the corpus BEFORE

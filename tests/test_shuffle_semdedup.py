@@ -181,33 +181,6 @@ class TestTwoLevelAssignment:
         ).select("vec_id", "cluster", "c_sim")
         assert sorted(flat.collect()) == sorted(two.collect())
 
-    def test_semdedup_two_level_still_removes_planted_copies(self, spark):
-        from data_engineering_hs_spark.operators import similarity as S
-
-        aug, off = TestSemDeDup._aug(TestSemDeDup(), spark)
-        cents = S.centroids(aug)
-        res = S.semdedup(
-            aug.select("vec_id", "embedding"), cents, 0.95,
-            super_k=4, probe_supers=2,
-        )
-        removed = {r.vec_id for r in res.filter("removed").collect()}
-        expected = {
-            r.vec_id + off
-            for r in aug.filter(
-                (F.col("vec_id") % 10 == 0) & (F.col("vec_id") < off)
-            ).collect()
-        }
-        # an exact copy shares its original's (possibly approximate)
-        # assignment bit-for-bit, so completeness holds under the
-        # two-level path too; threshold >> natural max cosine keeps
-        # false removals at zero regardless of cluster shapes
-        assert removed == expected
-
-
-class TestTwoLevelAssignmentEdges:
-    """Round-9 review findings: empty-super candidate drop, collect
-    order-sensitivity, empty centroid table."""
-
     def test_no_vector_vanishes_when_a_super_goes_empty(self, spark):
         # Lloyd can end with a member-less super whose stale center is
         # still some vector's nearest probe; member-less supers must

@@ -86,16 +86,6 @@ class TestCsv:
         assert inferred.count() == 2
         assert dict(inferred.dtypes)["id"] == "int"
 
-    def test_compact_small_files(self, spark, tmp_path):
-        # Remediation path: 50k-small-files shape → one parquet dataset.
-        d = str(tmp_path / "tx2")
-        os.makedirs(d)
-        total = _write_tx_files(d, n_files=6)
-        out = str(tmp_path / "tx_parquet")
-        df = C.compact(spark, d + "/*.csv", TX_SCHEMA, out, target_partitions=2)
-        assert df.count() == total
-        assert df.rdd.getNumPartitions() <= 4
-
 
 class TestJson:
     def test_jsonl_nested_schema_with_corrupt_quarantine(self, spark, tmp_path):

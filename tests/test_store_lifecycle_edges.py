@@ -128,8 +128,8 @@ class TestCellStoreEdges:
 
     def test_empty_increment_append_is_noop(self, spark, store):
         from data_engineering_hs_spark.operators.similarity import (
+            _verify_store_corpus,
             append_to_cell_store,
-            ivf_topk,
         )
 
         emb, cents, path = store
@@ -137,24 +137,31 @@ class TestCellStoreEdges:
         append_to_cell_store(emb.filter("vec_id < 0"), cents, path)
         meta_after = json.load(open(os.path.join(path, "_store_meta.json")))
         # XOR-fold of zero rows: stamp bit-identical, store still
-        # passes verify_corpus on the original corpus
+        # verifies against the original corpus
         assert meta_before == meta_after
-        assert (
-            ivf_topk(emb, emb.limit(2), cents, k=3, vector_store=path).count()
-            > 0
+        _verify_store_corpus(emb, path, "vec_id")
+
+    def test_store_query_with_empty_caller_corpus_is_loud(
+        self, spark, store, tmp_path
+    ):
+        from data_engineering_hs_spark.operators.similarity import (
+            build_pq_code_store,
+            ivf_adc_topk,
+            pq_train,
         )
 
-    def test_store_query_with_empty_caller_corpus_is_loud(self, spark, store):
-        from data_engineering_hs_spark.operators.similarity import ivf_topk
-
-        emb, cents, path = store
+        emb, cents, _ = store
+        cb = pq_train(emb, m=8, k=16, iters=1)
+        path = str(tmp_path / "codes")
+        build_pq_code_store(emb, cents, cb, path)
         with pytest.raises(ValueError, match="different corpus"):
-            ivf_topk(
+            ivf_adc_topk(
                 emb.filter("vec_id < 0"),
                 emb.limit(2),
                 cents,
+                cb,
                 k=3,
-                vector_store=path,
+                code_store=path,
             )
 
     def test_topk_with_k_beyond_corpus(self, spark):

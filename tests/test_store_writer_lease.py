@@ -113,8 +113,11 @@ class TestLeasePrimitive:
             "cm.__enter__()\n"
             "os._exit(1)\n"  # dies holding the lease — no release code runs
         )
+        # run from this checkout's root so the child imports the
+        # package under test, not whichever copy is installed elsewhere
+        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         subprocess.run(
-            [sys.executable, "-c", code], cwd="/root/repo", check=False
+            [sys.executable, "-c", code], cwd=repo_root, check=False
         )
         # kernel released the flock with the dead process
         with store_writer_lease(store, "op"):
