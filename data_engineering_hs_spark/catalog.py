@@ -16,6 +16,7 @@ pruning, and pin decimal/timestamp semantics across engines.
 
 from __future__ import annotations
 
+import itertools
 import os
 import stat
 
@@ -69,6 +70,22 @@ def enable_table_cache(enabled: bool = True) -> None:
         _TABLE_CACHE.clear()
 
 
+def _parquet_files(path: str):
+    """Lazily yield a parquet dataset's data files in a deterministic
+    order: ``path`` itself when it is a file, else every ``*.parquet``
+    under it, descending Hive partition dirs (sorted) and skipping
+    ``_``/``.`` entries (_SUCCESS, .crc, staging dirs). Callers take
+    only what they need, so a large dataset is never listed whole."""
+    if os.path.isfile(path):
+        yield path
+        return
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+        for f in sorted(files):
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
+                yield os.path.join(root, f)
+
+
 def _parquet_ts_is_nanos(path: str) -> bool:
     """Footer probe: does this parquet dataset's `ts` field use the
     TIMESTAMP(NANOS) physical type Spark can only scan with the
@@ -86,24 +103,9 @@ def _parquet_ts_is_nanos(path: str) -> bool:
     try:
         import pyarrow.parquet as pq
 
-        probe = path
-        if os.path.isdir(path):
-            probe = None
-            for root, dirs, files in os.walk(path):
-                # deterministic first-file choice; skip _SUCCESS/.crc
-                dirs[:] = sorted(
-                    d for d in dirs if not d.startswith((".", "_"))
-                )
-                parts = sorted(
-                    f
-                    for f in files
-                    if f.endswith(".parquet") and not f.startswith((".", "_"))
-                )
-                if parts:
-                    probe = os.path.join(root, parts[0])
-                    break
-            if probe is None:
-                return False
+        probe = next(_parquet_files(path), None)
+        if probe is None:
+            return False
         return "ns" in str(pq.read_schema(probe).field("ts").type)
     except Exception:  # noqa: BLE001 — absent field/file: let Spark decide
         return False
@@ -238,22 +240,7 @@ def _rebalance_partitions(path: str, cores: int) -> int | None:
         return _REBALANCE_PROBE_CACHE[key]
     result: int | None = None
     try:
-        if os.path.isfile(path):
-            files = [path]
-        else:
-            files = []
-            for root, dirs, fnames in os.walk(path):
-                dirs[:] = sorted(
-                    d for d in dirs if not d.startswith((".", "_"))
-                )
-                files += [
-                    os.path.join(root, f)
-                    for f in sorted(fnames)
-                    if f.endswith(".parquet")
-                    and not f.startswith((".", "_"))
-                ]
-                if len(files) >= cores:
-                    break
+        files = list(itertools.islice(_parquet_files(path), cores))
         if 0 < len(files) < cores:
             import pyarrow.parquet as pq
 

@@ -65,24 +65,14 @@ def st_kv_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from data_engineering_hs_spark.queries.streaming_q import _events_stream
     from data_engineering_hs_spark.streaming.kv import stateful_counter
+    from data_engineering_hs_spark.streaming.pipelines import run_to_memory
 
     stream = _events_stream(spark, sf_dir).select(
         F.col("event_type").alias("key")
     )
-    counts = stateful_counter(stream)
-    name = f"kvq_{uuid.uuid4().hex[:12]}"
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    _, table = run_to_memory(
+        stateful_counter(stream), f"kvq_{uuid.uuid4().hex[:12]}", "update"
     )
-    q.awaitTermination()
     # update-mode emits one row per key per batch; the final total per
     # key is the max across updates.
-    return (
-        spark.table(name)
-        .groupBy("key")
-        .agg(F.max("count").alias("count"))
-    )
+    return table.groupBy("key").agg(F.max("count").alias("count"))

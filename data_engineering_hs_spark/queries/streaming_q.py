@@ -14,6 +14,7 @@ from pyspark.sql import types as T
 
 from data_engineering_hs_spark.queries.registry import register
 from data_engineering_hs_spark.streaming.pipelines import (
+    run_to_memory,
     sessionized_counts,
     tumbling_counts,
 )
@@ -122,17 +123,8 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_event_ts(raw)
 
 
-def _drain(df: DataFrame, spark: SparkSession, mode: str) -> DataFrame:
-    name = f"stq_{uuid.uuid4().hex[:12]}"
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+def _drain(df: DataFrame, mode: str) -> DataFrame:
+    return run_to_memory(df, f"stq_{uuid.uuid4().hex[:12]}", mode)[1]
 
 
 @register(
@@ -154,7 +146,7 @@ def st_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value", F.round(F.col("value") * 100).cast("long")
     )
     windowed = tumbling_counts(events, window="1 hour", watermark="2 hours")
-    out = _drain(windowed, spark, "complete")
+    out = _drain(windowed, "complete")
     return out.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm").alias("window_start"),
         "event_type",
@@ -189,7 +181,7 @@ def st_wordcount_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stream_dir_for(sf_dir, "documents")
     )
     counts = word_count(lines, value_col="text")
-    return _drain(counts, spark, "complete")
+    return _drain(counts, "complete")
 
 
 @register(
@@ -220,7 +212,7 @@ def st_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("window.start").alias("window_start"), "event_type", "n"
         )
     )
-    out = _drain(windowed, spark, "complete")
+    out = _drain(windowed, "complete")
     return out.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm").alias("window_start"),
         "event_type",
@@ -273,7 +265,7 @@ ORDER BY user_id, session_start
 def st_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _events_stream(spark, sf_dir)
     sessions = sessionized_counts(events, gap="30 minutes", watermark="4 hours")
-    out = _drain(sessions, spark, "complete")
+    out = _drain(sessions, "complete")
     return (
         out.select(
             F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias(
@@ -318,7 +310,7 @@ def st_enriched_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum("cents").alias("__cents"),
     )
-    out = _drain(agg, spark, "complete")
+    out = _drain(agg, "complete")
     return out.select(
         "nation",
         "n_events",
@@ -374,7 +366,7 @@ def st_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="30 days",
         max_lag="30 minutes",
     )
-    out = _drain(joined, spark, "append")
+    out = _drain(joined, "append")
     return (
         out.groupBy("user_id")
         .agg(F.count("*").alias("n_attributed"))
@@ -408,7 +400,7 @@ def st_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "event_type")
     )
     deduped = base.unionByName(dups).dropDuplicates(["event_id"])
-    out = _drain(deduped, spark, "append")
+    out = _drain(deduped, "append")
     return (
         out.groupBy("event_type")
         .agg(F.count("*").alias("n"))
@@ -668,7 +660,7 @@ def st_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(root)
     )
     counts = stream.groupBy("event_type").agg(F.count("*").alias("n"))
-    changelog = _drain(counts, spark, "update")
+    changelog = _drain(counts, "update")
     return (
         changelog.groupBy("event_type")
         .agg(
@@ -704,7 +696,7 @@ def st_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     joined = events.join(F.broadcast(cust), "user_id")
-    out = _drain(joined, spark, "append")
+    out = _drain(joined, "append")
     return (
         out.groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(

@@ -263,6 +263,7 @@ def foreach_batch_jdbc_upsert(
     effectively-exactly-once — the same contract the reference's DAG
     gets from ON CONFLICT DO NOTHING plus its filename watermark.
     """
+    from data_engineering_hs_spark.streaming.pipelines import _start
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         jdbc_upsert_batch(
@@ -276,14 +277,7 @@ def foreach_batch_jdbc_upsert(
             dialect=dialect,
         )
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, write_batch, available_now)
 
 
 def read_jdbc_table(spark: SparkSession, url: str, table: str) -> DataFrame:

@@ -18,8 +18,13 @@ Reference shapes re-expressed on Structured Streaming:
 - watermarked event-time ops (§2.9 gap): tumbling/sliding windows,
   session windows, dropDuplicatesWithinWatermark.
 
-All pipelines are testable synchronously: trigger(availableNow) +
-processAllAvailable drain a bounded source to completion.
+Every checkpointed sink is one micro-batch protocol with one
+implementation per step: _start owns the foreachBatch start (its
+availableNow trigger drains a bounded source to completion, so tests
+run synchronously), _refuse_batch_regression refuses a wiped
+checkpoint before a batch writes, and _overwrite_batch commits the
+batch's own partition by dynamic overwrite (replay idempotency).
+run_to_memory is the one availableNow drain into a memory table.
 """
 
 from __future__ import annotations
@@ -55,8 +60,11 @@ def _refuse_batch_regression(spark, path: str, batch_id: int, what: str) -> None
     append-shaped sink, a fresh checkpoint replaying the whole source
     into batch 0 leaves batches 1..N behind as duplicates — also
     wrong). A legitimate crash-replay only re-runs the LAST batch, so
-    max(on-disk batch_id) <= incoming is the invariant. One driver-
-    side Hadoop-FS listing per batch (any URI)."""
+    max(on-disk batch_id) <= incoming is the invariant. A
+    run-namespaced sink passes its run's directory
+    (``path/run=<ns>``), which scopes the check to that checkpoint's
+    run: a fresh checkpoint DIR is a new namespace and sails through.
+    One driver-side Hadoop-FS listing per batch (any URI)."""
     jvm = spark._jvm
     root = jvm.org.apache.hadoop.fs.Path(path)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -77,11 +85,61 @@ def _refuse_batch_regression(spark, path: str, batch_id: int, what: str) -> None
         raise RuntimeError(
             f"{what} at {path} already holds batch_id={max_batch} but "
             f"the stream is (re)starting at batch {batch_id}: the "
-            "checkpoint was reset while the sink was retained. "
-            "Proceeding would overwrite earlier batches' partitions "
-            "(deleting their rows). Point the restarted stream at a "
-            "FRESH directory, or delete checkpoint and sink together."
+            "checkpoint was reset (its contents wiped in place) while "
+            "the sink was retained. Proceeding would overwrite earlier "
+            "batches' partitions (deleting their rows). Restart into a "
+            "FRESH sink directory (a run-namespaced sink only needs a "
+            "fresh checkpoint directory: it writes under a new run), "
+            "or delete checkpoint and sink together."
         )
+
+
+def _overwrite_batch(
+    df: DataFrame, path: str, batch_id: int, run_ns: str | None = None
+) -> None:
+    """Commit one micro-batch: stamp ``[run,] batch_id`` and
+    dynamically overwrite exactly that partition. A replay after a
+    mid-write failure (checkpoint not yet committed) rewrites the
+    partition instead of appending duplicates — the idempotent half
+    of every sink (T8), the parquet analog of ON CONFLICT DO NOTHING.
+    ``write_partitioned`` is imported per call so a caller that
+    replaces the module attribute (perfbench's trace wrappers) sees
+    every write."""
+    from data_engineering_hs_spark.sources.parquet import write_partitioned
+
+    cols = ["batch_id"]
+    if run_ns is not None:
+        df = df.withColumn("run", F.lit(run_ns))
+        cols = ["run", "batch_id"]
+    write_partitioned(
+        df.withColumn("batch_id", F.lit(batch_id)),
+        path,
+        cols,
+        mode="overwrite",
+        dynamic=True,
+    )
+
+
+def _start(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    write_batch,
+    available_now: bool,
+    processing_time: str | None = None,
+) -> StreamingQuery:
+    """Start the checkpointed foreachBatch sink: a periodic trigger
+    when ``processing_time`` is given, else an availableNow drain of
+    what the source holds, else Spark's default trigger."""
+    writer = (
+        stream.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(write_batch)
+    )
+    if processing_time is not None:
+        writer = writer.trigger(processingTime=processing_time)
+    elif available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def kafka_shaped_ingest(
@@ -116,32 +174,14 @@ def kafka_shaped_ingest(
         )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        from data_engineering_hs_spark.sources.parquet import (
-            write_partitioned,
-        )
-
         _refuse_batch_regression(
             batch.sparkSession, sink_dir, batch_id, "kafka_shaped_ingest sink"
         )
-        out = enrich_batch(batch, batch_id)
-        # Dynamic overwrite of THIS batch's partition: a replay after a
-        # mid-write failure (checkpoint not yet committed) rewrites the
-        # partition instead of appending duplicates — idempotent sink
-        # (T8), the parquet analog of ON CONFLICT DO NOTHING.
-        write_partitioned(
-            out, sink_dir, ["batch_id"], mode="overwrite", dynamic=True
-        )
+        _overwrite_batch(enrich_batch(batch, batch_id), sink_dir, batch_id)
 
-    writer = (
-        flat.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
+    return _start(
+        flat, checkpoint_dir, write_batch, available_now, processing_time
     )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    elif available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def file_watch_ingest(
@@ -165,7 +205,6 @@ def file_watch_ingest(
     never-lose-bad-rows contract this sink exists for. Filter-only
     ingest is spelled `stream.filter(...)` by the caller, visibly.
     """
-    from data_engineering_hs_spark.sources.parquet import write_partitioned
     from data_engineering_hs_spark.sources.upsert import upsert_parquet
 
     if valid_predicate is not None and quarantine_dir is None:
@@ -193,32 +232,17 @@ def file_watch_ingest(
             good = batch.filter(valid_predicate.eqNullSafe(True))
             bad = batch.filter(~valid_predicate.eqNullSafe(True))
             # batch_id-partitioned dynamic overwrite, not append:
-            # a replayed batch (crash between this write and the
-            # checkpoint commit) rewrites ITS OWN partition
-            # instead of duplicating quarantine rows — same
-            # idempotency discipline as the good-row upsert
-            # (good rows need no batch guard: upsert_parquet is
-            # anti-join append, batch-id-independent)
+            # a replayed batch rewrites ITS OWN partition instead of
+            # duplicating quarantine rows (good rows need no batch
+            # guard: upsert_parquet is anti-join append,
+            # batch-id-independent)
             _refuse_batch_regression(
                 spark, quarantine_dir, batch_id, "file_watch_ingest quarantine"
             )
-            write_partitioned(
-                bad.withColumn("batch_id", F.lit(batch_id)),
-                quarantine_dir,
-                ["batch_id"],
-                mode="overwrite",
-                dynamic=True,
-            )
+            _overwrite_batch(bad, quarantine_dir, batch_id)
         upsert_parquet(spark, target_dir, good, list(keys))
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, write_batch, available_now)
 
 
 def tumbling_counts(
@@ -380,7 +404,8 @@ def streaming_dedup_ingest(
     test-pinned: replayed docs dedup against the old run's prints and
     the corpus keeps every old partition), while a WIPED-IN-PLACE
     checkpoint (same dir, so same namespace, restarting at 0 against
-    retained higher batches) is refused — see _prepare_run_layout.
+    retained higher batches) is refused by _refuse_batch_regression on
+    the run's directory.
     This is the streaming twin of the reference DAG's
     filename-watermark + ON CONFLICT load.
     """
@@ -392,14 +417,7 @@ def streaming_dedup_ingest(
             run_ns=run_ns,
         )
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, write_batch, available_now)
 
 
 def _run_namespace(checkpoint_dir: str) -> str:
@@ -431,52 +449,6 @@ def _run_namespace(checkpoint_dir: str) -> str:
     if _local_path(norm) == norm:  # schemeless
         norm = os.path.abspath(norm)
     return hashlib.md5(norm.encode()).hexdigest()[:10]
-
-
-def _prepare_run_layout(spark, path: str, run_ns: str, batch_id: int) -> None:
-    """Wiped-checkpoint guard for a run-namespaced dataset
-    (``path/run=<ns>/batch_id=N/``), run before each batch touches it,
-    scoped to THIS run's namespace. One Hadoop-FS listStatus of the
-    run's directory (works for any Spark URI, not just driver-local).
-
-    Batch ids restart at 0 when the checkpoint's contents are deleted
-    in place (same dir ⇒ same namespace), and the dynamic overwrite
-    would then silently replace this run's EARLIER batch partitions
-    one by one — deleting committed fingerprints/corpus rows. A
-    legitimate same-checkpoint replay only re-runs the LAST batch, so
-    max(this run's batch_id) <= incoming batch_id is an invariant;
-    max > incoming raises with guidance. A fresh checkpoint DIR is a
-    different namespace and sails through — that's the supported
-    full-source-replay recovery.
-    """
-    ns_dir = spark._jvm.org.apache.hadoop.fs.Path(
-        path.rstrip("/") + f"/run={run_ns}"
-    )
-    fs = ns_dir.getFileSystem(spark._jsc.hadoopConfiguration())
-    max_batch = None
-    if fs.exists(ns_dir):
-        for st in fs.listStatus(ns_dir):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.startswith("batch_id="):
-                try:
-                    max_batch = max(
-                        max_batch if max_batch is not None else -(2**62),
-                        int(name.split("=", 1)[1]),
-                    )
-                except ValueError:
-                    pass
-    if max_batch is not None and max_batch > batch_id:
-        raise RuntimeError(
-            f"{path} already holds batch_id={max_batch} for this "
-            f"checkpoint's run (run={run_ns}) but the stream is "
-            f"(re)starting at batch {batch_id}: the checkpoint's "
-            "contents were wiped in place while store/sink were "
-            "retained. Proceeding would overwrite this run's earlier "
-            "partitions one by one, deleting committed fingerprints "
-            "and corpus rows. Use a FRESH checkpoint DIR for a "
-            "full-source rerun (it writes under a new run namespace), "
-            "or delete checkpoint, store and sink together."
-        )
 
 
 def compact_ingest_store(spark, path: str) -> dict:
@@ -536,6 +508,7 @@ def compact_ingest_store(spark, path: str) -> dict:
 
     from data_engineering_hs_spark.sources.parquet import (
         _require_local_swap_path,
+        snapshot_data_files,
         staged_rewrite,
         store_writer_lease,
     )
@@ -545,13 +518,8 @@ def compact_ingest_store(spark, path: str) -> dict:
     norm = path.rstrip("/")
 
     def stats(d: str) -> tuple[int, int]:
-        files, parts = 0, set()
-        for r, _dirs, fnames in os.walk(d):
-            for f in fnames:
-                if f.endswith(".parquet"):
-                    files += 1
-                    parts.add(r)
-        return files, len(parts)
+        files = snapshot_data_files(d)
+        return len(files), len({os.path.dirname(f) for f in files})
 
     # SINGLE-WRITER (enforced, r16): maintenance on the ingest store
     # takes the store lease — a live trigger's batch commit is NOT
@@ -654,8 +622,8 @@ def _dedup_ingest_batch(
     from data_engineering_hs_spark.operators.dedup import (
         incremental_exact_dedup,
         read_fingerprint_store,
+        stamp_normalization_version,
     )
-    from data_engineering_hs_spark.sources.parquet import write_partitioned
 
     spark = batch.sparkSession
     clash = {"run", "batch_id"} & set(batch.columns)
@@ -668,8 +636,11 @@ def _dedup_ingest_batch(
             f"{sorted(clash)} for its run/batch partitioning; rename "
             "them in the input stream"
         )
-    _prepare_run_layout(spark, store_path, run_ns, batch_id)
-    _prepare_run_layout(spark, sink_dir, run_ns, batch_id)
+    for path, what in ((store_path, "store"), (sink_dir, "sink")):
+        _refuse_batch_regression(
+            spark, f"{path.rstrip('/')}/run={run_ns}", batch_id,
+            f"streaming_dedup_ingest {what}",
+        )
     store = read_fingerprint_store(spark, store_path)
     if store is not None:
         store = _string_run(store, store_path)
@@ -684,29 +655,9 @@ def _dedup_ingest_batch(
     survivors = incremental_exact_dedup(
         batch, store, text_col, id_col
     ).localCheckpoint(eager=True)
-    write_partitioned(
-        survivors.drop("fingerprint")
-        .withColumn("run", F.lit(run_ns))
-        .withColumn("batch_id", F.lit(batch_id)),
-        sink_dir,
-        ["run", "batch_id"],
-        mode="overwrite",
-        dynamic=True,
-    )
-    from data_engineering_hs_spark.operators.dedup import (
-        stamp_normalization_version,
-    )
-
+    _overwrite_batch(survivors.drop("fingerprint"), sink_dir, batch_id, run_ns)
     stamp_normalization_version(store_path)
-    write_partitioned(
-        survivors.select("fingerprint")
-        .withColumn("run", F.lit(run_ns))
-        .withColumn("batch_id", F.lit(batch_id)),
-        store_path,
-        ["run", "batch_id"],
-        mode="overwrite",
-        dynamic=True,
-    )
+    _overwrite_batch(survivors.select("fingerprint"), store_path, batch_id, run_ns)
 
 
 def streaming_cdc_apply(
@@ -805,11 +756,4 @@ def streaming_cdc_apply(
             suffix="__merge",
         )
 
-    writer = (
-        changes_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(changes_stream, checkpoint_dir, write_batch, available_now)

@@ -46,7 +46,6 @@ _SLOW_FILES = {
     "test_quality_ops.py",
     "test_shuffle_semdedup.py",
     "test_stream_stream_join.py",
-    "test_streaming.py",
     "test_watermark_late_data.py",
 }
 

@@ -235,7 +235,6 @@ TEST_ONLY_API = {
     ),
     "streaming.pipelines.file_watch_ingest": "S20: fuel_ingest_dag.py:92-111",
     "streaming.pipelines.dedup_within_watermark": "T8: fuel_ingest_dag.py:1-4,175",
-    "streaming.pipelines.run_to_memory": "S18: socket_streaming.py:19",
 }
 
 
@@ -485,3 +484,61 @@ def test_every_test_only_reason_cites_a_reference_row():
         if not re.match(r"^([A-Z]+\d+|pending item 1\b)", why)
     }
     assert bad == {}
+
+
+def _functions_holding(pred) -> set[str]:
+    """``module.function`` of the innermost function around every
+    package AST node that ``pred`` accepts (``module.None`` at module
+    level)."""
+    import ast
+
+    modules, _, _ = _census_files()
+    out = set()
+
+    def visit(node, mod, fn):
+        for child in ast.iter_child_nodes(node):
+            inner = fn
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = child.name
+            if pred(child):
+                out.add(f"{mod.partition('.')[2]}.{inner}")
+            visit(child, mod, inner)
+
+    for name, path in modules.items():
+        visit(_parse(path), name, None)
+    return out
+
+
+def test_every_streaming_sink_shares_one_micro_batch_protocol():
+    # one checkpointed foreachBatch start, one availableNow memory
+    # drain and one batch-partition commit: a sink that writes the
+    # protocol out again fails here
+    import ast
+
+    def callee(node):
+        f = node.func
+        return getattr(f, "attr", None) or getattr(f, "id", None)
+
+    def dynamic_write(n):
+        return (
+            isinstance(n, ast.Call)
+            and callee(n) == "write_partitioned"
+            and (
+                len(n.args) > 4
+                or any(
+                    k.arg == "dynamic"
+                    and not (isinstance(k.value, ast.Constant) and not k.value.value)
+                    for k in n.keywords
+                )
+            )
+        )
+
+    assert _functions_holding(
+        lambda n: isinstance(n, ast.Call) and callee(n) == "foreachBatch"
+    ) == {"streaming.pipelines._start"}
+    assert _functions_holding(
+        lambda n: isinstance(n, ast.Attribute) and n.attr == "writeStream"
+    ) == {"streaming.pipelines._start", "streaming.pipelines.run_to_memory"}
+    assert _functions_holding(dynamic_write) == {
+        "streaming.pipelines._overwrite_batch"
+    }

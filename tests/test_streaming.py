@@ -563,9 +563,10 @@ class TestStreamingDedupIngest:
 class TestStreamingGuards:
     def test_batch_regression_guard(self, spark, tmp_path):
         # the batch_id-overwrite sinks (kafka_shaped_ingest,
-        # file_watch_ingest quarantine) refuse a stream restarting
-        # below the sink's committed partitions — the wiped-checkpoint
-        # state that would delete old batches' rows one by one
+        # file_watch_ingest quarantine, streaming_dedup_ingest's store
+        # and sink) refuse a stream restarting below the sink's
+        # committed partitions — the wiped-checkpoint state that would
+        # delete old batches' rows one by one
         import os
 
         import pytest
@@ -585,6 +586,15 @@ class TestStreamingGuards:
         # regression below the committed max is refused
         with pytest.raises(RuntimeError, match="checkpoint was reset"):
             _refuse_batch_regression(spark, sink, 0, "t")
+        # a run-namespaced sink is guarded per run: a fresh run starts
+        # at 0 beside a retained one, a wiped run restarting at 0 is
+        # refused with the one message both layouts share
+        ns = str(tmp_path / "ns_sink")
+        os.makedirs(os.path.join(ns, "run=a", "batch_id=5"))
+        _refuse_batch_regression(spark, os.path.join(ns, "run=b"), 0, "t")
+        with pytest.raises(RuntimeError, match="checkpoint was reset") as e:
+            _refuse_batch_regression(spark, os.path.join(ns, "run=a"), 0, "t")
+        assert "wiped in place" in str(e.value)
 
     def test_file_watch_predicate_requires_quarantine(self, spark, tmp_path):
         import pytest
