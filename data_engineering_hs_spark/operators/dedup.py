@@ -8,17 +8,32 @@ built-in):
                        fingerprint (xxhash64 of normalized text) →
                        anti-join against a fingerprint store. One
                        shuffle on an 8-byte key.
-- minhash_signatures / minhash_lsh_pairs:
+- minhash_signatures / lsh_band_buckets / minhash_lsh_pairs:
                        shingle → k seeded xxhash64 minima → band →
                        bucket-join. The standard MinHash-LSH
                        construction (Broder 1997; Leskovec et al.,
                        Mining of Massive Datasets ch.3), expressed
                        with higher-order array functions + explode of
                        bands only (never of shingles × seeds).
-- simhash64:           64-bit SimHash (Charikar 2002) over token
-                       hashes via bit-counting in arrays.
-- embedding_near_dups: cosine > threshold pairs over an embedding
-                       column (see operators.similarity).
+- incremental_minhash_lsh:
+                       the same banding for a new batch, paired
+                       within the batch and against a persisted band
+                       store without re-signaturing the corpus.
+- simhash64 / simhash_near_pairs:
+                       64-bit SimHash (Charikar 2002) over token
+                       hashes via bit-counting, Manku chunk blocking
+                       and a popcount verify.
+- set_similarity_join: exact Jaccard join via prefix filtering.
+- dup_groups / dup_groups_star / canonicalize_duplicates:
+                       connected components over the pair graph and
+                       the canonical copy of each group.
+
+Every bucketed candidate generator — minhash_lsh_pairs (and the
+within-batch half of incremental_minhash_lsh), simhash_near_pairs,
+set_similarity_join and operators.similarity.embedding_near_dups —
+pairs through ONE step, _bucket_pairs: sorted member arrays per
+bucket, capped at max_bucket_size with a `truncated` marker, pairs
+generated array-side by _array_pairs.
 
 Scale notes: LSH bucket join shuffles on (band, bucket-hash) — skew
 appears when a bucket is hot (boilerplate docs); the band hash is
@@ -31,9 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_engineering_hs_spark.functions.text import (  # noqa: F401 — normalized_text re-exported for existing importers
+from data_engineering_hs_spark.functions.text import (
     fingerprint64,
-    normalized_text,
     tokens,
     word_shingles,
 )
@@ -273,6 +287,11 @@ def minhash_lsh_pairs(
     return _pairs_from_banded(banded, id_col, max_bucket_size)
 
 
+def _id_pair(x, y):
+    """The (id_a, id_b) pair struct of two id members."""
+    return F.struct(x.alias("id_a"), y.alias("id_b"))
+
+
 def _array_pairs(
     buckets: DataFrame, members_col: str, pair_struct, carry: list[str]
 ) -> DataFrame:
@@ -280,9 +299,10 @@ def _array_pairs(
     generated ARRAY-SIDE (no self-join): member i pairs with every
     later member via the 1-based ``slice(i+2, size-i-1)`` window.
     ``pair_struct(x, y)`` builds the emitted struct (aliased ``p``)
-    from two members; ``carry`` columns ride along per pair. Shared by
-    the MinHash, SimHash, prefix-filter and embedding-LSH candidate
-    generators — the slice indexing is off-by-one-prone, so it lives
+    from two members; ``carry`` columns ride along per pair. The
+    capped candidate generators reach it through _bucket_pairs;
+    uncapped callers (a planted-duplicate ground truth) call it
+    directly — the slice indexing is off-by-one-prone, so it lives
     in exactly one place (same-round lesson as _nearest_topn)."""
     return buckets.select(
         *carry,
@@ -306,6 +326,32 @@ def _array_pairs(
     )
 
 
+def _bucket_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    member,
+    max_bucket_size: int,
+    pair_struct=_id_pair,
+) -> DataFrame:
+    """Capped-bucket candidate pairs → (truncated, p): group ``rows``
+    on ``keys`` into a sorted array of ``member``, keep buckets with
+    2+ members, cap each array at max_bucket_size and pair it
+    array-side (_array_pairs). ``truncated`` marks pairs from a
+    capped bucket, so callers can tell complete output from bounded
+    output — a hot bucket (boilerplate, duplicate floods) emits at
+    most max_bucket_size² / 2 pairs instead of n². Pairs are NOT
+    deduped: a pair sharing several buckets repeats, and each caller
+    keeps its own tail (dedup groupBy, verify filter or joins)."""
+    buckets = (
+        rows.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(member)).alias("members"))
+        .filter(F.size("members") > 1)
+        .withColumn("truncated", F.size("members") > max_bucket_size)
+        .withColumn("members", F.slice("members", 1, max_bucket_size))
+    )
+    return _array_pairs(buckets, "members", pair_struct, ["truncated"])
+
+
 def _pairs_from_banded(
     banded: DataFrame, id_col: str, max_bucket_size: int
 ) -> DataFrame:
@@ -325,19 +371,7 @@ def _pairs_from_banded(
     Evidence: `git show 7c6b345:scripts_ab_minhash_r17.py`
     --only-fusion.
     """
-    buckets = (
-        banded.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .withColumn("truncated", F.size("ids") > max_bucket_size)
-        .withColumn("ids", F.slice("ids", 1, max_bucket_size))
-    )
-    pairs = _array_pairs(
-        buckets,
-        "ids",
-        lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b")),
-        ["truncated"],
-    )
+    pairs = _bucket_pairs(banded, ["band", "bucket"], id_col, max_bucket_size)
     # one row per pair; truncated = any contributing bucket was capped,
     # so callers can tell complete output from bounded output
     return (
@@ -430,20 +464,11 @@ def simhash_near_pairs(
     # Same no-self-join shape as minhash_lsh_pairs: collect
     # (id, simhash) per chunk bucket once, generate candidate pairs
     # array-side carrying both signatures, verify popcount inline.
-    buckets = (
-        chunks.groupBy("chunk_idx", "chunk")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(id_col).alias("id"), "simhash"))
-            ).alias("members")
-        )
-        .filter(F.size("members") > 1)
-        .withColumn("truncated", F.size("members") > max_bucket_size)
-        .withColumn("members", F.slice("members", 1, max_bucket_size))
-    )
-    pairs = _array_pairs(
-        buckets,
-        "members",
+    pairs = _bucket_pairs(
+        chunks,
+        ["chunk_idx", "chunk"],
+        F.struct(F.col(id_col).alias("id"), "simhash"),
+        max_bucket_size,
         lambda x, y: F.struct(
             x["id"].alias("id_a"),
             y["id"].alias("id_b"),
@@ -451,7 +476,6 @@ def simhash_near_pairs(
                 "hamming"
             ),
         ),
-        ["truncated"],
     )
     return (
         pairs.select("p.id_a", "p.id_b", "p.hamming", "truncated")
@@ -533,20 +557,8 @@ def set_similarity_join(
     prefix = by_rarity.select(
         "__id", F.explode(F.slice("__ordered", 1, p)).alias("__key")
     ).select("__id", F.col("__key.__tok").alias("__tok"))
-    groups = (
-        prefix.groupBy("__tok")
-        .agg(F.array_sort(F.collect_list("__id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .withColumn("truncated", F.size("ids") > max_bucket_size)
-        .withColumn("ids", F.slice("ids", 1, max_bucket_size))
-    )
     cand = (
-        _array_pairs(
-            groups,
-            "ids",
-            lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ["truncated"],
-        )
+        _bucket_pairs(prefix, ["__tok"], "__id", max_bucket_size)
         .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
         .agg(F.max("truncated").alias("truncated"))
     )

@@ -23,7 +23,7 @@ per iteration, co-partitioned on the node key so the next join
 reuses the edge cache's partitioning, and cuts the lineage with a
 localCheckpoint every _LINEAGE_CUT_EVERY (5) rounds, releasing that
 window's rank caches — without the cut, iteration k replans k joins
-deep (same lesson as dup_groups, dedup.py:38).
+deep (same lesson as operators.dedup.dup_groups).
 """
 
 from __future__ import annotations

@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
+from data_engineering_hs_spark.operators.dedup import _bucket_pairs
 from data_engineering_hs_spark.sources.parquet import (
     STORE_META,
     read_sidecar,
@@ -452,21 +453,9 @@ def embedding_near_dups(
     # bounded row memory. Carrying vectors here instead would put
     # pairs × 2 × dim doubles in ONE row (~0.5 GB for a 1000-member
     # bucket), so the verify re-joins vectors by id below.
-    buckets = (
-        b.groupBy("bucket")
-        .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .withColumn("truncated", F.size("ids") > max_bucket_size)
-        .withColumn("ids", F.slice("ids", 1, max_bucket_size))
+    pairs = _bucket_pairs(b, ["bucket"], id_col, max_bucket_size).select(
+        "p.id_a", "p.id_b", "truncated"
     )
-    from data_engineering_hs_spark.operators.dedup import _array_pairs
-
-    pairs = _array_pairs(
-        buckets,
-        "ids",
-        lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b")),
-        ["truncated"],
-    ).select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"), "truncated")
     va = df.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("vec_a"),

@@ -7,9 +7,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_engineering_hs_spark.catalog import load_table
-from data_engineering_hs_spark.functions import text as TX
 from data_engineering_hs_spark.operators.asof import asof_join
-from data_engineering_hs_spark.operators.dedup import dup_groups
+from data_engineering_hs_spark.operators.dedup import dup_groups, dup_groups_star
+from data_engineering_hs_spark.queries.llm import d_ngram_jaccard
 from data_engineering_hs_spark.queries.registry import register, stable_round_sql
 
 
@@ -87,29 +87,10 @@ FROM reach GROUP BY src
 '''
 
 
-def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
-    toks = d.select(
-        "doc_id", "lang", F.array_distinct(TX.tokens("text")).alias("tok_set")
-    )
-    a, b = toks.alias("a"), toks.alias("b")
-    inter = F.size(F.array_intersect("a.tok_set", "b.tok_set"))
-    union = F.size(F.array_distinct(F.concat("a.tok_set", "b.tok_set")))
-    return (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .filter(inter.cast("double") / union >= 0.9)
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-    )
-
-
 @register(
     "d_dup_components",
-    # Shares _DUP_COMPONENTS_ORACLE and _jaccard_pairs with
-    # d_dup_components_star — ONE copy of the pair plan and the
+    # Shares _DUP_COMPONENTS_ORACLE and d_ngram_jaccard's pair plan
+    # with d_dup_components_star — ONE copy of the pair plan and the
     # recursive oracle keeps the algorithm twins hash-checked against
     # the identical contract.
     oracle=_DUP_COMPONENTS_ORACLE,
@@ -118,7 +99,7 @@ def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle is a recursive reachability query",
 )
 def d_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dup_groups(_jaccard_pairs(spark, sf_dir))
+    return dup_groups(d_ngram_jaccard(spark, sf_dir))
 
 
 @register(
@@ -132,9 +113,7 @@ def d_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(Kiveris et al.) — log-round twin of d_dup_components",
 )
 def d_dup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_engineering_hs_spark.operators.dedup import dup_groups_star
-
-    return dup_groups_star(_jaccard_pairs(spark, sf_dir))
+    return dup_groups_star(d_ngram_jaccard(spark, sf_dir))
 
 
 @register(

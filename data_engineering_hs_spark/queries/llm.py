@@ -198,7 +198,7 @@ FROM documents
 )
 def d_exact_dup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    fp = F.md5(D.normalized_text("text"))
+    fp = F.md5(TX.normalized_text("text"))
     return d.agg(
         F.count("*").alias("n_docs"),
         F.countDistinct(fp).alias("n_distinct"),
@@ -280,20 +280,11 @@ def d_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store = D.lsh_band_buckets(store_docs, "text", "doc_id")
     pairs, _ = D.incremental_minhash_lsh(batch, store, "text", "doc_id")
-    truth = planted.crossJoin(off).select(
-        F.col("doc_id").alias("id_a"),
-        (F.col("doc_id") + F.col("__off")).alias("id_b"),
-    )
-    n_true = truth.agg(F.count("*").alias("n_true_cross"))
-    n_hit = truth.join(
-        pairs.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi"
-    ).agg(F.count("*").alias("n_found_cross"))
-    return n_true.crossJoin(n_hit).select(
-        "n_true_cross",
-        "n_found_cross",
-        (F.col("n_found_cross") == F.col("n_true_cross")).alias(
-            "complete_ok"
-        ),
+    return _planted_audit(
+        _planted_truth(planted, off, "doc_id"),
+        pairs,
+        n_true="n_true_cross",
+        n_found="n_found_cross",
     )
 
 
@@ -368,6 +359,36 @@ def _shift_ids(
     )
 
 
+def _planted_truth(planted: DataFrame, off: DataFrame, id_col: str) -> DataFrame:
+    """(id_a, id_b) ground truth of a planted-duplicate audit: each
+    planted original paired with its copy under id + __off
+    (_shift_ids with mult=1)."""
+    return planted.crossJoin(off).select(
+        F.col(id_col).alias("id_a"),
+        (F.col(id_col) + F.col("__off")).alias("id_b"),
+    )
+
+
+def _planted_audit(
+    truth: DataFrame,
+    found: DataFrame,
+    n_true: str = "n_true_pairs",
+    n_found: str = "n_found_true",
+) -> DataFrame:
+    """The one-row completeness verdict of a planted-duplicate audit:
+    the truth pair count, how many of those pairs `found` holds
+    (left-semi on (id_a, id_b)) and complete_ok = all of them. Two
+    1-row scalar frames crossJoined — the sanctioned crossJoin
+    shape."""
+    n_t = truth.agg(F.count("*").alias(n_true))
+    n_hit = truth.join(
+        found.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi"
+    ).agg(F.count("*").alias(n_found))
+    return n_t.crossJoin(n_hit).select(
+        n_true, n_found, (F.col(n_found) == F.col(n_true)).alias("complete_ok")
+    )
+
+
 @register(
     "d_minhash_lsh",
     oracle=None,  # hash-family-specific (xxhash64) → rows-only; recall
@@ -426,20 +447,8 @@ def d_minhash_lsh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     off = _plant_offset(d, "doc_id")
     aug = d.unionByName(_shift_ids(planted, off, "doc_id"))
-    found = D.minhash_lsh_pairs(aug, "text", "doc_id").select("id_a", "id_b")
-    truth = planted.crossJoin(off).select(
-        F.col("doc_id").alias("id_a"),
-        (F.col("doc_id") + F.col("__off")).alias("id_b"),
-    )
-    n_true = truth.agg(F.count("*").alias("n_true_pairs"))
-    n_hit = truth.join(found, ["id_a", "id_b"], "left_semi").agg(
-        F.count("*").alias("n_found_true")
-    )
-    return n_true.crossJoin(n_hit).select(
-        "n_true_pairs",
-        "n_found_true",
-        (F.col("n_found_true") == F.col("n_true_pairs")).alias("complete_ok"),
-    )
+    found = D.minhash_lsh_pairs(aug, "text", "doc_id")
+    return _planted_audit(_planted_truth(planted, off, "doc_id"), found)
 
 
 @register(
@@ -489,10 +498,12 @@ def d_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
         )
     )
-    found = D.simhash_near_pairs(aug, "text", "doc_id").select("id_a", "id_b")
+    found = D.simhash_near_pairs(aug, "text", "doc_id")
     # Ground truth: pairs of byte-identical raw text (identical
     # tokens → identical simhash), generated array-side from the
-    # raw-text groups (groups are tiny).
+    # raw-text groups (groups are tiny). UNCAPPED on purpose: a
+    # capped truth would agree with a capped candidate set and hide
+    # a miss.
     groups = (
         aug.groupBy(F.xxhash64("text").alias("__fp"))
         .agg(
@@ -501,32 +512,10 @@ def d_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("n_docs") > 1)
     )
-    truth = groups.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("doc_ids"),
-                    lambda x, i: F.transform(
-                        F.slice(
-                            F.col("doc_ids"), i + 2,
-                            F.greatest(F.size("doc_ids") - i - 1, F.lit(0)),
-                        ),
-                        lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.id_a", "p.id_b")
-    n_true = truth.agg(F.count("*").alias("n_true_pairs"))
-    n_hit = truth.join(found, ["id_a", "id_b"], "left_semi").agg(
-        F.count("*").alias("n_found_true")
+    truth = D._array_pairs(groups, "doc_ids", D._id_pair, []).select(
+        "p.id_a", "p.id_b"
     )
-    # two 1-row scalar frames — the sanctioned crossJoin shape
-    return n_true.crossJoin(n_hit).select(
-        "n_true_pairs",
-        "n_found_true",
-        (F.col("n_found_true") == F.col("n_true_pairs")).alias("complete_ok"),
-    )
+    return _planted_audit(truth, found)
 
 
 # ---------------------------------------------------------------------------
@@ -974,20 +963,8 @@ def s_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted = e.filter(F.col("vec_id") % 10 == 0)
     off = _plant_offset(e, "vec_id")
     aug = e.unionByName(_shift_ids(planted, off, "vec_id"))
-    found = S.embedding_near_dups(aug, threshold=0.25).select("id_a", "id_b")
-    truth = planted.crossJoin(off).select(
-        F.col("vec_id").alias("id_a"),
-        (F.col("vec_id") + F.col("__off")).alias("id_b"),
-    )
-    n_true = truth.agg(F.count("*").alias("n_true_pairs"))
-    n_hit = truth.join(found, ["id_a", "id_b"], "left_semi").agg(
-        F.count("*").alias("n_found_true")
-    )
-    return n_true.crossJoin(n_hit).select(
-        "n_true_pairs",
-        "n_found_true",
-        (F.col("n_found_true") == F.col("n_true_pairs")).alias("complete_ok"),
-    )
+    found = S.embedding_near_dups(aug, threshold=0.25)
+    return _planted_audit(_planted_truth(planted, off, "vec_id"), found)
 
 
 # ---------------------------------------------------------------------------

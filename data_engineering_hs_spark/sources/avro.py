@@ -111,7 +111,11 @@ def _decode_value(buf: io.BytesIO, typ):
 
 
 def _field_types(schema: dict) -> list[tuple[str, object]]:
-    assert schema["type"] == "record", "only flat records supported"
+    if schema.get("type") != "record":
+        raise ValueError(
+            f"unsupported avro schema type {schema.get('type')!r}: only "
+            "flat records are supported"
+        )
     return [(f["name"], f["type"]) for f in schema["fields"]]
 
 
@@ -155,9 +159,12 @@ def write_container(path: str, records: list[dict], schema: dict) -> None:
 
 
 def read_container_bytes(data: bytes) -> tuple[dict, list[dict]]:
-    """Parse one container file → (schema, records)."""
+    """Parse one container file → (schema, records). Raises
+    ValueError on a bad magic, a compressed codec or a non-record
+    schema — never decodes compressed blocks as raw bytes."""
     buf = io.BytesIO(data)
-    assert buf.read(4) == MAGIC, "not an avro container file"
+    if buf.read(4) != MAGIC:
+        raise ValueError("not an avro container file (bad magic bytes)")
     meta: dict[str, bytes] = {}
     n = _zigzag_decode(buf)
     while n:
@@ -172,9 +179,15 @@ def read_container_bytes(data: bytes) -> tuple[dict, list[dict]]:
             vlen = _zigzag_decode(buf)
             meta[k] = buf.read(vlen)
         n = _zigzag_decode(buf)
+    if "avro.schema" not in meta:
+        raise ValueError("avro container header has no avro.schema entry")
     schema = json.loads(meta["avro.schema"])
     codec = meta.get("avro.codec", b"null")
-    assert codec == b"null", f"unsupported codec: {codec}"
+    if codec != b"null":
+        raise ValueError(
+            f"unsupported codec {codec.decode(errors='replace')!r}: only "
+            "uncompressed (null-codec) avro containers are supported"
+        )
     buf.read(16)  # sync
     ftypes = _field_types(schema)
     records: list[dict] = []
@@ -250,43 +263,19 @@ def read_avro(
         for pdf in batches:
             rows = []
             for content in pdf["content"]:
-                buf = io.BytesIO(bytes(content))
-                assert buf.read(4) == MAGIC
-                meta_n = _zigzag_decode(buf)
-                file_schema = schema
-                while meta_n:
-                    if meta_n < 0:
-                        _zigzag_decode(buf)  # skippable-form byte size
-                        meta_n = -meta_n
-                    for _ in range(meta_n):
-                        k = buf.read(_zigzag_decode(buf)).decode()
-                        v = buf.read(_zigzag_decode(buf))
-                        if k == "avro.schema":
-                            file_schema = json.loads(v)
-                    meta_n = _zigzag_decode(buf)
-                ftypes = _field_types(file_schema)
+                file_schema, records = read_container_bytes(bytes(content))
                 # records decode under the FILE's schema but columns
                 # come from the caller's — a name mismatch would
                 # silently produce all-NaN columns, so fail loudly
-                missing = {n for n, _ in fields} - {n for n, _ in ftypes}
+                missing = {n for n, _ in fields} - {
+                    n for n, _ in _field_types(file_schema)
+                }
                 if missing:
                     raise ValueError(
                         f"avro reader schema fields {sorted(missing)} "
                         "absent from the file's writer schema"
                     )
-                buf.read(16)
-                while True:
-                    head = buf.read(1)
-                    if not head:
-                        break
-                    buf.seek(-1, 1)
-                    count = _zigzag_decode(buf)
-                    _ = _zigzag_decode(buf)
-                    for _ in range(count):
-                        rows.append(
-                            {n: _decode_value(buf, t) for n, t in ftypes}
-                        )
-                    buf.read(16)
+                rows.extend(records)
             # dtype=object: pandas otherwise coerces a long column
             # holding ints AND None to float64 (None → NaN), silently
             # rounding values above 2^53 — 2^60+1 read back as 2^60

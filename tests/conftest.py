@@ -19,7 +19,6 @@ SF001 = "/root/testdata/sf0.01"
 # instead of a 45-min run the external harness cannot finish. Run
 # everything with: python -m pytest tests/ -m "slow or not slow"
 _SLOW_FILES = {
-    "test_adversarial_lsh.py",
     "test_arrow_batch_boundaries.py",
     "test_curate_scale.py",
     "test_fuzz_assertions.py",

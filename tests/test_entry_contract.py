@@ -212,7 +212,6 @@ TEST_ONLY_API = {
     "plans.revenue.write_and_prune": "S8/S9: revenue_analysis/main.ipynb:298",
     "sources.avro.decode_record": "S15: spark_kafka_foreachbatch.py:51-75",
     "sources.avro.write_container": "S13: avro_test.ipynb:51",
-    "sources.avro.read_container_bytes": "S13: avro_test.ipynb:74",
     "sources.avro.read_avro": "S13: avro_test.ipynb:10-23",
     "sources.avro.decode_avro_column": "S15: spark_kafka_foreachbatch.py:51-75",
     "sources.csv.read_headerless": "S1: lab01/tasks.ipynb:293",
@@ -542,3 +541,54 @@ def test_every_streaming_sink_shares_one_micro_batch_protocol():
     assert _functions_holding(dynamic_write) == {
         "streaming.pipelines._overwrite_batch"
     }
+
+
+def test_every_near_dup_generator_shares_one_candidate_path():
+    # one capped-bucket pair step, one array-side pair generator and
+    # one planted-duplicate audit: a generator or audit that writes
+    # the step out again fails here. incremental_minhash_lsh keeps its
+    # own store-side cap because a lone store member still pairs with
+    # a new doc (no size > 1 filter there). A member-array cap sets
+    # truncated from size(...); semdedup's window-count cluster cap is
+    # a different step and is not counted.
+    import ast
+
+    def callee(node):
+        f = node.func
+        return getattr(f, "attr", None) or getattr(f, "id", None)
+
+    def call_with_first_arg(n, name, arg):
+        return (
+            isinstance(n, ast.Call)
+            and callee(n) == name
+            and bool(n.args)
+            and isinstance(n.args[0], ast.Constant)
+            and n.args[0].value == arg
+        )
+
+    def array_cap(n):
+        return call_with_first_arg(n, "withColumn", "truncated") and any(
+            isinstance(c, ast.Call) and callee(c) == "size"
+            for c in ast.walk(n.args[1])
+        )
+
+    def slice_in_flatten(n):
+        return (
+            isinstance(n, ast.Call)
+            and callee(n) == "flatten"
+            and any(
+                isinstance(c, ast.Call) and callee(c) == "slice"
+                for c in ast.walk(n)
+            )
+        )
+
+    assert _functions_holding(array_cap) == {
+        "operators.dedup._bucket_pairs",
+        "operators.dedup.incremental_minhash_lsh",
+    }
+    assert _functions_holding(slice_in_flatten) == {
+        "operators.dedup._array_pairs"
+    }
+    assert _functions_holding(
+        lambda n: call_with_first_arg(n, "alias", "complete_ok")
+    ) == {"queries.llm._planted_audit"}

@@ -46,7 +46,6 @@ OPT_IN = {
 #     at driver SF, candidate sets are the design's own bound;
 #   - non-bench audit/store paths where the scan is not the cost.
 OPT_OUT = {
-    ("_jaccard_pairs", "documents"),
     ("d_canonicalize_dups", "documents"),
     ("d_decontam_overlap", "documents"),
     ("d_dup_components_lsh", "documents"),

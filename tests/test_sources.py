@@ -537,6 +537,50 @@ class TestAvroEdges:
                 spark, p, bad_reader, use_native=False
             ).collect()
 
+    def test_read_avro_refuses_compressed_codec(self, spark, tmp_path):
+        # a deflate container's blocks are compressed: decoding them
+        # as raw records returned garbage rows before the codec check
+        import json as _json
+        import zlib
+
+        from data_engineering_hs_spark.sources import avro as A2
+
+        schema = {
+            "type": "record", "name": "R",
+            "fields": [{"name": "id", "type": "long"}],
+        }
+        recs = [{"id": i * 1000003} for i in range(50)]
+        raw = b"".join(A2.encode_record(r, schema) for r in recs)
+        packer = zlib.compressobj(wbits=-15)  # avro deflate = raw RFC 1951
+        blob = packer.compress(raw) + packer.flush()
+        meta = {
+            b"avro.schema": _json.dumps(schema).encode(),
+            b"avro.codec": b"deflate",
+        }
+        z = A2._zigzag_encode
+        sync = bytes(range(16))
+        data = (
+            A2.MAGIC
+            + z(len(meta))
+            + b"".join(z(len(k)) + k + z(len(v)) + v for k, v in meta.items())
+            + z(0)
+            + sync
+            + z(len(recs))
+            + z(len(blob))
+            + blob
+            + sync
+        )
+        p = tmp_path / "d.avro"
+        p.write_bytes(data)
+        import pytest as _pytest
+
+        with _pytest.raises(ValueError, match="unsupported codec"):
+            A2.read_container_bytes(data)
+        with _pytest.raises(Exception, match="unsupported codec"):
+            A2.read_avro(
+                spark, str(p), _json.dumps(schema), use_native=False
+            ).collect()
+
 
 class TestDetectGapsNumeric:
     def test_epoch_seconds_column(self, spark):
