@@ -33,7 +33,8 @@ within-batch half of incremental_minhash_lsh), simhash_near_pairs,
 set_similarity_join and operators.similarity.embedding_near_dups —
 pairs through ONE step, _bucket_pairs: sorted member arrays per
 bucket, capped at max_bucket_size with a `truncated` marker, pairs
-generated array-side by _array_pairs.
+generated array-side by _array_pairs. The generators that dedup their
+pairs (all but embedding_near_dups) end in ONE tail, _distinct_pairs.
 
 Scale notes: LSH bucket join shuffles on (band, bucket-hash) — skew
 appears when a bucket is hot (boilerplate docs); the band hash is
@@ -372,11 +373,15 @@ def _pairs_from_banded(
     --only-fusion.
     """
     pairs = _bucket_pairs(banded, ["band", "bucket"], id_col, max_bucket_size)
-    # one row per pair; truncated = any contributing bucket was capped,
-    # so callers can tell complete output from bounded output
-    return (
-        pairs.groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .agg(F.max("truncated").alias("truncated"))
+    return _distinct_pairs(pairs.select("p.id_a", "p.id_b", "truncated"))
+
+
+def _distinct_pairs(pairs: DataFrame, *extra: str) -> DataFrame:
+    """One row per (id_a, id_b, *extra) candidate pair; truncated =
+    any contributing bucket was capped, so callers can tell complete
+    output from bounded output."""
+    return pairs.groupBy("id_a", "id_b", *extra).agg(
+        F.max("truncated").alias("truncated")
     )
 
 
@@ -477,11 +482,11 @@ def simhash_near_pairs(
             ),
         ),
     )
-    return (
-        pairs.select("p.id_a", "p.id_b", "p.hamming", "truncated")
-        .filter(F.col("hamming") <= max_hamming)
-        .groupBy("id_a", "id_b", "hamming")
-        .agg(F.max("truncated").alias("truncated"))
+    return _distinct_pairs(
+        pairs.select("p.id_a", "p.id_b", "p.hamming", "truncated").filter(
+            F.col("hamming") <= max_hamming
+        ),
+        "hamming",
     )
 
 
@@ -557,10 +562,10 @@ def set_similarity_join(
     prefix = by_rarity.select(
         "__id", F.explode(F.slice("__ordered", 1, p)).alias("__key")
     ).select("__id", F.col("__key.__tok").alias("__tok"))
-    cand = (
-        _bucket_pairs(prefix, ["__tok"], "__id", max_bucket_size)
-        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .agg(F.max("truncated").alias("truncated"))
+    cand = _distinct_pairs(
+        _bucket_pairs(prefix, ["__tok"], "__id", max_bucket_size).select(
+            "p.id_a", "p.id_b", "truncated"
+        )
     )
     ta = base.select(F.col("__id").alias("id_a"), F.col("__toks").alias("__toks_a"))
     tb = base.select(F.col("__id").alias("id_b"), F.col("__toks").alias("__toks_b"))
@@ -784,12 +789,7 @@ def incremental_minhash_lsh(
             "truncated",
         )
     )
-    pairs = (
-        within.unionByName(cross)
-        .groupBy("id_a", "id_b")
-        .agg(F.max("truncated").alias("truncated"))
-    )
-    return pairs, new_bands
+    return _distinct_pairs(within.unionByName(cross)), new_bands
 
 
 def dup_groups_star(pairs: DataFrame, max_iters: int = 30) -> DataFrame:

@@ -9,7 +9,7 @@ left-to-right 64-term sums matching the Spark fold order exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_engineering_hs_spark.catalog import load_table
@@ -269,11 +269,7 @@ WHERE doc_id % 10 = 0
 def d_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     store_docs = d.filter(F.col("doc_id") % 2 == 0)
-    planted = store_docs.filter(
-        (F.col("doc_id") % 10 == 0)
-        & (F.length(F.trim("text")) > 0)
-        & (F.size(TX.tokens("text")) >= 3)
-    )
+    planted = store_docs.filter(_lsh_plantable())
     off = _plant_offset(d, "doc_id")
     batch = d.filter(F.col("doc_id") % 2 == 1).unionByName(
         _shift_ids(planted, off, "doc_id")
@@ -359,6 +355,17 @@ def _shift_ids(
     )
 
 
+def _lsh_plantable() -> Column:
+    """The docs a MinHash-LSH planted-duplicate audit copies: every
+    10th doc_id with non-blank text of at least 3 tokens (the 3-word
+    shingle minimum)."""
+    return (
+        (F.col("doc_id") % 10 == 0)
+        & (F.length(F.trim("text")) > 0)
+        & (F.size(TX.tokens("text")) >= 3)
+    )
+
+
 def _planted_truth(planted: DataFrame, off: DataFrame, id_col: str) -> DataFrame:
     """(id_a, id_b) ground truth of a planted-duplicate audit: each
     planted original paired with its copy under id + __off
@@ -440,11 +447,7 @@ WHERE doc_id % 10 = 0
 )
 def d_minhash_lsh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = d.filter(
-        (F.col("doc_id") % 10 == 0)
-        & (F.length(F.trim("text")) > 0)
-        & (F.size(TX.tokens("text")) >= 3)
-    )
+    planted = d.filter(_lsh_plantable())
     off = _plant_offset(d, "doc_id")
     aug = d.unionByName(_shift_ids(planted, off, "doc_id"))
     found = D.minhash_lsh_pairs(aug, "text", "doc_id")

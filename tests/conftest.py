@@ -40,7 +40,6 @@ _SLOW_FILES = {
     "test_fuzz_vectors.py",
     "test_graph_pathological.py",
     "test_ingest_replay_torture.py",
-    "test_model_dag.py",
     "test_properties.py",
     "test_quality_ops.py",
     "test_shuffle_semdedup.py",

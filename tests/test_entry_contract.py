@@ -387,6 +387,139 @@ def test_every_public_name_has_a_non_test_caller_or_a_reason():
     assert uncalled == set(TEST_ONLY_API)
 
 
+def _typed_method_refs(path, modules) -> set[tuple[str, str, str]]:
+    """(module, class, attribute) for every ``x.attr`` in the file at
+    ``path`` whose receiver ``x`` is known to hold an instance of a
+    package class: in its function scope or an enclosing one, ``x`` is
+    assigned from the class's constructor or is a parameter annotated
+    with the class. An untyped receiver with a same-spelled attribute
+    (``spark.catalog``) does not count, and neither does a reference
+    inside the class's own body."""
+    import ast
+
+    tree = _parse(path)
+    classes = {}  # local name -> (module, name) it was imported as
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module in modules:
+            for a in node.names:
+                classes[a.asname or a.name] = (node.module, a.name)
+    own = next((m for m, p in modules.items() if p == path), None)
+    for node in tree.body:
+        if own and isinstance(node, ast.ClassDef):
+            classes[node.name] = (own, node.name)
+
+    def cls_of(expr):
+        if isinstance(expr, ast.Constant) and isinstance(expr.value, str):
+            return classes.get(expr.value)  # a quoted annotation
+        return classes.get(getattr(expr, "id", None))
+
+    def own_nodes(scope):  # the scope's nodes, nested scopes excluded
+        todo = list(ast.iter_child_nodes(scope))
+        while todo:
+            n = todo.pop()
+            yield n
+            if not isinstance(n, (ast.FunctionDef, ast.Lambda, ast.ClassDef)):
+                todo.extend(ast.iter_child_nodes(n))
+
+    refs = set()
+
+    def visit(scope, env, inside):
+        env = dict(env)
+        if isinstance(scope, (ast.FunctionDef, ast.Lambda)):
+            a = scope.args
+            for p in a.posonlyargs + a.args + a.kwonlyargs:
+                env.pop(p.arg, None)
+                if p.annotation is not None and cls_of(p.annotation):
+                    env[p.arg] = cls_of(p.annotation)
+        for n in own_nodes(scope):
+            if isinstance(n, ast.Assign) and isinstance(n.value, ast.Call):
+                for t in n.targets:
+                    if isinstance(t, ast.Name) and cls_of(n.value.func):
+                        env[t.id] = cls_of(n.value.func)
+        for n in own_nodes(scope):
+            if isinstance(n, (ast.FunctionDef, ast.Lambda)):
+                visit(n, env, inside)
+            elif isinstance(n, ast.ClassDef):
+                visit(n, env, inside or (own, n.name))
+            elif (
+                isinstance(n, ast.Attribute)
+                and isinstance(n.value, ast.Name)
+                and env.get(n.value.id, inside) != inside
+            ):
+                refs.add((*env[n.value.id], n.attr))
+
+    visit(tree, {}, None)
+    return refs
+
+
+def test_method_census_counts_only_typed_receivers(tmp_path):
+    import textwrap
+
+    src = tmp_path / "caller.py"
+    src.write_text(textwrap.dedent("""
+        from data_engineering_hs_spark.plans.model_dag import (
+            ModelContext, ModelRunner,
+        )
+
+        def build(spark, ctx: ModelContext):
+            spark.catalog.listTables()
+            runner = ModelRunner(spark, {})
+            ctx.ref("a")
+
+            def later():
+                return runner.run()
+
+            return later
+
+        def untyped(runner):
+            return runner.model
+    """))
+    modules, _, _ = _census_files()
+    assert _typed_method_refs(str(src), modules) == {
+        ("data_engineering_hs_spark.plans.model_dag", "ModelContext", "ref"),
+        ("data_engineering_hs_spark.plans.model_dag", "ModelRunner", "run"),
+    }
+
+
+def test_every_public_method_has_a_non_test_caller():
+    # the name census above, one level down: a public method of a
+    # package class is reached when non-test code calls it on a typed
+    # receiver, or when a reached or private method of its own class
+    # calls it through self
+    import ast
+
+    modules, entries, scripts = _census_files()
+    refs = set()
+    for path in set(modules.values()) | set(entries) | set(scripts):
+        refs |= _typed_method_refs(path, modules)
+    uncalled = set()
+    for name, path in modules.items():
+        for cls in _parse(path).body:
+            if not isinstance(cls, ast.ClassDef) or cls.name.startswith("_"):
+                continue
+            methods = {
+                m.name: m for m in cls.body if isinstance(m, ast.FunctionDef)
+            }
+            reached = {
+                m
+                for m in methods
+                if m.startswith("_") or (name, cls.name, m) in refs
+            }
+            todo = list(reached)
+            while todo:
+                for n in ast.walk(methods[todo.pop()]):
+                    if (
+                        isinstance(n, ast.Attribute)
+                        and isinstance(n.value, ast.Name)
+                        and n.value.id == "self"
+                        and n.attr in set(methods) - reached
+                    ):
+                        reached.add(n.attr)
+                        todo.append(n.attr)
+            uncalled |= {f"{cls.name}.{m}" for m in set(methods) - reached}
+    assert sorted(uncalled) == []
+
+
 # Mode parameters (default None or a bool) of public package functions
 # that no non-test call sets, each with the reason it stays. Every
 # other such parameter was retired to its default.
@@ -544,9 +677,9 @@ def test_every_streaming_sink_shares_one_micro_batch_protocol():
 
 
 def test_every_near_dup_generator_shares_one_candidate_path():
-    # one capped-bucket pair step, one array-side pair generator and
-    # one planted-duplicate audit: a generator or audit that writes
-    # the step out again fails here. incremental_minhash_lsh keeps its
+    # one capped-bucket pair step, one array-side pair generator, one
+    # pair-dedup tail and one planted-duplicate audit: a generator or
+    # audit that writes the step out again fails here. incremental_minhash_lsh keeps its
     # own store-side cap because a lone store member still pairs with
     # a new doc (no size > 1 filter there). A member-array cap sets
     # truncated from size(...); semdedup's window-count cluster cap is
@@ -589,6 +722,9 @@ def test_every_near_dup_generator_shares_one_candidate_path():
     assert _functions_holding(slice_in_flatten) == {
         "operators.dedup._array_pairs"
     }
+    assert _functions_holding(
+        lambda n: call_with_first_arg(n, "max", "truncated")
+    ) == {"operators.dedup._distinct_pairs"}
     assert _functions_holding(
         lambda n: call_with_first_arg(n, "alias", "complete_ok")
     ) == {"queries.llm._planted_audit"}

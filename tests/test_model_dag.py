@@ -60,7 +60,6 @@ class TestFullRun:
         assert fct[12]["paid_galleons"] == Decimal("0.00")  # unpaid, ifNull
         assert fct[12]["outstanding_galleons"] == Decimal("20.00")
         assert fct[11]["status"] == "pending"  # lower()
-        assert runner.test() == []
 
     def test_accepted_values_check_fails_on_bad_status(self, spark):
         raw = _raw(spark, orders_extra=[
@@ -144,159 +143,7 @@ class TestIncremental:
         assert df.groupBy("order_id").count().filter(F.col("count") > 1).count() == 0
 
 
-class TestSelectorsAndLineage:
-    def test_graph_discovers_ref_edges(self, spark):
-        runner = build_runner(spark, _raw(spark), now_expr=NOW)
-        g = runner.graph()
-        assert g["fct_orders"] == {"stg_orders", "stg_payments"}
-        assert g["dim_customers"] == {"stg_customers"}
-        assert g["stg_orders"] == set()  # sources only
-
-    def test_plus_selectors(self, spark):
-        runner = build_runner(spark, _raw(spark), now_expr=NOW)
-        assert set(runner.select_models("+fct_orders")) == {
-            "stg_orders", "stg_payments", "fct_orders",
-        }
-        assert set(runner.select_models("stg_orders+")) == {
-            "stg_orders", "fct_orders",
-        }
-        assert runner.select_models("stg_payments") == ["stg_payments"]
-
-    def test_run_with_selector_builds_only_selection(self, spark):
-        runner = build_runner(spark, _raw(spark), now_expr=NOW)
-        out = runner.run(select="+fct_orders")
-        assert set(out) == {"stg_orders", "stg_payments", "fct_orders"}
-
-    def test_lineage_dump(self, spark):
-        runner = build_runner(spark, _raw(spark), now_expr=NOW)
-        text = runner.lineage()
-        assert "fct_orders" in text and "stg_orders, stg_payments" in text
-        assert "[incremental" in text or "[table" in text or "[view" in text
-
-
-class TestSchemaConfigAndDocs:
-    """schema.yml-style declarative tests + docs artifact
-    (magic_shop/models/schema.yml:6-28, dbt_project.yml docs flow)."""
-
-    SCHEMA_YML = """
-version: 2
-models:
-  - name: stg_customers
-    columns:
-      - name: customer_id
-        tests: [not_null, unique]
-  - name: stg_orders
-    columns:
-      - name: status
-        tests:
-          - accepted_values:
-              values: ["fulfilled", "returned", "pending", "cancelled"]
-"""
-
-    def test_yaml_config_attaches_passing_checks(self, spark, tmp_path):
-        p = tmp_path / "schema.yml"
-        p.write_text(self.SCHEMA_YML)
-        runner = build_runner(spark, _raw(spark), now_expr=NOW)
-        before = len(runner.models["stg_customers"].checks)
-        attached = runner.apply_schema_config(str(p))
-        assert attached == 3
-        assert len(runner.models["stg_customers"].checks) == before + 2
-        runner.run()  # declared checks all pass on clean fixture data
-        assert runner.test() == []
-
-    def test_declared_check_fails_on_bad_data(self, spark):
-        raw = _raw(spark, orders_extra=[
-            ("13", "2", "2025-06-11 00:00:00", "hat", "EXPLODED", "5.00"),
-        ])
-        runner = build_runner(spark, raw, now_expr=NOW)
-        runner.apply_schema_config({
-            "models": [{"name": "stg_orders", "columns": [
-                {"name": "status", "tests": [{"accepted_values": {
-                    "values": ["fulfilled", "returned", "pending", "cancelled"]}}]},
-            ]}],
-        })
-        with pytest.raises(AssertionError_):
-            runner.run()
-
-    def test_data_tests_spelling_and_unknowns_raise(self, spark):
-        runner = build_runner(spark, _raw(spark), now_expr=NOW)
-        n = runner.apply_schema_config({
-            "models": [{"name": "stg_payments", "columns": [
-                {"name": "payment_id", "data_tests": ["unique"]},
-            ]}],
-        })
-        assert n == 1
-        with pytest.raises(KeyError):
-            runner.apply_schema_config({"models": [{"name": "nope", "columns": []}]})
-        with pytest.raises(ValueError):
-            runner.apply_schema_config({
-                "models": [{"name": "stg_orders", "columns": [
-                    {"name": "status", "tests": ["is_sparkly"]},
-                ]}],
-            })
-
-    def test_manifest_is_json_roundtrippable(self, spark):
-        import json
-
-        runner = build_runner(spark, _raw(spark), now_expr=NOW)
-        m = json.loads(json.dumps(runner.manifest()))
-        assert m["models"]["fct_orders"]["depends_on"] == ["stg_orders", "stg_payments"]
-        assert m["models"]["fct_orders"]["materialization"] in (
-            "incremental", "view",
-        )
-        assert set(m["models"]) == set(runner.models)
-
-    def test_export_docs_writes_artifacts(self, spark, tmp_path):
-        import json
-
-        runner = build_runner(spark, _raw(spark), now_expr=NOW)
-        paths = runner.export_docs(str(tmp_path / "docs"))
-        m = json.load(open(paths["manifest"]))
-        assert m["models"]["fct_orders"]["depends_on"] == ["stg_orders", "stg_payments"]
-        text = open(paths["lineage"]).read()
-        assert "fct_orders" in text
-        # catalog is empty before a run, populated with column schemas after
-        cat = json.load(open(paths["catalog"]))
-        assert cat == {"models": {}}
-        runner.run()
-        paths = runner.export_docs(str(tmp_path / "docs2"))
-        cat = json.load(open(paths["catalog"]))
-        assert "fct_orders" in cat["models"]
-        cols = cat["models"]["fct_orders"]["columns"]
-        assert len(cols) > 0
-        assert all(isinstance(t, str) and t for t in cols.values())
-
-
-class TestFreshnessAndDriftGates:
-    FRESH_YML = """
-version: 2
-models:
-  - name: stg_orders
-    columns:
-      - name: order_ts
-        tests:
-          - freshness:
-              as_of: "{as_of}"
-              warn_after_hours: 24
-              error_after_hours: 168
-"""
-
-    def test_declared_freshness_passes_and_fails(self, spark, tmp_path):
-        import yaml
-
-        runner = build_runner(spark, _raw(spark), now_expr=NOW)
-        # fixture orders are around 2025-06-11..14; a near as_of passes
-        ok = yaml.safe_load(self.FRESH_YML.format(as_of="2025-06-15 00:00:00"))
-        assert runner.apply_schema_config(ok) == 1
-        runner.run()
-        assert runner.test() == []
-
-        runner2 = build_runner(spark, _raw(spark), now_expr=NOW)
-        stale = yaml.safe_load(self.FRESH_YML.format(as_of="2026-06-15 00:00:00"))
-        runner2.apply_schema_config(stale)
-        with pytest.raises(AssertionError, match="freshness error"):
-            runner2.run()
-
+class TestDriftAndDuplicateGates:
     def test_duplicate_model_name_rejected(self, spark):
         # dbt errors on duplicate model names; silently replacing the
         # first definition (and dropping its checks) is worse
@@ -327,30 +174,6 @@ models:
             r2.run()
 
 
-class TestBlueGreenPublish:
-    def test_publish_run_versions_and_isolation(self, spark, tmp_path):
-        from data_engineering_hs_spark.sources.publish import (
-            current_version,
-            read_published,
-        )
-
-        root = str(tmp_path / "pub")
-        runner = build_runner(spark, _raw(spark), now_expr=NOW)
-        v1 = runner.publish_run(root)
-        assert v1 == 1
-        base = read_published(spark, root, "fct_orders").count()
-        assert base > 0
-
-        # second release with an extra order: one atomic flip
-        raw2 = _raw(spark, orders_extra=[
-            ("99", "2", "2025-06-12 00:00:00", "hat", "fulfilled", "5.00"),
-        ])
-        runner2 = build_runner(spark, raw2, now_expr=NOW)
-        v2 = runner2.publish_run(root)
-        assert v2 == 2 and current_version(root) == 2
-        assert read_published(spark, root, "fct_orders").count() >= base
-
-
 class TestIncrementalEmptiedPartition:
     def test_emptied_partition_directory_is_removed(self, spark, tmp_path):
         import os
@@ -375,28 +198,6 @@ class TestIncrementalEmptiedPartition:
         assert rows[0]["order_month"] == 202506
         assert fct.count() == 4
         assert not os.path.exists(f"{wh}/fct_orders/order_month=202505")
-
-
-class TestSelectorPublishCarryForward:
-    def test_unselected_tables_survive_a_partial_release(self, spark, tmp_path):
-        from data_engineering_hs_spark.sources.publish import (
-            current_version,
-            read_published,
-        )
-
-        root = str(tmp_path / "pub_sel")
-        runner = build_runner(spark, _raw(spark), now_expr=NOW)
-        runner.publish_run(root)
-        dim_before = read_published(spark, root, "dim_customers").count()
-        assert dim_before > 0
-
-        runner2 = build_runner(spark, _raw(spark), now_expr=NOW)
-        v2 = runner2.publish_run(root, select="fct_orders")
-        assert v2 == 2 and current_version(root) == 2
-        # the partial release carried dim_customers forward — the
-        # snapshot did not shrink
-        assert read_published(spark, root, "dim_customers").count() == dim_before
-        assert read_published(spark, root, "fct_orders").count() > 0
 
 
 class TestIncrementalEscapedAndNullPartitions:
@@ -490,3 +291,43 @@ class TestWarehouseGuard:
         # plain local paths (and no warehouse at all) stay fine
         ModelRunner(spark, {}, warehouse_dir="/tmp/ok")
         ModelRunner(spark, {})
+
+
+class TestRunBoundaries:
+    """run(select) validates plain names before it builds anything,
+    and ref() recursion refuses a cycle."""
+
+    def test_unknown_model_raises_before_any_job(self, spark):
+        from test_compile_once import _jobs_started
+
+        runner = build_runner(spark, _raw(spark), now_expr=NOW)
+
+        def attempt():
+            # fct_orders' checks would start jobs if it built first
+            with pytest.raises(KeyError, match="nope"):
+                runner.run(["fct_orders", "nope"])
+
+        _, jobs = _jobs_started(spark, attempt, "model_dag_unknown_name")
+        assert jobs == 0
+
+    def test_plus_selector_is_refused(self, spark):
+        from test_compile_once import _jobs_started
+
+        runner = build_runner(spark, _raw(spark), now_expr=NOW)
+
+        def attempt():
+            with pytest.raises(KeyError, match=r"\+fct_orders"):
+                runner.run("+fct_orders")
+
+        _, jobs = _jobs_started(spark, attempt, "model_dag_plus_selector")
+        assert jobs == 0
+        assert set(runner.run("stg_payments")) == {"stg_payments"}
+
+    def test_ref_cycle_raises(self, spark):
+        from data_engineering_hs_spark.plans.model_dag import ModelRunner
+
+        r = ModelRunner(spark, {})
+        r.model("a")(lambda ctx: ctx.ref("b"))
+        r.model("b")(lambda ctx: ctx.ref("a"))
+        with pytest.raises(ValueError, match="ref cycle at a"):
+            r.run()
