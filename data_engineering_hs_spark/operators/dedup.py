@@ -161,14 +161,17 @@ def minhash_signatures(
 
     signature[i] = min over shingles of xxhash64(shingle, seed=i).
 
-    Physical shape: explode shingles → num_hashes codegen'd
-    xxhash64 columns → groupBy(id).agg(min×num_hashes). Spark's
-    higher-order array functions (transform/aggregate) evaluate
-    lambdas INTERPRETED (no whole-stage codegen) — an earlier
-    array-transform formulation ran ~10× slower than this exploded
-    form, which stays fully codegen'd. The shuffle is negligible:
-    partial aggregation reduces each map task to one row of
-    num_hashes minima per doc before the exchange.
+    Physical shape: explode shingles → groupBy(id) with ONE SQL
+    aggregate expression, ``array(min(xxhash64(__shingle, 0)), …)
+    AS signature``: num_hashes codegen'd xxhash64 minima, arrayed in
+    the aggregate's result projection. Spark's higher-order array
+    functions (transform/aggregate) evaluate lambdas INTERPRETED (no
+    whole-stage codegen) — an earlier array-transform formulation ran
+    ~10× slower than this exploded form, which stays fully codegen'd.
+    Building the expression as one SQL text is one py4j round trip;
+    composing the same num_hashes minima Column by Column cost 973.
+    The shuffle is negligible: partial aggregation reduces each map
+    task to one row of num_hashes minima per doc before the exchange.
     """
     if num_hashes < 1:
         raise ValueError(
@@ -185,14 +188,12 @@ def minhash_signatures(
         F.col(id_col),
         F.explode(word_shingles(text_col, k=shingle_k)).alias("__shingle"),
     )
-    minima = exploded.groupBy(id_col).agg(
-        *[
-            F.min(F.xxhash64("__shingle", F.lit(i))).alias(f"__m{i}")
-            for i in range(num_hashes)
-        ]
+    minima = ", ".join(
+        f"min(xxhash64(__shingle, {i}))" for i in range(num_hashes)
     )
-    sig = F.array(*[F.col(f"__m{i}") for i in range(num_hashes)])
-    with_sig = minima.select(F.col(id_col), sig.alias("signature"))
+    with_sig = exploded.groupBy(id_col).agg(
+        F.expr(f"array({minima}) AS signature")
+    )
     if not include_missing:
         return with_sig
     # Docs with no shingles never reach the groupBy (explode drops
@@ -241,21 +242,16 @@ def lsh_band_buckets(
     # and therefore every pair output, is identical except for 64-bit
     # hash false-collisions (~0 at any corpus size we can verify;
     # output equality re-proven at sf0.001/0.01/0.1 when this landed).
-    band_buckets = F.array(
-        *[
-            F.xxhash64(
-                *[
-                    F.element_at("signature", b * r + j + 1)
-                    for j in range(r)
-                ],
-                F.lit(b),
-            )
-            for b in range(bands)
-        ]
+    # One SQL expression for all bands: one py4j round trip.
+    band_buckets = ", ".join(
+        "xxhash64("
+        + "".join(f"element_at(signature, {b * r + j + 1}), " for j in range(r))
+        + f"{b})"
+        for b in range(bands)
     )
     return sigs.select(
         F.col(id_col),
-        F.posexplode(band_buckets).alias("band", "bucket"),
+        F.posexplode(F.expr(f"array({band_buckets})")).alias("band", "bucket"),
     )
 
 
@@ -389,37 +385,31 @@ def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """64-bit SimHash: sign of per-bit sums of token hashes.
 
     For each bit position, count tokens whose xxhash64 has that bit
-    set vs unset; bit is 1 if set-count > half. Pure array expressions.
+    set vs unset; bit is 1 if set-count > half.
+
+    Physical shape (see minhash_signatures): explode tokens → one
+    xxhash64 column → groupBy(id) with ONE SQL aggregate expression,
+    the 64-term sum of ``CASE WHEN sum(bit i) * 2 > count(*) THEN
+    2^i ELSE 0 END``. Its aggregate functions are the 64 bit-vote
+    sums and one count, which stay in whole-stage codegen and reduce
+    map-side via partial aggregation (higher-order array lambdas would
+    run interpreted); the CASE sum is the aggregate's result
+    projection, one py4j round trip to build.
     """
-    # Exploded + codegen'd shape (see minhash_signatures): explode
-    # tokens → one xxhash64 column → groupBy(id) with 64 conditional
-    # bit-vote sums + a count. Higher-order array lambdas would run
-    # interpreted; these sums stay in whole-stage codegen and reduce
-    # map-side via partial aggregation.
     # No df.rdd partition probe (forces plan→RDD conversion); see
     # minhash_signatures for the rationale.
     exploded = df.select(
         F.col(id_col), F.explode(tokens(text_col)).alias("__tok")
     ).select(F.col(id_col), F.xxhash64("__tok").alias("__h"))
-    votes = exploded.groupBy(id_col).agg(
-        F.count("*").alias("__n"),
-        *[
-            F.sum(
-                F.shiftright("__h", i).bitwiseAND(F.lit(1)).cast("long")
-            ).alias(f"__v{i}")
-            for i in range(64)
-        ],
-    )
-    bit_terms = [
-        # bit 63 is the sign bit of a signed long.
-        F.when(
-            F.col(f"__v{i}") * 2 > F.col("__n"),
-            F.lit((1 << i) if i < 63 else -(1 << 63)).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
+    votes = [f"sum(CAST(shiftright(__h, {i}) & 1 AS BIGINT))" for i in range(64)]
+    # bit 63 is the sign bit of a signed long; the terms add left to
+    # right, so the running sum never overflows.
+    bit_terms = " + ".join(
+        f"CASE WHEN {votes[i]} * 2 > count(*) "
+        f"THEN {(1 << i) if i < 63 else -(1 << 63)}L ELSE 0L END"
         for i in range(64)
-    ]
-    sim = sum(bit_terms[1:], bit_terms[0])
-    with_sim = votes.select(F.col(id_col), sim.alias("simhash"))
+    )
+    with_sim = exploded.groupBy(id_col).agg(F.expr(f"{bit_terms} AS simhash"))
     # Empty docs never reach the groupBy; surface them with null.
     return df.select(id_col).join(with_sim, id_col, "left")
 

@@ -35,6 +35,9 @@ from pyspark.sql import functions as F
 from data_engineering_hs_spark.sources.parquet import remove_partition_dirs
 
 
+_MATERIALIZATIONS = ("view", "table", "incremental")
+
+
 @dataclass
 class Model:
     name: str
@@ -109,6 +112,21 @@ class ModelRunner:
     ):
         """Decorator: @runner.model('stg_orders', materialization='table')."""
 
+        if materialization not in _MATERIALIZATIONS:
+            # any other spelling would build as a view and write
+            # nothing to the warehouse, silently
+            raise ValueError(
+                f"model {name!r}: materialization must be one of "
+                f"{', '.join(_MATERIALIZATIONS)} (got {materialization!r})"
+            )
+        if materialization == "incremental" and not (unique_key and partition_by):
+            raise ValueError(
+                f"incremental model {name!r} needs unique_key and "
+                f"partition_by (got unique_key={unique_key!r}, "
+                f"partition_by={partition_by!r}): delete+insert keys on "
+                "the one and overwrites partitions of the other"
+            )
+
         def deco(fn: Callable[[ModelContext], DataFrame]):
             if name in self.models:
                 # dbt errors on duplicate model names too: a copy-paste
@@ -143,7 +161,8 @@ class ModelRunner:
         return df
 
     def _target_path(self, m: Model) -> str:
-        assert self.warehouse_dir, "warehouse_dir required for table models"
+        if not self.warehouse_dir:
+            raise ValueError(f"model {m.name!r}: materializing needs a warehouse_dir")
         return os.path.join(self.warehouse_dir, m.name)
 
     def _target_exists(self, m: Model) -> bool:
@@ -178,7 +197,10 @@ class ModelRunner:
         to the next increment after a failure: one that no longer
         carries the moved keys leaves the ghost rows in place
         permanently."""
-        assert m.unique_key and m.partition_by, "incremental needs key+partition"
+        if not (m.unique_key and m.partition_by):
+            raise ValueError(
+                f"incremental model {m.name!r} needs unique_key and partition_by"
+            )
         path = self._target_path(m)
         if not os.path.exists(path):
             fresh.write.partitionBy(m.partition_by).mode("overwrite").parquet(path)

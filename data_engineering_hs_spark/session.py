@@ -28,6 +28,23 @@ centralizes one factory with scale-ready defaults:
   effect only when get_spark starts that session. A session that
   already exists (e.g. a caller's plain SparkSession, which
   getOrCreate returns) keeps its 100.
+- No per-call origin capture. PySpark 4 wraps every DataFrame and
+  Column API call in ``pyspark.errors.utils._with_origin``: a
+  ``getActiveSession``, a conf read, ``PySparkCurrentOrigin.set`` and
+  ``clear`` on the JVM and a Python stack walk, so ``F.col("x")``
+  alone costs 13 py4j round trips and ``.alias()`` on it 11 more.
+  Building the five headline queries without running them sent 5,387
+  py4j commands (d_minhash_lsh 2,638 of them). With
+  ``spark.python.sql.dataFrameDebugging.enabled=false``, the switch
+  PySpark provides to cut that cost, each call is one round trip.
+  What an error loses: exception classes and messages are unchanged,
+  and a runtime error's DataFrame context still names the operation
+  (``"divide" was called from …``), but no longer the Python
+  ``file:line``. Restore it with ``extra_conf={
+  "spark.python.sql.dataFrameDebugging.enabled": "true"}``. PySpark
+  caches the flag on its first use in the process, so, as with the
+  codegen cache, it takes effect only when get_spark builds the
+  process's first session.
 """
 
 from __future__ import annotations
@@ -86,6 +103,7 @@ def get_spark(
         ),
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         "spark.ui.enabled": "false",
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
     if extra_conf:
         conf.update(extra_conf)

@@ -689,6 +689,16 @@ def streaming_cdc_apply(
     conflicting key raises instead of silently resurrecting deleted
     rows or duplicating updates.
 
+    `seq_col` orders ops only WITHIN a micro-batch. Across batches,
+    the file source's arrival order (file modification time) decides
+    which changeset applies first, and files with equal mtimes are
+    ordered arbitrarily. A change directory copied without its mtimes
+    (`cp -r`) can therefore apply changesets out of order: a cached
+    benchmark dataset copied that way failed the ingest workload's
+    seed 1 with "cdc table has 14563 rows, expected 14558" on every
+    run, while a `cp -a` copy passed. Copy change files only with
+    their mtimes preserved.
+
     At scale the merged rewrite is the standard copy-on-write MERGE
     cost (Delta/Hudi CoW); the anti-join side broadcasts when the
     batch is small. Partition-pruned rewrites (only touched

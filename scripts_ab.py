@@ -24,6 +24,9 @@ metric: a gain needs the change to win 9 of 10 pairs (ties count for
 neither) and a median delta above the base's interquartile range; a
 regression is a median worse by more than the metric's bound. It
 exits 1 on a regression, an incorrect run or a higher fail ratio.
+An informational row also shows each side's wall ``round_s`` from
+the runs' context lines: a change can buy CPU with latency, and the
+end-to-end metrics would not show it. That row judges nothing.
 """
 
 from __future__ import annotations
@@ -198,12 +201,13 @@ def run_perfbench(roots, workload, pairs, out=print) -> int:
                 "--workload", workload, "--seed", str(seed),
                 "--seconds", str(bench["run_seconds"]),
             ]
-            # stderr passes through; the result is the last stdout line
+            # stderr passes through; the result is the last stdout
+            # line, the run's context the line before it
             p = subprocess.run(
                 cmd, cwd=roots[s], stdout=subprocess.PIPE, text=True, check=True
             )
-            line = p.stdout.strip().splitlines()[-1]
-            runs[s].append(json.loads(line))
+            *_, context, line = p.stdout.strip().splitlines()
+            runs[s].append({**json.loads(line), **json.loads(context)})
             out(f"seed {seed} {s}: {line}")
     out(f"{workload}, {pairs} pairs")
     return perfbench_report(runs, bench["end_to_end"], out)
@@ -221,6 +225,12 @@ def perfbench_report(runs, end_to_end, out=print) -> int:
         v = verdict(vals["base"], vals["change"], m["bound"], m["better"])
         out(_row(m["name"], v))
         rc |= v["verdict"] == "regression"
+    walls = {
+        s: [r["context"]["figures"]["round_s"]["value"] for r in runs[s]]
+        for s in SIDES
+    }
+    v = verdict(walls["base"], walls["change"])
+    out(_row("round_s (wall)", {**v, "verdict": "info"}))
     ratio = {}
     for s in SIDES:
         att = sum(r["attempted"] for r in runs[s])

@@ -101,14 +101,16 @@ def test_equal_values_time_each_query_every_round_flipping_order():
     assert timed == ["base", "change", "change", "base"]
 
 
-def _bench_line(setup, cpu, failed=0, correct=True):
-    # the last stdout line of perfbench/run.py
+def _bench_line(setup, cpu, failed=0, correct=True, wall=1.0):
+    # the last stdout line of perfbench/run.py, with the context line
+    # before it merged in
     return {
         "correct": correct, "attempted": 25, "failed": failed,
         "metrics": {
             "setup_s": {"value": setup, "unit": "s"},
             "round_cpu_s": {"value": cpu, "unit": "s"},
         },
+        "context": {"figures": {"round_s": {"value": wall, "unit": "s"}}},
     }
 
 
@@ -136,3 +138,18 @@ def test_perfbench_report_fails_on_regression_failures_or_wrong_output():
     assert ab.perfbench_report(failing, END_TO_END, lambda line: None) == 1
     wrong = {"base": base, "change": base[:-1] + [_bench_line(2.0, 10.9, correct=False)]}
     assert ab.perfbench_report(wrong, END_TO_END, lambda line: None) == 1
+
+
+def test_perfbench_report_shows_wall_round_s_without_judging_it():
+    # CPU bought with latency: the change is faster on round_cpu_s but
+    # doubles the wall round time
+    runs = {
+        "base": [_bench_line(2.0, b, wall=1.0 + i / 100) for i, b in enumerate(BASE)],
+        "change": [_bench_line(2.0, b - 1.0, wall=2.0 + i / 100) for i, b in enumerate(BASE)],
+    }
+    lines = []
+    assert ab.perfbench_report(runs, END_TO_END, lines.append) == 0
+    [wall] = [line for line in lines if line.startswith("round_s (wall)")]
+    assert wall.split()[2:4] == ["1.045", "2.045"]
+    assert wall.split()[-2:] == ["0/10", "info"]
+    assert any(line.startswith("round_cpu_s") and "gain" in line for line in lines)

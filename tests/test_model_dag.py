@@ -331,3 +331,49 @@ class TestRunBoundaries:
         r.model("b")(lambda ctx: ctx.ref("a"))
         with pytest.raises(ValueError, match="ref cycle at a"):
             r.run()
+
+
+class TestRegistrationBoundaries:
+    """model() refuses what it cannot materialize at registration,
+    and the materialization steps check their inputs with explicit
+    raises that ``python -O`` keeps."""
+
+    def test_unknown_materialization_is_refused(self, spark, tmp_path):
+        from data_engineering_hs_spark.plans.model_dag import ModelRunner
+
+        r = ModelRunner(spark, {}, warehouse_dir=str(tmp_path))
+        with pytest.raises(ValueError, match="view, table, incremental.*'tabel'"):
+            r.model("t", materialization="tabel")
+        assert r.models == {}
+        assert list(tmp_path.iterdir()) == []
+
+    @pytest.mark.parametrize(
+        "key,part", [(None, "p"), ("k", None), (None, None), ("", "p")]
+    )
+    def test_incremental_needs_key_and_partition_at_registration(
+        self, spark, key, part
+    ):
+        from data_engineering_hs_spark.plans.model_dag import ModelRunner
+
+        r = ModelRunner(spark, {})
+        with pytest.raises(ValueError, match="needs unique_key and partition_by"):
+            r.model(
+                "inc", materialization="incremental",
+                unique_key=key, partition_by=part,
+            )
+        assert r.models == {}
+
+    def test_materialization_steps_raise_not_assert(self, spark, tmp_path):
+        from data_engineering_hs_spark.plans.model_dag import Model, ModelRunner
+
+        def fn(ctx):
+            return ctx.spark.range(3).withColumn("p", F.lit(1))
+
+        r = ModelRunner(spark, {}, warehouse_dir=str(tmp_path))
+        # a Model built by hand skips model()'s registration check
+        r.models["inc"] = Model("inc", fn, "incremental")
+        with pytest.raises(ValueError, match="needs unique_key and partition_by"):
+            r.run()
+        assert list(tmp_path.iterdir()) == []
+        with pytest.raises(ValueError, match="needs a warehouse_dir"):
+            ModelRunner(spark, {})._target_path(Model("t", fn, "table"))
