@@ -29,6 +29,20 @@ optimization stands regardless: norms are computed once per ROW
 before each candidate join (cosine_from), never per PAIR. The
 8-plane LSH bit expressions keep a narrow literal-weight unroll
 (measured slightly faster than the fold at that width).
+
+The embedding contract is stated once, here, and callers do not pass
+it:
+- columns: corpus and query frames carry (vec_id, embedding), centers
+  frames (label, centroid). A column resolves by name against its
+  frame's schema, so these names are part of the input, not settings;
+- PQ geometry: _PQ_M = 8 subspaces of 1 << _PQ_BITS = 16 codes each,
+  packed into one BIGINT (32 bits used). The sub-vector width is read
+  from each row as size(embedding) div 8, so a width that is not a
+  multiple of 8 drops its last size mod 8 components, and one shorter
+  than 8 fails the job. No caller can
+  restate the geometry differently from the codebooks it trained; a
+  stored code store records m/bits and a store written with another
+  geometry is refused (_check_store_meta).
 """
 
 from __future__ import annotations
@@ -52,6 +66,18 @@ from data_engineering_hs_spark.functions.vector import (
     is_finite_vector,
     norm,
 )
+
+_ID_COL = "vec_id"
+_VEC_COL = "embedding"
+_LABEL_COL = "label"
+_CENTROID_COL = "centroid"
+
+# Product quantization geometry (see the module docstring)
+_PQ_M = 8
+_PQ_BITS = 4
+
+# seed of the hyperplane LSH plane weights
+_LSH_SEED = 42
 
 
 def _pair_dot(strategy: str, a: str, b: str) -> Column:
@@ -86,8 +112,6 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dot_strategy: str = "fold",
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, rank, neighbor_id, cos_sim).
@@ -101,14 +125,14 @@ def brute_force_topk(
     projection), so per pair only the dot fold remains.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(vec_col).alias("q_norm"),
+        F.col(_ID_COL).alias("query_id"),
+        F.col(_VEC_COL).alias("q_vec"),
+        norm(_VEC_COL).alias("q_norm"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(vec_col).alias("c_norm"),
+        F.col(_ID_COL).alias("neighbor_id"),
+        F.col(_VEC_COL).alias("c_vec"),
+        norm(_VEC_COL).alias("c_norm"),
     )
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
@@ -140,27 +164,25 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def centroids(
-    df: DataFrame, label_col: str = "label", vec_col: str = "embedding"
-) -> DataFrame:
+def centroids(df: DataFrame) -> DataFrame:
     """Per-label mean vector: posexplode → groupBy(label, pos) → avg →
     re-assemble ordered array. Two shuffles, both on small keys."""
     pos = df.select(
-        F.col(label_col), F.posexplode(F.col(vec_col)).alias("pos", "val")
+        F.col(_LABEL_COL), F.posexplode(F.col(_VEC_COL)).alias("pos", "val")
     )
-    by_pos = pos.groupBy(label_col, "pos").agg(
+    by_pos = pos.groupBy(_LABEL_COL, "pos").agg(
         F.sum(F.col("val").cast("double")).alias("s"), F.count("*").alias("n")
     )
     return (
         by_pos.withColumn("mean_val", F.col("s") / F.col("n"))
-        .groupBy(label_col)
+        .groupBy(_LABEL_COL)
         .agg(
             F.transform(
                 F.array_sort(
                     F.collect_list(F.struct(F.col("pos"), F.col("mean_val")))
                 ),
                 lambda s: s["mean_val"],
-            ).alias("centroid")
+            ).alias(_CENTROID_COL)
         )
     )
 
@@ -228,10 +250,6 @@ def ivf_topk(
     centers: DataFrame,
     k: int = 5,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    center_id_col: str = "label",
-    center_vec_col: str = "centroid",
 ) -> DataFrame:
     """IVF approximate top-k: corpus rows are assigned to their nearest
     center; each query probes its `nprobe` nearest centers and ranks
@@ -248,9 +266,9 @@ def ivf_topk(
     (id, center, sim) rows; vectors re-attach by id afterward.
     """
     cent = centers.select(
-        F.col(center_id_col).alias("center_id"),
-        F.col(center_vec_col).alias("center_vec"),
-        norm(center_vec_col).alias("center_norm"),
+        F.col(_LABEL_COL).alias("center_id"),
+        F.col(_CENTROID_COL).alias("center_vec"),
+        norm(_CENTROID_COL).alias("center_norm"),
     )
 
     def assign(df: DataFrame, idc: str, vecc: str, nrm: str, n: int, out: str) -> DataFrame:
@@ -269,9 +287,9 @@ def ivf_topk(
 
     query_probes = assign(
         queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            norm(vec_col).alias("q_norm"),
+            F.col(_ID_COL).alias("query_id"),
+            F.col(_VEC_COL).alias("q_vec"),
+            norm(_VEC_COL).alias("q_norm"),
         ),
         "query_id",
         "q_vec",
@@ -280,9 +298,9 @@ def ivf_topk(
         "cell",
     )
     corpus_slim = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(vec_col).alias("c_norm"),
+        F.col(_ID_COL).alias("neighbor_id"),
+        F.col(_VEC_COL).alias("c_vec"),
+        norm(_VEC_COL).alias("c_norm"),
     )
     corpus_assigned = assign(
         corpus_slim, "neighbor_id", "c_vec", "c_norm", 1, "cell"
@@ -305,17 +323,12 @@ def ivf_topk(
 
 
 def lsh_bucket_assign(
-    df: DataFrame,
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    df: DataFrame, n_planes: int = 8, dim: int = 64
 ) -> DataFrame:
     """Random-hyperplane LSH bucket id per vector: sign bits of dots
     with n_planes pseudo-random unit directions. Plane weights are
-    derived Python-side from sha256(seed, plane, index) and embedded
-    as literal factors — identical across jobs/clusters and free at
+    derived Python-side from sha256(_LSH_SEED, plane, index) and
+    embedded as literal factors — identical across jobs/clusters and free at
     runtime. Each plane dot is an unrolled element_at sum (codegen'd;
     the earlier zip_with/aggregate fold ran interpreted).
 
@@ -336,10 +349,10 @@ def lsh_bucket_assign(
     from functools import reduce
 
     def weight(p: int, i: int) -> float:
-        h = hashlib.sha256(f"{seed}:{p}:{i}".encode()).digest()
+        h = hashlib.sha256(f"{_LSH_SEED}:{p}:{i}".encode()).digest()
         return int.from_bytes(h[:8], "big") / float(1 << 63) - 1.0
 
-    vec = F.col(vec_col)
+    vec = F.col(_VEC_COL)
     bit_terms = [
         F.when(
             reduce(
@@ -355,7 +368,7 @@ def lsh_bucket_assign(
         for p in range(n_planes)
     ]
     bucket = sum(bit_terms[1:], bit_terms[0])
-    return df.select(F.col(id_col), F.col(vec_col), bucket.alias("bucket"))
+    return df.select(F.col(_ID_COL), F.col(_VEC_COL), bucket.alias("bucket"))
 
 
 def lsh_topk(
@@ -364,42 +377,29 @@ def lsh_topk(
     k: int = 5,
     n_planes: int = 4,
     dim: int = 64,
-    multiprobe_bits: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Hyperplane-LSH approximate top-k with multi-probe.
 
     Corpus vectors bucket once; each query probes its own bucket plus
-    every bucket within Hamming distance `multiprobe_bits` of it
-    (flip-one-bit neighbors), then exact-ranks the candidates. The
-    non-learned ANN alternative to IVF — no training pass, stable
+    every bucket within Hamming distance 1 of it (flip-one-bit
+    neighbors), then exact-ranks the candidates. The non-learned ANN
+    alternative to IVF — no training pass, stable
     under distribution shift, candidates ≈ corpus/2^planes × probes.
     """
-    cb = lsh_bucket_assign(
-        corpus, n_planes=n_planes, dim=dim, id_col=id_col, vec_col=vec_col
-    ).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(vec_col).alias("c_norm"),
+    cb = lsh_bucket_assign(corpus, n_planes=n_planes, dim=dim).select(
+        F.col(_ID_COL).alias("neighbor_id"),
+        F.col(_VEC_COL).alias("c_vec"),
+        norm(_VEC_COL).alias("c_norm"),
         "bucket",
     )
-    qb = lsh_bucket_assign(
-        queries, n_planes=n_planes, dim=dim, id_col=id_col, vec_col=vec_col
-    ).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(vec_col).alias("q_norm"),
+    qb = lsh_bucket_assign(queries, n_planes=n_planes, dim=dim).select(
+        F.col(_ID_COL).alias("query_id"),
+        F.col(_VEC_COL).alias("q_vec"),
+        norm(_VEC_COL).alias("q_norm"),
         "bucket",
     )
-    # Probe masks: own bucket + all buckets within `multiprobe_bits`
-    # Hamming distance (precomputed bit masks, applied via XOR).
-    import itertools
-
-    masks = [0]
-    for nbits in range(1, multiprobe_bits + 1):
-        for combo in itertools.combinations(range(n_planes), nbits):
-            masks.append(sum(1 << p for p in combo))
+    # Probe masks: own bucket + every one-bit flip, applied via XOR
+    masks = [0] + [1 << p for p in range(n_planes)]
     probes = [F.col("bucket").bitwiseXOR(F.lit(m)) for m in masks]
     q_probes = qb.select(
         "query_id", "q_vec", "q_norm", F.explode(F.array(*probes)).alias("bucket")
@@ -424,8 +424,6 @@ def lsh_topk(
 def embedding_near_dups(
     df: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 8,
     dim: int = 64,
     max_bucket_size: int = 1000,
@@ -445,26 +443,26 @@ def embedding_near_dups(
     complete output from bounded output. Each vector lands in exactly
     one bucket, so pairs are already distinct — no dedup shuffle.
     """
-    b = lsh_bucket_assign(
-        df, n_planes=n_planes, dim=dim, id_col=id_col, vec_col=vec_col
-    ).select(F.col(id_col), F.col("bucket"))
+    b = lsh_bucket_assign(df, n_planes=n_planes, dim=dim).select(
+        F.col(_ID_COL), F.col("bucket")
+    )
     # id-only member lists: a capped hot bucket holds ≤max_bucket_size
     # 8-byte ids (~8 KB) and its array-side pair list ~16 B/pair —
     # bounded row memory. Carrying vectors here instead would put
     # pairs × 2 × dim doubles in ONE row (~0.5 GB for a 1000-member
     # bucket), so the verify re-joins vectors by id below.
-    pairs = _bucket_pairs(b, ["bucket"], id_col, max_bucket_size).select(
+    pairs = _bucket_pairs(b, ["bucket"], _ID_COL, max_bucket_size).select(
         "p.id_a", "p.id_b", "truncated"
     )
     va = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("vec_a"),
-        norm(vec_col).alias("norm_a"),
+        F.col(_ID_COL).alias("id_a"),
+        F.col(_VEC_COL).alias("vec_a"),
+        norm(_VEC_COL).alias("norm_a"),
     )
     vb = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vec_b"),
-        norm(vec_col).alias("norm_b"),
+        F.col(_ID_COL).alias("id_b"),
+        F.col(_VEC_COL).alias("vec_b"),
+        norm(_VEC_COL).alias("norm_b"),
     )
     return (
         pairs.join(va, "id_a")
@@ -489,8 +487,6 @@ def mmr_select(
     pool: int = 8,
     k: int = 4,
     lam: float = 0.7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Maximal Marginal Relevance diversification (Carbonell &
     Goldstein, SIGIR'98) over a brute-force candidate pool.
@@ -512,16 +508,16 @@ def mmr_select(
     """
     from data_engineering_hs_spark.functions import vector as V
 
-    q = embeddings.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("__q")
+    q = embeddings.filter(F.col(_ID_COL) == query_vec_id).select(
+        F.col(_VEC_COL).alias("__q")
     )
     cand = (
-        embeddings.filter(F.col(id_col) != query_vec_id)
+        embeddings.filter(F.col(_ID_COL) != query_vec_id)
         .crossJoin(F.broadcast(q))  # 1-row query frame
         .select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("vec"),
-            V.cosine(vec_col, "__q").alias("rel"),
+            F.col(_ID_COL).alias("vec_id"),
+            F.col(_VEC_COL).alias("vec"),
+            V.cosine(_VEC_COL, "__q").alias("rel"),
         )
         # a NULL rel (null/malformed embedding) is un-scorable: keep
         # it out of the pool rather than let the driver-side greedy
@@ -583,7 +579,7 @@ def mmr_select(
     out_schema = T.StructType(
         [
             T.StructField("pick", T.IntegerType()),
-            T.StructField("vec_id", embeddings.schema[id_col].dataType),
+            T.StructField("vec_id", embeddings.schema[_ID_COL].dataType),
             T.StructField("rel", T.DoubleType()),
         ]
     )
@@ -607,27 +603,38 @@ def mmr_select(
 _PQ_SCALE = 1 << 40
 
 
-def _pq_subvectors(
-    df: DataFrame, m: int, dim: int, id_col: str, vec_col: str
-) -> DataFrame:
-    """(id, subspace, sv: array<double>) — each vector split into m
-    contiguous sub_dim-sized subvectors. Pure array slicing, no
-    shuffle; the explode multiplies rows by m (small constant)."""
-    sub_dim = dim // m
+def _pq_subvectors(df: DataFrame) -> DataFrame:
+    """(id, subspace, sv: array<double>) — each vector split into
+    _PQ_M contiguous subvectors of width size(vec) div _PQ_M, read
+    from the row itself. Pure array slicing, no shuffle; the explode
+    multiplies rows by _PQ_M (small constant). A vector shorter than
+    _PQ_M fails the job: its sub-vectors would be empty, and empty
+    codebooks encode nothing, silently."""
+    size = F.size(_VEC_COL)
+    width = F.when(
+        size.between(0, _PQ_M - 1),
+        F.raise_error(
+            F.concat(
+                F.lit("PQ embedding has "),
+                size.cast("string"),
+                F.lit(f" components, fewer than the {_PQ_M} subspaces"),
+            )
+        ),
+    ).otherwise(F.expr(f"CAST(size({_VEC_COL}) div {_PQ_M} AS INT)"))
     parts = F.array(
         *[
             F.struct(
                 F.lit(s).alias("subspace"),
-                F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim)
+                F.slice(F.col(_VEC_COL), width * s + 1, width)
                 .cast("array<double>")
                 .alias("sv"),
             )
-            for s in range(m)
+            for s in range(_PQ_M)
         ]
     )
     return df.select(
-        F.col(id_col), F.explode(parts).alias("x")
-    ).select(id_col, F.col("x.subspace").alias("subspace"), F.col("x.sv").alias("sv"))
+        F.col(_ID_COL), F.explode(parts).alias("x")
+    ).select(_ID_COL, F.col("x.subspace").alias("subspace"), F.col("x.sv").alias("sv"))
 
 
 def _pq_l2sq() -> Column:
@@ -640,26 +647,26 @@ def _pq_l2sq() -> Column:
     )
 
 
-def _pq_assign(sv: DataFrame, codebooks: DataFrame, id_col: str) -> DataFrame:
+def _pq_assign(sv: DataFrame, codebooks: DataFrame) -> DataFrame:
     """Nearest-code assignment per (id, subspace): broadcast the tiny
-    codebook (m*k rows), argmin via min(struct(d2, code)) — ties
+    codebook (_PQ_M * 2^_PQ_BITS rows), argmin via min(struct(d2, code)) — ties
     break to the smaller code, deterministic, no window shuffle."""
     joined = sv.join(F.broadcast(codebooks), "subspace")
     return (
         joined.select(
-            F.col(id_col),
+            F.col(_ID_COL),
             "subspace",
             "sv",
             "code",
             _pq_l2sq().alias("d2"),
         )
-        .groupBy(id_col, "subspace")
+        .groupBy(_ID_COL, "subspace")
         .agg(
             F.min(F.struct(F.col("d2"), F.col("code"))).alias("best"),
             F.first("sv").alias("sv"),  # constant per (id, subspace)
         )
         .select(
-            F.col(id_col),
+            F.col(_ID_COL),
             "subspace",
             "sv",
             F.col("best.code").alias("code"),
@@ -667,40 +674,30 @@ def _pq_assign(sv: DataFrame, codebooks: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def pq_train(
-    df: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    iters: int = 3,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_train(df: DataFrame, iters: int = 3) -> DataFrame:
     """Train per-subspace PQ codebooks → (subspace, code, centroid).
 
     Product quantization (Jégou et al., "Product Quantization for
-    Nearest Neighbor Search", TPAMI 2011): split each dim-d vector
-    into m contiguous subvectors and vector-quantize each subspace
-    independently with its own k-entry codebook. A vector compresses
-    to m codes (m*log2(k) bits — 8x4=32 bits here vs 256 bytes of
-    float32: 64x), and inner products against any query decompose
-    into m table lookups (ADC) — the standard way to scan 100 TB of
-    embeddings without touching the raw floats.
+    Nearest Neighbor Search", TPAMI 2011): split each vector into
+    _PQ_M = 8 contiguous subvectors and vector-quantize each subspace
+    independently with its own 1 << _PQ_BITS = 16-entry codebook. A
+    vector compresses to 8 codes (8x4 = 32 bits vs 256 bytes of
+    64-dim float32: 64x), and inner products against any query
+    decompose into 8 table lookups (ADC) — the standard way to scan
+    100 TB of embeddings without touching the raw floats.
 
-    All m codebooks train in ONE pipeline: subspace is just a
+    All 8 codebooks train in ONE pipeline: subspace is just a
     grouping column, so each Lloyd iteration is a single broadcast
     assignment join + one integer-scaled positional mean over
-    (subspace, code, pos) — m*k*sub_dim output cells, shuffle keyed
-    on those tiny groups. Seeding is deterministic: the k smallest
-    ids' subvectors per subspace.
+    (subspace, code, pos) — 8*16*sub-width output cells, shuffle
+    keyed on those tiny groups. Seeding is deterministic: the 16
+    smallest ids' subvectors per subspace.
     """
-    data = _pq_subvectors(df, m, dim, id_col, vec_col).localCheckpoint(
-        eager=True
-    )
-    wseed = Window.partitionBy("subspace").orderBy(id_col)
+    data = _pq_subvectors(df).localCheckpoint(eager=True)
+    wseed = Window.partitionBy("subspace").orderBy(_ID_COL)
     centers = (
         data.withColumn("rn", F.row_number().over(wseed))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= 1 << _PQ_BITS)
         .select(
             "subspace",
             (F.col("rn") - 1).alias("code"),
@@ -709,7 +706,7 @@ def pq_train(
         .localCheckpoint(eager=True)
     )
     for _ in range(iters):
-        assigned = _pq_assign(data, centers, id_col)
+        assigned = _pq_assign(data, centers)
         pos = assigned.select(
             "subspace", "code", F.posexplode("sv").alias("pos", "val")
         )
@@ -734,17 +731,10 @@ def pq_train(
     return centers
 
 
-def pq_encode(
-    df: DataFrame,
-    codebooks: DataFrame,
-    m: int = 8,
-    bits: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, pq_code) — each vector compressed to one BIGINT packing m
-    `bits`-bit codes (subspace s occupies bits [s*bits, (s+1)*bits)).
+def pq_encode(df: DataFrame, codebooks: DataFrame) -> DataFrame:
+    """(id, pq_code) — each vector compressed to one BIGINT packing
+    _PQ_M codes of _PQ_BITS bits (subspace s occupies bits
+    [s*_PQ_BITS, (s+1)*_PQ_BITS)).
     One broadcast assignment pass + one groupBy(id) to pack; the
     stored column is 8 bytes/vector however wide the embedding is.
 
@@ -759,15 +749,14 @@ def pq_encode(
     neighbor, so it has no business in an approximate index; audit
     them upstream with functions.vector.is_finite_vector if you need
     the count."""
-    df = df.filter(is_finite_vector(vec_col))
-    sv = _pq_subvectors(df, m, dim, id_col, vec_col)
-    assigned = _pq_assign(sv, codebooks, id_col)
+    df = df.filter(is_finite_vector(_VEC_COL))
+    assigned = _pq_assign(_pq_subvectors(df), codebooks)
     # SQL expr: the Python shiftleft() wrapper takes only a literal
     # bit count, but the SQL function accepts a column
     packed = F.sum(
-        F.expr(f"shiftleft(CAST(code AS BIGINT), subspace * {bits})")
+        F.expr(f"shiftleft(CAST(code AS BIGINT), subspace * {_PQ_BITS})")
     )
-    return assigned.groupBy(id_col).agg(packed.alias("pq_code"))
+    return assigned.groupBy(_ID_COL).agg(packed.alias("pq_code"))
 
 
 def pq_topk(
@@ -776,11 +765,6 @@ def pq_topk(
     codebooks: DataFrame,
     k: int = 5,
     shortlist: int = 50,
-    m: int = 8,
-    bits: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """PQ-ADC approximate top-k with exact rerank → (query_id, rank,
     neighbor_id, cos_sim).
@@ -789,38 +773,40 @@ def pq_topk(
     corpus vector is scored from its codes via a per-query lookup
     table LUT[subspace, code] = <q_sub, centroid> (plus the
     centroid's squared norm for the denominator). The LUT is tiny
-    (|Q| * m * k rows) and broadcasts; corpus codes decode with bit
+    (|Q| * 8 * 16 rows) and broadcasts; corpus codes decode with bit
     math (no data movement), join the LUT, and partial-aggregate to
     one (query, id) approximate score per map task before the
     shuffle. The approximate top-`shortlist` then reranks EXACTLY
     against the raw vectors — the production shape (compressed scan
     finds candidates, full-precision rerank fixes the order), so
     recall is governed by shortlist depth, not quantization error
-    alone.
+    alone. ``shortlist < k`` raises (the rerank could return at most
+    ``shortlist`` neighbors); ``k <= 0`` returns an empty frame.
     """
-    codes = pq_encode(corpus, codebooks, m, bits, dim, id_col, vec_col)
-    coded = codes.select(F.col(id_col).alias("neighbor_id"), "pq_code")
-    lut = _adc_lut(queries, codebooks, m, dim, id_col, vec_col)
+    _check_shortlist(k, shortlist)
+    codes = pq_encode(corpus, codebooks)
+    coded = codes.select(F.col(_ID_COL).alias("neighbor_id"), "pq_code")
     return _adc_rerank(
-        coded, lut, [], corpus, queries, k, shortlist, m, bits, id_col,
-        vec_col,
+        coded, _adc_lut(queries, codebooks), [], corpus, queries, k,
+        shortlist,
     )
 
 
-def _adc_lut(
-    queries: DataFrame,
-    codebooks: DataFrame,
-    m: int,
-    dim: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
+def _check_shortlist(k: int, shortlist: int) -> None:
+    """Refuse a shortlist shorter than k, before any Spark job: the
+    exact rerank keeps only ``shortlist`` candidates per query."""
+    if 0 < k and shortlist < k:
+        raise ValueError(
+            f"shortlist must be >= k (got shortlist={shortlist}, k={k}): "
+            "the exact rerank keeps only shortlist candidates per query"
+        )
+
+
+def _adc_lut(queries: DataFrame, codebooks: DataFrame) -> DataFrame:
     """Per-query ADC lookup table (query_id, subspace, code, pip, cn2):
-    pip = <q_sub, centroid>, cn2 = |centroid|² — |Q|·m·2^bits rows,
-    broadcast-sized."""
-    q_sv = _pq_subvectors(queries, m, dim, id_col, vec_col).withColumnRenamed(
-        id_col, "query_id"
-    )
+    pip = <q_sub, centroid>, cn2 = |centroid|² — |Q|·_PQ_M·2^_PQ_BITS
+    rows, broadcast-sized."""
+    q_sv = _pq_subvectors(queries).withColumnRenamed(_ID_COL, "query_id")
     ip = F.aggregate(
         F.zip_with("sv", "centroid", lambda a, b: a * b),
         F.lit(0.0),
@@ -844,10 +830,6 @@ def _adc_rerank(
     queries: DataFrame,
     k: int,
     shortlist: int,
-    m: int,
-    bits: int,
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
     """THE ADC scan and exact rerank shared by pq_topk and ivf_adc_topk
     → (query_id, rank, neighbor_id, cos_sim).
@@ -863,17 +845,17 @@ def _adc_rerank(
     vectors. One copy, so the full-probe ivf_adc_topk ≡ pq_topk
     guarantee cannot drift.
     """
-    mask = (1 << bits) - 1
+    mask = (1 << _PQ_BITS) - 1
     decoded = coded.select(
         "neighbor_id",
         *cell_cols,
-        F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("subspace"),
+        F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("subspace"),
         "pq_code",
     ).select(
         "neighbor_id",
         *cell_cols,
         "subspace",
-        F.expr(f"CAST(shiftright(pq_code, subspace * {bits}) & {mask} AS INT)")
+        F.expr(f"CAST(shiftright(pq_code, subspace * {_PQ_BITS}) & {mask} AS INT)")
         .alias("code"),
     )
     approx = (
@@ -882,7 +864,7 @@ def _adc_rerank(
         .agg(F.sum("pip").alias("aip"), F.sum("cn2").alias("an2"))
     )
     qn = queries.select(
-        F.col(id_col).alias("query_id"), norm(vec_col).alias("q_norm")
+        F.col(_ID_COL).alias("query_id"), norm(_VEC_COL).alias("q_norm")
     )
     scored = approx.join(F.broadcast(qn), "query_id").select(
         "query_id",
@@ -903,14 +885,14 @@ def _adc_rerank(
     )
     # exact rerank of the shortlist: two equi-joins by id, fold dot
     cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(vec_col).alias("c_norm"),
+        F.col(_ID_COL).alias("neighbor_id"),
+        F.col(_VEC_COL).alias("c_vec"),
+        norm(_VEC_COL).alias("c_norm"),
     )
     qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(vec_col).alias("q_norm"),
+        F.col(_ID_COL).alias("query_id"),
+        F.col(_VEC_COL).alias("q_vec"),
+        norm(_VEC_COL).alias("q_norm"),
     )
     return _rank_topk(
         cand.join(cv, "neighbor_id")
@@ -934,13 +916,6 @@ def ivf_adc_topk(
     k: int = 5,
     nprobe: int = 4,
     shortlist: int = 50,
-    m: int = 8,
-    bits: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    center_id_col: str = "label",
-    center_vec_col: str = "centroid",
     code_store: str | None = None,
 ) -> DataFrame:
     """IVF-ADC approximate top-k: coarse IVF cells + PQ asymmetric
@@ -988,33 +963,30 @@ def ivf_adc_topk(
     raw vectors, for shortlist·|Q| rows. CONTRACT: pass the SAME
     corpus/centers/codebooks the store was built from (decoding
     against a different codebook scores garbage; rerank ids absent
-    from the corpus drop at the inner join) — the static parameters
-    (m/bits/dim/column names) are checked against the store's
-    _store_meta.json and mismatch raises. The corpus is also
+    from the corpus drop at the inner join) — the store kind and the
+    PQ geometry (m/bits) recorded in its _store_meta.json are checked
+    against this module's, and a mismatch raises; the column names and
+    the sub-vector width are fixed by the module's embedding contract,
+    so there is nothing else to check. The corpus is also
     fingerprint-checked against the store's corpus stamp on every
     store query (one single-column scan): the rerank inner-joins the
     caller's corpus, so a stale store would silently drop neighbors.
     Pre-stamp stores skip the check.
 
-    The ADC scan and rerank are _adc_rerank, shared with pq_topk.
+    The ADC scan and rerank are _adc_rerank, shared with pq_topk;
+    ``shortlist < k`` raises before any Spark job, as in pq_topk.
     """
+    _check_shortlist(k, shortlist)
     if code_store is not None:
-        _check_store_meta(
-            code_store, kind="pq_code", id_col=id_col, vec_col=vec_col,
-            m=m, bits=bits, dim=dim,
-        )
-        _verify_store_corpus(corpus, code_store, id_col)
-    cent = centers.select(
-        F.col(center_id_col).alias("cell"),
-        F.col(center_vec_col).alias("cent_vec"),
-        norm(center_vec_col).alias("cent_norm"),
-    )
+        _check_store_meta(code_store, "pq_code")
+        _verify_store_corpus(corpus, code_store)
+    cent = _cell_centers(centers)
 
     def pick_cells(df: DataFrame, idc: str, n: int) -> DataFrame:
         base = df.select(
-            F.col(id_col).alias(idc),
-            F.col(vec_col).alias("__v"),
-            norm(vec_col).alias("__n"),
+            F.col(_ID_COL).alias(idc),
+            F.col(_VEC_COL).alias("__v"),
+            norm(_VEC_COL).alias("__n"),
         )
         return _nearest_topn(
             base, cent, idc, "__v", "__n", "cell", "cent_vec",
@@ -1030,7 +1002,7 @@ def ivf_adc_topk(
         probed = _probed_cells(probes)
         coded = read_cell_store(
             corpus.sparkSession, code_store, probed
-        ).select(F.col(id_col).alias("neighbor_id"), "cell", "pq_code")
+        ).select(F.col(_ID_COL).alias("neighbor_id"), "cell", "pq_code")
     else:
         cells = pick_cells(corpus, "neighbor_id", 1)
         probe_cells = probes.select("cell").distinct()
@@ -1043,24 +1015,18 @@ def ivf_adc_topk(
             F.broadcast(probe_cells), "cell", "left_semi"
         ).localCheckpoint(eager=False)
         corpus_probed = corpus.join(
-            pruned.select(F.col("neighbor_id").alias(id_col)),
-            id_col,
+            pruned.select(F.col("neighbor_id").alias(_ID_COL)),
+            _ID_COL,
             "left_semi",
         )
-        codes = pq_encode(
-            corpus_probed, codebooks, m, bits, dim, id_col, vec_col
-        )
-        coded = codes.select(
-            F.col(id_col).alias("neighbor_id"), "pq_code"
+        coded = pq_encode(corpus_probed, codebooks).select(
+            F.col(_ID_COL).alias("neighbor_id"), "pq_code"
         ).join(pruned, "neighbor_id")
     # probe-restricted LUT: (query, cell, subspace, code) — still
-    # broadcast-sized (|Q|·nprobe·m·2^bits rows)
-    lut_p = probes.join(
-        _adc_lut(queries, codebooks, m, dim, id_col, vec_col), "query_id"
-    )
+    # broadcast-sized (|Q|·nprobe·_PQ_M·2^_PQ_BITS rows)
+    lut_p = probes.join(_adc_lut(queries, codebooks), "query_id")
     return _adc_rerank(
-        coded, lut_p, ["cell"], corpus, queries, k, shortlist, m, bits,
-        id_col, vec_col,
+        coded, lut_p, ["cell"], corpus, queries, k, shortlist
     )
 
 
@@ -1069,13 +1035,6 @@ def build_pq_code_store(
     centers: DataFrame,
     codebooks: DataFrame,
     path: str,
-    m: int = 8,
-    bits: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    center_id_col: str = "label",
-    center_vec_col: str = "centroid",
 ) -> None:
     """Encode the corpus ONCE and persist its PQ codes partitioned by
     coarse IVF cell — the physical index half of ivf_adc_topk.
@@ -1100,22 +1059,15 @@ def build_pq_code_store(
     codebooks the store was built from — the store's codes decode
     against the caller's LUT, so a different codebook scores garbage
     with no error, and rerank ids absent from the caller's corpus
-    silently drop. The static parameters (m/bits/dim/column names)
-    ARE checked: a _store_meta.json sidecar records them and
-    ivf_adc_topk raises on mismatch.
+    silently drop. The store kind and the PQ geometry (m/bits) ARE
+    checked: the _store_meta.json sidecar records them and
+    ivf_adc_topk raises when they differ from this module's. Column
+    names and the sub-vector width follow the module's embedding
+    contract, so the sidecar does not record them.
     """
-    codes = pq_encode(corpus, codebooks, m, bits, dim, id_col, vec_col)
     _write_cell_store(
-        codes, corpus, centers, path, id_col, vec_col,
-        center_id_col, center_vec_col,
-        meta={
-            "kind": "pq_code",
-            "id_col": id_col,
-            "vec_col": vec_col,
-            "m": m,
-            "bits": bits,
-            "dim": dim,
-        },
+        pq_encode(corpus, codebooks), corpus, centers, path,
+        meta={"kind": "pq_code", "m": _PQ_M, "bits": _PQ_BITS},
     )
 
 
@@ -1149,19 +1101,23 @@ def erase_nullability(dt):
     return dt
 
 
-def _check_store_meta(path: str, **expected) -> None:
-    """Raise loudly when query-time parameters disagree with what the
-    store was built with — a mismatched m/bits/dim/column name would
-    otherwise decode garbage codes or mis-join silently. Pure
-    driver-side file read + compares: no Spark job on the hot path.
-    A store without a meta file (pre-existing layout, remote URI)
-    skips the check.
+def _check_store_meta(path: str, kind: str) -> None:
+    """Raise loudly when the store's recorded kind or PQ geometry
+    (m/bits) differs from what this query reads it as — a store of
+    another kind, or codes packed with another geometry, would
+    otherwise decode garbage silently. Column names and the sub-vector
+    width are fixed by the module's embedding contract, so only these
+    keys can differ. Pure driver-side file read + compares: no Spark
+    job on the hot path. A store without a meta file (pre-existing
+    layout, remote URI) skips the check; a key the store does not
+    record (an ivf_flat store has no geometry) is not compared.
     """
     recorded = read_sidecar(path, STORE_META)
     if recorded is None:
         return
+    expected = {"kind": kind, "m": _PQ_M, "bits": _PQ_BITS}
     bad = {
-        k: (recorded.get(k), v)
+        k: (recorded[k], v)
         for k, v in expected.items()
         if k in recorded and recorded[k] != v
     }
@@ -1171,8 +1127,8 @@ def _check_store_meta(path: str, **expected) -> None:
         )
         raise ValueError(
             f"cell store at {path} was built with different parameters "
-            f"than this query ({detail}) — rebuild the store or pass "
-            "the build-time values; centers/codebooks identity remains "
+            f"than this query ({detail}) — rebuild the store; "
+            "centers/codebooks identity remains "
             "the caller's contract (corpus identity is separately "
             "stamped and checked — see _verify_store_corpus)"
         )
@@ -1183,10 +1139,6 @@ def _write_cell_store(
     corpus: DataFrame,
     centers: DataFrame,
     path: str,
-    id_col: str,
-    vec_col: str,
-    center_id_col: str,
-    center_vec_col: str,
     meta: dict,
 ) -> None:
     """Shared cell-partitioned store writer: assign each corpus row to
@@ -1234,26 +1186,23 @@ def _write_cell_store(
                 "a cell. The existing store, if any, was left untouched."
             )
         if (
-            payload.select(id_col)
-            .join(corpus.select(id_col), id_col, "semi")
+            payload.select(_ID_COL)
+            .join(corpus.select(_ID_COL), _ID_COL, "semi")
             .limit(1)
             .isEmpty()
         ):
             raise ValueError(
                 f"cell store build at {path!r} would write zero rows: the "
                 "cell assignment shares no id with the payload (corpus "
-                f"and payload {id_col!r} sets do not overlap). The "
+                f"and payload {_ID_COL!r} sets do not overlap). The "
                 "existing store, if any, was left untouched."
             )
-        cells = _assign_cells(
-            corpus, centers, id_col, vec_col, center_id_col, center_vec_col
-        )
-        _cell_write(payload.join(cells, id_col), path, mode="overwrite")
+        cells = _assign_cells(corpus, centers)
+        _cell_write(payload.join(cells, _ID_COL), path, mode="overwrite")
         # corpus-identity stamp: read back what was WRITTEN (no TOCTOU
         # against a corpus mutating mid-build) and fingerprint the served
         # id set; query paths verify the caller's corpus against it.
         spark = corpus.sparkSession
-        meta = dict(meta)
         try:
             written = spark.read.parquet(path)
         except AnalysisException as e:
@@ -1270,33 +1219,30 @@ def _write_cell_store(
                 "and assignment. A serving store needs a nonempty build; "
                 "grow an existing ivf_flat store with append_to_cell_store."
             ) from e
-        meta.update(_corpus_stamp(written, meta["id_col"]))
-        write_sidecar(path, STORE_META, meta)
+        write_sidecar(path, STORE_META, {**meta, **_corpus_stamp(written)})
 
 
-def _assign_cells(
-    corpus: DataFrame,
-    centers: DataFrame,
-    id_col: str,
-    vec_col: str,
-    center_id_col: str,
-    center_vec_col: str,
-) -> DataFrame:
+def _cell_centers(centers: DataFrame) -> DataFrame:
+    """(cell, cent_vec, cent_norm): a centers frame as the coarse
+    quantizer's _nearest_topn input."""
+    return centers.select(
+        F.col(_LABEL_COL).alias("cell"),
+        F.col(_CENTROID_COL).alias("cent_vec"),
+        norm(_CENTROID_COL).alias("cent_norm"),
+    )
+
+
+def _assign_cells(corpus: DataFrame, centers: DataFrame) -> DataFrame:
     """(id, cell) nearest-coarse-centroid assignment for the cell
     stores — ONE implementation so build and append can't drift (an
     appended row assigned by different code than the build's would
     land in a different cell than a rebuild would put it)."""
-    cent = centers.select(
-        F.col(center_id_col).alias("cell"),
-        F.col(center_vec_col).alias("cent_vec"),
-        norm(center_vec_col).alias("cent_norm"),
-    )
     base = corpus.select(
-        F.col(id_col), F.col(vec_col), norm(vec_col).alias("__n")
+        F.col(_ID_COL), F.col(_VEC_COL), norm(_VEC_COL).alias("__n")
     )
     return _nearest_topn(
-        base, cent, id_col, vec_col, "__n", "cell", "cent_vec",
-        "cent_norm", 1,
+        base, _cell_centers(centers), _ID_COL, _VEC_COL, "__n", "cell",
+        "cent_vec", "cent_norm", 1,
     )
 
 
@@ -1315,7 +1261,7 @@ def _cell_write(joined: DataFrame, path: str, mode: str) -> None:
     writer.parquet(path)
 
 
-def _corpus_stamp(df: DataFrame, id_col: str) -> dict:
+def _corpus_stamp(df: DataFrame) -> dict:
     """Cheap content-identity fingerprint of the served id set:
     (row count, XOR-fold of xxhash64(id)). XOR is order-independent
     AND incrementally updatable — append_to_cell_store folds the
@@ -1327,15 +1273,13 @@ def _corpus_stamp(df: DataFrame, id_col: str) -> dict:
     row = df.select(
         F.count("*").alias("n"),
         F.coalesce(
-            F.bit_xor(F.xxhash64(F.col(id_col))), F.lit(0)
+            F.bit_xor(F.xxhash64(F.col(_ID_COL))), F.lit(0)
         ).alias("x"),
     ).collect()[0]
     return {"corpus_n": int(row["n"]), "corpus_idhash": int(row["x"])}
 
 
-def _verify_store_corpus(
-    corpus: DataFrame, path: str, id_col: str
-) -> None:
+def _verify_store_corpus(corpus: DataFrame, path: str) -> None:
     """Raise when the caller's corpus is not the one the store was
     built from (count + id-hash stamp in _store_meta.json): a store
     built from last month's embeddings otherwise serves silently
@@ -1347,7 +1291,7 @@ def _verify_store_corpus(
     recorded = read_sidecar(path, STORE_META)
     if recorded is None or "corpus_n" not in recorded:
         return
-    got = _corpus_stamp(corpus, id_col)
+    got = _corpus_stamp(corpus)
     if (
         got["corpus_n"] != recorded["corpus_n"]
         or got["corpus_idhash"] != recorded["corpus_idhash"]
@@ -1383,22 +1327,14 @@ def read_cell_store(spark, path: str, probed_cells) -> DataFrame:
     return df.filter(F.col("cell").isin(probed))
 
 
-def build_ivf_store(
-    corpus: DataFrame,
-    centers: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    center_id_col: str = "label",
-    center_vec_col: str = "centroid",
-) -> None:
+def build_ivf_store(corpus: DataFrame, centers: DataFrame, path: str) -> None:
     """Persist the corpus cell-partitioned by nearest coarse centroid
     — the IVF-Flat index (raw vectors), sibling of build_pq_code_store
     (8-byte codes, ADC).
 
     Layout: ``<path>/cell=<label>/*.parquet`` holding (id, vec), one
-    file per cell, plus the _store_meta.json sidecar (kind, column
-    names, corpus stamp). The store grows by append_to_cell_store
+    file per cell, plus the _store_meta.json sidecar (kind, corpus
+    stamp). The store grows by append_to_cell_store
     (assign the increment only); _verify_store_corpus checks a caller's
     corpus against the stamp. Centers must be the build-time ones on
     every append, or the increment lands in cells a rebuild would not
@@ -1416,19 +1352,13 @@ def build_ivf_store(
     non-trivial.
     """
     _write_cell_store(
-        corpus.select(F.col(id_col), F.col(vec_col)),
-        corpus, centers, path, id_col, vec_col,
-        center_id_col, center_vec_col,
-        meta={"kind": "ivf_flat", "id_col": id_col, "vec_col": vec_col},
+        corpus.select(F.col(_ID_COL), F.col(_VEC_COL)),
+        corpus, centers, path, meta={"kind": "ivf_flat"},
     )
 
 
 def append_to_cell_store(
-    new_rows: DataFrame,
-    centers: DataFrame,
-    path: str,
-    center_id_col: str = "label",
-    center_vec_col: str = "centroid",
+    new_rows: DataFrame, centers: DataFrame, path: str
 ) -> None:
     """Incremental maintenance for an IVF-Flat store (build_ivf_store):
     assign ONLY the new rows, append them into their cell partitions,
@@ -1439,8 +1369,7 @@ def append_to_cell_store(
     vectors, linear in corpus size, while the append is linear in the
     INCREMENT.
 
-    The id/vec column names come from _store_meta.json and the
-    increment is assigned by the build's own _assign_cells, so
+    The increment is assigned by the build's own _assign_cells, so
     append-then-read equals rebuild-from-the-grown-corpus row for row
     (s_ivf_store_append audits it). A store without the meta sidecar,
     or of any kind but ``ivf_flat`` (a pq_code store is write-once:
@@ -1490,7 +1419,7 @@ def append_to_cell_store(
         if recorded is None:
             raise ValueError(
                 f"cell store at {path} has no readable {STORE_META} — "
-                "append needs the build parameters (kind, columns); "
+                "append needs the build parameters (kind, corpus stamp); "
                 "rebuild the store to (re)create it"
             )
         meta_at_read = dict(recorded)
@@ -1502,8 +1431,7 @@ def append_to_cell_store(
                 "rebuild the store from the grown corpus. Nothing was "
                 "written."
             )
-        id_col, vec_col = recorded["id_col"], recorded["vec_col"]
-        payload = new_rows.select(F.col(id_col), F.col(vec_col))
+        payload = new_rows.select(F.col(_ID_COL), F.col(_VEC_COL))
         # Abort-before-mixing dtype check (r15 schema-drift probe): an
         # increment whose id/vec dtypes drifted (int id into a bigint
         # store, array<double> vecs into an array<float> store) used to
@@ -1516,7 +1444,7 @@ def append_to_cell_store(
             f.name: erase_nullability(f.dataType)
             for f in new_rows.sparkSession.read.parquet(path).schema.fields
         }
-        for c in (id_col, vec_col):
+        for c in (_ID_COL, _VEC_COL):
             want = store_schema.get(c)
             got = erase_nullability(payload.schema[c].dataType)
             if want is not None and got != want:
@@ -1529,22 +1457,17 @@ def append_to_cell_store(
                     "increment to the store's types or rebuild. Nothing "
                     "was written."
                 )
-        cells = _assign_cells(
-            new_rows, centers, id_col, vec_col, center_id_col,
-            center_vec_col,
-        )
-        _cell_write(payload.join(cells, id_col), path, mode="append")
+        cells = _assign_cells(new_rows, centers)
+        _cell_write(payload.join(cells, _ID_COL), path, mode="append")
         if "corpus_n" in recorded:
             # XOR-fold the increment in — no store rescan
-            inc = _corpus_stamp(new_rows, id_col)
+            inc = _corpus_stamp(new_rows)
             recorded["corpus_n"] += inc["corpus_n"]
             recorded["corpus_idhash"] ^= inc["corpus_idhash"]
         else:
             # pre-stamp store: certify the full served set once
             recorded.update(
-                _corpus_stamp(
-                    new_rows.sparkSession.read.parquet(path), id_col
-                )
+                _corpus_stamp(new_rows.sparkSession.read.parquet(path))
             )
         # single-writer tripwire: another writer touched the sidecar since
         # this append read it — writing now would lose its fold (see
@@ -1611,8 +1534,6 @@ def _super_group_centroids(
 def assign_nearest_centroid(
     df: DataFrame,
     cents: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     super_k: int | None = None,
     probe_supers: int = 1,
 ) -> DataFrame:
@@ -1662,12 +1583,12 @@ def assign_nearest_centroid(
     # pins __rid: a re-evaluated monotonically_increasing_id could
     # differ between branches.
     base = df.select(
-        F.col(id_col), F.col(vec_col), norm(vec_col).alias("v_norm")
+        F.col(_ID_COL), F.col(_VEC_COL), norm(_VEC_COL).alias("v_norm")
     ).withColumn("__rid", F.monotonically_increasing_id()).localCheckpoint(
         eager=False
     )
     sim = cosine_from(
-        dot(vec_col, "centroid"), F.col("v_norm"), F.col("c_norm")
+        dot(_VEC_COL, "centroid"), F.col("v_norm"), F.col("c_norm")
     )
     w = Window.partitionBy("__rid").orderBy(F.desc("c_sim"), F.asc("cluster"))
     if super_k is not None:
@@ -1687,11 +1608,11 @@ def assign_nearest_centroid(
     if super_k is None:
         cn = cents.withColumn("c_norm", norm("centroid"))
         choice = _nearest_topn(
-            base, cn, "__rid", vec_col, "v_norm", "label", "centroid",
+            base, cn, "__rid", _VEC_COL, "v_norm", "label", "centroid",
             "c_norm", 1, sim_alias="c_sim",
         ).withColumnRenamed("label", "cluster")
         return base.join(choice, "__rid").select(
-            id_col, vec_col, "v_norm", "cluster", "c_sim"
+            _ID_COL, _VEC_COL, "v_norm", "cluster", "c_sim"
         )
     spark = df.sparkSession
     from pyspark.sql import types as T
@@ -1728,7 +1649,7 @@ def assign_nearest_centroid(
     # slim probe ranking: the exchange carries (row, super, s_sim)
     # triples, not n×s embedding copies
     probes = _nearest_topn(
-        base, supers, "__rid", vec_col, "v_norm", "super", "centroid",
+        base, supers, "__rid", _VEC_COL, "v_norm", "super", "centroid",
         "c_norm", probe_supers,
     )
     # re-attach the vector for member scoring (one n·p slim + n-row
@@ -1752,7 +1673,7 @@ def assign_nearest_centroid(
         .drop("__rn")
     )
     return base.join(choice, "__rid").select(
-        id_col, vec_col, "v_norm", "cluster", "c_sim"
+        _ID_COL, _VEC_COL, "v_norm", "cluster", "c_sim"
     )
 
 
@@ -1760,8 +1681,6 @@ def semdedup(
     df: DataFrame,
     cents: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_cluster_size: int = 2000,
 ) -> DataFrame:
     """SemDeDup-style cluster-scoped semantic dedup (Abbas et al.,
@@ -1796,13 +1715,13 @@ def semdedup(
     # Cap rank + cluster size share one partitionBy(cluster) shuffle
     # (Spark stacks both Window operators on the same Exchange), and
     # that same hash partitioning feeds the pair equi-join below.
-    wc = Window.partitionBy("cluster").orderBy(F.desc("c_sim"), F.asc(id_col))
+    wc = Window.partitionBy("cluster").orderBy(F.desc("c_sim"), F.asc(_ID_COL))
     wsz = Window.partitionBy("cluster")
     # assigned is referenced three times below (both pair sides + the
     # output join) — checkpoint once so the assignment pipeline does
     # not re-evaluate per reference.
     assigned = (
-        assign_nearest_centroid(df, cents, id_col, vec_col)
+        assign_nearest_centroid(df, cents)
         .withColumn("__crn", F.row_number().over(wc))
         .withColumn("truncated", F.count(F.lit(1)).over(wsz) > max_cluster_size)
         .localCheckpoint(eager=True)
@@ -1810,15 +1729,15 @@ def semdedup(
     pool = assigned.filter(F.col("__crn") <= max_cluster_size)
     a = pool.select(
         F.col("cluster"),
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("vec_a"),
+        F.col(_ID_COL).alias("id_a"),
+        F.col(_VEC_COL).alias("vec_a"),
         F.col("v_norm").alias("norm_a"),
         F.col("c_sim").alias("csim_a"),
     )
     b = pool.select(
         F.col("cluster"),
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vec_b"),
+        F.col(_ID_COL).alias("id_b"),
+        F.col(_VEC_COL).alias("vec_b"),
         F.col("v_norm").alias("norm_b"),
         F.col("c_sim").alias("csim_b"),
     )
@@ -1845,9 +1764,9 @@ def semdedup(
         .distinct()
     )
     return assigned.join(
-        removed, assigned[id_col] == removed["__rm_id"], "left"
+        removed, assigned[_ID_COL] == removed["__rm_id"], "left"
     ).select(
-        id_col,
+        _ID_COL,
         "cluster",
         "c_sim",
         F.col("__rm_id").isNotNull().alias("removed"),

@@ -756,7 +756,7 @@ def s_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    cb = S.pq_train(e, m=8, k=16, iters=2)
+    cb = S.pq_train(e, iters=2)
     exact = S.brute_force_topk(e, q, k=5).select("query_id", "neighbor_id")
     approx = S.pq_topk(e, q, cb, k=5, shortlist=50).select(
         "query_id", "neighbor_id"
@@ -787,7 +787,7 @@ SELECT CAST(25 AS BIGINT) AS n_pq_rows,
 def s_ivf_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    cb = S.pq_train(e, m=8, k=16, iters=2)
+    cb = S.pq_train(e, iters=2)
     cents = S.centroids(e)
     n_cells = cents.count()  # dim-sized scalar (10 labels)
     pq = S.pq_topk(e, q, cb, k=5, shortlist=50).select(
@@ -843,7 +843,7 @@ def s_ivf_adc_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     # iters=1: the audit is store-vs-inline EQUALITY under the SAME
     # codebooks — codebook quality is irrelevant to it, so don't pay
     # extra Lloyd rounds (s_pq_topk covers recall with iters=2)
-    cb = S.pq_train(e, m=8, k=16, iters=1)
+    cb = S.pq_train(e, iters=1)
     cents = S.centroids(e)
     # fixed per-(query, sf_dir) scratch dir, wiped on entry — mkdtemp
     # would accrete one code copy per sweep invocation, unboundedly
@@ -918,14 +918,14 @@ def s_ivf_store_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # staleness stamp, before: base-built store must refuse the
     # grown corpus
     try:
-        S._verify_store_corpus(e, grown, "vec_id")
+        S._verify_store_corpus(e, grown)
         stale_refused = False
     except ValueError:
         stale_refused = True
     S.append_to_cell_store(inc, cents, grown)
     # staleness stamp, after: the fold-in makes the grown corpus
     # verify (raises here -> query errors -> driver-red, as it should)
-    S._verify_store_corpus(e, grown, "vec_id")
+    S._verify_store_corpus(e, grown)
     S.build_ivf_store(e, cents, full)
     cols = ["vec_id", "cell", "embedding"]
     g = spark.read.parquet(grown).select(cols)

@@ -12,7 +12,7 @@ SF001 = "/root/testdata/sf0.01"
 # Depth-lens suites marked `slow` and excluded from the default run
 # (pytest.ini `addopts = -m "not slow"`): hypothesis fuzz-vs-naive
 # sweeps, random-graph/pathological parity, streaming lifecycle
-# stress, store-lifecycle torture and the PQ/quality invariant grind.
+# stress and store-lifecycle torture.
 # Chosen from measured per-file call time (r17: these files carried
 # ~1650 s of the suite's ~2300 s) so the default suite is a <15-min
 # correctness gate (oracle parity, goldens, plan shapes, contracts)
@@ -37,11 +37,9 @@ _SLOW_FILES = {
     "test_fuzz_timeseries.py",
     "test_fuzz_unicode.py",
     "test_fuzz_upsert.py",
-    "test_fuzz_vectors.py",
     "test_graph_pathological.py",
     "test_ingest_replay_torture.py",
     "test_properties.py",
-    "test_quality_ops.py",
     "test_shuffle_semdedup.py",
     "test_stream_stream_join.py",
     "test_watermark_late_data.py",

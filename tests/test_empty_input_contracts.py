@@ -80,10 +80,7 @@ class TestEmptyInputOps:
         )
 
         queries = spark.createDataFrame([(100, [1.0, 0.0])], VEC_SCHEMA)
-        out = brute_force_topk(
-            _empty_vecs(spark), queries, k=5,
-            id_col="vec_id", vec_col="embedding",
-        )
+        out = brute_force_topk(_empty_vecs(spark), queries, k=5)
         assert out.count() == 0
 
     def test_boilerplate_ratio_fractional_empty_docs(self, spark):
@@ -192,10 +189,6 @@ class TestNoOverlapBuildIsLoudPreWrite:
                 corpus=corpus,
                 centers=_centers(spark),
                 path=store,
-                id_col="vec_id",
-                vec_col="embedding",
-                center_id_col="label",
-                center_vec_col="centroid",
                 meta={},
             )
         after = sorted(

@@ -245,23 +245,17 @@ class TestDegenerateCorpora:
         # one repeated centroid (zero variance); train and query must
         # stay deterministic, not crash
         df = _mk(spark, [[0.25, -0.5, 1.0]] * 5)
-        # pad to dim 4 for m=2 subspaces
+        # pad to dim 8: one component per PQ subspace (sub-width 1)
         from pyspark.sql import functions as F
 
-        df4 = df.select(
-            "vec_id", F.concat("embedding", F.array(F.lit(2.0))).alias("embedding")
+        pad = F.array(*[F.lit(x) for x in (2.0, -1.0, 0.5, 3.0, -2.0)])
+        df8 = df.select(
+            "vec_id", F.concat("embedding", pad).alias("embedding")
         )
-        books = pq_train(df4, m=2, k=2, iters=2, dim=4)
+        books = pq_train(df8, iters=2)
         assert books.count() > 0
         got = pq_topk(
-            df4,
-            df4.filter("vec_id = 0"),
-            books,
-            k=3,
-            shortlist=5,
-            m=2,
-            bits=2,
-            dim=4,
+            df8, df8.filter("vec_id = 0"), books, k=3, shortlist=5
         ).collect()
         # identical vectors: every neighbor ties at cos 1, ranks
         # break by ascending id
@@ -327,7 +321,7 @@ class TestDegenerateCorpora:
         )
         clean = emb.filter("vec_id % 3 != 0")
         corpus = clean.unionByName(poison)
-        books = pq_train(clean, m=8, k=16, iters=2, dim=64)
+        books = pq_train(clean, iters=2)
         # corrupt vectors never make it into the code store at all
         codes = pq_encode(corpus, books)
         assert codes.filter("vec_id % 3 = 0").count() == 0
@@ -438,7 +432,7 @@ class TestIvfFlatCorruptAdmitPinned:
         build_ivf_store(corpus, centers, store)
         # the SAME corrupt-heavy frame verifies: the stamp counts the
         # full admitted corpus
-        _verify_store_corpus(corpus, store, "vec_id")
+        _verify_store_corpus(corpus, store)
         q = corpus.filter("vec_id = 0")
         got = ivf_topk(corpus, q, centers, k=4, nprobe=2).collect()
         want = brute_force_topk(corpus, q, k=4).collect()

@@ -19,7 +19,9 @@ output is semantically defensible). Findings fixed:
   through it) died with internal errors on n_planes=0 (IndexError),
   dim=0 (reduce of an empty iterable) and n_planes=64 (a bucket bit
   that overflows a long);
-- chunk_documents chunk_tokens=0 raised, but blamed `overlap`.
+- chunk_documents chunk_tokens=0 raised, but blamed `overlap`;
+- pq_topk/ivf_adc_topk with shortlist < k returned only `shortlist`
+  neighbors per query (k=5, shortlist=3 silently gave a top-3).
 
 Defensible silents (pinned as contracts, not fixed): top-k with k<=0
 returns an empty frame (top-0 of anything IS nothing); lsh bands
@@ -127,6 +129,42 @@ class TestLoudMisconfigs:
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         assert len(sc.statusTracker().getJobIdsForGroup("hostile_lsh")) == 0
 
+    def test_pq_shortlist_shorter_than_k(self, spark, vecs):
+        from data_engineering_hs_spark.operators.similarity import (
+            ivf_adc_topk,
+            pq_topk,
+        )
+
+        books = spark.createDataFrame(
+            [], "subspace int, code int, centroid array<double>"
+        )
+        centers = spark.createDataFrame(
+            [], "label int, centroid array<double>"
+        )
+        msg = r"shortlist must be >= k \(got shortlist=3, k=5\)"
+        sc = spark.sparkContext
+        sc.setJobGroup("hostile_shortlist", "hostile_shortlist")
+        try:
+            with pytest.raises(ValueError, match=msg):
+                pq_topk(vecs, vecs, books, k=5, shortlist=3)
+            with pytest.raises(ValueError, match=msg):
+                ivf_adc_topk(vecs, vecs, centers, books, k=5, shortlist=3)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # raised at the API boundary, before any Spark job
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(
+            sc.statusTracker().getJobIdsForGroup("hostile_shortlist")
+        ) == 0
+
+    def test_pq_embedding_narrower_than_subspaces(self, vecs):
+        # 2 components for 8 subspaces: every sub-vector is empty, so
+        # the codebooks come out empty and encode nothing
+        from data_engineering_hs_spark.operators.similarity import pq_train
+
+        with pytest.raises(Exception, match="has 2 components, fewer than"):
+            pq_train(vecs, iters=1)
+
     def test_lsh_bands_must_divide(self, docs):
         from data_engineering_hs_spark.operators.dedup import (
             lsh_band_buckets,
@@ -142,10 +180,7 @@ class TestDefensibleSilents:
             brute_force_topk,
         )
 
-        out = brute_force_topk(
-            vecs, vecs, k=0, id_col="vec_id", vec_col="embedding"
-        )
-        assert out.count() == 0
+        assert brute_force_topk(vecs, vecs, k=0).count() == 0
 
     def test_hash_split_weights_are_proportions(self, docs):
         # sum need not be 1.0 — weights normalize (2:2 == 1:1); pinned

@@ -189,7 +189,7 @@ class TestRound7PlanShapes:
         from pyspark.sql import functions as F
 
         e = spark.read.parquet(f"{SF001}/embeddings.parquet")
-        cb = pq_train(e, m=8, k=16, iters=1)
+        cb = pq_train(e, iters=1)
         q = e.filter(F.col("vec_id") < 5)
         plan = plan_string(pq_topk(e, q, cb, k=5, shortlist=20))
         assert "BroadcastHashJoin" in plan

@@ -956,7 +956,7 @@ class TestProductQuantization:
         from data_engineering_hs_spark.operators.similarity import pq_train
 
         e = spark.read.parquet(f"{SF001}/embeddings.parquet")
-        return e, pq_train(e, m=8, k=16, iters=3)
+        return e, pq_train(e, iters=3)
 
     def test_codebook_shape(self, spark):
         e, cb = self._setup(spark)
@@ -1095,9 +1095,9 @@ class TestProductQuantization:
         assert stored == inline and len(stored) == 15
 
     def test_store_meta_mismatch_raises(self, spark, tmp_path):
-        # a store built with one (m, bits, dim, columns) must refuse a
-        # query with different static parameters — decoding against a
-        # mismatched LUT would score garbage silently
+        # a store whose codes were packed with another PQ geometry must
+        # refuse a query — decoding them against this module's LUT
+        # would score garbage silently
         import pytest
 
         from data_engineering_hs_spark.operators.similarity import (
@@ -1106,16 +1106,22 @@ class TestProductQuantization:
             centroids,
             ivf_adc_topk,
         )
+        from data_engineering_hs_spark.sources.parquet import (
+            STORE_META,
+            read_sidecar,
+            write_sidecar,
+        )
 
         e, cb = self._setup(spark)
         cents = centroids(e)
         q = e.filter(F.col("vec_id") < 2)
         store = str(tmp_path / "pq_store_meta")
-        build_pq_code_store(e, cents, cb, store, m=8, bits=4)
+        build_pq_code_store(e, cents, cb, store)
+        meta = read_sidecar(store, STORE_META)
+        assert (meta["m"], meta["bits"]) == (8, 4)
+        write_sidecar(store, STORE_META, {**meta, "bits": 8})
         with pytest.raises(ValueError, match="different parameters"):
-            ivf_adc_topk(
-                e, q, cents, cb, nprobe=2, m=4, bits=8, code_store=store
-            )
+            ivf_adc_topk(e, q, cents, cb, nprobe=2, code_store=store)
         # an IVF-Flat store read as a code store: the recorded kind
         # differs, so the query refuses instead of decoding vectors
         vstore = str(tmp_path / "ivf_store_meta")
@@ -1127,7 +1133,7 @@ class TestProductQuantization:
         self, spark, tmp_path
     ):
         # a failed sidecar write on a LOCAL path must raise (swallowing
-        # it silently disables the m/bits/dim guard); a non-local URI
+        # it silently disables the kind/geometry guard); a non-local URI
         # stays best-effort (the documented degradation)
         import pytest
 
@@ -1193,7 +1199,7 @@ class TestProductQuantization:
         q = e.filter(F.col("vec_id") < 2)
 
         store = str(tmp_path / "pq_stale")
-        build_pq_code_store(base, cents, cb, store, m=8, bits=4)
+        build_pq_code_store(base, cents, cb, store)
         # grown corpus vs base-built store: loud
         with pytest.raises(ValueError, match="different corpus"):
             ivf_adc_topk(e, q, cents, cb, nprobe=2, code_store=store)
@@ -1206,11 +1212,11 @@ class TestProductQuantization:
         vstore = str(tmp_path / "ivf_stale")
         build_ivf_store(base, cents, vstore)
         with pytest.raises(ValueError, match="different corpus"):
-            _verify_store_corpus(e, vstore, "vec_id")
+            _verify_store_corpus(e, vstore)
         append_to_cell_store(inc, cents, vstore)
-        _verify_store_corpus(e, vstore, "vec_id")
+        _verify_store_corpus(e, vstore)
         with pytest.raises(ValueError, match="different corpus"):
-            _verify_store_corpus(base, vstore, "vec_id")
+            _verify_store_corpus(base, vstore)
 
     def test_append_refuses_without_meta_or_codebooks(
         self, spark, tmp_path
@@ -1229,7 +1235,7 @@ class TestProductQuantization:
         cents = centroids(e)
         inc = e.filter(F.col("vec_id") < 10)
         store = str(tmp_path / "pq_meta")
-        build_pq_code_store(e, cents, cb, store, m=8, bits=4)
+        build_pq_code_store(e, cents, cb, store)
 
         def files():
             return sorted(
@@ -1271,16 +1277,26 @@ class TestProductQuantization:
         build_ivf_store(e, cents, store_uri)
         assert os.path.exists(os.path.join(local, "_store_meta.json"))
         # query path finds the sidecar through the URI spelling too:
-        # a param mismatch raises instead of silently skipping
+        # a recorded geometry that differs raises instead of silently
+        # skipping
         import pytest
 
-        with pytest.raises(ValueError, match="different parameters"):
-            _check_store_meta(store_uri, kind="ivf_flat", id_col="other")
+        from data_engineering_hs_spark.sources.parquet import (
+            STORE_META,
+            read_sidecar,
+            write_sidecar,
+        )
+
+        _check_store_meta(store_uri, "ivf_flat")
+        meta = read_sidecar(store_uri, STORE_META)
+        write_sidecar(store_uri, STORE_META, {**meta, "m": 4})
+        with pytest.raises(ValueError, match="different parameters.*m: store=4 caller=8"):
+            _check_store_meta(store_uri, "ivf_flat")
         # and the corpus stamp is read through it: the served corpus
         # verifies, a shrunk one is refused
-        _verify_store_corpus(e, store_uri, "vec_id")
+        _verify_store_corpus(e, store_uri)
         with pytest.raises(ValueError, match="different corpus"):
-            _verify_store_corpus(e.limit(5), store_uri, "vec_id")
+            _verify_store_corpus(e.limit(5), store_uri)
 
     def test_append_single_writer_tripwire(
         self, spark, tmp_path, monkeypatch

@@ -139,7 +139,7 @@ class TestCellStoreEdges:
         # XOR-fold of zero rows: stamp bit-identical, store still
         # verifies against the original corpus
         assert meta_before == meta_after
-        _verify_store_corpus(emb, path, "vec_id")
+        _verify_store_corpus(emb, path)
 
     def test_store_query_with_empty_caller_corpus_is_loud(
         self, spark, store, tmp_path
@@ -151,7 +151,7 @@ class TestCellStoreEdges:
         )
 
         emb, cents, _ = store
-        cb = pq_train(emb, m=8, k=16, iters=1)
+        cb = pq_train(emb, iters=1)
         path = str(tmp_path / "codes")
         build_pq_code_store(emb, cents, cb, path)
         with pytest.raises(ValueError, match="different corpus"):
