@@ -208,12 +208,12 @@ def _nearest_topn(
     vector would multiply the shuffle bytes by dim). Ties break by
     ascending cell id; the cosine is the same
     ``cosine_from(dot(vec, cent), ...)`` fold everywhere, so every
-    caller is bit-exact with every other. Every coarse quantizer in
-    this module (ivf_topk, ivf_adc_topk, assign_nearest_centroid both
-    modes, the cell-store builders and append) ranks through
-    here — the r9 slim-exchange fix had to be applied to three
-    separate copies of this discipline, which is exactly how copies
-    drift.
+    caller is bit-exact with every other. Both quantizers in this
+    module rank through here: _assign_cells (IVF cells for ivf_topk,
+    ivf_adc_topk, the cell-store builders and append) and
+    assign_nearest_centroid (both modes). The r9 slim-exchange fix had
+    to be applied to three separate copies of this discipline, which
+    is exactly how copies drift.
 
     `base` must carry (idc, vecc, nrm) with no column named like
     cent's; `cent` must carry (cellc, cvecc, cnormc) and be
@@ -265,46 +265,18 @@ def ivf_topk(
     nearest centers, corpus rows to their nearest) rank slim
     (id, center, sim) rows; vectors re-attach by id afterward.
     """
-    cent = centers.select(
-        F.col(_LABEL_COL).alias("center_id"),
-        F.col(_CENTROID_COL).alias("center_vec"),
-        norm(_CENTROID_COL).alias("center_norm"),
-    )
-
-    def assign(df: DataFrame, idc: str, vecc: str, nrm: str, n: int, out: str) -> DataFrame:
-        # _nearest_topn ranks the slim projection; df feeds both the
-        # scoring branch and the re-attach join — lazy checkpoint so
-        # the input lineage (scan + norm) evaluates once, at first
-        # action.
-        df = df.localCheckpoint(eager=False)
-        picks = _nearest_topn(
-            df, cent, idc, vecc, nrm, "center_id", "center_vec",
-            "center_norm", n,
-        ).select(F.col(idc), F.col("center_id").alias(out))
-        return df.join(picks, idc).select(
-            F.col(idc), F.col(vecc), F.col(nrm), F.col(out)
+    def assign(df: DataFrame, n: int, idc: str, vecc: str, nrm: str) -> DataFrame:
+        # df feeds both the scoring branch and the re-attach join —
+        # lazy checkpoint so the input lineage evaluates once, at
+        # first action
+        df = df.select(_ID_COL, _VEC_COL).localCheckpoint(eager=False)
+        return df.join(_assign_cells(df, centers, n), _ID_COL).select(
+            F.col(_ID_COL).alias(idc), F.col(_VEC_COL).alias(vecc),
+            norm(_VEC_COL).alias(nrm), "cell",
         )
 
-    query_probes = assign(
-        queries.select(
-            F.col(_ID_COL).alias("query_id"),
-            F.col(_VEC_COL).alias("q_vec"),
-            norm(_VEC_COL).alias("q_norm"),
-        ),
-        "query_id",
-        "q_vec",
-        "q_norm",
-        nprobe,
-        "cell",
-    )
-    corpus_slim = corpus.select(
-        F.col(_ID_COL).alias("neighbor_id"),
-        F.col(_VEC_COL).alias("c_vec"),
-        norm(_VEC_COL).alias("c_norm"),
-    )
-    corpus_assigned = assign(
-        corpus_slim, "neighbor_id", "c_vec", "c_norm", 1, "cell"
-    )
+    query_probes = assign(queries, nprobe, "query_id", "q_vec", "q_norm")
+    corpus_assigned = assign(corpus, 1, "neighbor_id", "c_vec", "c_norm")
     cand = corpus_assigned.join(F.broadcast(query_probes), "cell").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
@@ -980,31 +952,21 @@ def ivf_adc_topk(
     if code_store is not None:
         _check_store_meta(code_store, "pq_code")
         _verify_store_corpus(corpus, code_store)
-    cent = _cell_centers(centers)
-
-    def pick_cells(df: DataFrame, idc: str, n: int) -> DataFrame:
-        base = df.select(
-            F.col(_ID_COL).alias(idc),
-            F.col(_VEC_COL).alias("__v"),
-            norm(_VEC_COL).alias("__n"),
-        )
-        return _nearest_topn(
-            base, cent, idc, "__v", "__n", "cell", "cent_vec",
-            "cent_norm", n,
-        )
 
     # probes feed the LUT restriction AND the corpus-side cell prune —
     # checkpoint so the query scoring pass runs once
-    probes = pick_cells(queries, "query_id", nprobe).localCheckpoint(
-        eager=False
-    )
+    probes = _assign_cells(queries, centers, nprobe).withColumnRenamed(
+        _ID_COL, "query_id"
+    ).localCheckpoint(eager=False)
     if code_store is not None:
         probed = _probed_cells(probes)
         coded = read_cell_store(
             corpus.sparkSession, code_store, probed
         ).select(F.col(_ID_COL).alias("neighbor_id"), "cell", "pq_code")
     else:
-        cells = pick_cells(corpus, "neighbor_id", 1)
+        cells = _assign_cells(corpus, centers).withColumnRenamed(
+            _ID_COL, "neighbor_id"
+        )
         probe_cells = probes.select("cell").distinct()
         # probed-cell restriction FIRST: pruned is the (id, cell) set
         # whose cell some query probes — everything downstream (the
@@ -1222,27 +1184,22 @@ def _write_cell_store(
         write_sidecar(path, STORE_META, {**meta, **_corpus_stamp(written)})
 
 
-def _cell_centers(centers: DataFrame) -> DataFrame:
-    """(cell, cent_vec, cent_norm): a centers frame as the coarse
-    quantizer's _nearest_topn input."""
-    return centers.select(
+def _assign_cells(df: DataFrame, centers: DataFrame, n: int = 1) -> DataFrame:
+    """(id, cell) rows, each row's `n` nearest coarse centroids: THE
+    IVF coarse quantizer — the cell stores' build and append, ivf_topk
+    and ivf_adc_topk (queries to their nprobe cells, corpus rows to
+    their one) all assign here, so an appended row lands where a
+    rebuild would put it and a query probes the cells its corpus was
+    filed under."""
+    base = df.select(F.col(_ID_COL), F.col(_VEC_COL), norm(_VEC_COL).alias("__n"))
+    cent = centers.select(
         F.col(_LABEL_COL).alias("cell"),
         F.col(_CENTROID_COL).alias("cent_vec"),
         norm(_CENTROID_COL).alias("cent_norm"),
     )
-
-
-def _assign_cells(corpus: DataFrame, centers: DataFrame) -> DataFrame:
-    """(id, cell) nearest-coarse-centroid assignment for the cell
-    stores — ONE implementation so build and append can't drift (an
-    appended row assigned by different code than the build's would
-    land in a different cell than a rebuild would put it)."""
-    base = corpus.select(
-        F.col(_ID_COL), F.col(_VEC_COL), norm(_VEC_COL).alias("__n")
-    )
     return _nearest_topn(
-        base, _cell_centers(centers), _ID_COL, _VEC_COL, "__n", "cell",
-        "cent_vec", "cent_norm", 1,
+        base, cent, _ID_COL, _VEC_COL, "__n", "cell", "cent_vec",
+        "cent_norm", n,
     )
 
 

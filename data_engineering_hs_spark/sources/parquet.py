@@ -276,15 +276,16 @@ def check_no_concurrent_writer(
 
 
 def staged_rewrite(
-    path: str, op: str, write, suffix: str = "__compact"
+    path: str, op: str, write, staged: frozenset, suffix: str = "__compact"
 ) -> None:
     """Rewrite a driver-local store through the rename-aside swap —
     the ONE staged-rewrite path every store mutator that replaces a
     whole directory goes through. In order:
 
-    1. snapshot the live data files (BEFORE the caller's read, so a
-       commit landing after it is seen by the checks below, never
-       silently missing from the rewrite);
+    1. `staged` is the caller's snapshot_data_files listing of the
+       live store, taken BEFORE its read (and before any plan made
+       from it), so a commit landing after it is seen by the checks
+       below, never silently missing from the rewrite;
     2. ``write(tmp)``: the caller reads the store and writes the new
        version to ``<path>.<suffix>``;
     3. copy every ``_*.json`` sidecar (normalization stamp, store
@@ -301,7 +302,6 @@ def staged_rewrite(
     import shutil
 
     norm = path.rstrip("/")
-    staged = snapshot_data_files(norm)
     tmp = norm + "." + suffix
     write(tmp)
     for f in os.listdir(norm):

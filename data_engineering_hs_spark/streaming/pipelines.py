@@ -455,9 +455,9 @@ def compact_ingest_store(spark, path: str) -> dict:
     """Collapse a run-namespaced ingest dataset
     (``path/run=<ns>/batch_id=N/`` — streaming_dedup_ingest's
     fingerprint store or corpus sink) into few partitions: every batch
-    partition EXCEPT each run's maximum merges into
-    ``run=compacted/batch_id=-1``; each run's max-batch partition is
-    rewritten in place (same values, one file).
+    partition EXCEPT each run's maximum, and any earlier
+    ``run=compacted`` one, merges into ``run=compacted/batch_id=-1``;
+    each run's max-batch partition stays in place, as one file.
 
     Why: the run-namespaced layout accretes one partition per batch
     forever — at one batch per trigger that is thousands of small
@@ -474,27 +474,40 @@ def compact_ingest_store(spark, path: str) -> dict:
     silently dropping rows. (2) The wiped-checkpoint guard compares
     the incoming batch id against max(batch_id) under the run's
     directory — merging the max away would let a wiped-in-place
-    restart sail through. Keeping one partition per historical run is
-    the entire residual cost. Earlier batches of a live run are safe
-    to merge mid-stream: only the last batch can ever replay. The
+    restart sail through. Earlier batches of a live run are safe to
+    merge mid-stream: only the last batch can ever replay. The
     relabeled rows can never collide with a real run (namespaces are
     hex digests; 'compacted' is reserved).
 
-    Crash-safe via the shared rename-aside swap (stage the full new
-    layout beside the store, two POSIX renames, recover_swap finishes
-    any crash point) — DRIVER-LOCAL paths only, like every swap
-    caller; compact a remote store by rebuilding or a transactional
-    format's OPTIMIZE. Do not run concurrently with an active
-    trigger's commit (the swap could drop a batch committed after the
-    staging read) — run it between triggers or while the stream is
-    stopped. A violation cannot vanish silently (r13 pre-check, r14
-    closure): the file set is re-snapshotted before the rename
-    (check_no_concurrent_writer) AND re-verified after the park
-    rename freezes the store (swap_in(staged=...)) — a commit in
-    either window aborts with RuntimeError and the store rolled back
-    intact (late batch included); a writer racing the renames
-    themselves fails the swap loudly on ENOTEMPTY with both datasets
-    preserved.
+    The plan is read off ONE listing (partition values live in the
+    directory names, never in the files), which is also the swap
+    tripwire's baseline — a batch committed after it aborts the swap
+    instead of vanishing. A target whose sources are exactly one data
+    file (a run's single-file max batch, a lone earlier batch) is
+    HARD-LINKED into the staged layout: no Spark job, no bytes
+    rewritten. Links cannot cross filesystems; the staged directory is
+    the store's sibling, and a link that fails anyway falls back to a
+    rewrite. Only multi-file targets are REWRITTEN, each by one task
+    into one file. Cost is O(merged files), not O(store); a store
+    whose every target is already one file at its own path returns
+    untouched, with nothing staged. A data file outside the
+    ``run=<ns>/batch_id=<n>/`` layout (a stray root file, a legacy
+    single-level ``batch_id=N``) raises ValueError naming it, before
+    anything is staged.
+
+    Crash-safe via the shared rename-aside swap (the staged layout's
+    ``_SUCCESS`` written last, two POSIX renames, recover_swap
+    finishes any crash point) — DRIVER-LOCAL paths only, like every
+    swap caller; compact a remote store by rebuilding or a
+    transactional format's OPTIMIZE. Run it between triggers or while
+    the stream is stopped. A concurrent commit cannot vanish silently
+    (r13 pre-check, r14 closure): the file set is re-snapshotted
+    before the rename (check_no_concurrent_writer) AND re-verified
+    after the park rename freezes the store (swap_in(staged=...)) — a
+    commit in either window aborts with RuntimeError and the store
+    rolled back intact (late batch included); a writer racing the
+    renames themselves fails the swap loudly on ENOTEMPTY with both
+    datasets preserved.
 
     Returns {"files_before", "files_after", "partitions_before",
     "partitions_after"}. Missing path and existing-but-empty store
@@ -505,6 +518,7 @@ def compact_ingest_store(spark, path: str) -> dict:
     note) — compact between triggers.
     """
     import os
+    import shutil
 
     from data_engineering_hs_spark.sources.parquet import (
         _require_local_swap_path,
@@ -517,57 +531,82 @@ def compact_ingest_store(spark, path: str) -> dict:
     _require_local_swap_path(path, op)
     norm = path.rstrip("/")
 
-    def stats(d: str) -> tuple[int, int]:
-        files = snapshot_data_files(d)
+    def stats(files: frozenset) -> tuple[int, int]:
         return len(files), len({os.path.dirname(f) for f in files})
 
     # SINGLE-WRITER (enforced, r16): maintenance on the ingest store
     # takes the store lease — a live trigger's batch commit is NOT
     # leased (failing production batches in favor of maintenance
     # would be backwards), so the staged-snapshot tripwire remains
-    # the guard on that side: a batch landing mid-swap rolls the
-    # compaction back with the batch intact.
+    # the guard on that side.
     with store_writer_lease(path, op):
-        files_before, parts_before = stats(norm)
+        files = snapshot_data_files(norm)
+        n_files, n_parts = stats(files)
         out = {
-            "files_before": files_before, "files_after": 0,
-            "partitions_before": parts_before, "partitions_after": 0,
+            "files_before": n_files, "files_after": n_files,
+            "partitions_before": n_parts, "partitions_after": n_parts,
         }
-        if files_before == 0:
-            # missing path, or an empty EXISTING store (dir created,
-            # no increment committed, or a 0-row first batch): nothing
-            # to rewrite — a clean no-op beats the raw
-            # UNABLE_TO_INFER_SCHEMA the parquet read would throw
-            return out
+        plan = _compaction_plan(norm, files)
+        if all(
+            srcs == [f"{target}/{os.path.basename(srcs[0])}"]
+            for target, srcs in plan.items()
+        ):
+            return out  # identity, or a missing/empty store
 
         def write(tmp: str) -> None:
-            df = _string_run(spark.read.parquet(norm), norm)
-            # max batch per run from partition-column metadata (no
-            # data read)
-            run_max = df.groupBy("run").agg(F.max("batch_id").alias("__max"))
-            relabel = (F.col("batch_id") < F.col("__max")) | (
-                F.col("run") == F.lit("compacted")
-            )
-            merged = (
-                df.join(F.broadcast(run_max), "run")
-                .withColumn(
-                    "run",
-                    F.when(relabel, F.lit("compacted")).otherwise(F.col("run")),
-                )
-                .withColumn(
-                    "batch_id",
-                    F.when(relabel, F.lit(-1)).otherwise(F.col("batch_id")),
-                )
-                .drop("__max")
-            )
-            # one write task (= one file) per surviving partition
-            merged.repartition("run", "batch_id").write.mode(
-                "overwrite"
-            ).partitionBy("run", "batch_id").parquet(tmp)
+            shutil.rmtree(tmp, ignore_errors=True)  # a crashed run's debris
+            for target, srcs in plan.items():
+                dst = os.path.join(tmp, target)
+                os.makedirs(dst)
+                if len(srcs) == 1:
+                    try:
+                        os.link(
+                            os.path.join(norm, srcs[0]),
+                            os.path.join(dst, os.path.basename(srcs[0])),
+                        )
+                        continue
+                    except OSError:
+                        pass
+                spark.read.parquet(
+                    *(os.path.join(norm, s) for s in srcs)
+                ).coalesce(1).write.mode("overwrite").parquet(dst)
+                os.remove(os.path.join(dst, "_SUCCESS"))
+            # recover_swap reads tmp/_SUCCESS as "complete": last
+            open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-        staged_rewrite(norm, op, write)
-        out["files_after"], out["partitions_after"] = stats(norm)
+        staged_rewrite(norm, op, write, files)
+        out["files_after"], out["partitions_after"] = stats(
+            snapshot_data_files(norm)
+        )
         return out
+
+
+def _compaction_plan(norm: str, files: frozenset) -> dict[str, list[str]]:
+    """compact_ingest_store's layout from a snapshot_data_files
+    listing of the store at `norm`: target partition dir → its source
+    files, both relative to the store."""
+    import re
+
+    parts = {}
+    for f in sorted(files):
+        m = re.fullmatch(r"run=([^/]+)/batch_id=(-?\d+)/[^/]+", f)
+        if m is None:
+            raise ValueError(
+                f"compact_ingest_store: {norm}/{f.removeprefix('./')} is "
+                "outside the run=<ns>/batch_id=<n>/ layout of an ingest "
+                "store; move it out (or rebuild a legacy single-level "
+                "batch_id store) before compacting"
+            )
+        parts.setdefault((m[1], int(m[2])), []).append(f)
+    run_max = {}
+    for run, batch in parts:
+        run_max[run] = max(batch, run_max.get(run, batch))
+    plan = {}
+    for (run, batch), srcs in parts.items():
+        keep = run != "compacted" and batch == run_max[run]
+        target = f"run={run}/batch_id={batch}" if keep else "run=compacted/batch_id=-1"
+        plan.setdefault(target, []).extend(srcs)
+    return plan
 
 
 def _string_run(df: DataFrame, path: str) -> DataFrame:
@@ -575,12 +614,13 @@ def _string_run(df: DataFrame, path: str) -> DataFrame:
     (``run=<ns>/batch_id=N/``), with ``run`` typed as a STRING.
     Partition discovery infers value types, so a dataset whose every
     run namespace is all digits (a hex digest is, about 1 time in
-    100) reads ``run`` as a number: compaction's ``run ==
-    'compacted'`` then fails CAST_INVALID_INPUT, and a leading-zero
-    namespace loses its zero (``run=0123456789`` reads as 123456789)
-    — a cast after the read cannot restore it. Re-reading with an
-    explicit ``run`` type makes Spark cast the raw directory string
-    instead of inferring; a string-typed ``run`` returns as is."""
+    100) reads ``run`` as a number: the own-partition filter ``run ==
+    <ns>`` then fails CAST_INVALID_INPUT on a non-numeric <ns>, and a
+    leading-zero namespace loses its zero (``run=0123456789`` reads as
+    123456789) — a cast after the read cannot restore it. Re-reading
+    with an explicit ``run`` type makes Spark cast the raw directory
+    string instead of inferring; a string-typed ``run`` returns as
+    is."""
     from pyspark.sql import types as T
 
     if isinstance(df.schema["run"].dataType, T.StringType):
@@ -719,6 +759,7 @@ def streaming_cdc_apply(
     from data_engineering_hs_spark.sources.parquet import (
         _require_local_swap_path,
         recover_swap,
+        snapshot_data_files,
         staged_rewrite,
     )
 
@@ -763,6 +804,7 @@ def streaming_cdc_apply(
             lambda tmp: apply_changeset(
                 spark.read.parquet(norm), b, keys=keys
             ).write.mode("overwrite").parquet(tmp),
+            snapshot_data_files(norm),
             suffix="__merge",
         )
 

@@ -11,8 +11,10 @@ SF001 = "/root/testdata/sf0.01"
 
 # Depth-lens suites marked `slow` and excluded from the default run
 # (pytest.ini `addopts = -m "not slow"`): hypothesis fuzz-vs-naive
-# sweeps, random-graph/pathological parity, streaming lifecycle
-# stress and store-lifecycle torture.
+# sweeps, random-graph/pathological parity and streaming lifecycle
+# stress. The ingest replay/compaction torture (one ~6 s test) gates
+# the default run: it is the only long interleaving of batches,
+# replays and compactions.
 # Chosen from measured per-file call time (r17: these files carried
 # ~1650 s of the suite's ~2300 s) so the default suite is a <15-min
 # correctness gate (oracle parity, goldens, plan shapes, contracts)
@@ -38,7 +40,6 @@ _SLOW_FILES = {
     "test_fuzz_unicode.py",
     "test_fuzz_upsert.py",
     "test_graph_pathological.py",
-    "test_ingest_replay_torture.py",
     "test_properties.py",
     "test_shuffle_semdedup.py",
     "test_stream_stream_join.py",

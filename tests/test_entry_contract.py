@@ -700,8 +700,9 @@ def test_every_streaming_sink_shares_one_micro_batch_protocol():
 
 def test_every_near_dup_generator_shares_one_candidate_path():
     # one capped-bucket pair step, one array-side pair generator, one
-    # pair-dedup tail and one planted-duplicate audit: a generator or
-    # audit that writes the step out again fails here. incremental_minhash_lsh keeps its
+    # pair-dedup tail, one planted-duplicate audit and one IVF coarse
+    # quantizer: a generator, audit or quantizer that writes the step
+    # out again fails here. incremental_minhash_lsh keeps its
     # own store-side cap because a lone store member still pairs with
     # a new doc (no size > 1 filter there). A member-array cap sets
     # truncated from size(...); semdedup's window-count cluster cap is
@@ -750,3 +751,13 @@ def test_every_near_dup_generator_shares_one_candidate_path():
     assert _functions_holding(
         lambda n: call_with_first_arg(n, "alias", "complete_ok")
     ) == {"queries.llm._planted_audit"}
+    # one IVF coarse quantizer: ivf_topk, ivf_adc_topk and the cell
+    # stores assign through _assign_cells (ivf_topk and ivf_adc_topk
+    # used to rank their own copies); assign_nearest_centroid is
+    # semdedup's per-row cluster assignment, with its two-level mode
+    assert _functions_holding(
+        lambda n: isinstance(n, ast.Call) and callee(n) == "_nearest_topn"
+    ) == {
+        "operators.similarity._assign_cells",
+        "operators.similarity.assign_nearest_centroid",
+    }

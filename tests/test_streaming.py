@@ -450,10 +450,13 @@ class TestStreamingDedupIngest:
         self, spark, tmp_path
     ):
         # the consolidated partition collects every earlier batch and
-        # is written by one task: one file, same rows
+        # is written by one task: one file, same rows, in at most two
+        # Spark jobs (schema read + write); the single-file max batch
+        # is linked, not rewritten
         import os
 
         from pyspark.sql import types as T2
+        from test_compile_once import _jobs_started
 
         from data_engineering_hs_spark.streaming.pipelines import (
             _dedup_ingest_batch,
@@ -474,11 +477,22 @@ class TestStreamingDedupIngest:
             )
             _dedup_ingest_batch(batch, b, store, sink, "text", "doc_id")
         pre = sorted(r.fingerprint for r in spark.read.parquet(store).collect())
-        st = compact_ingest_store(spark, store)
+        kept = {
+            k: v for k, v in _inodes(store).items()
+            if k.startswith("run=main/batch_id=3/")
+        }
+        assert len(kept) == 1
+        st, jobs = _jobs_started(
+            spark, lambda: compact_ingest_store(spark, store), "compact-hot"
+        )
+        assert jobs <= 2
         assert st["partitions_after"] == 2  # max batch + consolidated
         comp_dir = os.path.join(store, "run=compacted", "batch_id=-1")
         files = [f for f in os.listdir(comp_dir) if f.endswith(".parquet")]
         assert len(files) == 1
+        assert {
+            k: v for k, v in _inodes(store).items() if k.startswith("run=main/")
+        } == kept
         post = sorted(r.fingerprint for r in spark.read.parquet(store).collect())
         assert post == pre
 
@@ -558,6 +572,211 @@ class TestStreamingDedupIngest:
         assert _run_namespace("s3a://bkt/ck") != _run_namespace("s3a://bkt2/ck")
         # different checkpoints stay distinct
         assert _run_namespace(str(tmp_path / "other")) != base
+
+
+def _part_files(store: str) -> dict[str, list[str]]:
+    """partition dir (relative) → its data file names, sorted."""
+    out = {}
+    for root, _dirs, files in os.walk(store):
+        data = sorted(
+            f for f in files
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+        if data:
+            out[os.path.relpath(root, store)] = data
+    return out
+
+
+def _inodes(store: str) -> dict[str, int]:
+    return {
+        os.path.join(d, f): os.stat(os.path.join(store, d, f)).st_ino
+        for d, files in _part_files(store).items()
+        for f in files
+    }
+
+
+class TestCompactionPlan:
+    """compact_ingest_store plans from the directory listing: a
+    single-file target is hard-linked into the staged layout (no Spark
+    job, same inode), only multi-file targets are rewritten, and an
+    already-compact store is not staged at all."""
+
+    SCHEMA = T.StructType(
+        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
+    )
+
+    def _ingest(self, spark, store, sink, batches, run_ns="main"):
+        from data_engineering_hs_spark.streaming.pipelines import (
+            _dedup_ingest_batch,
+        )
+
+        for b in batches:
+            rows = [(b * 10 + i, f"doc {b} {i}") for i in range(5)]
+            _dedup_ingest_batch(
+                spark.createDataFrame(rows, self.SCHEMA).coalesce(1),
+                b, store, sink, "text", "doc_id", run_ns=run_ns,
+            )
+
+    def _compact(self, spark, path, group):
+        from test_compile_once import _jobs_started
+
+        from data_engineering_hs_spark.streaming.pipelines import (
+            compact_ingest_store,
+        )
+
+        return _jobs_started(
+            spark, lambda: compact_ingest_store(spark, path), group
+        )
+
+    def test_two_batch_store_and_sink_link_with_no_spark_job(
+        self, spark, tmp_path
+    ):
+        store, sink = str(tmp_path / "fp"), str(tmp_path / "corpus")
+        self._ingest(spark, store, sink, range(2))
+        for d in (store, sink):
+            assert _part_files(d).keys() == {
+                "run=main/batch_id=0", "run=main/batch_id=1"
+            }
+            assert all(len(f) == 1 for f in _part_files(d).values())
+        pre_fp = sorted(r.fingerprint for r in spark.read.parquet(store).collect())
+        pre_ids = sorted(r.doc_id for r in spark.read.parquet(sink).collect())
+        for d, group in ((store, "compact-store-2"), (sink, "compact-sink-2")):
+            kept = _inodes(d)
+            st, jobs = self._compact(spark, d, group)
+            assert jobs == 0
+            assert st == {
+                "files_before": 2, "files_after": 2,
+                "partitions_before": 2, "partitions_after": 2,
+            }
+            after = _inodes(d)
+            assert after.keys() == {
+                os.path.join("run=compacted/batch_id=-1", f)
+                for f in _part_files(d)["run=compacted/batch_id=-1"]
+            } | {k for k in kept if k.startswith("run=main/batch_id=1/")}
+            # both files moved by link: same inodes, no rewrite
+            assert sorted(after.values()) == sorted(kept.values())
+        assert sorted(
+            r.fingerprint for r in spark.read.parquet(store).collect()
+        ) == pre_fp
+        assert sorted(
+            r.doc_id for r in spark.read.parquet(sink).collect()
+        ) == pre_ids
+
+    def test_failed_link_falls_back_to_a_rewrite(
+        self, spark, tmp_path, monkeypatch
+    ):
+        import errno
+
+        store, sink = str(tmp_path / "fp"), str(tmp_path / "corpus")
+        self._ingest(spark, store, sink, range(2))
+        pre = sorted(r.fingerprint for r in spark.read.parquet(store).collect())
+        kept = _inodes(store)
+
+        def cross_device(src, dst):
+            raise OSError(errno.EXDEV, "Invalid cross-device link")
+
+        monkeypatch.setattr(os, "link", cross_device)
+        st, jobs = self._compact(spark, store, "compact-no-link")
+        assert jobs > 0
+        assert {d: len(f) for d, f in _part_files(store).items()} == {
+            "run=compacted/batch_id=-1": 1, "run=main/batch_id=1": 1,
+        }
+        assert not set(_inodes(store).values()) & set(kept.values())
+        assert st["files_after"] == 2
+        assert sorted(
+            r.fingerprint for r in spark.read.parquet(store).collect()
+        ) == pre
+
+    def test_multi_file_max_batch_comes_out_as_one_file(self, spark, tmp_path):
+        store = str(tmp_path / "fp")
+        df = spark.createDataFrame([(i,) for i in range(8)], "fingerprint long")
+        for b, n_files in ((0, 1), (1, 2)):
+            df.repartition(n_files).write.parquet(
+                os.path.join(store, "run=main", f"batch_id={b}")
+            )
+        assert len(_part_files(store)["run=main/batch_id=1"]) == 2
+        st, _jobs = self._compact(spark, store, "compact-multi-file")
+        parts = _part_files(store)
+        assert {d: len(f) for d, f in parts.items()} == {
+            "run=compacted/batch_id=-1": 1, "run=main/batch_id=1": 1,
+        }
+        assert st["files_before"] == 3 and st["files_after"] == 2
+        got = spark.read.parquet(store).groupBy("run", "batch_id").count()
+        assert sorted(tuple(r) for r in got.collect()) == [
+            ("compacted", -1, 8), ("main", 1, 8),
+        ]
+
+    def test_compact_store_is_not_staged(self, spark, tmp_path):
+        from data_engineering_hs_spark.sources import parquet as pq_mod
+
+        store, sink = str(tmp_path / "fp"), str(tmp_path / "corpus")
+        self._ingest(spark, store, sink, range(3))
+        self._compact(spark, store, "compact-first")
+        root_ino = os.stat(store).st_ino
+        files = _inodes(store)
+        staged = []
+        pq_mod._pre_swap_test_hook = staged.append
+        try:
+            st, jobs = self._compact(spark, store, "compact-again")
+        finally:
+            pq_mod._pre_swap_test_hook = None
+        assert staged == [] and jobs == 0
+        assert not os.path.exists(store + ".__compact")
+        assert os.stat(store).st_ino == root_ino and _inodes(store) == files
+        assert st["files_before"] == st["files_after"] == 2
+
+    def test_batch_committed_mid_link_swap_aborts_and_survives(
+        self, spark, tmp_path
+    ):
+        # the all-link plan (no Spark job) still goes through the swap
+        # tripwire: a batch committed after the planning listing
+        # aborts the compaction, and its rows stay in the store
+        import pytest
+
+        from data_engineering_hs_spark.sources import parquet as pq_mod
+
+        store, sink = str(tmp_path / "fp"), str(tmp_path / "corpus")
+        self._ingest(spark, store, sink, range(2))
+        before = _inodes(store)
+        pq_mod._pre_swap_test_hook = lambda _p: self._ingest(
+            spark, store, sink, [2]
+        )
+        try:
+            with pytest.raises(RuntimeError, match="concurrent writer"):
+                self._compact(spark, store, "compact-late-batch")
+        finally:
+            pq_mod._pre_swap_test_hook = None
+        after = _inodes(store)
+        assert before.items() <= after.items()
+        assert {k.split("/")[1] for k in after} == {
+            "batch_id=0", "batch_id=1", "batch_id=2"
+        }
+        assert spark.read.parquet(store).filter("batch_id = 2").count() == 5
+        assert not os.path.exists(store + ".__compact")
+
+    def test_stray_files_refused_before_staging(self, spark, tmp_path):
+        import shutil
+
+        import pytest
+
+        from data_engineering_hs_spark.streaming.pipelines import (
+            compact_ingest_store,
+        )
+
+        store, sink = str(tmp_path / "fp"), str(tmp_path / "corpus")
+        self._ingest(spark, store, sink, range(2))
+        src = os.path.join(store, "run=main", "batch_id=0")
+        src = os.path.join(src, _part_files(store)["run=main/batch_id=0"][0])
+        before = _inodes(store)
+        for stray in ("part-stray.parquet", "batch_id=7/part-legacy.parquet"):
+            dst = os.path.join(store, stray)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            shutil.copyfile(src, dst)
+            with pytest.raises(ValueError, match=f"{dst} is outside"):
+                compact_ingest_store(spark, store)
+            assert not os.path.exists(store + ".__compact")
+            os.remove(dst)
+        assert _inodes(store) == before
 
 
 class TestStreamingGuards:
